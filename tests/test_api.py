@@ -670,6 +670,37 @@ def test_facade_mips_lifecycle(spark):
     ]
     assert got3 == want3
 
+    # all-compacted knn_dot returns mips_knn's own rank: identical rows
+    # to re-ranking its output by (ip desc, id asc), ensure_k + where=
+    # included (a 1-cell probe of one document must escalate)
+    from pyspark.sql.window import Window
+
+    from vector_database_spark.operators import ann
+
+    qdf = spark.createDataFrame([(0, q)], "qid long, qvec array<double>")
+    ok = db.text().where("doc_id = 1").select(F.col("text_id").alias("id"))
+    raw = ann.mips_knn(
+        None, qdf, 10,
+        assigned=db._ann_vectors().join(ok, "id", "left_semi"),
+        centroids=db._ann_centroids(), m2=db._mips_m2(),
+        nprobe=1, ensure_k=True,
+    )
+    w = Window.orderBy(F.col("ip").desc(), F.col("id").asc())
+    want4 = [
+        (r.id, r.ip, r.rk)
+        for r in raw.withColumn("rk", F.row_number().over(w))
+        .where("rk <= 10")
+        .orderBy("rk")
+        .collect()
+    ]
+    got4 = [
+        (r.text_id, r.ip, r.rank)
+        for r in db.knn_dot(q, 10, nprobe=1, ensure_k=True, where="doc_id = 1")
+        .orderBy("rank")
+        .collect()
+    ]
+    assert got4 == want4 and len(got4) == 10
+
     # vicinity delete syncs the layout; no deleted id ever returns
     removed = db.delete_vectors(q, 0.5)
     if removed:

@@ -65,6 +65,10 @@ def test_facade_plan_properties(spark, sf_dir, name):
     assert not problems, f"{name} ({note}): {problems}\n{plan[:4000]}"
 
 
+# the explicit repartition("qid") exchange both r14 shapes share
+_QID_REPARTITION = r"hashpartitioning\(qid#\d+L?, \d+\), REPARTITION_BY_COL"
+
+
 def test_rrf_fuse_single_fusion_exchange(spark):
     """r14: the RRF fusion shares ONE qid exchange between its
     groupBy(qid, id) aggregate and the per-qid top-k window
@@ -86,6 +90,10 @@ def test_rrf_fuse_single_fusion_exchange(spark):
     plan = explain_audit.formatted_plan(rrf_fuse([a, b], k=2))
     n_shuffles = len(re.findall(r"(?m)^\(\d+\) Exchange\b", plan))
     assert n_shuffles == 1, f"expected 1 fusion exchange, got {n_shuffles}\n{plan[:4000]}"
+    # ...and that one exchange is the shared repartition("qid"): a
+    # count failure with this marker present means the planner added
+    # an unrelated exchange, without it the shared exchange was lost
+    assert len(re.findall(_QID_REPARTITION, plan)) == 1, plan[:4000]
 
 
 def test_maxsim_two_exchanges(spark):
@@ -108,3 +116,4 @@ def test_maxsim_two_exchanges(spark):
     plan = explain_audit.formatted_plan(maxsim_topk(vecs, qs, k=2))
     n_shuffles = len(re.findall(r"(?m)^\(\d+\) Exchange\b", plan))
     assert n_shuffles == 2, f"expected 2 exchanges, got {n_shuffles}\n{plan[:4000]}"
+    assert len(re.findall(_QID_REPARTITION, plan)) == 1, plan[:4000]

@@ -415,9 +415,9 @@ CHECKS = {
 # DataFrame builder instead of a workload name lookup.
 
 
-def _facade_bq_serving_hd_df(spark, sf_dir):
-    """A tiny HD-coded 'bq' facade store; returns the candidate-stage
-    DataFrame one `search` call plans. sf_dir unused (synthetic
+def _tiny_store(spark, index_type, **kw):
+    """A tiny all-compacted facade store over 80 x 8 synthetic rows in
+    2 documents. sf_dir is unused by every facade builder (synthetic
     corpus) — kept for the shared (spark, sf_dir) builder shape."""
     import tempfile
 
@@ -426,18 +426,33 @@ def _facade_bq_serving_hd_df(spark, sf_dir):
     from vector_database_spark.api import VectorDatabase
     from vector_database_spark.sources.generators import random_uniform
 
-    tmp = tempfile.mkdtemp()
     rows = random_uniform(spark, 80, 8, seed=5).select(
         (F.col("id") % 2).alias("doc_id"),
         F.col("id").alias("text_id"),
         "vector",
     )
     db = VectorDatabase(
-        spark, f"{tmp}/s", index_type="bq", n_cells=4, bq_nprobe=2,
-        bq_route="cells", bq_hd_blocks=1,
+        spark, f"{tempfile.mkdtemp()}/s", index_type=index_type, **kw
     )
     db.add_documents(rows)
+    return db
+
+
+def _facade_bq_serving_hd_df(spark, sf_dir):
+    """A tiny HD-coded 'bq' facade store; returns the candidate-stage
+    DataFrame one `search` call plans."""
+    db = _tiny_store(
+        spark, "bq", n_cells=4, bq_nprobe=2, bq_route="cells",
+        bq_hd_blocks=1,
+    )
     return db._bq_candidate_ids([0.1] * 8)
+
+
+def _facade_bsp_search_df(spark, sf_dir):
+    """One `search` call's full plan over a tiny all-compacted 'bsp'
+    store: the one-row query panel is a driver-side local table, never
+    a Python-parallelized RDD."""
+    return _tiny_store(spark, "bsp").search([0.1] * 8, 0.6)
 
 
 def _facade_ivf_search_df(spark, sf_dir):
@@ -446,22 +461,7 @@ def _facade_ivf_search_df(spark, sf_dir):
     shape in CI). Centroids and radii are invalidation-cycle-cached
     driver literals — the plan may scan the cell-pruned vectors
     layout and the text table, never the centroid/radius parquets."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from vector_database_spark.api import VectorDatabase
-    from vector_database_spark.sources.generators import random_uniform
-
-    tmp = tempfile.mkdtemp()
-    rows = random_uniform(spark, 80, 8, seed=5).select(
-        (F.col("id") % 2).alias("doc_id"),
-        F.col("id").alias("text_id"),
-        "vector",
-    )
-    db = VectorDatabase(spark, f"{tmp}/s", index_type="ivf", n_cells=4)
-    db.add_documents(rows)
-    return db.search([0.1] * 8, 0.6)
+    return _tiny_store(spark, "ivf", n_cells=4).search([0.1] * 8, 0.6)
 
 
 def _facade_mips_knn_dot_df(spark, sf_dir):
@@ -469,42 +469,40 @@ def _facade_mips_knn_dot_df(spark, sf_dir):
     'mips' store: centroids, radii and the m2 augmentation constant
     are cached driver values (the round-12 rule: no per-call serving
     path may re-read layout metadata parquets)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from vector_database_spark.api import VectorDatabase
-    from vector_database_spark.sources.generators import random_uniform
-
-    tmp = tempfile.mkdtemp()
-    rows = random_uniform(spark, 80, 8, seed=5).select(
-        (F.col("id") % 2).alias("doc_id"),
-        F.col("id").alias("text_id"),
-        "vector",
-    )
-    db = VectorDatabase(spark, f"{tmp}/s", index_type="mips", n_cells=4)
-    db.add_documents(rows)
-    return db.knn_dot([0.1] * 8, 5, nprobe=2)
+    return _tiny_store(spark, "mips", n_cells=4).knn_dot([0.1] * 8, 5, nprobe=2)
 
 
 FACADE_CHECKS = {
+    "facade_bsp_search_serving": (
+        _facade_bsp_search_df,
+        ["LocalTableScan"],
+        ["Scan ExistingRDD", "BatchEvalPython", "ArrowEvalPython"],
+        "facade 'bsp' search: the query panel is a LocalTableScan, "
+        "never a `Scan ExistingRDD` over a Python-parallelized list "
+        "(that scan costs a Python-worker task per default-parallelism "
+        "slice on every call)",
+    ),
     "facade_ivf_search_serving": (
         _facade_ivf_search_df,
         ["ivf_index/vectors"],
         ["ivf_index/centroids", "ivf_index/radius", "BatchEvalPython",
-         "ArrowEvalPython", "CartesianProduct"],
+         "ArrowEvalPython", "CartesianProduct", "Scan ExistingRDD"],
         "facade 'ivf' search: the serving plan scans the cell-pruned "
         "vectors layout + text only — centroid/radius parquets are "
-        "cached driver literals, never per-call scans",
+        "cached driver literals, never per-call scans; no "
+        "Python-parallelized query panel",
     ),
     "facade_mips_knn_dot_serving": (
         _facade_mips_knn_dot_df,
         ["mips_index/vectors"],
         ["mips_index/centroids", "mips_index/radius",
-         "mips_index/mips_meta", "BatchEvalPython", "ArrowEvalPython"],
+         "mips_index/mips_meta", "BatchEvalPython", "ArrowEvalPython",
+         "Scan ExistingRDD"],
         "facade 'mips' knn_dot: the serving plan scans the stored "
         "layout only — centroids/radius/m2 are cached driver values "
-        "(the round-12 no-per-call-metadata-read rule, pinned in CI)",
+        "(the round-12 no-per-call-metadata-read rule, pinned in CI); "
+        "query and centroid frames are local tables, not "
+        "Python-parallelized RDDs",
     ),
     "facade_bq_serving_hd": (
         _facade_bq_serving_hd_df,

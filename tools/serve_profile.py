@@ -1,7 +1,12 @@
 """Profile the facade serving paths: per-call wall time split into
-(plan construction driver-side) vs (execution), plus the number of
-Spark jobs each call launches — the serving floor is job-overhead
-dominated at bench scale, so job COUNT is the actionable number.
+(plan construction driver-side) vs (execution), plus what each call
+ran on the cluster, read from the Spark status store under a job group
+per call: jobs, tasks, and executor run time beside executor CPU time.
+
+Job count alone does not set the serving floor. A stage of tasks that
+wait on Python workers (run time far above CPU time) costs as much as
+a job; removing the one-row query panel's Python-worker stage halved
+per-call latency at equal job counts.
 
 Usage: python tools/serve_profile.py [n] [dims] [passes]
 """
@@ -17,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from perfbench.tracing import Tracer
 from vector_database_spark import get_spark
 
 
@@ -30,8 +36,6 @@ def main() -> int:
     passes = int(sys.argv[3]) if len(sys.argv) > 3 else 3
     spark = get_spark(app_name="serve-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     import tempfile
 
@@ -39,9 +43,8 @@ def main() -> int:
     from vector_database_spark.sources.generators import clusters
 
     # instrument the freshness protocol (round-14 verdict item 4):
-    # count epoch-marker stats (_epoch_token) and layout-marker stats
-    # (_ann_exists bodies) per serving call — the done-when is ONE
-    # marker stat per public search/knn_dot call
+    # count epoch-marker stats (_epoch_token) per serving call — the
+    # done-when is ONE marker stat per public search/knn_dot call
     stat_ctr = {"epoch": 0}
     _orig_tok = VectorDatabase._epoch_token
 
@@ -63,6 +66,34 @@ def main() -> int:
     )
     q = [float(x) for x in data.where(F.col("text_id") == 7).first()["vector"]]
 
+    # ungrouped jobs submitted inside a traced call (the BSP build's
+    # pool threads, the engine's warm-up thread) count as its side jobs
+    tracer = Tracer(spark)
+
+    def profile(op, call):
+        rows = []
+        for _ in range(passes):
+            s0 = stat_ctr["epoch"]
+            with tracer.span(op) as rec:
+                t0 = time.monotonic()
+                df = call()
+                t1 = time.monotonic()
+                _force(df)
+                t2 = time.monotonic()
+            tracer.collect(rec)
+            rows.append(
+                {
+                    "construct_s": round(t1 - t0, 3),
+                    "exec_s": round(t2 - t1, 3),
+                    "jobs": rec["jobs"] + rec["side_jobs"],
+                    "tasks": int(rec["tasks"]),
+                    "executor_run_ms": int(rec["executor_run_ms"]),
+                    "executor_cpu_ms": int(rec["executor_cpu_ms"]),
+                    "epoch_stats": stat_ctr["epoch"] - s0,
+                }
+            )
+        return rows
+
     out = {}
     for t in ("bsp", "ivf", "ivfadc", "bq", "mips"):
         vdb = VectorDatabase(
@@ -70,45 +101,11 @@ def main() -> int:
             local_threshold=65_536, pq_m=4,
         )
         vdb.add_documents(data)
-        rows = []
-        for p in range(passes):
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
-            s0 = stat_ctr["epoch"]
-            t0 = time.monotonic()
-            df = vdb.search(q, 0.35)
-            t1 = time.monotonic()
-            _force(df)
-            t2 = time.monotonic()
-            j1 = len(tracker.getJobIdsForGroup(None) or [])
-            rows.append(
-                {
-                    "construct_s": round(t1 - t0, 3),
-                    "exec_s": round(t2 - t1, 3),
-                    "jobs": j1 - j0,
-                    "epoch_stats": stat_ctr["epoch"] - s0,
-                }
-            )
-        out[f"search_{t}"] = rows
+        out[f"search_{t}"] = profile(f"search_{t}", lambda: vdb.search(q, 0.35))
         if t == "mips":
-            rows = []
-            for p in range(passes):
-                j0 = len(tracker.getJobIdsForGroup(None) or [])
-                s0 = stat_ctr["epoch"]
-                t0 = time.monotonic()
-                df = vdb.knn_dot(q, 10, nprobe=8)
-                t1 = time.monotonic()
-                _force(df)
-                t2 = time.monotonic()
-                j1 = len(tracker.getJobIdsForGroup(None) or [])
-                rows.append(
-                    {
-                        "construct_s": round(t1 - t0, 3),
-                        "exec_s": round(t2 - t1, 3),
-                        "jobs": j1 - j0,
-                        "epoch_stats": stat_ctr["epoch"] - s0,
-                    }
-                )
-            out["knn_dot_mips"] = rows
+            out["knn_dot_mips"] = profile(
+                "knn_dot_mips", lambda: vdb.knn_dot(q, 10, nprobe=8)
+            )
     print(json.dumps(out, indent=1))
     import shutil
 

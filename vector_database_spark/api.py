@@ -30,6 +30,7 @@ from vector_database_spark.operators.search import (
     search as _search,
     search_candidates_auto,
 )
+from vector_database_spark.schemas import local_frame
 
 
 # rebuild a document's tree once this fraction of its rows live in the
@@ -380,7 +381,7 @@ class VectorDatabase:
         try:
             return self.index()
         except Exception:
-            return self.spark.createDataFrame([], self._INDEX_DDL)
+            return local_frame(self.spark, [], self._INDEX_DDL)
 
     # -- IVF-family internals ---------------------------------------------
     @property
@@ -525,11 +526,13 @@ class VectorDatabase:
         )
         codes = codes.localCheckpoint(eager=True)
         self._bq_codes_write(codes, mode="overwrite")
-        self.spark.createDataFrame(
+        local_frame(
+            self.spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
             "cell int, cvec array<double>",
         ).write.mode("overwrite").parquet(f"{self.ann_path}/centroids")
-        self.spark.createDataFrame(
+        local_frame(
+            self.spark,
             [(dim, self.bq_hd_blocks, self.bq_hd_seed,
               self.bq_hd_scale)],
             "dim int, hd_blocks int, hd_seed int, hd_scale long",
@@ -738,7 +741,8 @@ class VectorDatabase:
             assigned = assigned.select(
                 "cell", mips_augment("vector", m2).alias("vector")
             )
-        cmap = self.spark.createDataFrame(
+        cmap = local_frame(
+            self.spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
             "cell int, cvec array<double>",
         )
@@ -830,7 +834,8 @@ class VectorDatabase:
             )
             cents = self._ann_centroids()
             assigned = ann._assign_cells(batch, cents)
-        cmap = self.spark.createDataFrame(
+        cmap = local_frame(
+            self.spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
             "cell int, cvec array<double>",
         )
@@ -921,7 +926,7 @@ class VectorDatabase:
             if d <= bound + rad.get(i, 0.0) + 1e-9:
                 cells.append(i)
         if not cells:
-            return self.spark.createDataFrame([], "text_id long")
+            return local_frame(self.spark, [], "text_id long")
         return (
             self._ann_vectors()
             .where(F.col("cell").isin(cells))
@@ -1445,7 +1450,8 @@ class VectorDatabase:
         from pyspark.sql.window import Window as _W
 
         np_ = int(nprobe) if nprobe is not None else min(4, self.n_cells)
-        qdf = self.spark.createDataFrame(
+        qdf = local_frame(
+            self.spark,
             [(0, [float(x) for x in vector])],
             "qid long, qvec array<double>",
         )
@@ -1467,27 +1473,27 @@ class VectorDatabase:
                 None, qdf, int(k),
                 assigned=stored, centroids=self._ann_centroids(), m2=m2,
                 nprobe=np_, ensure_k=ensure_k,
-            ).select(F.col("id").alias("text_id"), "ip")
+            ).select(F.col("id").alias("text_id"), "ip", "rank")
         # the all-compacted common case skips the per-call tail
         # anti-join entirely (the `_tail_scoped` caching rule)
         t = self._tail_scoped(None) if self._ann_exists() else self.text()
-        if t is not None:
-            if pred is not None:
-                t = t.where(pred)
-            qlit = F.lit([float(x) for x in vector]).cast("array<double>")
-            tail_hits = t.select(
-                "text_id", _dot(F.col("vector"), qlit).alias("ip")
+        if t is None:
+            # mips_knn already ranks the one query by (ip desc, id asc)
+            # with at most k rows: its rank is final, no second window
+            return out.select(
+                "text_id", "ip", F.col("rank").cast("long").alias("rank")
             )
-            out = tail_hits if out is None else out.unionByName(tail_hits)
-        if out is None:  # empty store: no layout, no tail
-            return self.spark.createDataFrame(
-                [], "text_id long, ip double, rank long"
-            )
+        if pred is not None:
+            t = t.where(pred)
+        qlit = F.lit([float(x) for x in vector]).cast("array<double>")
+        hits = t.select("text_id", _dot(F.col("vector"), qlit).alias("ip"))
+        if out is not None:
+            hits = out.drop("rank").unionByName(hits)
         w = _W.partitionBy(F.lit(1)).orderBy(
             F.col("ip").desc(), F.col("text_id").asc()
         )
         return (
-            out.withColumn("rank", F.row_number().over(w))
+            hits.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= int(k))
             .select("text_id", "ip", F.col("rank").cast("long").alias("rank"))
         )
@@ -1518,7 +1524,8 @@ class VectorDatabase:
             n_cand = scoped.count()
             n_total = txt.count()
             n_match = self.search(vector, domain, doc_id=doc_id).count()
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [
                     (
                         0,

@@ -29,10 +29,10 @@ import random
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
 from vector_database_spark.functions.vector import dot, euclidean, l2_norm
+from vector_database_spark.schemas import local_frame
 
 
 def _hyperplanes(dims: int, n_bits: int, n_tables: int, seed: int) -> list[list[list[float]]]:
@@ -365,7 +365,8 @@ def ivf_knn(
         pred = F.expr(where) if isinstance(where, str) else where
         assigned_df = assigned_df.where(pred)
     spark = assigned_df.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(centroids)], "cell int, cvec array<double>"
     )
     n_cells = len(centroids)
@@ -417,9 +418,10 @@ def ivf_knn(
         if not short:
             break
         cur = min(cur * 2, n_cells)
-        short_df = spark.createDataFrame(
+        short_df = local_frame(
+            spark,
             [(q,) for q in short],
-            StructType([StructField("qid", qid_field.dataType)]),
+            f"qid {qid_field.dataType.simpleString()}",
         )
         retry_q = queries_df.join(F.broadcast(short_df), "qid")
         out = out.join(
@@ -445,7 +447,8 @@ def ivf_write(
     assigned_df.repartition("cell").write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).partitionBy("cell").parquet(f"{path}/vectors")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, cvec array<double>",
     ).write.mode("overwrite").parquet(f"{path}/centroids")
@@ -467,7 +470,8 @@ def _ivf_err_stats(assigned: DataFrame, centroids: list[list[float]]):
     interpreted HOF fold (fine for per-row vector math — the measured
     rule)."""
     spark = assigned.sparkSession
-    cmap = spark.createDataFrame(
+    cmap = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, cvec array<double>",
     )
@@ -483,7 +487,8 @@ def _ivf_err_stats(assigned: DataFrame, centroids: list[list[float]]):
 
 
 def _ivf_stats_write(spark, path: str, err_sum: float, n: int) -> None:
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(float(err_sum), int(n))], "err_sum double, n long"
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
@@ -626,11 +631,13 @@ def ivfadc_write(
     out.repartition("cell").write.mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).partitionBy("cell").parquet(f"{path}/codes")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, cvec array<double>",
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [
             (j, i, [float(x) for x in c])
             for j, book in enumerate(codebooks)
@@ -938,7 +945,7 @@ def pq_knn(
         .select("qid", "id")
     )
     spark = codes_df.sparkSession
-    qdf = spark.createDataFrame(panel, "qid long, qvec array<double>")
+    qdf = local_frame(spark, panel, "qid long, qvec array<double>")
     ranked = (
         codes_df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("_vec"))
         .join(short, "id")
@@ -1239,7 +1246,7 @@ def ivfadc_knn(
         .select("qid", "id")
     )
     spark = codes_df.sparkSession
-    qdf = spark.createDataFrame(panel, "qid long, qvec array<double>")
+    qdf = local_frame(spark, panel, "qid long, qvec array<double>")
     ranked = (
         codes_df.select("id", F.col("vector").alias("_vec"))
         .join(short, "id")
@@ -1503,7 +1510,7 @@ def sq8_knn(
         .select("qid", "id")
     )
     spark = enc_df.sparkSession
-    qdf = spark.createDataFrame(panel, "qid long, qvec array<double>")
+    qdf = local_frame(spark, panel, "qid long, qvec array<double>")
     ranked = (
         enc_df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("_vec"))
         .join(short, "id")
@@ -1534,7 +1541,8 @@ def sq8_write(
     spark = enc_df.sparkSession
     out = enc_df if keep_vectors else enc_df.drop("vector")
     out.write.mode("overwrite").parquet(f"{path}/codes")
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, float(l), float(h)) for i, (l, h) in enumerate(zip(lo, hi))],
         "idx int, lo double, hi double",
     ).write.mode("overwrite").parquet(f"{path}/stats")
@@ -2453,7 +2461,8 @@ def bq_knn(
 
     spark = vectors_df.sparkSession
     if centroids is not None:
-        cdf = spark.createDataFrame(
+        cdf = local_frame(
+            spark,
             [(i, c) for i, c in enumerate(cents)],
             "cell int, cvec array<double>",
         )
@@ -2753,7 +2762,8 @@ def _mips_serve(
         pred = F.expr(where) if isinstance(where, str) else where
         assigned = assigned.where(pred)
     spark = assigned.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(centroids)],
         "cell int, cvec array<double>",
     )
@@ -2869,7 +2879,7 @@ def mips_write(
     is the durable serving loop."""
     spark = assigned.sparkSession
     ivf_write(assigned, centroids, path)
-    spark.createDataFrame([(float(m2),)], "m2 double").write.mode(
+    local_frame(spark, [(float(m2),)], "m2 double").write.mode(
         "overwrite"
     ).parquet(f"{path}/mips_meta")
 

@@ -38,6 +38,7 @@ from vector_database_spark.functions.vector import (
     euclidean,
 )
 from vector_database_spark.plans.iterate import LineageBudget
+from vector_database_spark.schemas import local_frame
 
 
 def _as_queries_df(index_or_vectors: DataFrame, queries: DataFrame | list) -> DataFrame:
@@ -56,8 +57,8 @@ def _as_queries_df(index_or_vectors: DataFrame, queries: DataFrame | list) -> Da
             f"query panel has mixed vector widths {sorted(widths)}; "
             "searches require a uniform-width panel (pad or split by width)"
         )
-    spark = index_or_vectors.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        index_or_vectors.sparkSession,
         [(int(q), [float(x) for x in v]) for q, v in queries],
         "qid long, qvec array<double>",
     )

@@ -64,6 +64,31 @@ TESTDATA_TABLES = (
 )
 
 
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A small driver-side table (query panel, centroids, a stats row)
+    as a DataFrame over a pyarrow Table: a `LocalRelation` in the plan
+    at these sizes, no Python worker, O(1) py4j calls per frame,
+    doubles exact (-0.0, NaN, ±inf, subnormals).
+
+    Engine code must not call ``createDataFrame(<python list>)``: its
+    identity ``map`` over the pickled rows puts one Python-worker task
+    on every default-parallelism slice, a whole stage per call.
+
+    The frame's schema is ``ddl``, nullability included, exactly as
+    with the list form.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from a scale-factor directory."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
