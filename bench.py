@@ -1,9 +1,12 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Prints a compact JSON line first:
   {"metric": "...", "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": 0.1}
+then a full line with the per-pass samples and evidence, including
+the sha256 of this file (``harness_sha256``) and the core count
+(``cpus``), so an artifact says which harness and host width made it.
 
 Each query is forced end-to-end with a noop datasource write (full
 evaluation, no driver collect overhead). The index build is timed as
@@ -13,6 +16,7 @@ its own entry since it is the reference's headline number
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import sys
@@ -519,6 +523,8 @@ def main() -> int:
         ),
         flush=True,
     )
+    with open(os.path.abspath(__file__), "rb") as fh:
+        harness_sha256 = hashlib.sha256(fh.read()).hexdigest()
     print(
         json.dumps(
             {
@@ -526,6 +532,8 @@ def main() -> int:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
+                "harness_sha256": harness_sha256,
+                "cpus": int(cpus),
                 "samples": samples,
                 "jobs": {n: (s[-1] if s else None)
                          for n, s in job_samples.items()},

@@ -3,10 +3,14 @@ tools/check_oracle.py; here: structural/recall properties)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from vector_database_spark.operators import dedup as dd
 from vector_database_spark.operators import text as tx
+from vector_database_spark.schemas import local_frame
 
 
 def _docs(spark):
@@ -487,6 +491,85 @@ def test_minhash_fused_signatures_bit_identical(spark, documents):
           for r in dd.minhash_dedup_pairs(
               documents, threshold=0.5, fused_signatures=True).collect()}
     assert pa == pb
+
+
+def _kernel_nodes(df) -> int:
+    """Python map kernels in ``df``'s executed plan (call after an
+    action): adaptive query stages and cached relations are walked,
+    a ReusedExchange is a read of an exchange already counted."""
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "ReusedExchange":
+            return 0
+        if name == "AdaptiveSparkPlan":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStage"):
+            kids = [node.plan()]
+        else:
+            ch = node.children()
+            kids = [ch.apply(i) for i in range(ch.size())]
+            if name == "InMemoryTableScan":
+                kids.append(node.relation().cachedPlan())
+        return (name in ("MapInPandas", "MapInArrow")) + sum(map(walk, kids))
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+_RUNS_ONCE_OPS = {
+    "minhash_dedup_pairs": lambda d: dd.minhash_dedup_pairs(d),
+    "minhash_dedup_pairs_fused": lambda d: dd.minhash_dedup_pairs(
+        d, fused_signatures=True
+    ),
+    "jaccard_pairs": lambda d: dd.jaccard_pairs(
+        d,
+        local_frame(
+            d.sparkSession,
+            [(2 * j, 2 * j + 1) for j in range(12)] + [(0, 3), (5, 40)],
+            "a_id long, b_id long",
+        ),
+    ),
+    "ngram_jaccard_pairs": lambda d: dd.ngram_jaccard_pairs(d, threshold=0.5),
+    "minhash_join": lambda d: dd.minhash_join(d.where("doc_id < 30"), d),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RUNS_ONCE_OPS))
+def test_dedup_shingle_pass_runs_once_over_any_input(spark, tmp_path, op):
+    """Each shingle/signature pass the operator builds is pinned, so
+    its kernel runs once, in the pin's lineage, and no kernel node is
+    left in the executed plan. A plan-matched persist() is not enough:
+    over a `localCheckpoint` (RDD-backed) input the self-joins
+    re-instance the input, the cache misses and every consumer re-runs
+    the kernel (6 nodes in minhash_dedup_pairs' plan). The result is
+    identical over parquet, RDD-backed and Arrow-local inputs."""
+    rnd = random.Random(5)
+    rows = []
+    for i in range(80):
+        if i % 2 and i < 24:  # 2j+1 near-duplicates 2j
+            toks = rows[-1][1].upper().split()
+            if i % 4 == 3:
+                toks[rnd.randrange(len(toks))] = "edit"
+            rows.append((i, "  ".join(toks)))
+        else:
+            rows.append(
+                (i, " ".join(f"w{rnd.randrange(300)}" for _ in range(14)))
+            )
+    ddl = "doc_id long, text string"
+    local = local_frame(spark, rows, ddl)
+    local.write.parquet(str(tmp_path / "docs"))
+    inputs = {
+        "parquet": spark.read.parquet(str(tmp_path / "docs")),
+        "rdd": local.localCheckpoint(),
+        "arrow": local,
+    }
+    got = {}
+    for name, d in inputs.items():
+        out = _RUNS_ONCE_OPS[op](d)
+        got[name] = sorted(tuple(r) for r in out.collect())
+        assert _kernel_nodes(out) == 0, (op, name)
+    assert got["parquet"] == got["rdd"] == got["arrow"]
+    assert len(got["rdd"]) >= 12, got["rdd"]
 
 
 def test_hashing_embed_dense_long_consistency_and_knn(spark):

@@ -157,7 +157,10 @@ def minhash_signatures(
     ``shingles``: optionally a precomputed ``(id, shingle)`` DataFrame
     (min() is duplicate-insensitive, so distinct or not both work) —
     lets a pipeline share ONE shingle pass between signatures and the
-    exact-Jaccard refinement."""
+    exact-Jaccard refinement. Pin a shared pass with
+    ``localCheckpoint(eager=False)``, not ``persist()``: the cache is
+    matched by plan, and a self-join that re-instances an RDD-backed
+    input misses it, so every consumer re-runs the shingle kernel."""
     sh = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n, distinct=False
     )
@@ -224,13 +227,15 @@ def jaccard_pairs(
 
     ``shingles``: optionally a precomputed DISTINCT ``(id, shingle)``
     DataFrame (must be deduplicated — sizes and intersections count
-    set elements)."""
+    set elements). Without it the pass is built here and pinned with
+    a lazy `localCheckpoint`, so its three consumers (sizes and both
+    intersection sides) run the shingle kernel once."""
     ex = (
         shingles
         if shingles is not None
         else shingle_rows(
             df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-        ).persist()
+        ).localCheckpoint(eager=False)
     )
     sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     a = ex.select(F.col("id").alias("a_id"), "shingle")
@@ -275,27 +280,33 @@ def minhash_dedup_pairs(
 
     One shared DISTINCT shingle pass feeds both the signature
     aggregation (min() is duplicate-insensitive) and the refinement's
-    set algebra — the tokenize+window pass over the corpus runs once,
-    not twice. Pass ``shingles`` (distinct, ideally persisted) to
-    share that pass across operators too. ``fused_signatures=True``
-    computes the signatures in the zero-shuffle Arrow kernel instead
-    (bit-identical; see `minhash_signatures_fused`) — the right call
+    set algebra. It is pinned with a lazy `localCheckpoint`, so the
+    shingle kernel runs once per call whatever backs ``df``. A
+    ``persist()`` would be matched by plan, and the band and
+    refinement self-joins re-instance an RDD-backed input
+    (``localCheckpoint`` output, foreachBatch frames), so each of the
+    six consumers would miss the cache and re-run the kernel. Pass
+    ``shingles`` (distinct, pinned the same way) to share that pass
+    across operators too. ``fused_signatures=True`` computes the
+    signatures in the zero-shuffle Arrow kernel instead (bit-identical;
+    see `minhash_signatures_fused`), pinned the same way — the right call
     when no other operator shares the shingle pass, since the
     refinement then only shingles what the corpus-wide signature
     shuffle would otherwise have paid for. Measured at sf0.1
     (interleaved best-of-3, full pipeline): expr 0.93 s vs fused
-    1.37 s — the shared persisted shingle pass makes the expression
+    1.37 s — the shared pinned shingle pass makes the expression
     aggregate marginal at this size, so expr stays the default; the
     crossover is where the (id, hash) shuffle dwarfs a second
     tokenize pass (corpus >> memory)."""
     sh = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n, distinct=True
-    ).persist()
+    ).localCheckpoint(eager=False)
     if fused_signatures:
+        # the band self-join consumes the kernel output twice
         sig = minhash_signatures_fused(
             df, id_col=id_col, text_col=text_col, num_perm=num_perm,
             shingle_n=shingle_n,
-        )
+        ).localCheckpoint(eager=False)
     else:
         sig = minhash_signatures(
             df, id_col=id_col, text_col=text_col, num_perm=num_perm,
@@ -343,11 +354,11 @@ def minhash_join(
     lsh = shingle_rows(
         left_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
         distinct=True,
-    ).persist()
+    ).localCheckpoint(eager=False)
     rsh = shingle_rows(
         right_df, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
         distinct=True,
-    ).persist()
+    ).localCheckpoint(eager=False)
     lsig = minhash_signatures(
         left_df, id_col=id_col, text_col=text_col, num_perm=num_perm,
         shingle_n=shingle_n, shingles=lsh,
@@ -425,7 +436,7 @@ def ngram_jaccard_pairs(
     """
     inv = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
-    )
+    ).localCheckpoint(eager=False)
     cand = _inverted_candidates(inv, max_shingle_df)
     return jaccard_pairs(
         df,
@@ -434,7 +445,7 @@ def ngram_jaccard_pairs(
         text_col=text_col,
         shingle_n=shingle_n,
         threshold=threshold,
-        shingles=shingles,
+        shingles=inv,
     )
 
 
@@ -490,9 +501,10 @@ def containment_pairs(
     hash on the integers (the c01 round-tie rule: never emit a
     rounded ratio when its numerator/denominator are available).
 
-    ``shingles=None`` builds the pass ad hoc WITHOUT persisting (the
-    lineage is consumed by one result tree); pass a persisted
-    `shingle_rows` frame to share the pass across operators."""
+    ``shingles=None`` builds the pass and pins it with a lazy
+    `localCheckpoint` (the candidate self-join, sizes and both
+    intersection sides all read it); pass a `shingle_rows` frame
+    pinned the same way to share the pass across operators."""
     inv = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     ).localCheckpoint(eager=False)
@@ -1349,9 +1361,10 @@ def incremental_neardup(
 
     Returns ``(pairs, new_signatures, new_shingles)`` — pairs is
     (a_id, b_id, jaccard), canonically ordered a_id < b_id; the
-    caller appends new_signatures /
-    new_shingles to the corpus state tables (parquet append at scale)
-    so the next batch checks against the grown corpus. Shuffle per
+    caller appends new_signatures / new_shingles to the corpus state
+    tables (parquet append at scale) so the next batch checks against
+    the grown corpus. Both are lazily pinned, so writing them after
+    ``pairs`` has run reuses the kernels' output. Shuffle per
     batch: batch×bands signature rows + the candidates' shingles —
     the corpus shingle table is semi-joined to the candidate ids
     before any aggregate, so refinement cost tracks the candidate
@@ -1372,14 +1385,16 @@ def incremental_neardup(
         id_col,
         "left_anti",
     )
+    # pinned: the banded joins and refinement read each kernel's
+    # output here, and the caller writes both to its state tables
     new_sigs = minhash_signatures_fused(
         new_docs, id_col=id_col, text_col=text_col, num_perm=num_perm,
         shingle_n=shingle_n,
-    )
+    ).localCheckpoint(eager=False)
     new_sh = shingle_rows(
         new_docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
         distinct=True,
-    )
+    ).localCheckpoint(eager=False)
     bn = _band_signatures(new_sigs, bands=bands, rows_per_band=rows_per_band)
     bc = _band_signatures(
         corpus_signatures, bands=bands, rows_per_band=rows_per_band

@@ -751,23 +751,18 @@ def knn_graph_blocked(
         # pass that runs the assignment kernel and writes the
         # checkpoint blocks, instead of a separate groupBy+collect
         # job over the same data (the A/B-attributed residual vs the
-        # r7 plan). count_if per cell is bounded by n_cells.
+        # r7 plan). count_if per cell is bounded by n_cells; one SQL
+        # array expression, not one Column per cell (~4 py4j calls each).
         from pyspark.sql import Observation
 
         obs = Observation()
+        per_cell = ", ".join(
+            f"count_if(cell = {c})" for c in range(len(centroids))
+        )
         members = members.observe(
-            obs,
-            *[
-                F.count_if(F.col("cell") == c).alias(f"c{c}")
-                for c in range(len(centroids))
-            ],
+            obs, F.expr(f"array({per_cell})").alias("cnt")
         ).localCheckpoint(eager=True)
-        got = obs.get
-        cnts = {
-            c: int(got[f"c{c}"])
-            for c in range(len(centroids))
-            if int(got[f"c{c}"])
-        }
+        cnts = {c: int(n) for c, n in enumerate(obs.get["cnt"]) if n}
         probes = _blocked_probes(vv, centroids, nprobe, method)
         narrow = _blocked_narrow(
             members, probes, k, method, cell_cap=cap, cell_counts=cnts

@@ -67,10 +67,13 @@ def prepare_training_data(
         "left_semi",
     )
 
-    # shared shingle pass for stages 2 and 4 — persisted, or Spark
-    # re-executes the tokenize kernel once per consumer subtree
-    # (decontamination, signatures, refinement = 3+ corpus scans)
-    shingles = dd.shingle_rows(keep).persist()
+    # shared shingle pass for stages 2 and 4, pinned so the tokenize
+    # kernel runs once for every consumer subtree (decontamination,
+    # signatures, refinement). A lazy localCheckpoint, as in
+    # `dd.minhash_dedup_pairs`: persist() is matched by plan, which
+    # self-joins over RDD-backed inputs can miss, and its cache entry
+    # would outlive the call (the pin is freed with its DataFrame)
+    shingles = dd.shingle_rows(keep).localCheckpoint(eager=False)
 
     # 2. decontamination — broadcast eval shingles, train never shuffles
     if eval_docs is not None:

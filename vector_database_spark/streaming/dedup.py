@@ -123,7 +123,9 @@ def streaming_neardup_ingest(
             new_sigs = minhash_signatures_fused(
                 batch_df, id_col=id_col, text_col=text_col
             )
-            new_sh = shingle_rows(batch_df, id_col=id_col, text_col=text_col)
+            new_sh = shingle_rows(
+                batch_df, id_col=id_col, text_col=text_col
+            ).localCheckpoint(eager=False)
             # batch-internal pairs of the very first batch
             if flagged_sink is not None:
                 from vector_database_spark.operators.dedup import (
@@ -132,7 +134,7 @@ def streaming_neardup_ingest(
 
                 minhash_dedup_pairs(
                     batch_df, id_col=id_col, text_col=text_col,
-                    threshold=threshold,
+                    threshold=threshold, shingles=new_sh,
                 ).write.mode("overwrite").parquet(
                     f"{flagged_sink}/batch={batch_id}"
                 )
