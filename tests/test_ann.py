@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from vector_database_spark.operators.ann import ivf_build, ivf_knn, rp_lsh_knn
@@ -1605,3 +1606,116 @@ def test_bq_codes_hd_marker_validated(spark, embeddings):
         bq_knn(vecs, qdf, 5, hd_blocks=1, hd_seed=12, **kw)
     with pytest.raises(ValueError, match="different +spaces"):
         bq_knn(vecs, qdf, 5, **kw)  # hd_blocks=0 vs an HD code table
+
+
+# The ensure_k escalation contract, shared by every cell-probed
+# operator: 8 cells along the first axis, a sparse layout whose cells
+# hold 6, 0, 1, 1, 2, 0, 0, 1 rows. With k=3 at nprobe=1 the query at
+# x=0 is satisfied at once (never escalates), x=36 escalates once
+# (cells 4, 3) and x=70 twice (cells 7, 6, 5, 4).
+_EK_CELL_ROWS = (6, 0, 1, 1, 2, 0, 0, 1)
+_EK_QUERIES = {0: 0.0, 1: 36.0, 2: 70.0}
+_EK_K = 3
+
+
+def _ek_fixture(spark):
+    from vector_database_spark.schemas import local_frame
+
+    cents = [[10.0 * j, 1.0, 1.0, 1.0] for j in range(len(_EK_CELL_ROWS))]
+    rows, nid = [], 100
+    for cell, n in enumerate(_EK_CELL_ROWS):
+        for i in range(n):
+            off = 0.1 * (i + 1) * (-1) ** i
+            rows.append((nid, [10.0 * cell + off, 1.0 + 0.05 * i, 1.0, 0.9], cell))
+            nid += 1
+    assigned = local_frame(spark, rows, "id long, vector array<double>, cell int")
+    qdf = local_frame(
+        spark,
+        [(q, [x, 1.0, 1.0, 1.0]) for q, x in _EK_QUERIES.items()],
+        "qid long, qvec array<double>",
+    )
+    return assigned, cents, qdf
+
+
+def _ek_ivf(spark, tmp_path):
+    assigned, cents, qdf = _ek_fixture(spark)
+    return lambda p, ek: ivf_knn(
+        assigned, cents, qdf, _EK_K, nprobe=p, ensure_k=ek
+    )
+
+
+def _ek_mips(spark, tmp_path):
+    from vector_database_spark.operators.ann import mips_knn
+
+    assigned, cents, qdf = _ek_fixture(spark)
+    # augmented-space centroids with a 0 last coordinate probe in the
+    # same order as the plain ones (the query's augmented coordinate is 0)
+    acents = [c + [0.0] for c in cents]
+    return lambda p, ek: mips_knn(
+        assigned, qdf, _EK_K, nprobe=p, assigned=assigned,
+        centroids=acents, m2=1e6, ensure_k=ek,
+    )
+
+
+def _ek_bq(spark, tmp_path):
+    from vector_database_spark.operators.ann import bq_build, bq_knn
+
+    assigned, cents, qdf = _ek_fixture(spark)
+    vecs = assigned.select("id", "vector")
+    codes, _ = bq_build(vecs, dim=4, centroids=cents)
+    return lambda p, ek: bq_knn(
+        vecs, qdf, _EK_K, dim=4, m=64, codes=codes, centroids=cents,
+        nprobe=p, ensure_k=ek,
+    )
+
+
+def _ek_knn_join(spark, tmp_path):
+    from vector_database_spark.operators.ann import ivf_write, knn_join
+
+    assigned, cents, qdf = _ek_fixture(spark)
+    path = str(tmp_path / "layout")
+    ivf_write(assigned, cents, path)
+    q = qdf.select(F.col("qid").alias("id"), F.col("qvec").alias("vector"))
+    return lambda p, ek: knn_join(
+        q, None, _EK_K, nprobe=p, layout_path=path, ensure_k=ek
+    )
+
+
+
+@pytest.mark.parametrize(
+    "make", [_ek_ivf, _ek_mips, _ek_bq, _ek_knn_join],
+    ids=["ivf_knn", "mips_knn_assigned", "bq_knn_centroids", "knn_join_layout"],
+)
+def test_ensure_k_equals_plain_answer_at_first_sufficient_nprobe(
+    spark, tmp_path, make
+):
+    """For every query, the ensure_k=True rows equal the ensure_k=False
+    rows at the smallest doubled nprobe (1, 2, 4, 8) where that query
+    has k rows — or at n_cells when none does. The fixture holds one
+    query that never escalates and one that escalates twice."""
+    op = make(spark, tmp_path)
+    n_cells = len(_EK_CELL_ROWS)
+
+    def by_qid(df):
+        out: dict = {}
+        for r in df.collect():
+            out.setdefault(r["qid"], set()).add(tuple(r))
+        return out
+
+    plain = {}
+    p = 1
+    while True:
+        plain[p] = by_qid(op(p, False))
+        if p >= n_cells:
+            break
+        p = min(2 * p, n_cells)
+    got = by_qid(op(1, True))
+    first = {}
+    for q in _EK_QUERIES:
+        first[q] = next(
+            (p for p in sorted(plain) if len(plain[p].get(q, ())) >= _EK_K),
+            n_cells,
+        )
+        assert got.get(q) == plain[first[q]].get(q), (q, first[q])
+    assert set(got) == set(_EK_QUERIES)
+    assert first[0] == 1 and first[1] == 2 and first[2] == 4

@@ -763,15 +763,19 @@ def test_facade_bq_lifecycle_approximate_contract(spark):
     assert full == brute
 
     # vicinity delete drops rows from text AND codes; searches never
-    # return a deleted id
+    # return a deleted id. The radius sits midway between the 3rd- and
+    # 4th-nearest rows, so the delete removes 3 rows whatever values
+    # the generator draws (its F.rand depends on the partition count)
     n_before = db.text().count()
-    removed = db_full.delete_vectors(q, 0.5)
+    ds = sorted(brute.values())
+    radius = (ds[2] + ds[3]) / 2
+    removed = db_full.delete_vectors(q, radius)
     assert removed > 0 and db.text().count() == n_before - removed
     assert db._ann_vectors().count() == n_before - removed
     survivors = {
         int(r.text_id) for r in db_full.search(q, 0.9).collect()
     }
-    gone = {i for i, d in brute.items() if d <= 0.5}
+    gone = {i for i, d in brute.items() if d <= radius}
     assert not (survivors & gone)
 
 

@@ -145,6 +145,23 @@ CHECKS = {
         "(bounded by dims); encode+error is a zero-shuffle projection "
         "with the stats closed over as literals, never a join",
     ),
+    "a07_filtered_knn": (
+        ["BroadcastHashJoin Inner BuildRight", "Right keys [1]: [cell#",
+         "OR ((vec_id#"],
+        ["CartesianProduct", "SortMergeJoin"],
+        "filtered IVF: the (qid, cell) probe frame broadcasts into an "
+        "equi-join on `cell` with the assigned table, and the "
+        "predicate is evaluated on the scan's own columns, below the "
+        "assignment projection — the distance fold only sees "
+        "qualifying rows",
+    ),
+    "a08_knn_join": (
+        ["Left keys [1]: [cell#"],
+        ["CartesianProduct", "BroadcastNestedLoopJoin", "BuildRight"],
+        "kNN join: candidates come from an equi-join of the probes "
+        "(left) and the corpus members (right) on `cell` — never a "
+        "cross product, and the corpus side never builds a broadcast",
+    ),
     "e09_gapfill": (
         ["Window"],
         ["CartesianProduct", "BroadcastNestedLoopJoin",

@@ -460,12 +460,10 @@ class VectorDatabase:
     def _bq_codes_write(self, codes: DataFrame, *, mode: str) -> None:
         if "cell" in codes.columns:
             # the cell-partitioned layout makes the probed Hamming
-            # scan a partition-pruned read; static overwrite because
-            # a rebuild may shrink/renumber cells (the ivf_write rule)
-            w = codes.repartition("cell").write.mode(mode)
-            if mode == "overwrite":
-                w = w.option("partitionOverwriteMode", "static")
-            w.partitionBy("cell").parquet(f"{self.ann_path}/codes")
+            # scan a partition-pruned read
+            from vector_database_spark.operators.ann import _write_cells
+
+            _write_cells(codes, f"{self.ann_path}/codes", mode)
         else:
             codes.write.mode(mode).parquet(f"{self.ann_path}/codes")
 
@@ -526,11 +524,9 @@ class VectorDatabase:
         )
         codes = codes.localCheckpoint(eager=True)
         self._bq_codes_write(codes, mode="overwrite")
-        local_frame(
-            self.spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, cvec array<double>",
-        ).write.mode("overwrite").parquet(f"{self.ann_path}/centroids")
+        ann._centroid_frame(self.spark, cents).write.mode(
+            "overwrite"
+        ).parquet(f"{self.ann_path}/centroids")
         local_frame(
             self.spark,
             [(dim, self.bq_hd_blocks, self.bq_hd_seed,
@@ -687,12 +683,9 @@ class VectorDatabase:
         self._fresh()
         if self._ann_cents_cache is not None:
             return self._ann_cents_cache
-        cents = [
-            list(r.cvec)
-            for r in self.spark.read.parquet(f"{self.ann_path}/centroids")
-            .orderBy("cell")
-            .collect()
-        ]
+        from vector_database_spark.operators.ann import _read_centroids
+
+        cents = _read_centroids(self.spark, self.ann_path)
         self._ann_cents_cache = cents
         return cents
 
@@ -733,29 +726,17 @@ class VectorDatabase:
         'mips' layout (``m2`` given) the distance is measured in the
         AUGMENTED space the cells were trained in — the pruning bound
         `_ann_candidate_ids` uses lives there."""
-        from vector_database_spark.functions.vector import euclidean
+        from vector_database_spark.operators.ann import (
+            _cell_radius,
+            mips_augment,
+        )
 
         if m2 is not None:
-            from vector_database_spark.operators.ann import mips_augment
-
             assigned = assigned.select(
                 "cell", mips_augment("vector", m2).alias("vector")
             )
-        cmap = local_frame(
-            self.spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, cvec array<double>",
-        )
-        (
-            assigned.join(F.broadcast(cmap), "cell")
-            .groupBy("cell")
-            .agg(
-                F.max(euclidean(F.col("vector"), F.col("cvec"))).alias(
-                    "radius"
-                )
-            )
-            .write.mode("overwrite")
-            .parquet(f"{self.ann_path}/radius")
+        _cell_radius(assigned, cents).write.mode("overwrite").parquet(
+            f"{self.ann_path}/radius"
         )
 
     def _ann_build_all(self) -> None:
@@ -789,8 +770,9 @@ class VectorDatabase:
             )
             assigned = assigned.localCheckpoint()
             ann.ivfadc_write(assigned, cents, books, self.ann_path)
-        s, n = ann._ivf_err_stats(assigned, cents)
-        ann._ivf_stats_write(self.spark, self.ann_path, s, n)
+        ann._ivf_stats_write(
+            self.spark, self.ann_path, *ann._ivf_err_stats(assigned, cents)
+        )
         self._write_radius(assigned, cents)
 
     def _ann_append(self, df: DataFrame) -> dict:
@@ -799,7 +781,6 @@ class VectorDatabase:
         invalidates every stored radius wholesale, so it stays an
         explicit `index_documents()` maintenance call; drift is
         surfaced in the returned dict."""
-        from vector_database_spark.functions.vector import euclidean
         from vector_database_spark.operators import ann
 
         if self.index_type == "bq":
@@ -834,23 +815,9 @@ class VectorDatabase:
             )
             cents = self._ann_centroids()
             assigned = ann._assign_cells(batch, cents)
-        cmap = local_frame(
-            self.spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-            "cell int, cvec array<double>",
-        )
-        batch_rad = (
-            assigned.join(F.broadcast(cmap), "cell")
-            .groupBy("cell")
-            .agg(
-                F.max(euclidean(F.col("vector"), F.col("cvec"))).alias(
-                    "radius"
-                )
-            )
-        )
         old = self.spark.read.parquet(f"{self.ann_path}/radius")
         merged = (
-            old.unionByName(batch_rad)
+            old.unionByName(ann._cell_radius(assigned, cents))
             .groupBy("cell")
             .agg(F.max("radius").alias("radius"))
             .localCheckpoint(eager=True)  # pin before overwriting source
@@ -880,17 +847,17 @@ class VectorDatabase:
             self._bq_codes_write(keep, mode="overwrite")
             return
         sub = "codes" if self.index_type == "ivfadc" else "vectors"
-        keep.repartition("cell").write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("cell").parquet(f"{self.ann_path}/{sub}")
+        ann._write_cells(keep, f"{self.ann_path}/{sub}", "overwrite")
         if self.index_type == "mips":
             # no drift stats on the MIPS layout (append has the norm
             # bound instead); radii + m2 are kept — maxima over a
             # superset remain valid bounds
             return
         cents = self._ann_centroids()
-        s, n = ann._ivf_err_stats(keep.select("cell", "vector"), cents)
-        ann._ivf_stats_write(self.spark, self.ann_path, s, n)
+        ann._ivf_stats_write(
+            self.spark, self.ann_path,
+            *ann._ivf_err_stats(keep.select("cell", "vector"), cents),
+        )
 
     def _ann_candidate_ids(self, vector: list, domain: float) -> DataFrame:
         """Cell-pruned candidate superset for a ball query — EXACT by

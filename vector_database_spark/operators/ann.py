@@ -134,12 +134,8 @@ def rp_lsh_knn(
         denom > 0,
         1.0 - dot(F.col("_vec"), F.col("qvec")) / denom,
     ).otherwise(F.lit(2.0))
-    w = Window.partitionBy("qid").orderBy(F.col("cos_dist").asc(), F.col("id").asc())
-    return (
-        cand.withColumn("cos_dist", cos_dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "id", "cos_dist", "rank")
+    return _topk(cand.withColumn("cos_dist", cos_dist), k, "cos_dist").select(
+        "qid", "id", "cos_dist", "rank"
     )
 
 
@@ -232,16 +228,51 @@ def ivf_build(
     n_cells sample rows in seeded-hash order — deterministic.
     """
     vecs = df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector"))
-    first = vecs.select(F.size("vector").alias("d")).first()
-    if first is None or first["d"] is None:
-        raise ValueError("ivf_build: empty input")
-    dims = int(first["d"])
+    centroids = _train_centroids(
+        vecs, n_cells=n_cells, iters=iters, seed=seed,
+        train_rows=train_rows, what="ivf_build",
+    )
+    return _assign_cells(vecs, centroids), centroids
+
+
+def _train_centroids(
+    vecs: DataFrame, *, n_cells: int, iters: int, seed: int,
+    train_rows: int, dims: int | None = None, what: str,
+) -> list[list[float]]:
+    """The coarse cell model every IVF-family layout trains: Lloyd on
+    the bounded deterministic sample of ``vecs``' (id, vector) rows.
+    ``dims`` skips the width probe when the caller knows it; ``what``
+    names the operator in the empty-input error."""
+    if dims is None:
+        first = vecs.select(F.size("vector").alias("d")).first()
+        if first is None or first["d"] is None:
+            raise ValueError(f"{what}: empty input")
+        dims = int(first["d"])
     X, _n = _train_sample(
         vecs, dims=dims, train_rows=train_rows, seed=seed, floor_rows=n_cells * 4
     )
-    C = _lloyd(X, n_cells, iters)
-    centroids = [[float(v) for v in c] for c in C]
-    return _assign_cells(vecs, centroids), centroids
+    return [[float(v) for v in c] for c in _lloyd(X, n_cells, iters)]
+
+
+def _cell_members(
+    vv: DataFrame, centroids, method: str, *, n_cells: int, iters: int,
+    seed: int, train_rows: int,
+) -> tuple[DataFrame, list[list[float]]]:
+    """``(members, centroids)``: ``vv``'s (id, vector) rows with their
+    ``cell`` — trained here when ``centroids`` is None (`ivf_build`),
+    assigned by the BLAS kernel (``method='dgemm'``) or the bit-exact
+    expression argmin (``'expr'``, the oracle path)."""
+    if centroids is None:
+        assigned, centroids = ivf_build(
+            vv, n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows
+        )
+        if method == "dgemm":
+            return assigned, centroids
+    else:
+        centroids = [[float(x) for x in c] for c in centroids]
+        if method == "dgemm":
+            return _assign_cells(vv, centroids), centroids
+    return ivf_assign_expr(vv, centroids), centroids
 
 
 def _assign_cells(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
@@ -317,6 +348,140 @@ def ivf_assign_expr(
     )
 
 
+# --------------------------------------------------------------------------
+# The cell-probed retrieval core: every IVF-family operator (ivf_knn,
+# the PQ/SQ8 shortlists, bq_knn, _mips_serve, knn_join) probes, ranks,
+# escalates and persists through these helpers — the reference's
+# candidate-then-refine plan (`DDL.sql:234-295`) in one place.
+# --------------------------------------------------------------------------
+
+
+def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
+    """The ``(cell, cvec)`` centroid table — a local relation,
+    broadcast-tiny by construction."""
+    return local_frame(
+        spark,
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "cell int, cvec array<double>",
+    )
+
+
+def _nearest_cells(
+    queries: DataFrame, cents: DataFrame, nprobe: int, *,
+    qvec: str = "qvec", keep=("qid", "qvec"),
+) -> DataFrame:
+    """``(*keep, cell)`` for each query's ``nprobe`` nearest cells:
+    queries x the broadcast centroid frame, euclidean from ``qvec``,
+    ranked per qid by ``(cdist, cell)`` — the lowest cell wins ties."""
+    w = Window.partitionBy("qid").orderBy(
+        F.col("cdist").asc(), F.col("cell").asc()
+    )
+    return (
+        queries.crossJoin(F.broadcast(cents))
+        .withColumn("cdist", euclidean(F.col(qvec), F.col("cvec")))
+        .withColumn("_r", F.row_number().over(w))
+        .where(F.col("_r") <= int(nprobe))
+        .select(*keep, "cell")
+    )
+
+
+def _topk(
+    df: DataFrame, k: int, score: str, *, desc: bool = False,
+    rank: str = "rank", group: str = "qid", item: str = "id",
+) -> DataFrame:
+    """The per-group ``row_number`` cut: rows ranked by ``score``
+    (ascending, or descending with ``desc``) then ``item`` ascending,
+    kept while ``rank <= k``."""
+    order = F.col(score).desc() if desc else F.col(score).asc()
+    w = Window.partitionBy(group).orderBy(order, F.col(item).asc())
+    return df.withColumn(rank, F.row_number().over(w)).where(
+        F.col(rank) <= int(k)
+    )
+
+
+def _exact_rerank(
+    cands: DataFrame, shortlist: int, vectors: DataFrame, panel: list, k: int
+) -> DataFrame:
+    """The compressed-domain tail: ADC candidates ``(qid, id, adc)``
+    cut to the global top-``shortlist`` per query by (adc, id), joined
+    to the raw ``(id, _vec)`` vectors and the broadcast query panel,
+    re-ranked by exact euclidean distance. ``(qid, id, dist, rank)``."""
+    short = _topk(cands, shortlist, "adc", rank="_r").select("qid", "id")
+    qdf = local_frame(
+        vectors.sparkSession, panel, "qid long, qvec array<double>"
+    )
+    ranked = (
+        vectors.join(short, "id")
+        .join(F.broadcast(qdf), "qid")
+        .withColumn("dist", euclidean(F.col("_vec"), F.col("qvec")))
+    )
+    return _topk(ranked, k, "dist").select("qid", "id", "dist", "rank")
+
+
+def _escalate(
+    out: DataFrame, queries: DataFrame, ranked, k: int, nprobe: int,
+    n_cells: int, *, qid: str = "qid",
+) -> DataFrame:
+    """The ``ensure_k`` result-count contract, set-based: queries with
+    fewer than k rows in ``out`` are re-answered by ``ranked(starved,
+    doubled nprobe)`` until every query has k rows or all ``n_cells``
+    are probed. The starved set stays a DataFrame (anti-join on the
+    satisfied qids, never a driver-side qid list), so any query-table
+    size works; satisfied queries keep their lower-probe rows (a
+    probe superset never changes them). Every round's frames are
+    pinned with lazy ``localCheckpoint``s, so a round's count does not
+    recompute the earlier rounds' probe joins. ``qid`` names the key
+    column of ``queries``; ``out`` is keyed by ``qid``."""
+    cur = int(nprobe)
+    out = out.localCheckpoint(eager=False)
+    while cur < n_cells:
+        sat = (
+            out.groupBy("qid")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .where(F.col("_n") >= int(k))
+            .select(F.col("qid").alias(qid))
+        )
+        starved = queries.join(sat, qid, "left_anti").localCheckpoint(
+            eager=False
+        )
+        if starved.isEmpty():
+            break
+        cur = min(cur * 2, n_cells)
+        out = (
+            out.join(
+                starved.select(F.col(qid).alias("qid")), "qid", "left_anti"
+            )
+            .unionByName(ranked(starved, cur))
+            .localCheckpoint(eager=False)
+        )
+    return out
+
+
+def _write_cells(df: DataFrame, path: str, mode: str) -> None:
+    """Write a cell-partitioned layout: one ``repartition("cell")`` so
+    each cell directory gets one file per write, ``partitionBy("cell")``
+    so a probe reads nprobe partitions. Overwrite is STATIC: the
+    session default is dynamic, which cannot DROP partitions — a
+    retrain that shrinks or renumbers cells, or a delete that empties
+    one, would otherwise leave stale cell directories behind."""
+    w = df.repartition("cell").write.mode(mode)
+    if mode == "overwrite":
+        w = w.option("partitionOverwriteMode", "static")
+    w.partitionBy("cell").parquet(path)
+
+
+def _cell_radius(assigned: DataFrame, centroids) -> DataFrame:
+    """``(cell, radius)``: each cell's max euclidean distance from a
+    row's ``vector`` to its own centroid — the ball-pruning bound of
+    the facade's cell layouts."""
+    cmap = _centroid_frame(assigned.sparkSession, centroids)
+    return (
+        assigned.join(F.broadcast(cmap), "cell")
+        .groupBy("cell")
+        .agg(F.max(euclidean(F.col("vector"), F.col("cvec"))).alias("radius"))
+    )
+
+
 def ivf_knn(
     assigned_df: DataFrame,
     centroids: list[list[float]],
@@ -358,79 +523,25 @@ def ivf_knn(
     ≥ the total number of qualifying rows (every proper probe subset
     is then short, so the loop runs to full probe). For the tree
     path's genuinely lossless filtered contract (the reference
-    `Find` analog) use `search(where=)`/`knn(where=)`. Escalation
-    needs one small per-query count per round (driver-side collect
-    of len(queries) longs; rounds are log2(n_cells/nprobe))."""
+    `Find` analog) use `search(where=)`/`knn(where=)`. Escalation is
+    the shared set-based loop (`_escalate`): no driver-side qid list;
+    rounds are log2(n_cells/nprobe)."""
     if where is not None:
         pred = F.expr(where) if isinstance(where, str) else where
         assigned_df = assigned_df.where(pred)
-    spark = assigned_df.sparkSession
-    cents = local_frame(
-        spark,
-        [(i, c) for i, c in enumerate(centroids)], "cell int, cvec array<double>"
-    )
-    n_cells = len(centroids)
+    cents = _centroid_frame(assigned_df.sparkSession, centroids)
 
     def ranked(qdf: DataFrame, np_: int) -> DataFrame:
-        qc = (
-            qdf.crossJoin(F.broadcast(cents))
-            .withColumn("cdist", euclidean(F.col("qvec"), F.col("cvec")))
+        probes = _nearest_cells(qdf, cents, np_)
+        cand = assigned_df.join(F.broadcast(probes), "cell").withColumn(
+            "dist", euclidean(F.col("vector"), F.col("qvec"))
         )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("cdist").asc(), F.col("cell").asc()
-        )
-        probes = (
-            qc.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= np_)
-            .select("qid", "qvec", "cell")
-        )
-        cand = assigned_df.join(F.broadcast(probes), "cell")
-        wk = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
-        return (
-            cand.withColumn("dist", euclidean(F.col("vector"), F.col("qvec")))
-            .withColumn("rank", F.row_number().over(wk))
-            .where(F.col("rank") <= k)
-            .select("qid", "id", "dist", "rank")
-        )
+        return _topk(cand, k, "dist").select("qid", "id", "dist", "rank")
 
     out = ranked(queries_df, nprobe)
-    if not ensure_k or nprobe >= n_cells:
+    if not ensure_k or nprobe >= len(centroids):
         return out
-    cur = int(nprobe)
-    # panel qids collected ONCE (panels are small by contract); each
-    # escalation round's starved set is expressed as a broadcast JOIN
-    # against a tiny qid frame, never Column.isin — an In-expression
-    # over a large panel would grow the driver-side plan O(|short|)
-    # per round
-    spark = queries_df.sparkSession
-    qid_field = queries_df.select("qid").schema.fields[0]
-    all_qids = [r["qid"] for r in queries_df.select("qid").collect()]
-    while cur < n_cells:
-        counts = {
-            r["qid"]: r["n"]
-            for r in out.groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        short = [q for q in all_qids if counts.get(q, 0) < k]
-        if not short:
-            break
-        cur = min(cur * 2, n_cells)
-        short_df = local_frame(
-            spark,
-            [(q,) for q in short],
-            f"qid {qid_field.dataType.simpleString()}",
-        )
-        retry_q = queries_df.join(F.broadcast(short_df), "qid")
-        out = out.join(
-            F.broadcast(short_df), "qid", "left_anti"
-        ).unionByName(ranked(retry_q, cur))
-        # truncate lineage so each escalation round's count doesn't
-        # recompute all prior rounds' probe joins
-        out = out.localCheckpoint(eager=False)
-    return out
+    return _escalate(out, queries_df, ranked, k, nprobe, len(centroids))
 
 
 def ivf_write(
@@ -439,28 +550,22 @@ def ivf_write(
     """Persist the inverted file: vectors partitioned by cell (the
     physical layout that makes nprobe search touch nprobe partitions),
     plus the centroid table alongside."""
-    spark = assigned_df.sparkSession
-    # STATIC overwrite: the session default is dynamic, which cannot
-    # DROP partitions (the repo's documented hazard) — a retrain that
-    # shrinks or renumbers cells would otherwise leave stale cell dirs
-    # whose rows are ALSO rewritten under the new centroids
-    assigned_df.repartition("cell").write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("cell").parquet(f"{path}/vectors")
-    local_frame(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cvec array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_cells(assigned_df, f"{path}/vectors", "overwrite")
+    _centroid_frame(assigned_df.sparkSession, centroids).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids")
 
 
 def ivf_read(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
-    assigned = spark.read.parquet(f"{path}/vectors")
-    cents = [
+    return spark.read.parquet(f"{path}/vectors"), _read_centroids(spark, path)
+
+
+def _read_centroids(spark, path: str) -> list[list[float]]:
+    """The centroid table of a layout at ``path``, in cell order."""
+    return [
         list(r.cvec)
         for r in spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
     ]
-    return assigned, cents
 
 
 def _ivf_err_stats(assigned: DataFrame, centroids: list[list[float]]):
@@ -469,12 +574,7 @@ def _ivf_err_stats(assigned: DataFrame, centroids: list[list[float]]):
     One broadcast join + one aggregate; the per-row distance is the
     interpreted HOF fold (fine for per-row vector math — the measured
     rule)."""
-    spark = assigned.sparkSession
-    cmap = local_frame(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cvec array<double>",
-    )
+    cmap = _centroid_frame(assigned.sparkSession, centroids)
     row = (
         assigned.join(F.broadcast(cmap), "cell")
         .agg(
@@ -499,6 +599,46 @@ def _ivf_stats_read(spark, path: str):
         return (float(r["err_sum"]), int(r["n"]))
     except Exception:
         return None
+
+
+def _drift_update(
+    spark, path: str, layout: str, centroids, batch_sum: float,
+    batch_n: int, *, catch_up: bool = True,
+) -> tuple[float, float, float]:
+    """Fold an appended batch's quantization-error sums into the
+    running ``{path}/stats``; returns ``(batch_err, base_err, drift)``
+    with drift = batch_mean/base_mean − 1 (0.0 on an empty base). A
+    layout written before stats existed derives its base once from
+    everything in ``{path}/{layout}`` EXCEPT this batch (``catch_up``:
+    the layout keeps its vectors), then running sums take over."""
+    base = _ivf_stats_read(spark, path)
+    if base is None:
+        base = (0.0, 0)
+        if catch_up:
+            all_sum, all_n = _ivf_err_stats(
+                spark.read.parquet(f"{path}/{layout}").select("cell", "vector"),
+                centroids,
+            )
+            base = (all_sum - batch_sum, all_n - batch_n)
+    base_sum, base_n = base
+    batch_err = batch_sum / batch_n
+    base_err = (base_sum / base_n) if base_n > 0 else 0.0
+    drift = (batch_err / base_err - 1.0) if base_err > 0 else 0.0
+    _ivf_stats_write(spark, path, base_sum + batch_sum, base_n + batch_n)
+    return batch_err, base_err, drift
+
+
+def _append_report(
+    n: int, batch_err: float = 0.0, base_err: float = 0.0,
+    drift: float = 0.0, retrained: bool = False,
+) -> dict:
+    return {
+        "appended": n,
+        "batch_err": round(batch_err, 6),
+        "base_err": round(base_err, 6),
+        "drift": round(drift, 6),
+        "retrained": bool(retrained),
+    }
 
 
 def ivf_append(
@@ -568,28 +708,11 @@ def ivf_append(
     assigned = assigned.localCheckpoint()
     batch_sum, batch_n = _ivf_err_stats(assigned, centroids)
     if batch_n == 0:
-        return {
-            "appended": 0, "batch_err": 0.0, "base_err": 0.0,
-            "drift": 0.0, "retrained": False,
-        }
-    assigned.repartition("cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/vectors")
-
-    base = _ivf_stats_read(spark, path)
-    if base is None:
-        # legacy layout written before stats existed: derive the base
-        # from everything on disk EXCEPT this batch (one catch-up
-        # pass, then running sums take over)
-        all_sum, all_n = _ivf_err_stats(
-            spark.read.parquet(f"{path}/vectors"), centroids
-        )
-        base = (all_sum - batch_sum, all_n - batch_n)
-    base_sum, base_n = base
-    batch_err = batch_sum / batch_n
-    base_err = (base_sum / base_n) if base_n > 0 else 0.0
-    drift = (batch_err / base_err - 1.0) if base_err > 0 else 0.0
-    _ivf_stats_write(spark, path, base_sum + batch_sum, base_n + batch_n)
+        return _append_report(0)
+    _write_cells(assigned, f"{path}/vectors", "append")
+    batch_err, base_err, drift = _drift_update(
+        spark, path, "vectors", centroids, batch_sum, batch_n
+    )
 
     do_retrain = retrain == "always" or (
         retrain == "auto" and drift > drift_threshold
@@ -601,15 +724,10 @@ def ivf_append(
         k = n_cells if n_cells is not None else len(centroids)
         re_assigned, re_cents = ivf_build(full, n_cells=k, iters=iters)
         ivf_write(re_assigned, re_cents, path)
-        s, n = _ivf_err_stats(spark.read.parquet(f"{path}/vectors"), re_cents)
-        _ivf_stats_write(spark, path, s, n)
-    return {
-        "appended": batch_n,
-        "batch_err": round(batch_err, 6),
-        "base_err": round(base_err, 6),
-        "drift": round(drift, 6),
-        "retrained": bool(do_retrain),
-    }
+        _ivf_stats_write(spark, path, *_ivf_err_stats(
+            spark.read.parquet(f"{path}/vectors"), re_cents
+        ))
+    return _append_report(batch_n, batch_err, base_err, drift, do_retrain)
 
 
 def ivfadc_write(
@@ -627,15 +745,10 @@ def ivfadc_write(
     exact re-ranking then needs the original table joined back."""
     spark = codes_df.sparkSession
     out = codes_df if keep_vectors else codes_df.drop("vector")
-    # static overwrite — same stale-partition hazard as ivf_write
-    out.repartition("cell").write.mode("overwrite").option(
-        "partitionOverwriteMode", "static"
-    ).partitionBy("cell").parquet(f"{path}/codes")
-    local_frame(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, cvec array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_cells(out, f"{path}/codes", "overwrite")
+    _centroid_frame(spark, centroids).write.mode("overwrite").parquet(
+        f"{path}/centroids"
+    )
     local_frame(
         spark,
         [
@@ -651,10 +764,7 @@ def ivfadc_read(
     spark, path: str
 ) -> tuple[DataFrame, list[list[float]], list[list[list[float]]]]:
     codes = spark.read.parquet(f"{path}/codes")
-    cents = [
-        list(r.cvec)
-        for r in spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    ]
+    cents = _read_centroids(spark, path)
     rows = (
         spark.read.parquet(f"{path}/codebooks")
         .orderBy("subspace", "code")
@@ -849,19 +959,19 @@ def pq_adc_knn_expr(
     adc = terms[0]
     for t in terms[1:]:
         adc = adc + t  # explicit left-to-right — the oracle's order
-    ws = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("id").asc())
-    short = (
-        joined.withColumn("adc", adc)
-        .withColumn("_r", F.row_number().over(ws))
-        .where(F.col("_r") <= shortlist)
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        short.withColumn("dist", euclidean(F.col("vector"), qv))
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= int(k))
-        .select("qid", "id", "dist", "rank")
-    )
+    short = _topk(joined.withColumn("adc", adc), shortlist, "adc", rank="_r")
+    return _topk(
+        short.withColumn("dist", euclidean(F.col("vector"), qv)), k, "dist"
+    ).select("qid", "id", "dist", "rank")
+
+
+def _collect_panel(queries_df: DataFrame, what: str) -> list:
+    """The (qid, qvec) query panel, driver-side: the ADC kernels close
+    over per-query lookup tables built from it."""
+    panel = [(int(r["qid"]), list(r["qvec"])) for r in queries_df.collect()]
+    if not panel:
+        raise ValueError(f"{what}: empty query panel")
+    return panel
 
 
 def _adc_luts(panel: list[tuple[int, list[float]]], books) -> dict:
@@ -902,9 +1012,7 @@ def pq_knn(
     shuffle carries survivors only), then the global shortlist is
     re-ranked exactly on the raw vectors kept in `codes_df`. Returns
     (qid, id, dist, rank) — same contract as `ivf_knn`/`knn`."""
-    panel = [(int(r["qid"]), list(r["qvec"])) for r in queries_df.collect()]
-    if not panel:
-        raise ValueError("pq_knn: empty query panel")
+    panel = _collect_panel(queries_df, "pq_knn")
     books = [[list(map(float, c)) for c in book] for book in codebooks]
     shortlist = max(int(k), int(k) * int(refine_factor))
     # LUTs are precomputed driver-side and closed over as plain lists
@@ -938,26 +1046,10 @@ def pq_knn(
     cands = codes_df.select(F.col(id_col).alias(id_col), "code").mapInPandas(
         score, "qid long, id long, adc double"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("id").asc())
-    short = (
-        cands.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= shortlist)
-        .select("qid", "id")
+    vectors = codes_df.select(
+        F.col(id_col).alias("id"), F.col(vector_col).alias("_vec")
     )
-    spark = codes_df.sparkSession
-    qdf = local_frame(spark, panel, "qid long, qvec array<double>")
-    ranked = (
-        codes_df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("_vec"))
-        .join(short, "id")
-        .join(F.broadcast(qdf), "qid")
-        .withColumn("dist", euclidean(F.col("_vec"), F.col("qvec")))
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        ranked.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _exact_rerank(cands, shortlist, vectors, panel, k)
 
 
 def ivfadc_build(
@@ -1103,35 +1195,17 @@ def ivfadc_append(
     )
     coded = coded_full if keep_vec else coded_full.drop("vector")
     if batch_n == 0:
-        return {
-            "appended": 0, "batch_err": 0.0, "base_err": 0.0,
-            "drift": 0.0, "retrained": False,
-        }
-    coded.repartition("cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/codes")
-
-    base = _ivf_stats_read(spark, path)
-    if base is None:
-        if "vector" in stored.columns:
-            all_sum, all_n = _ivf_err_stats(
-                spark.read.parquet(f"{path}/codes").select("cell", "vector"),
-                cents,
-            )
-            base = (all_sum - batch_sum, all_n - batch_n)
-        else:
-            base = (0.0, 0)
-    base_sum, base_n = base
-    batch_err = batch_sum / batch_n
-    base_err = (base_sum / base_n) if base_n > 0 else 0.0
-    drift = (batch_err / base_err - 1.0) if base_err > 0 else 0.0
-    _ivf_stats_write(spark, path, base_sum + batch_sum, base_n + batch_n)
+        return _append_report(0)
+    _write_cells(coded, f"{path}/codes", "append")
+    batch_err, base_err, drift = _drift_update(
+        spark, path, "codes", cents, batch_sum, batch_n, catch_up=keep_vec
+    )
 
     do_retrain = retrain == "always" or (
         retrain == "auto" and drift > drift_threshold
     )
     if do_retrain:
-        if "vector" not in stored.columns:
+        if not keep_vec:
             raise ValueError(
                 "ivfadc_append: retrain requested but the layout was "
                 "written with keep_vectors=False — the raw vectors "
@@ -1148,17 +1222,10 @@ def ivfadc_append(
             iters=iters,
         )
         ivfadc_write(codes2, c2_, b2, path)
-        s, n = _ivf_err_stats(
+        _ivf_stats_write(spark, path, *_ivf_err_stats(
             spark.read.parquet(f"{path}/codes").select("cell", "vector"), c2_
-        )
-        _ivf_stats_write(spark, path, s, n)
-    return {
-        "appended": batch_n,
-        "batch_err": round(batch_err, 6),
-        "base_err": round(base_err, 6),
-        "drift": round(drift, 6),
-        "retrained": bool(do_retrain),
-    }
+        ))
+    return _append_report(batch_n, batch_err, base_err, drift, do_retrain)
 
 
 def ivfadc_knn(
@@ -1175,9 +1242,7 @@ def ivfadc_knn(
     cell) LUTs built from (q − centroid), re-rank the shortlist
     exactly. The candidate read is cell-partition-pruned exactly like
     `ivf_knn`; scoring touches 8 bytes per candidate."""
-    panel = [(int(r["qid"]), list(r["qvec"])) for r in queries_df.collect()]
-    if not panel:
-        raise ValueError("ivfadc_knn: empty query panel")
+    panel = _collect_panel(queries_df, "ivfadc_knn")
     import numpy as np
 
     CM = np.asarray(centroids, dtype=np.float64)
@@ -1239,26 +1304,8 @@ def ivfadc_knn(
     cands = cand_src.select("id", "cell", "code").mapInPandas(
         score, "qid long, id long, adc double"
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("id").asc())
-    short = (
-        cands.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= shortlist)
-        .select("qid", "id")
-    )
-    spark = codes_df.sparkSession
-    qdf = local_frame(spark, panel, "qid long, qvec array<double>")
-    ranked = (
-        codes_df.select("id", F.col("vector").alias("_vec"))
-        .join(short, "id")
-        .join(F.broadcast(qdf), "qid")
-        .withColumn("dist", euclidean(F.col("_vec"), F.col("qvec")))
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        ranked.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    vectors = codes_df.select("id", F.col("vector").alias("_vec"))
+    return _exact_rerank(cands, shortlist, vectors, panel, k)
 
 
 # --------------------------------------------------------------------------
@@ -1369,19 +1416,10 @@ def sq8_adc_knn_expr(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    ws = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("id").asc())
-    short = (
-        joined.withColumn("adc", score)
-        .withColumn("_r", F.row_number().over(ws))
-        .where(F.col("_r") <= shortlist)
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        short.withColumn("dist", euclidean(F.col("vector"), qv))
-        .withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= int(k))
-        .select("qid", "id", "dist", "rank")
-    )
+    short = _topk(joined.withColumn("adc", score), shortlist, "adc", rank="_r")
+    return _topk(
+        short.withColumn("dist", euclidean(F.col("vector"), qv)), k, "dist"
+    ).select("qid", "id", "dist", "rank")
 
 
 def sq8_decode(
@@ -1459,9 +1497,7 @@ def sq8_knn(
     distance — with any reasonable refine_factor the exact re-rank
     recovers brute-force top-k on real data.
     """
-    panel = [(int(r["qid"]), list(r["qvec"])) for r in queries_df.collect()]
-    if not panel:
-        raise ValueError("sq8_knn: empty query panel")
+    panel = _collect_panel(queries_df, "sq8_knn")
     import numpy as np
 
     lo_v = np.asarray([float(x) for x in lo], dtype=np.float64)
@@ -1503,26 +1539,10 @@ def sq8_knn(
     cands = enc_df.select(
         F.col(id_col).alias("id"), F.col(codes_col).alias("codes")
     ).mapInPandas(score, "qid long, id long, adc double")
-    w = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("id").asc())
-    short = (
-        cands.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= shortlist)
-        .select("qid", "id")
+    vectors = enc_df.select(
+        F.col(id_col).alias("id"), F.col(vector_col).alias("_vec")
     )
-    spark = enc_df.sparkSession
-    qdf = local_frame(spark, panel, "qid long, qvec array<double>")
-    ranked = (
-        enc_df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("_vec"))
-        .join(short, "id")
-        .join(F.broadcast(qdf), "qid")
-        .withColumn("dist", euclidean(F.col("_vec"), F.col("qvec")))
-    )
-    wk = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-    return (
-        ranked.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= k)
-        .select("qid", "id", "dist", "rank")
-    )
+    return _exact_rerank(cands, shortlist, vectors, panel, k)
 
 
 def sq8_write(
@@ -1987,13 +2007,10 @@ def bq_build(
         F.col(vector_col).cast("array<double>").alias("vector"),
     )
     if centroids is None:
-        X, _n = _train_sample(
-            vecs, dims=int(dim), train_rows=train_rows, seed=seed,
-            floor_rows=n_cells * 4,
+        centroids = _train_centroids(
+            vecs, n_cells=n_cells, iters=iters, seed=seed,
+            train_rows=train_rows, dims=int(dim), what="bq_build",
         )
-        centroids = [
-            [float(x) for x in c] for c in _lloyd(X, n_cells, iters)
-        ]
     else:
         centroids = [[float(x) for x in c] for c in centroids]
     if assign_method == "expr":
@@ -2096,10 +2113,10 @@ def bq_knn(
     result-count contract to the CELL-PRUNED path: starved queries
     (fewer than k rows after the rerank — a selective ``where=``
     can empty their probed cells) retry with a doubled ``nprobe``
-    until every query has k rows or all cells are probed, exactly
-    the `_mips_serve`/`ivf_knn`/`knn_join` set-based escalation
-    (starved set stays a DataFrame; satisfied queries keep their
-    lower-probe results). On the full-scan path (no centroids) the
+    until every query has k rows or all cells are probed — the
+    shared set-based `_escalate` loop every cell-probed operator
+    uses (satisfied queries keep their lower-probe results). On the
+    full-scan path (no centroids) the
     filtered Hamming cut already sees every qualifying row, so
     ensure_k is a no-op there.
 
@@ -2459,13 +2476,8 @@ def bq_knn(
                 .alias("dist"),
             )
 
-    spark = vectors_df.sparkSession
     if centroids is not None:
-        cdf = local_frame(
-            spark,
-            [(i, c) for i, c in enumerate(cents)],
-            "cell int, cvec array<double>",
-        )
+        cdf = _centroid_frame(vectors_df.sparkSession, cents)
     vecs = vectors_df.select(
         F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
     )
@@ -2473,18 +2485,9 @@ def bq_knn(
 
     def _ranked(qsub: DataFrame, np_: int) -> DataFrame:
         """qsub -> exact-rerank top-k for one probe width (the
-        `_mips_serve` escalation unit)."""
+        `_escalate` unit)."""
         if centroids is not None:
-            wp = Window.partitionBy("qid").orderBy(
-                F.col("cdist").asc(), F.col("cell").asc()
-            )
-            probes = (
-                qsub.crossJoin(F.broadcast(cdf))
-                .withColumn("cdist", euclidean(F.col("qvec"), F.col("cvec")))
-                .withColumn("_r", F.row_number().over(wp))
-                .where(F.col("_r") <= int(np_))
-                .select("qid", *_qcols, "cell")
-            )
+            probes = _nearest_cells(qsub, cdf, np_, keep=("qid", *_qcols))
             narrow = _narrow_dist(codes.join(F.broadcast(probes), "cell"))
         elif scoring == "asym" and score_method != "expr":
             # full-scan kernel: all queries score per code batch (no
@@ -2497,16 +2500,11 @@ def bq_knn(
                 codes.crossJoin(F.broadcast(qsub.select("qid", *_qcols)))
             )
         local = _grouped_topk(narrow, mm, "qid", "id")
-        w = Window.partitionBy("qid").orderBy(
-            F.col("dist").asc(), F.col("id").asc()
-        )
         stage1 = F.col("dist").cast("long")
         if scoring == "asym":
             stage1 = (-F.col("dist")).cast("long")
-        cand = (
-            local.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") <= mm)
-            .select("qid", "id", stage1.alias(stage1_col))
+        cand = _topk(local, mm, "dist", rank="_r").select(
+            "qid", "id", stage1.alias(stage1_col)
         )
         scored = (
             F.broadcast(cand)
@@ -2521,44 +2519,16 @@ def bq_knn(
                 ),
             )
         )
-        wr = Window.partitionBy("qid").orderBy(
-            F.col("cos_sim").desc(), F.col("id").asc()
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(wr))
-            .where(F.col("rank") <= int(k))
-            .select("qid", "id", stage1_col, "cos_sim",
-                    F.col("rank").cast("long").alias("rank"))
+        return _topk(scored, k, "cos_sim", desc=True).select(
+            "qid", "id", stage1_col, "cos_sim",
+            F.col("rank").cast("long").alias("rank"),
         )
 
     out = _ranked(qcodes, int(nprobe))
     if not ensure_k or centroids is None:
         return out
-    # set-based doubling escalation on the cell-pruned path (the
-    # `_mips_serve` loop): starved qids retry with doubled nprobe;
     # terminates at the full probe (== the unpruned filtered scan)
-    cur, total = int(nprobe), len(cents)
-    out = out.localCheckpoint(eager=False)
-    while cur < total:
-        sat = (
-            out.groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") >= int(k))
-            .select("qid")
-        )
-        starved_q = qcodes.join(sat, "qid", "left_anti").localCheckpoint(
-            eager=False
-        )
-        if starved_q.isEmpty():
-            break
-        cur = min(cur * 2, total)
-        retry = _ranked(starved_q, cur)
-        out = (
-            out.join(starved_q.select("qid"), "qid", "left_anti")
-            .unionByName(retry)
-            .localCheckpoint(eager=False)
-        )
-    return out
+    return _escalate(out, qcodes, _ranked, k, nprobe, len(cents))
 
 
 def mips_augment(vec_col, m2: float):
@@ -2680,28 +2650,14 @@ def mips_knn(
         m2 = mips_max_norm2(vv)
     av = vv.withColumn("avec", mips_augment("vector", m2))
     if centroids is None:
-        first = vv.select(F.size("vector").alias("d")).first()
-        if first is None or first["d"] is None:
-            raise ValueError("mips_knn: empty input")
-        X, _n = _train_sample(
-            av.select("id", F.col("avec").alias("vector")),
-            dims=int(first["d"]) + 1,
-            train_rows=train_rows,
-            seed=seed,
-            floor_rows=n_cells * 4,
+        centroids = _train_centroids(
+            av.select("id", F.col("avec").alias("vector")), n_cells=n_cells,
+            iters=iters, seed=seed, train_rows=train_rows, what="mips_knn",
         )
-        centroids = [[float(x) for x in c] for c in _lloyd(X, n_cells, iters)]
     else:
         centroids = [[float(x) for x in c] for c in centroids]
     if method == "dgemm":
-        assigned = _assign_cells(
-            av.select(
-                "id",
-                F.col("avec").alias("vector"),
-                F.col("vector").alias("ovec"),
-            ),
-            centroids,
-        ).select("id", F.col("ovec").alias("vector"), "cell")
+        assigned = _mips_assign(vv, m2, centroids)
     else:
         dists = F.array(
             *[
@@ -2749,76 +2705,30 @@ def _mips_serve(
     filtered IVF: a highly selective predicate warrants a larger
     nprobe — or ``ensure_k=True`` (round-9 verdict item 4), which
     retries starved queries with a doubled nprobe until every query
-    has k rows or all cells are probed. SET-BASED (the knn_join
-    escalation): the starved set stays a DataFrame (anti-join on
-    satisfied qids), never a driver qid list; satisfied queries keep
-    their lower-probe results (probe supersets never change them).
-    Escalation terminates at the full probe, where results equal the
+    has k rows or all cells are probed — the shared set-based
+    `_escalate` loop (satisfied queries keep their lower-probe
+    results). Escalation terminates at the full probe, where results equal the
     exact filtered MIPS scan — so a predicate starving every probe
     subset ends recall-1.0 (pytest-pinned in the a07 1% regime)."""
-    from vector_database_spark.functions.vector import euclidean
-
     if where is not None:
         pred = F.expr(where) if isinstance(where, str) else where
         assigned = assigned.where(pred)
-    spark = assigned.sparkSession
-    cents = local_frame(
-        spark,
-        [(i, c) for i, c in enumerate(centroids)],
-        "cell int, cvec array<double>",
-    )
+    cents = _centroid_frame(assigned.sparkSession, centroids)
     qdf = queries_df.select(
         "qid", F.col("qvec").cast("array<double>").alias("qvec")
     ).withColumn("aqv", F.concat(F.col("qvec"), F.array(F.lit(0.0))))
 
     def _ranked(qsub: DataFrame, np_: int) -> DataFrame:
-        qc = qsub.crossJoin(F.broadcast(cents)).withColumn(
-            "cdist", euclidean(F.col("aqv"), F.col("cvec"))
+        probes = _nearest_cells(qsub, cents, np_, qvec="aqv")
+        cand = assigned.join(F.broadcast(probes), "cell").withColumn(
+            "ip", dot(F.col("vector"), F.col("qvec"))
         )
-        wp = Window.partitionBy("qid").orderBy(
-            F.col("cdist").asc(), F.col("cell").asc()
-        )
-        probes = (
-            qc.withColumn("_r", F.row_number().over(wp))
-            .where(F.col("_r") <= int(np_))
-            .select("qid", "qvec", "cell")
-        )
-        cand = assigned.join(F.broadcast(probes), "cell")
-        wk = Window.partitionBy("qid").orderBy(
-            F.col("ip").desc(), F.col("id").asc()
-        )
-        return (
-            cand.withColumn("ip", dot(F.col("vector"), F.col("qvec")))
-            .withColumn("rank", F.row_number().over(wk))
-            .where(F.col("rank") <= int(k))
-            .select("qid", "id", "ip", "rank")
-        )
+        return _topk(cand, k, "ip", desc=True).select("qid", "id", "ip", "rank")
 
     out = _ranked(qdf, int(nprobe))
     if not ensure_k:
         return out
-    cur, total = int(nprobe), len(centroids)
-    out = out.localCheckpoint(eager=False)
-    while cur < total:
-        sat = (
-            out.groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") >= int(k))
-            .select("qid")
-        )
-        starved_q = qdf.join(sat, "qid", "left_anti").localCheckpoint(
-            eager=False
-        )
-        if starved_q.isEmpty():
-            break
-        cur = min(cur * 2, total)
-        retry = _ranked(starved_q, cur)
-        out = (
-            out.join(starved_q.select("qid"), "qid", "left_anti")
-            .unionByName(retry)
-            .localCheckpoint(eager=False)
-        )
-    return out
+    return _escalate(out, qdf, _ranked, k, nprobe, len(centroids))
 
 
 def mips_build(
@@ -2846,24 +2756,25 @@ def mips_build(
     if first is None or first["d"] is None:
         raise ValueError("mips_build: empty input")
     m2 = mips_max_norm2(vv)
-    av = vv.withColumn("avec", mips_augment("vector", m2))
-    X, _n = _train_sample(
-        av.select("id", F.col("avec").alias("vector")),
-        dims=int(first["d"]) + 1,
-        train_rows=train_rows,
-        seed=seed,
-        floor_rows=n_cells * 4,
+    centroids = _train_centroids(
+        vv.select("id", mips_augment("vector", m2).alias("vector")),
+        n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows,
+        dims=int(first["d"]) + 1, what="mips_build",
     )
-    centroids = [[float(x) for x in c] for c in _lloyd(X, n_cells, iters)]
-    assigned = _assign_cells(
-        av.select(
-            "id",
-            F.col("avec").alias("vector"),
-            F.col("vector").alias("ovec"),
-        ),
-        centroids,
-    ).select("id", F.col("ovec").alias("vector"), "cell")
-    return assigned, centroids, m2
+    return _mips_assign(vv, m2, centroids), centroids, m2
+
+
+def _mips_assign(vv: DataFrame, m2: float, centroids) -> DataFrame:
+    """``(id, vector, cell)``: cells from the BLAS kernel in the
+    norm-augmented space, the ORIGINAL vectors kept."""
+    av = vv.select(
+        "id",
+        mips_augment("vector", m2).alias("vector"),
+        F.col("vector").alias("ovec"),
+    )
+    return _assign_cells(av, centroids).select(
+        "id", F.col("ovec").alias("vector"), "cell"
+    )
 
 
 def mips_write(
@@ -2970,18 +2881,9 @@ def mips_append(
             "batch_m2": batch_m2,
             "m2": new_m2,
         }
-    av = vecs.withColumn("avec", mips_augment("vector", m2))
-    assigned = _assign_cells(
-        av.select(
-            "id", F.col("avec").alias("vector"), F.col("vector").alias("ovec")
-        ),
-        centroids,
-    ).select("id", F.col("ovec").alias("vector"), "cell")
-    assigned = assigned.localCheckpoint()
+    assigned = _mips_assign(vecs, m2, centroids).localCheckpoint()
     n = assigned.count()
-    assigned.repartition("cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/vectors")
+    _write_cells(assigned, f"{path}/vectors", "append")
     return {
         "appended": int(n),
         "retrained": False,
@@ -3067,14 +2969,11 @@ def knn_join(
     ``ensure_k=True`` (layout mode only — round-8 ADVICE): queries
     whose probed cells hold fewer than k corpus rows are retried with
     a doubled nprobe until every query has k rows or all cells are
-    probed — `ivf_knn(ensure_k=)`'s result-count contract, but
-    SET-BASED: the starved set stays a DataFrame (anti-join on
-    satisfied qids), never a driver-collected list, so it works at
-    corpus-sized query tables. Satisfied queries keep their
-    lower-probe results (probe supersets never change them). Layout
-    mode only because escalation re-probes against the FIXED stored
-    assignment — the inline build would re-assign the corpus per
-    round; raise nprobe there instead."""
+    probed — `ivf_knn(ensure_k=)`'s result-count contract through the
+    same set-based `_escalate` loop, so it works at corpus-sized
+    query tables. Layout mode only because escalation re-probes
+    against the FIXED stored assignment — the inline build would
+    re-assign the corpus per round; raise nprobe there instead."""
     from vector_database_spark.operators.graph import (
         _blocked_narrow,
         _blocked_probes,
@@ -3084,9 +2983,15 @@ def knn_join(
         _probe_cells_kernel,
         _rank_topk_edges,
     )
-    from pyspark.sql.window import Window as _W
 
-    from vector_database_spark.operators.search import _grouped_topk
+    def _hits(edges: DataFrame) -> DataFrame:
+        # graph edges (src, dst, dist, rank) -> (qid, id, dist, rank)
+        return edges.select(
+            F.col("src").alias("qid"),
+            F.col("dst").alias("id"),
+            "dist",
+            F.col("rank").cast("long").alias("rank"),
+        )
 
     if method not in ("expr", "dgemm"):
         raise ValueError(f"method must be expr|dgemm, got {method!r}")
@@ -3140,54 +3045,20 @@ def knn_join(
 
         def _ranked(qsub: DataFrame, np_: int) -> DataFrame:
             probes = _blocked_probes(qsub, centroids, np_, method)
-            narrow = _blocked_narrow(
-                members, probes, k, method, cell_cap=cap,
-                exclude_self=False,
-            )
-            local = _grouped_topk(narrow, int(k), "src", "dst")
-            w = _W.partitionBy("src").orderBy(
-                F.col("dist").asc(), F.col("dst").asc()
-            )
-            return (
-                local.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= int(k))
-                .select(
-                    F.col("src").alias("qid"),
-                    F.col("dst").alias("id"),
-                    "dist",
-                    F.col("rank").cast("long").alias("rank"),
-                )
-            )
+            return _hits(_rank_topk_edges(
+                _blocked_narrow(
+                    members, probes, k, method, cell_cap=cap,
+                    exclude_self=False,
+                ),
+                k,
+            ))
 
         out = _ranked(qq, int(nprobe))
         if not ensure_k:
             return _fan_out(out)
-        cur, total = int(nprobe), len(centroids)
-        out = out.localCheckpoint(eager=False)
-        while cur < total:
-            sat = (
-                out.groupBy("qid")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .where(F.col("_n") >= int(k))
-                .select(F.col("qid").alias("id"))
-            )
-            starved_q = qq.join(sat, "id", "left_anti").localCheckpoint(
-                eager=False
-            )
-            if starved_q.isEmpty():
-                break
-            cur = min(cur * 2, total)
-            retry = _ranked(starved_q, cur)
-            out = (
-                out.join(
-                    starved_q.select(F.col("id").alias("qid")),
-                    "qid",
-                    "left_anti",
-                )
-                .unionByName(retry)
-                .localCheckpoint(eager=False)
-            )
-        return _fan_out(out)
+        return _fan_out(_escalate(
+            out, qq, _ranked, k, nprobe, len(centroids), qid="id"
+        ))
     cc = corpus_df.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vector_col).cast("array<double>").alias("vector"),
@@ -3200,19 +3071,10 @@ def knn_join(
         collapse_dups = _sample_has_dup_vectors(cc, seed=seed)
     if method == "dgemm" and collapse_dups:
         if centroids is None:
-            first = cc.select(F.size("vector").alias("d")).first()
-            if first is None or first["d"] is None:
-                raise ValueError("knn_join: empty corpus")
-            X, _n = _train_sample(
-                cc,
-                dims=int(first["d"]),
-                train_rows=train_rows,
-                seed=seed,
-                floor_rows=n_cells * 4,
+            centroids = _train_centroids(
+                cc, n_cells=n_cells, iters=iters, seed=seed,
+                train_rows=train_rows, what="knn_join",
             )
-            centroids = [
-                [float(x) for x in c] for c in _lloyd(X, n_cells, iters)
-            ]
         else:
             centroids = [[float(x) for x in c] for c in centroids]
         c_ann, c_reps, c_near = _collapse_dup_vectors(cc, k)
@@ -3233,50 +3095,16 @@ def knn_join(
         )
         # expansion is bounded per src (cum cut) — plain window, no
         # Arrow pre-reduction stage needed
-        w = _W.partitionBy("src").orderBy(
-            F.col("dist").asc(), F.col("dst").asc()
+        return _hits(
+            _topk(expanded, k, "dist", group="src", item="dst")
         )
-        return (
-            expanded.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(k))
-            .select(
-                F.col("src").alias("qid"),
-                F.col("dst").alias("id"),
-                "dist",
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
-    if centroids is None:
-        assigned, centroids = ivf_build(
-            cc, n_cells=n_cells, iters=iters, seed=seed,
-            train_rows=train_rows,
-        )
-        members = assigned if method == "dgemm" else ivf_assign_expr(
-            cc, centroids
-        )
-    else:
-        centroids = [[float(x) for x in c] for c in centroids]
-        members = (
-            _assign_cells(cc, centroids)
-            if method == "dgemm"
-            else ivf_assign_expr(cc, centroids)
-        )
+    members, centroids = _cell_members(
+        cc, centroids, method, n_cells=n_cells, iters=iters, seed=seed,
+        train_rows=train_rows,
+    )
     members = members.localCheckpoint(eager=False)
     probes = _blocked_probes(qq, centroids, nprobe, method)
     narrow = _blocked_narrow(
-        members, probes, k, method,
-        cell_cap=_CELL_CAP if cell_cap is None else int(cell_cap),
-        exclude_self=False,
+        members, probes, k, method, cell_cap=cap, exclude_self=False
     )
-    local = _grouped_topk(narrow, int(k), "src", "dst")
-    w = _W.partitionBy("src").orderBy(F.col("dist").asc(), F.col("dst").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
-        .select(
-            F.col("src").alias("qid"),
-            F.col("dst").alias("id"),
-            "dist",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _hits(_rank_topk_edges(narrow, k))

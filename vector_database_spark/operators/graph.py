@@ -693,11 +693,8 @@ def knn_graph_blocked(
     sound because either plan is output-identical). True forces it,
     False disables it."""
     from vector_database_spark.operators.ann import (
-        _assign_cells,
-        _lloyd,
-        _train_sample,
-        ivf_assign_expr,
-        ivf_build,
+        _cell_members,
+        _train_centroids,
     )
 
     if method not in ("expr", "dgemm"):
@@ -714,34 +711,17 @@ def knn_graph_blocked(
             # train exactly as ivf_build does (bounded sample of the
             # FULL table — same centroids as the uncollapsed/expr
             # paths, so the dgemm==expr parity pytest pins this path)
-            first = vv.select(F.size("vector").alias("d")).first()
-            if first is None or first["d"] is None:
-                raise ValueError("knn_graph_blocked: empty input")
-            X, _n = _train_sample(
-                vv,
-                dims=int(first["d"]),
-                train_rows=train_rows,
-                seed=seed,
-                floor_rows=n_cells * 4,
+            centroids = _train_centroids(
+                vv, n_cells=n_cells, iters=iters, seed=seed,
+                train_rows=train_rows, what="knn_graph_blocked",
             )
-            centroids = [
-                [float(x) for x in c] for c in _lloyd(X, n_cells, iters)
-            ]
         else:
             centroids = [[float(x) for x in c] for c in centroids]
         return _collapsed_graph_edges(vv, centroids, k, nprobe, cap)
-    if centroids is None:
-        assigned, centroids = ivf_build(
-            vv, n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows
-        )
-        members = assigned if method == "dgemm" else ivf_assign_expr(vv, centroids)
-    else:
-        centroids = [[float(x) for x in c] for c in centroids]
-        members = (
-            _assign_cells(vv, centroids)
-            if method == "dgemm"
-            else ivf_assign_expr(vv, centroids)
-        )
+    members, centroids = _cell_members(
+        vv, centroids, method, n_cells=n_cells, iters=iters, seed=seed,
+        train_rows=train_rows,
+    )
     # dgemm narrow consumes members twice (hot-cell bucket counts +
     # the candidate join) — pin so the assignment kernel runs once
     if method == "dgemm":
@@ -1273,11 +1253,10 @@ def knn_graph_write(
     Returns the edges DataFrame (read back from disk — lineage-free).
     """
     from vector_database_spark.operators.ann import (
-        _assign_cells,
+        _cell_members,
         _ivf_err_stats,
         _ivf_stats_write,
-        ivf_assign_expr,
-        ivf_build,
+        _write_cells,
         ivf_write,
     )
 
@@ -1288,18 +1267,10 @@ def knn_graph_write(
         F.col(id_col).cast("long").alias("id"),
         F.col(vector_col).cast("array<double>").alias("vector"),
     )
-    if centroids is None:
-        assigned, centroids = ivf_build(
-            vv, n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows
-        )
-        members = assigned if method == "dgemm" else ivf_assign_expr(vv, centroids)
-    else:
-        centroids = [[float(x) for x in c] for c in centroids]
-        members = (
-            _assign_cells(vv, centroids)
-            if method == "dgemm"
-            else ivf_assign_expr(vv, centroids)
-        )
+    members, centroids = _cell_members(
+        vv, centroids, method, n_cells=n_cells, iters=iters, seed=seed,
+        train_rows=train_rows,
+    )
     # one assignment, consumed by the vector write, the edge build,
     # and the stats pass — pin it
     members = members.localCheckpoint()
@@ -1332,10 +1303,8 @@ def knn_graph_write(
         sorted((int(c), int(n)) for c, n in cnts.items()),
         "cell int, n long",
     ).write.mode("overwrite").parquet(f"{path}/cell_counts")
-    probes.select("id", "pr", "cell").repartition("cell").write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "static").partitionBy("cell").parquet(
-        f"{path}/probes"
+    _write_cells(
+        probes.select("id", "pr", "cell"), f"{path}/probes", "overwrite"
     )
     src_cell = members.select(
         F.col("id").alias("src"), F.col("cell").alias("src_cell")
@@ -1355,8 +1324,7 @@ def knn_graph_write(
         [(int(k), int(nprobe), method, int(ent["id"]), int(ent["cell"]))],
         "k int, nprobe int, method string, entry_id long, entry_cell int",
     ).write.mode("overwrite").parquet(f"{path}/graph_meta")
-    s, n = _ivf_err_stats(members, centroids)
-    _ivf_stats_write(spark, path, s, n)
+    _ivf_stats_write(spark, path, *_ivf_err_stats(members, centroids))
     return spark.read.parquet(f"{path}/edges").select(
         "src", "dst", "dist", "rank"
     )
@@ -1434,9 +1402,9 @@ def knn_graph_append(
     Returns {'appended', 'affected', 'drift', 'retrained', ...}."""
     from vector_database_spark.operators.ann import (
         _assign_cells,
+        _drift_update,
         _ivf_err_stats,
-        _ivf_stats_read,
-        _ivf_stats_write,
+        _write_cells,
         ivf_assign_expr,
         ivf_read,
     )
@@ -1623,12 +1591,10 @@ def knn_graph_append(
         sorted((int(c), int(n)) for c, n in merged_cnts.items()),
         "cell int, n long",
     ).write.mode("overwrite").parquet(f"{path}/cell_counts")
-    batch_members.repartition("cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/vectors")
-    batch_probes.select("id", "pr", "cell").repartition("cell").write.mode(
-        "append"
-    ).partitionBy("cell").parquet(f"{path}/probes")
+    _write_cells(batch_members, f"{path}/vectors", "append")
+    _write_cells(
+        batch_probes.select("id", "pr", "cell"), f"{path}/probes", "append"
+    )
     touched_out.unionByName(keep_out).repartition("src_cell").write.mode(
         "overwrite"
     ).option("partitionOverwriteMode", "dynamic").partitionBy(
@@ -1653,12 +1619,9 @@ def knn_graph_append(
     ).write.mode("overwrite").parquet(f"{path}/graph_meta")
     # --- drift stats (the ivf_append contract) ---
     batch_sum, _bn = _ivf_err_stats(batch_members, centroids)
-    base = _ivf_stats_read(spark, path) or (0.0, 0)
-    base_sum, base_n = base
-    batch_err = batch_sum / batch_n
-    base_err = (base_sum / base_n) if base_n > 0 else 0.0
-    drift = (batch_err / base_err - 1.0) if base_err > 0 else 0.0
-    _ivf_stats_write(spark, path, base_sum + batch_sum, base_n + batch_n)
+    batch_err, base_err, drift = _drift_update(
+        spark, path, "vectors", centroids, batch_sum, batch_n, catch_up=False
+    )
     do_retrain = retrain == "always" or (
         retrain == "auto" and drift > drift_threshold
     )

@@ -118,7 +118,6 @@ _AUTO_STATS_CELLS = 4_000_000
 # Split tables larger than this route via a shuffle join instead of an
 # explicit broadcast (beyond driver/broadcast memory comfort).
 _BROADCAST_SPLIT_MAX = 1_000_000
-_LAZY_LEVEL_CHECKPOINT = True  # A/B toggle for the per-level checkpoint
 
 
 def build_index(
@@ -423,8 +422,7 @@ def _build_levels(
             # blocks are persisted the first time the next level's
             # decisions job scans them, folding route materialization
             # into that job (one fewer job than eager).
-            # _LAZY_LEVEL_CHECKPOINT exists for A/B timing (bench bisect).
-            base = view().localCheckpoint(eager=not _LAZY_LEVEL_CHECKPOINT)
+            base = view().localCheckpoint(eager=False)
             chain = []
             chain_rows = 0
 
