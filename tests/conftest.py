@@ -14,7 +14,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    # the host's core count when the tier-1 command exports it, so
+    # partition-count-dependent data is drawn as on the host
+    cpus = os.environ.get(
+        "SPARK_GRAFT_TEST_CPUS", os.environ.get("SPARK_GRAFT_CPUS", "8")
+    )
     s = get_spark(
         app_name="vds-tests",
         master=f"local[{cpus}]",

@@ -1036,3 +1036,130 @@ def test_facade_bq_hd_append_and_serve_use_stored_params(spark):
         for r in db2.brute_force(q, 0.9).collect()
     }
     assert got == brute and got
+
+
+def _near(spark, q, ids, doc_id=0):
+    """Rows a few hundredths from ``q`` — inside any ball search the
+    freshness tests run, so a stale cache shows as a missing hit."""
+    return spark.createDataFrame(
+        [
+            (doc_id, int(t), [float(x) + 0.01 * (j + 1) for x in q])
+            for j, t in enumerate(ids)
+        ],
+        "doc_id long, text_id long, vector array<float>",
+    )
+
+
+def test_facade_freshness_contract(spark, monkeypatch):
+    """The epoch-marker freshness protocol: a warm peer facade sees
+    every mutation made through another facade over the same root;
+    `refresh()` picks up out-of-band writes; each public serving call
+    stats the marker exactly once; a store without a marker never
+    serves a cached reader."""
+    import os
+    import tempfile
+
+    q = [0.2, -0.1, 0.05, 0.3]
+
+    def hits(db):
+        return {
+            (int(r.text_id), round(float(r.dist), 9))
+            for r in db.search(q, 0.5).collect()
+        }
+
+    def tail_ids(db):
+        return {int(r.text_id) for r in db.tail().collect()}
+
+    # peers: B is warmed, A mutates, B's next answers equal a fresh
+    # facade's (ivf: exact cell pruning; bq: the approximate backend)
+    for t, kw in (("ivf", {}), ("bq", {"bq_m": 4096, "bq_nprobe": 4})):
+        root = f"{tempfile.mkdtemp()}/s"
+        rows = (
+            random_uniform(spark, 60, 4, seed=31)
+            .select(
+                (F.col("id") % 3).alias("doc_id"),
+                F.col("id").alias("text_id"),
+                "vector",
+            )
+            .localCheckpoint()
+        )
+
+        def mk():
+            return VectorDatabase(
+                spark, root, index_type=t, n_cells=4, pq_m=2, **kw
+            )
+
+        a, b = mk(), mk()
+        a.add_documents(rows)
+        before = hits(b)
+        assert tail_ids(b) == set()
+        a.add_documents(_near(spark, q, [500, 501]))
+        a.add_documents(_near(spark, q, [600], doc_id=1), reindex=False)
+        assert hits(b) == hits(mk()) and len(hits(b)) == len(before) + 3, t
+        assert tail_ids(b) == tail_ids(mk()) == {600}, t
+        assert a.delete_vectors(q, 0.04) > 0, t
+        assert hits(b) == hits(mk()), t
+        assert tail_ids(b) == tail_ids(mk()), t
+        assert not {500, 501} & {i for i, _ in hits(b)}, t
+
+    # out-of-band append: refresh() makes the new rows visible
+    vdb = _mk_vdb(spark)
+    n = vdb.text().count()
+    _near(spark, q, [900, 901]).select(
+        "doc_id", "text_id", F.lit("oob").alias("text"), "vector"
+    ).write.mode("append").partitionBy("doc_id").parquet(vdb.text_path)
+    vdb.refresh()
+    assert vdb.text().count() == n + 2
+    assert {900, 901} <= tail_ids(vdb)
+    assert {900, 901} <= {i for i, _ in hits(vdb)}
+
+    # one marker stat per public serving call on a warm store
+    mips = _mk_typed(spark, "mips")
+    calls = {
+        "search": lambda: mips.search(q, 0.5),
+        "search_candidates": lambda: mips.search_candidates(q, 0.5),
+        "search_stats": lambda: mips.search_stats(q, 0.5),
+        "knn_dot": lambda: mips.knn_dot(q, 5, nprobe=2),
+        "tail": lambda: mips.tail(),
+        "brute_force": lambda: mips.brute_force(q, 0.5),
+    }
+    for call in calls.values():
+        call().collect()  # warm
+    stats = {"n": 0}
+    orig = VectorDatabase._epoch_token
+
+    def counting(self):
+        stats["n"] += 1
+        return orig(self)
+
+    monkeypatch.setattr(VectorDatabase, "_epoch_token", counting)
+    for name, call in calls.items():
+        stats["n"] = 0
+        call()
+        assert stats["n"] == 1, (name, stats["n"])
+    monkeypatch.undo()
+
+    # readers are cached per epoch only: with the marker gone, every
+    # text() call is a new reader
+    assert mips.text() is mips.text()
+    os.remove(f"{mips.root}/_vds_epoch")
+    first = mips.text()
+    assert mips.text() is not first
+    assert mips.text() is not mips.text()
+
+
+def test_facade_ann_delete_documents_syncs_layout(spark):
+    """Cascade delete on the ANN backends: the text rows of the
+    deleted documents leave the store and the layout follows (the
+    layout sync re-reads the text table the delete just rewrote)."""
+    q = [0.1, -0.2, 0.3, 0.0]
+    for t in ("ivf", "bq"):
+        vdb = _mk_typed(spark, t)
+        vdb.search(q, 0.8).collect()  # warm the reader cache
+        vdb.delete_documents([0])
+        fresh = VectorDatabase(spark, vdb.root, index_type=t, n_cells=4)
+        left = {int(r.text_id) for r in fresh.text().collect()}
+        assert left and all(i % 3 != 0 for i in left), t
+        coded = {int(r.id) for r in fresh._ann_vectors().collect()}
+        assert coded == left, t
+        assert fresh.tail().count() == 0, t

@@ -152,27 +152,6 @@ def test_checkpoint_every_equivalent_trees(spark):
         assert got == base, ck
 
 
-def test_local_concurrency_cap_identical_tree(spark):
-    """Round-12 verdict item 1b: `local_concurrency` caps CONCURRENT
-    subtree tasks by partition count only — subtree builds are
-    per-(doc, range) groups, so the tree is bit-identical under any
-    cap (groups beyond the cap run sequentially inside a task)."""
-    vecs = random_uniform(spark, 500, 4, seed=19)
-
-    def node_map(idx):
-        return {
-            (r.doc_id, r.range_id): (r.dimension, r.mid, r.id)
-            for r in idx.collect()
-        }
-
-    base = node_map(build_index(vecs, local_threshold=100))
-    for cap in (1, 3):
-        got = node_map(
-            build_index(vecs, local_threshold=100, local_concurrency=cap)
-        )
-        assert got == base, cap
-
-
 def test_local_threshold_invariant_tree(spark):
     """Round-12 verdict item 1 bit-identity guard: granularity changes
     which rows share a local task, so the tree at local_threshold=500

@@ -481,6 +481,15 @@ def _facade_ivf_search_df(spark, sf_dir):
     return _tiny_store(spark, "ivf", n_cells=4).search([0.1] * 8, 0.6)
 
 
+def _facade_ivfadc_search_df(spark, sf_dir):
+    """One `search` call's full plan over a tiny all-compacted
+    'ivfadc' store: the cell-pruned candidates come off the codes
+    layout, with centroids and radii as cached driver literals."""
+    return _tiny_store(spark, "ivfadc", n_cells=4, pq_m=2).search(
+        [0.1] * 8, 0.6
+    )
+
+
 def _facade_mips_knn_dot_df(spark, sf_dir):
     """One `knn_dot` call's full plan over a tiny all-compacted
     'mips' store: centroids, radii and the m2 augmentation constant
@@ -508,6 +517,17 @@ FACADE_CHECKS = {
         "vectors layout + text only — centroid/radius parquets are "
         "cached driver literals, never per-call scans; no "
         "Python-parallelized query panel",
+    ),
+    "facade_ivfadc_search_serving": (
+        _facade_ivfadc_search_df,
+        ["ivfadc_index/codes"],
+        ["ivfadc_index/centroids", "ivfadc_index/radius",
+         "BatchEvalPython", "ArrowEvalPython", "CartesianProduct",
+         "Scan ExistingRDD"],
+        "facade 'ivfadc' search: the serving plan scans the cell-pruned "
+        "codes layout + text only — centroid/radius parquets are cached "
+        "driver literals, never per-call scans; no Python-parallelized "
+        "query panel",
     ),
     "facade_mips_knn_dot_serving": (
         _facade_mips_knn_dot_df,

@@ -4,11 +4,11 @@ reference README.md:100) — run for real, not extrapolated from the
 200k scale probe.
 
 Usage: python tools/headline_probe.py [n_rows] [dims] [passes]
-       [local_threshold|auto] [local_concurrency|none]
+       [local_threshold|auto]
 
-The two trailing args feed `build_index` (round-12 verdict item 1:
-task granularity + bounded pool concurrency — see
-tools/local_phase_probe.py for the interleaved grid that picks them).
+The trailing arg feeds `build_index` (round-12 verdict item 1: task
+granularity — see tools/local_phase_probe.py for the interleaved grid
+that picks it).
 
 Protocol:
 1. stage n x d float vectors as parquet (the reference reads HDF5
@@ -46,9 +46,7 @@ def main() -> None:
     dims = int(sys.argv[2]) if len(sys.argv) > 2 else 96
     passes = int(sys.argv[3]) if len(sys.argv) > 3 else 1
     thr_arg = sys.argv[4] if len(sys.argv) > 4 else "auto"
-    cap_arg = sys.argv[5] if len(sys.argv) > 5 else "none"
     local_threshold = None if thr_arg == "auto" else int(thr_arg)
-    local_concurrency = None if cap_arg == "none" else int(cap_arg)
 
     spark = get_spark(
         app_name="headline-probe", extra_conf={"spark.ui.enabled": "false"}
@@ -86,11 +84,7 @@ def main() -> None:
         anchors.append(a)
         print(f"anchor pass {i}: {json.dumps(a)}", flush=True)
         t0 = time.time()
-        idx = build_index(
-            vecs,
-            local_threshold=local_threshold,
-            local_concurrency=local_concurrency,
-        ).persist()
+        idx = build_index(vecs, local_threshold=local_threshold).persist()
         n_nodes = idx.count()
         t_build.append(time.time() - t0)
         print(f"build pass {i}: {t_build[-1]:.1f}s", flush=True)
@@ -132,7 +126,6 @@ def main() -> None:
                 "n": n,
                 "dims": dims,
                 "local_threshold": thr_arg,
-                "local_concurrency": cap_arg,
                 "build_sec": [round(t, 1) for t in t_build],
                 "build_best_sec": round(best, 1),
                 "vec_per_sec": round(n / best),

@@ -1,16 +1,15 @@
-"""Local-phase granularity x concurrency probe (round-12 verdict
-item 1): the committed throttle diagnosis
+"""Local-phase granularity probe (round-12 verdict item 1): the
+committed throttle diagnosis
 (data/probes/pool_throttle_diag_r12.txt) proved this host
 fractionally schedules SUSTAINED compute (~2-3 effective cores; 64
 identical 156k x 96 subtree tasks finished under local[8] but not
 local[32]), and that short bursts dodge the squeeze. This probe runs
 FULL interleaved 10M x 96 builds over the same staged parquet as
-tools/headline_probe.py across a (local_threshold, local_concurrency)
-grid, with a paired host anchor before every pass, so the two levers
-the diagnosis names — task granularity (smaller subtrees = shorter
-tasks) and bounded pool concurrency (fewer simultaneous sustained
-tasks; decisions jobs stop queueing behind a saturating pool) — are
-measured on the same box in the same window.
+tools/headline_probe.py across a ``local_threshold`` grid, with a
+paired host anchor before every pass, so task granularity (smaller
+subtrees = shorter tasks) is measured on the same box in the same
+window. (The grid's second lever, a pool-concurrency cap, measured
+neutral-to-negative and was removed from `build_index`.)
 
 Usage: python tools/local_phase_probe.py [n_rows] [dims] [rounds]
 
@@ -36,35 +35,26 @@ from vector_database_spark import get_spark
 from vector_database_spark.operators.index_build import build_index
 from vector_database_spark.sources.generators import clusters
 
-# (label, local_threshold [None = auto ~166k at 96 dims],
-#  local_concurrency [None = uncapped])
+# (label, local_threshold [None = auto ~166k at 96 dims])
 CONFIGS = [
     # NOTE: the r13 retune changed auto to 4M cells (~40k rows at 96
-    # dims), so 'auto_nocap' in runs AFTER that commit is ~equal to
-    # '40k_nocap'; the r13 grid artifact was produced with auto still
-    # at 16M cells (~156k rows). Use SPARK_GRAFT_GRID to pin explicit
-    # thresholds when reproducing.
-    ("auto_nocap", None, None),
-    ("auto_cap8", None, 8),          # concurrency lever alone
-    ("40k_nocap", 40_000, None),     # granularity lever alone
-    ("40k_cap8", 40_000, 8),         # both
-    ("25k_cap8", 25_000, 8),         # finer granularity + cap
+    # dims), so 'auto' in runs AFTER that commit is ~equal to '40k';
+    # the r13 grid artifact was produced with auto still at 16M cells
+    # (~156k rows). Use SPARK_GRAFT_GRID to pin explicit thresholds
+    # when reproducing.
+    ("auto", None),
+    ("40k", 40_000),
+    ("25k", 25_000),
 ]
 
 # Override the grid from the environment, e.g. a refinement sweep:
-#   SPARK_GRAFT_GRID="20k:20000:none,40k:40000:none,80k:80000:none"
-# (label:threshold|auto:cap|none triples, comma-separated).
+#   SPARK_GRAFT_GRID="20k:20000,40k:40000,80k:80000"
+# (label:threshold|auto pairs, comma-separated).
 if os.environ.get("SPARK_GRAFT_GRID"):
     CONFIGS = []
     for part in os.environ["SPARK_GRAFT_GRID"].split(","):
-        label, thr, cap = part.split(":")
-        CONFIGS.append(
-            (
-                label,
-                None if thr == "auto" else int(thr),
-                None if cap == "none" else int(cap),
-            )
-        )
+        label, thr = part.split(":")
+        CONFIGS.append((label, None if thr == "auto" else int(thr)))
 
 
 def main() -> None:
@@ -92,13 +82,11 @@ def main() -> None:
     results: dict[str, list] = {c[0]: [] for c in CONFIGS}
     anchors: dict[str, list] = {c[0]: [] for c in CONFIGS}
     for rnd in range(rounds):
-        for label, thr, cap in CONFIGS:
+        for label, thr in CONFIGS:
             a = host_anchor(spark)
             anchors[label].append(a)
             t0 = time.time()
-            idx = build_index(
-                vecs, local_threshold=thr, local_concurrency=cap
-            ).persist()
+            idx = build_index(vecs, local_threshold=thr).persist()
             n_nodes = idx.count()
             dt = time.time() - t0
             n_leaves = idx.where(F.col("id").isNotNull()).count()

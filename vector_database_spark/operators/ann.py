@@ -2920,10 +2920,13 @@ def knn_join(
     side is itself corpus-sized: ivf_knn broadcasts the probe frame
     and window-ranks each query's full candidate set, both of which
     assume a small driver-side panel. Here NEITHER side is collected
-    or broadcast: corpus rows are IVF-bucketed, queries replicate to
-    their nprobe nearest cells (one Arrow pass against the broadcast
-    CENTROIDS — the only broadcast is n_cells rows), candidates come
-    from a shuffle equi-join on the cell key, the per-(query, cell)
+    and the corpus side is never broadcast: corpus rows are
+    IVF-bucketed, queries replicate to their nprobe nearest cells (one
+    Arrow pass against the broadcast CENTROIDS), candidates come from
+    an equi-join on the cell key (a shuffle join, or — when Spark's
+    size estimate of the query-side probes is under the auto-broadcast
+    threshold, as for small query tables — a broadcast of those
+    probes, never of the corpus), the per-(query, cell)
     top-k is cut inside the dgemm kernel, and the global merge is the
     shared Arrow pre-reduction + one slim window. This is exactly
     `graph.knn_graph_blocked`'s machinery pointed across two tables

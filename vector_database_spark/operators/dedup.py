@@ -193,6 +193,13 @@ def lsh_candidate_pairs(
     buckets (a degenerate band key shared by everything) are the known
     hazard at scale; AQE skew-join splitting handles moderate skew and
     a salt-and-recheck pass is the escape hatch beyond that.
+
+    Both sides of the band self-join read ``signatures``. Over an
+    RDD-backed input (``localCheckpoint`` output, foreachBatch frames)
+    the two sides do not reuse one exchange, so an unpinned
+    `minhash_signatures` result runs its shingle kernel twice: pin it
+    first — ``minhash_signatures(df).localCheckpoint(eager=False)`` —
+    as `minhash_dedup_pairs` does.
     """
     banded = _band_signatures(
         signatures, bands=bands, rows_per_band=rows_per_band

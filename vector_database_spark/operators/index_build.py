@@ -129,7 +129,6 @@ def build_index(
     local_threshold: int | None = 20_000,
     checkpoint_every: int = 8,
     max_levels: int = 60,
-    local_concurrency: int | None = None,
 ) -> DataFrame:
     """Build the BSP-tree index over ``df`` (one tree per document if
     ``doc_col`` given). Returns the index DataFrame
@@ -145,23 +144,6 @@ def build_index(
     should localCheckpoint it before calling. The returned DataFrame
     reads only cached / materialized pieces — the expensive work
     happens inside this call.
-
-    ``local_concurrency`` caps the number of CONCURRENT local-subtree
-    tasks (round-12 verdict item 1b): each pool job is partitioned to
-    at most this many partitions, so at most this many subtree builds
-    run at once and the remaining executor threads stay free for the
-    overlapped distributed levels. Groups beyond the cap queue WITHIN
-    the capped tasks (``applyInPandas`` processes its partition's
-    groups sequentially), so the work set is unchanged — subtree
-    outputs are per-(doc, range) and bit-identical under any
-    partitioning. Motivation: the round-12 throttle diagnosis
-    (`data/probes/pool_throttle_diag_r12.txt`) measured this host
-    fractionally scheduling sustained compute — 64 identical subtree
-    tasks FINISHED under local[8] (420 s) but not local[32] (600 s+),
-    and a saturating pool also queues the next level's decisions job
-    behind it. On a real multi-executor cluster leave this None: the
-    scheduler spreads tasks across machines and a cap only idles
-    executors. ``None`` = no cap (the pre-round-13 behavior).
     """
     spark = df.sparkSession
     doc_expr = F.col(doc_col) if doc_col else F.lit(0).cast("long")
@@ -222,12 +204,6 @@ def build_index(
         # hash collisions between range keys unlikely; empty partitions
         # cost only a no-op task.
         n_parts = max(1, min(8 * n_ranges, max(4 * par, 64)))
-        if local_concurrency is not None:
-            # concurrency cap (round-12 verdict item 1b): partitions ==
-            # max concurrent tasks; surplus groups run sequentially
-            # inside a task. Collision skew at n_ranges >> cap is
-            # ~sqrt(n/cap) relative — acceptable for a throttle dodge.
-            n_parts = max(1, min(n_parts, int(local_concurrency)))
         sub = (
             pool_df.repartition(n_parts, "doc_id", "range_id")
             .groupBy("doc_id", "range_id")

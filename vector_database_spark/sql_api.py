@@ -236,24 +236,13 @@ def sql_ivf_search(
 
 def _sync_text_view(vdb, txt, doc_id) -> None:
     """Sync a SQL text view's rows into a facade store: cast to the
-    STORED physical types (the add_documents rule — a double-typed
-    view synced into a float-vector store leaves mixed parquet files
-    the reader refuses), pin before overwriting (the view may itself
+    STORED physical types (`VectorDatabase._conform`, the
+    add_documents rule), pin before overwriting (the view may itself
     read the store), and swap only the given document's partition
     (dynamic) or everything (static)."""
-    cols = ["doc_id", "text_id", "vector"]
-    if "text" in txt.columns:
-        cols.insert(2, "text")
-    sync = txt.select(*cols)
+    sync = vdb._conform(txt)
     if doc_id is not None:
         sync = sync.where(F.col("doc_id") == int(doc_id))
-    try:
-        stored = {f.name: f.dataType for f in vdb.text().schema.fields}
-    except Exception:
-        stored = {}
-    for c in cols:
-        if c in stored:
-            sync = sync.withColumn(c, F.col(c).cast(stored[c]))
     sync = sync.localCheckpoint(eager=True)
     mode = "dynamic" if doc_id is not None else "static"
     (
@@ -377,73 +366,35 @@ def sql_index_document(
 
     — the facade's `knn_dot` contract spelled in SQL
     (pytest-matched with the same nprobe/k)."""
+    from vector_database_spark.api import _ANN, VectorDatabase
     from vector_database_spark.operators import catalog
 
     txt = spark.table(text_view)
-    if index_type == "mips":
-        from vector_database_spark.api import VectorDatabase
-
+    backend = _ANN.get(index_type)
+    if backend is not None:
         vdb = VectorDatabase(
             spark, index_path, local_threshold=local_threshold,
-            index_type="mips", n_cells=n_cells,
-        )
-        _sync_text_view(vdb, txt, doc_id)
-        vdb.index_documents()
-        vdb.text().selectExpr(
-            "text_id AS id", "vector"
-        ).createOrReplaceTempView(vectors_view)
-        vdb._ann_vectors().select("id", "cell").createOrReplaceTempView(
-            index_view
-        )
-        spark.read.parquet(f"{vdb.ann_path}/centroids").select(
-            "cell", "cvec"
-        ).createOrReplaceTempView(cells_view)
-        return
-    if index_type == "bq":
-        from vector_database_spark.api import VectorDatabase
-
-        vdb = VectorDatabase(
-            spark, index_path, local_threshold=local_threshold,
-            index_type="bq", n_cells=n_cells,
+            index_type=index_type, n_cells=n_cells, pq_m=pq_m,
             bq_hd_blocks=bq_hd_blocks, bq_hd_seed=bq_hd_seed,
             bq_hd_scale=bq_hd_scale,
-        )
-        _sync_text_view(vdb, txt, doc_id)
-        vdb.index_documents()
-        vdb.text().selectExpr(
-            "text_id AS id", "vector"
-        ).createOrReplaceTempView(vectors_view)
-        vdb._ann_vectors().select(
-            "id", "code", "cell"
-        ).createOrReplaceTempView(index_view)
-        spark.read.parquet(f"{vdb.ann_path}/centroids").select(
-            "cell", "cvec"
-        ).createOrReplaceTempView(cells_view)
-        return
-    if index_type in ("ivf", "ivfadc"):
-        from vector_database_spark.api import VectorDatabase
-
-        vdb = VectorDatabase(
-            spark,
-            index_path,
-            local_threshold=local_threshold,
-            index_type=index_type,
-            n_cells=n_cells,
-            pq_m=pq_m,
         )
         _sync_text_view(vdb, txt, doc_id)
         vdb.index_documents()  # corpus-global coarse model
         vdb.text().selectExpr(
             "text_id AS id", "vector"
         ).createOrReplaceTempView(vectors_view)
-        vdb._ann_vectors().select("id", "cell").createOrReplaceTempView(
+        vdb._ann_vectors().select(*backend.view_cols).createOrReplaceTempView(
             index_view
         )
-        cents = spark.read.parquet(f"{vdb.ann_path}/centroids")
-        rad = spark.read.parquet(f"{vdb.ann_path}/radius")
-        cents.join(rad, "cell", "left").selectExpr(
-            "cell", "cvec", "coalesce(radius, 0.0) AS radius"
-        ).createOrReplaceTempView(cells_view)
+        cells = spark.read.parquet(f"{vdb.ann_path}/centroids")
+        if backend.drift_stats:
+            rad = spark.read.parquet(f"{vdb.ann_path}/radius")
+            cells = cells.join(rad, "cell", "left").selectExpr(
+                "cell", "cvec", "coalesce(radius, 0.0) AS radius"
+            )
+        else:
+            cells = cells.select("cell", "cvec")
+        cells.createOrReplaceTempView(cells_view)
         return
     if index_type != "bsp":
         raise ValueError(
