@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], default the
+CPUs this process may run on.
 
 Prints a compact JSON line first:
   {"metric": "...", "value": total_sec, "unit": "sec",
@@ -25,6 +26,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from vector_database_spark import get_spark
+from vector_database_spark.session import default_cpus
 from vector_database_spark import workload
 
 BENCH_QUERIES = [
@@ -65,13 +67,11 @@ def _force(df) -> None:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     spark = get_spark(
         app_name="vds-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -533,7 +533,7 @@ def main() -> int:
                 "unit": "sec",
                 "queries": timings,
                 "harness_sha256": harness_sha256,
-                "cpus": int(cpus),
+                "cpus": cpus,
                 "samples": samples,
                 "jobs": {n: (s[-1] if s else None)
                          for n, s in job_samples.items()},

@@ -90,10 +90,23 @@ def test_facade_size_guard(spark, monkeypatch):
     exact = {r.text_id for r in vdb.search(q, 0.8).collect()}
     assert exact <= out
 
-    # memoized count: a second search must not re-count the index
-    n_counts = {"n": 0}
+    # memoized count: the first search over a fresh index counts it
+    # once, a second search issues no count of the index at all
+    vdb._invalidate_index()
     idx_df = vdb._index_named()
-    assert hasattr(idx_df, "_vds_nrows")
+    counted = []
+    orig_count = type(idx_df).count
+
+    def spy_count(self):
+        counted.append(self is idx_df)
+        return orig_count(self)
+
+    monkeypatch.setattr(type(idx_df), "count", spy_count)
+    vdb.search_candidates(q, 0.8).collect()
+    assert vdb._index_named() is idx_df and counted.count(True) == 1
+    counted.clear()
+    vdb.search_candidates(q, 0.8).collect()
+    assert True not in counted
 
 
 def test_delete_vectors_lifecycle(spark):

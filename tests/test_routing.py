@@ -71,22 +71,48 @@ def test_auto_equals_every_strategy(spark):
     vecs.unpersist()
 
 
-def test_calibrate_costs(spark):
-    """Calibration yields sane positive measurements, updates only the
-    hardware-dependent constant, and leaves decision extremes stable:
-    huge-panel selective domains keep the tree, tiny panels on big
-    corpora keep brute."""
+def test_auto_skips_pilot_when_brute_is_certain(spark, monkeypatch):
+    """The walker's margin only shrinks as the candidate-frac estimate
+    grows, so when even a perfectly pruning walk cannot win (a 1-query
+    panel) search(strategy='auto') routes to brute without the pilot
+    collect; a big selective panel still runs the estimate and routes
+    as the cost model says."""
     from vector_database_spark.operators import search as S
 
-    old = S._ITER_FIXED_ROW_UNITS
-    try:
-        out = S.calibrate_costs(spark)
-        assert out["job_latency_s"] > 0
-        assert out["scan_rows_per_s"] > 1e4
-        assert S._ITER_FIXED_ROW_UNITS == out["iter_fixed_row_units"] >= 1e6
-        # extremes survive any plausible calibration
-        big = S.BROADCAST_INDEX_MAX_ROWS + 2
-        assert S._auto_strategy(big, 1, 1.0) == "brute"
-        assert S._auto_strategy(2000, 10_000, 0.001) == "broadcast"
-    finally:
-        S._ITER_FIXED_ROW_UNITS = old
+    vecs = clusters(spark, 3000, 8, n_clusters=4, seed=11).select("id", "vector")
+    vecs = vecs.persist()
+    idx = build_index(vecs, local_threshold=128).persist()
+    rows = vecs.orderBy("id").limit(64).collect()
+    panel = [(int(r.id), list(r.vector)) for r in rows]
+    domain = 0.05
+    route = _auto_strategy(
+        S._index_size(idx), len(panel), estimate_candidate_frac(idx, panel, domain)
+    )
+    assert route == "broadcast"
+
+    calls = {"pilot": 0, "walker": 0}
+    orig_pilot, orig_walker = S._pilot_top_levels, S.search_candidates_broadcast
+
+    def pilot(*a, **k):
+        calls["pilot"] += 1
+        return orig_pilot(*a, **k)
+
+    def walker(*a, **k):
+        calls["walker"] += 1
+        return orig_walker(*a, **k)
+
+    monkeypatch.setattr(S, "_pilot_top_levels", pilot)
+    monkeypatch.setattr(S, "search_candidates_broadcast", walker)
+    for qs, want_calls in (
+        (panel[:1], {"pilot": 0, "walker": 0}),
+        (panel, {"pilot": 1, "walker": 1}),
+    ):
+        calls.update(pilot=0, walker=0)
+        got = {(r.qid, r.id) for r in search(idx, vecs, qs, domain).collect()}
+        assert calls == want_calls, len(qs)
+        want = {
+            (r.qid, r.id) for r in brute_force_search(vecs, qs, domain).collect()
+        }
+        assert got == want and got
+    idx.unpersist()
+    vecs.unpersist()

@@ -344,3 +344,71 @@ def test_maxsim_matches_numpy_and_candidate_refine(spark, embeddings):
     assert {(r.qid, r.doc, r.rank) for r in refined} == {
         (r.qid, r.doc, r.rank) for r in got
     }
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "chebyshev"])
+def test_search_stats_routes_and_doc_scope(spark, metric):
+    """search_stats agrees across its routes (walker, iterative with a
+    broadcast index, iterative with the shuffle-join layout), and a
+    doc-scoped call counts exactly the scoped document's rows whether
+    or not the vector table carries a doc_id column (a doc-less table
+    is scoped through the tree's leaf ids). search(strategy='brute',
+    doc_id=) scopes the same way and equals the tree route."""
+    from vector_database_spark.operators.search import search_stats
+
+    with_doc = random_uniform(spark, n=600, dims=4, seed=5).select(
+        (F.col("id") % 3).alias("doc_id"), "id", "vector"
+    ).persist()
+    no_doc = with_doc.select("id", "vector")
+    idx = build_index(with_doc, doc_col="doc_id", local_threshold=32).persist()
+    panel = [(0, [0.2, 0.3, 0.2, 0.3]), (1, [0.7, 0.6, 0.7, 0.6])]
+    domain, doc = 0.45, 1
+    scoped = with_doc.where(F.col("doc_id") == doc)
+    n_doc = scoped.count()
+    want = {
+        (r.qid, r.id, r.dist)
+        for r in brute_force_search(scoped, panel, domain, metric=metric).collect()
+    }
+    assert want
+    n_want = {q: sum(1 for w in want if w[0] == q) for q, _ in panel}
+
+    routes = {
+        "broadcast": {"strategy": "broadcast"},
+        "iterative": {"strategy": "iterative"},
+        "shuffle": {"strategy": "iterative", "broadcast_index": False},
+    }
+    for vecs in (with_doc, no_doc):
+        got = {
+            name: sorted(
+                tuple(r)
+                for r in search_stats(
+                    idx, vecs, panel, domain, doc_id=doc, metric=metric, **kw
+                ).collect()
+            )
+            for name, kw in routes.items()
+        }
+        # both iterative regimes walk the same box frontier
+        assert got["iterative"] == got["shuffle"]
+        if metric == "chebyshev":
+            # the walker prunes with the same box: identical rows
+            assert got["broadcast"] == got["iterative"]
+        for b, i in zip(got["broadcast"], got["iterative"]):
+            # Euclidean walker prunes by ball: fewer candidates, the
+            # same matches and the same scoped total
+            assert b[0] == i[0] and b[2] == i[2] and b[4] == i[4]
+            assert b[1] <= i[1]
+        for qid, _, n_matches, _, n_total, _ in got["iterative"]:
+            assert n_total == n_doc
+            assert n_matches == n_want[qid]
+
+        for strategy in ("brute", "broadcast"):
+            res = {
+                (r.qid, r.id, r.dist)
+                for r in search(
+                    idx, vecs, panel, domain, doc_id=doc, metric=metric,
+                    strategy=strategy,
+                ).collect()
+            }
+            assert res == want, strategy
+    idx.unpersist()
+    with_doc.unpersist()

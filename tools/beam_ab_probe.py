@@ -86,11 +86,8 @@ def _force(df):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
         app_name="beam-ab",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -99,7 +99,8 @@ def main() -> None:
     ]
     # INTERLEAVE brute and tree-search rounds (brute first): the first
     # scan of the staged parquet pays the cold page-cache read, and
-    # search(auto) additionally pays a one-time pilot collect — a
+    # search(auto) additionally pays a one-time index count (plus the
+    # pilot collect when the panel could make the walker win) — a
     # single search-then-brute ordering misattributes both to the
     # tree path (round-5 lesson: 48.9 s vs 23.3 s collapsed to parity
     # once interleaved).

@@ -38,8 +38,6 @@ def main() -> int:
 
     spark = get_spark(
         app_name="hotkey-probe",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")

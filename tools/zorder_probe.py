@@ -60,7 +60,6 @@ def main() -> int:
 
     spark = get_spark(
         app_name="zorder-probe",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         shuffle_partitions=n_files,
         extra_conf={"spark.ui.enabled": "false"},
     )

@@ -44,7 +44,7 @@ from vector_database_spark.operators.search import (
     search as _search,
     search_candidates_auto,
 )
-from vector_database_spark.schemas import local_frame
+from vector_database_spark.schemas import as_predicate, local_frame
 
 
 # rebuild a document's tree once this fraction of its rows live in the
@@ -1166,9 +1166,7 @@ class VectorDatabase:
         side (via `search(where=)` — exact filter-then-refine) and
         the un-compacted tail, so reads stay exact at every point of
         the ingest lifecycle."""
-        pred = None
-        if where is not None:
-            pred = F.expr(where) if isinstance(where, str) else where
+        pred = None if where is None else as_predicate(where)
         txt = self.text()
         if pred is not None:
             # filter on the TEXT table's own column names (text_id,
@@ -1308,9 +1306,7 @@ class VectorDatabase:
             [(0, [float(x) for x in vector])],
             "qid long, qvec array<double>",
         )
-        pred = None
-        if where is not None:
-            pred = F.expr(where) if isinstance(where, str) else where
+        pred = None if where is None else as_predicate(where)
         out = None
         if self._ann_exists():
             stored = self._ann_vectors()

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from vector_database_spark.functions.vector import dot, euclidean, l2_norm
-from vector_database_spark.schemas import local_frame
+from vector_database_spark.schemas import as_predicate, local_frame
 
 
 def _hyperplanes(dims: int, n_bits: int, n_tables: int, seed: int) -> list[list[list[float]]]:
@@ -527,8 +527,7 @@ def ivf_knn(
     the shared set-based loop (`_escalate`): no driver-side qid list;
     rounds are log2(n_cells/nprobe)."""
     if where is not None:
-        pred = F.expr(where) if isinstance(where, str) else where
-        assigned_df = assigned_df.where(pred)
+        assigned_df = assigned_df.where(as_predicate(where))
     cents = _centroid_frame(assigned_df.sparkSession, centroids)
 
     def ranked(qdf: DataFrame, np_: int) -> DataFrame:
@@ -2260,8 +2259,7 @@ def bq_knn(
             )
     qual = None
     if where is not None:
-        pred = F.expr(where) if isinstance(where, str) else where
-        qual = vectors_df.where(pred).select(
+        qual = vectors_df.where(as_predicate(where)).select(
             F.col(id_col).cast("long").alias("id")
         )
     if centroids is not None:
@@ -2711,8 +2709,7 @@ def _mips_serve(
     exact filtered MIPS scan — so a predicate starving every probe
     subset ends recall-1.0 (pytest-pinned in the a07 1% regime)."""
     if where is not None:
-        pred = F.expr(where) if isinstance(where, str) else where
-        assigned = assigned.where(pred)
+        assigned = assigned.where(as_predicate(where))
     cents = _centroid_frame(assigned.sparkSession, centroids)
     qdf = queries_df.select(
         "qid", F.col("qvec").cast("array<double>").alias("qvec")

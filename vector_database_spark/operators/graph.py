@@ -270,13 +270,6 @@ def knn_graph(
     come from a per-cell equi-join (no corpus collect, no n²; g07's
     gate) at the price of blocked-recall; this exact builder remains
     the oracle/refinement primitive."""
-    from pyspark.sql.window import Window
-
-    from vector_database_spark.functions.vector import (
-        cosine_similarity,
-        euclidean,
-    )
-
     if method not in ("expr", "dgemm"):
         raise ValueError(f"method must be expr|dgemm, got {method!r}")
     src = vecs.select(
@@ -344,17 +337,13 @@ def knn_graph(
         F.col(id_col).cast("long").alias("qid"),
         F.col(vector_col).cast("array<double>").alias("qvec"),
     )
+    from vector_database_spark.operators.search import _distance, _grouped_topk
+
+    dist = _distance(metric, ("euclidean", "cosine"))
     crossed = src.crossJoin(F.broadcast(qdf)).where(F.col("id") != F.col("qid"))
-    if metric == "euclidean":
-        dist = euclidean(F.col("_vec"), F.col("qvec"))
-    elif metric == "cosine":
-        dist = F.lit(1.0) - cosine_similarity(F.col("_vec"), F.col("qvec"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
     narrow = crossed.select(
         F.col("qid").alias("src"), F.col("id").alias("dst"), dist.alias("dist")
     )
-    from vector_database_spark.operators.search import _grouped_topk
 
     local = _grouped_topk(narrow, k, "src", "dst")
     w = Window.partitionBy("src").orderBy(F.col("dist").asc(), F.col("dst").asc())

@@ -13,13 +13,32 @@ note):
   radius d is contained in the L∞ box of radius d, box candidates are
   a correct superset for L2 refinement.
 
+One search core serves ``search``, ``search_stats`` and the facade:
+
+* Router — ``search_candidates_auto`` alone picks the candidate walk:
+  the single-job cogroup walker (``search_candidates_broadcast``)
+  while a tree fits one task (``BROADCAST_INDEX_MAX_ROWS``), else the
+  iterative frontier join (``search_candidates``), which broadcasts
+  the index per level up to ``BROADCAST_JOIN_INDEX_MAX_ROWS`` and pins
+  a ``(doc_id, range_id)`` layout beyond. ``search`` first asks the
+  cost model (``_auto_strategy``) whether a brute scan beats any walk.
+* Distance table — ``_DISTANCES`` maps each metric to its expression
+  over ``_vec``/``qvec`` (smaller is nearer); search, telemetry, brute
+  force, kNN and ``graph.knn_graph`` each name the metrics they take.
+* Scope and refine — ``_scoped_vectors`` projects the vector table to
+  ``(id, _vec)``, scoped to one document by its ``doc_id`` column or,
+  lacking one, by the tree's leaf ids; ``_refine`` is the exact
+  ``dist <= domain`` join behind ``search`` and ``search_stats``.
+* Index memo — ``_index_memo`` keeps per-index-object dicts (row
+  counts, pilot top levels, shuffle-regime layouts) on the index
+  DataFrame, so they go with the object the facade drops on every
+  index change.
+
 Execution: the recursive CTE the reference uses has no direct Spark
-equivalent at scale, so traversal is a driver loop over frontier
-self-joins — one job per tree level, frontier shrinking as subtrees
-prune. Many queries traverse TOGETHER in one frontier (batch panel);
-the per-level join against the index is a broadcast join when the
-per-doc index fits (it is ~2N rows per doc), else a shuffle join on
-``range_id`` with partition pruning on ``doc_id``.
+equivalent at scale, so the iterative walk is a driver loop over
+frontier self-joins — one job per ``_CHECKPOINT_EVERY`` tree levels,
+frontier shrinking as subtrees prune. Many queries traverse TOGETHER
+in one frontier (batch panel).
 
 A brute-force path (`brute_force_search`, `knn`) doubles as the oracle
 (reference pattern: MemoryVectorIndexTests.cs:161-163) and as the
@@ -28,7 +47,7 @@ baseline ANN comparison point.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -36,9 +55,50 @@ from vector_database_spark.functions.vector import (
     cosine_similarity,
     dot,
     euclidean,
+    l2_norm,
+    linf_distance,
+    normalize,
 )
-from vector_database_spark.plans.iterate import LineageBudget
-from vector_database_spark.schemas import local_frame
+from vector_database_spark.schemas import as_predicate, local_frame
+
+# Metric -> distance over the vector (`_vec`) and query (`qvec`)
+# columns, smaller is nearer: cosine as 1 - cos, and dot (maximum
+# inner product, the retrieval metric for unnormalized embeddings)
+# negated, so every metric shares the ascending-(dist, id) machinery.
+_DISTANCES = {
+    "euclidean": euclidean,
+    "chebyshev": linf_distance,
+    "cosine": lambda v, q: F.lit(1.0) - cosine_similarity(v, q),
+    "dot": lambda v, q: -dot(v, q),
+}
+
+
+def _distance(metric: str, allowed: tuple[str, ...]) -> Column:
+    """`metric`'s distance column; `allowed` names the metrics the
+    calling operator's contract accepts."""
+    if metric not in allowed:
+        raise ValueError(f"unknown metric {metric!r}")
+    return _DISTANCES[metric](F.col("_vec"), F.col("qvec"))
+
+
+def _pruning(metric: str) -> str:
+    """Walker pruning for a refinement metric: Euclidean admits the
+    tighter squared-budget ball (O24); Chebyshev needs the full box."""
+    return "ball" if metric == "euclidean" else "box"
+
+
+def _index_memo(index_df: DataFrame, name: str) -> dict:
+    """The `name` memo of this index DataFrame object: a dict kept on
+    the object, so repeated searches over one index reuse it and an
+    index the caller replaces takes its memos with it."""
+    memos = getattr(index_df, "_vds_memo", None)
+    if memos is None:
+        memos = {}
+        try:
+            index_df._vds_memo = memos
+        except AttributeError:
+            pass
+    return memos.setdefault(name, {})
 
 
 def _as_queries_df(index_or_vectors: DataFrame, queries: DataFrame | list) -> DataFrame:
@@ -75,13 +135,7 @@ def _range_layout(index_df: DataFrame, idx: DataFrame, doc_id: int | None) -> Da
     persisted layout for the shuffle-join regime, LRU-bounded so
     repeated doc-scoped searches don't grow executor storage without
     bound (round-2 advice)."""
-    cache = getattr(index_df, "_vds_range_part", None)
-    if not isinstance(cache, dict):
-        cache = {}
-        try:
-            index_df._vds_range_part = cache
-        except Exception:
-            pass
+    cache = _index_memo(index_df, "range_layout")
     if doc_id in cache:
         cache[doc_id] = cache.pop(doc_id)  # refresh LRU position
         return cache[doc_id]
@@ -101,17 +155,10 @@ def _range_layout(index_df: DataFrame, idx: DataFrame, doc_id: int | None) -> Da
     return layout
 
 
-def release_search_layouts(index_df: DataFrame) -> None:
-    """Unpersist every memoized shuffle-regime layout of this index
-    (explicit release hook for rotating indexes)."""
-    cache = getattr(index_df, "_vds_range_part", None)
-    if isinstance(cache, dict):
-        for layout in cache.values():
-            try:
-                layout.unpersist()
-            except Exception:
-                pass
-        cache.clear()
+# The iterative walk checkpoints its frontier every this many levels
+# (one Spark job each) and gives up beyond _MAX_LEVELS levels.
+_CHECKPOINT_EVERY = 8
+_MAX_LEVELS = 64
 
 
 def search_candidates(
@@ -121,8 +168,6 @@ def search_candidates(
     *,
     doc_id: int | None = None,
     broadcast_index: bool = True,
-    checkpoint_every: int = 8,
-    max_levels: int = 64,
 ) -> DataFrame:
     """Box-semantics candidate ids: ``(qid, doc_id, id)``.
 
@@ -171,7 +216,7 @@ def search_candidates(
     def checkpoint_state(frontier: DataFrame) -> DataFrame:
         # ONE eager checkpoint materializes the live frontier AND the
         # leaf slices found since the last boundary (they share the
-        # same ≤`checkpoint_every`-level lineage segment, so the
+        # same ≤`_CHECKPOINT_EVERY`-level lineage segment, so the
         # traversal executes once per segment); both the hit batch and
         # the next frontier are then splits over stored blocks, and
         # the final union reads blocks instead of re-walking the tree.
@@ -183,7 +228,7 @@ def search_candidates(
                 lf.select("qid", "doc_id", _null_rid.alias("range_id"), "id")
             )
         pending.clear()
-        # coalesce: the union stacks ~checkpoint_every+1 inputs' worth
+        # coalesce: the union stacks ~_CHECKPOINT_EVERY+1 inputs' worth
         # of partitions; without it the count compounds GEOMETRICALLY
         # across segments (frontier slices inherit the blob's
         # partitioning — measured 186k tasks in one stage by segment 4
@@ -196,7 +241,7 @@ def search_candidates(
         return blob.where(F.col("id").isNull()).select("qid", "doc_id", "range_id")
 
     while True:
-        if level > max_levels:
+        if level > _MAX_LEVELS:
             raise RuntimeError("search exceeded max tree depth")
         nodes = frontier.join(idx, ["doc_id", "range_id"], "inner")
         leaf = nodes.where(F.col("id").isNotNull()).select("qid", "doc_id", "id")
@@ -219,11 +264,11 @@ def search_candidates(
         )
         frontier = children
         level += 1
-        # One action per `checkpoint_every` levels, not per level: the
+        # One action per `_CHECKPOINT_EVERY` levels, not per level: the
         # checkpoint both cuts lineage AND tells us whether the
         # frontier is exhausted — descending an already-empty frontier
         # for a few levels costs only plan nodes, not jobs.
-        if level % checkpoint_every == 0:
+        if level % _CHECKPOINT_EVERY == 0:
             frontier = checkpoint_state(frontier)
             if frontier.isEmpty():
                 break
@@ -513,27 +558,13 @@ def _index_size(index_df: DataFrame, doc_id: int | None = None) -> int:
     choice should depend on the tree actually walked: a 100M-row
     multi-doc index whose individual trees are 2M rows each still
     takes the single-task walker when scoped to one doc."""
-    if doc_id is not None:
-        cache = getattr(index_df, "_vds_doc_nrows", None)
-        if cache is None:
-            cache = {}
-            try:
-                index_df._vds_doc_nrows = cache
-            except Exception:
-                pass
-        n = cache.get(doc_id)
-        if n is None:
-            n = index_df.where(F.col("doc_id") == F.lit(doc_id)).count()
-            cache[doc_id] = n
-        return int(n)
-    n = getattr(index_df, "_vds_nrows", None)
-    if n is None:
-        n = index_df.count()
-        try:
-            index_df._vds_nrows = n
-        except Exception:
-            pass
-    return int(n)
+    sizes = _index_memo(index_df, "size")
+    if doc_id not in sizes:
+        scoped = index_df
+        if doc_id is not None:
+            scoped = index_df.where(F.col("doc_id") == F.lit(doc_id))
+        sizes[doc_id] = int(scoped.count())
+    return sizes[doc_id]
 
 
 # Pilot-walk depth: the top (2^depth - 1) index rows PER DOC are
@@ -570,9 +601,9 @@ _WALK_UNIT = 0.44
 _WALK_FRAC_UNIT = 2.12
 _TREE_FIXED_UNITS = 13.0
 # The iterative frontier join's fixed cost is job-latency dominated
-# (one Spark job per checkpoint_every levels), roughly independent of
-# n: ~25 s on this rig ≈ 25e6 row-units. It only pays off beyond the
-# walker cap when p·n·(pruning margin) clears it.
+# (one Spark job per _CHECKPOINT_EVERY levels), roughly independent
+# of n: ~25 s on the probe rig ≈ 25e6 row-units. It only pays off
+# beyond the walker cap when p·n·(pruning margin) clears it.
 _ITER_FIXED_ROW_UNITS = 25_000_000.0
 
 
@@ -589,65 +620,10 @@ def _auto_strategy(n_index_rows: int, n_queries: int, est_frac: float) -> str:
     return "iterative" if tree_wins else "brute"
 
 
-def calibrate_costs(spark, *, scan_rows: int = 2_000_000) -> dict:
-    """Refit the HARDWARE-DEPENDENT cost constant on this rig.
-
-    The walker/brute ratios (`_WALK_UNIT`, `_WALK_FRAC_UNIT`) compare
-    two CPU-bound codepaths and transfer across machines; the
-    iterative path's fixed cost does not — it is Spark job latency
-    expressed in scan-row units, i.e. (seconds per job round-trip) ×
-    (scan rows per second), which varies with both scheduler overhead
-    and CPU speed. This opt-in pass measures both with two tiny timed
-    jobs (~1 s total), updates `_ITER_FIXED_ROW_UNITS`, and returns
-    the measurements. Call once per session on unfamiliar hardware;
-    the shipped default stays the conservative fit from the probe rig
-    (SCALE.md §Search)."""
-    global _ITER_FIXED_ROW_UNITS
-    # job latency: empty-ish job round-trips, best of 3
-    lat = min(
-        _timed(lambda: spark.range(1).count()) for _ in range(3)
-    )
-    # scan rate: a codegen distance-shaped expression over scan_rows
-    df = spark.range(scan_rows).select(
-        (F.col("id") * 0.5).alias("a"), (F.col("id") * 0.25).alias("b")
-    )
-    expr = ((F.col("a") - 1.0) * (F.col("a") - 1.0)
-            + (F.col("b") - 2.0) * (F.col("b") - 2.0))
-    scan_s = min(
-        _timed(lambda: df.select(F.sum(expr)).collect()) for _ in range(2)
-    )
-    rate = scan_rows / max(scan_s, 1e-6)
-    # the iterative walk costs ~levels/checkpoint_every job round-trips;
-    # keep the fitted ~25-job shape, scale by measured latency × rate
-    new_units = max(1e6, 25.0 * lat * rate)
-    old = _ITER_FIXED_ROW_UNITS
-    _ITER_FIXED_ROW_UNITS = new_units
-    return {
-        "job_latency_s": lat,
-        "scan_rows_per_s": rate,
-        "iter_fixed_row_units": new_units,
-        "previous": old,
-    }
-
-
-def _timed(fn) -> float:
-    import time
-
-    t0 = time.time()
-    fn()
-    return time.time() - t0
-
-
 def _pilot_top_levels(index_df: DataFrame, doc_id: int | None) -> dict:
     """Collect (memoized per index object + doc scope) the top
     `_PILOT_DEPTH` levels of each tree: {doc_id: {range_id: row}}."""
-    cache = getattr(index_df, "_vds_pilot_top", None)
-    if not isinstance(cache, dict):
-        cache = {}
-        try:
-            index_df._vds_pilot_top = cache
-        except Exception:
-            pass
+    cache = _index_memo(index_df, "pilot_top")
     if doc_id in cache:
         return cache[doc_id]
     top = index_df.where(F.col("range_id") < F.lit((1 << _PILOT_DEPTH) - 1))
@@ -729,24 +705,82 @@ def search_candidates_auto(
     *,
     doc_id: int | None = None,
     pruning: str = "box",
-    **kwargs,
+    strategy: str = "auto",
+    broadcast_index: bool | None = None,
 ) -> DataFrame:
-    """Strategy-picking candidate search: the single-job cogroup
-    walker for indexes whose per-task tree fits comfortably, the
-    level-synchronous frontier join beyond (the iterative path only
-    does box pruning). The facade and `search` both route through
-    this guard — nothing calls the walker unconditionally. (No brute
+    """The candidate-walk router: ``(qid, doc_id, id)``.
+
+    `strategy` 'auto' takes the single-job cogroup walker while the
+    (doc-scoped) tree fits one task comfortably and the level-
+    synchronous frontier join beyond; 'broadcast' | 'iterative' force
+    one. The iterative join broadcasts the index per level unless
+    `broadcast_index` is False, which pins the shuffle-join layout;
+    left None, it follows the index size. Only the walker prunes by
+    `pruning` ('box' | 'ball'); the iterative path always prunes by
+    box. The facade, `search` and `search_stats` all route through
+    here — nothing calls the walker unconditionally. (No brute
     routing here: box-semantics CANDIDATE sets are a defined output —
     leaves whose cell intersects the box — that a scan can't
     reproduce; `search`, whose refined result is scan-equivalent,
     adds the brute route.)"""
-    n = _index_size(index_df, doc_id)
-    if n <= BROADCAST_INDEX_MAX_ROWS:
+    if strategy == "auto":
+        fits = _index_size(index_df, doc_id) <= BROADCAST_INDEX_MAX_ROWS
+        strategy = "broadcast" if fits else "iterative"
+    if strategy == "broadcast":
         return search_candidates_broadcast(
             index_df, queries, domain, doc_id=doc_id, pruning=pruning
         )
-    kwargs.setdefault("broadcast_index", n <= BROADCAST_JOIN_INDEX_MAX_ROWS)
-    return search_candidates(index_df, queries, domain, doc_id=doc_id, **kwargs)
+    if broadcast_index is None:
+        broadcast_index = (
+            _index_size(index_df, doc_id) <= BROADCAST_JOIN_INDEX_MAX_ROWS
+        )
+    return search_candidates(
+        index_df, queries, domain, doc_id=doc_id, broadcast_index=broadcast_index
+    )
+
+
+def _scoped_vectors(
+    vectors_df: DataFrame,
+    index_df: DataFrame | None,
+    doc_id: int | None,
+    id_col: str,
+    vector_col: str,
+) -> DataFrame:
+    """The vector table as ``(id, _vec)``, scoped to document `doc_id`
+    when given: by its ``doc_id`` column, or — a vector table without
+    one — by the document tree's leaf ids (the tree IS the doc
+    membership then)."""
+    doc_col = doc_id is not None and "doc_id" in vectors_df.columns
+    if doc_col:
+        vectors_df = vectors_df.where(F.col("doc_id") == F.lit(doc_id))
+    vecs = vectors_df.select(
+        F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
+    )
+    if doc_id is not None and not doc_col:
+        members = (
+            index_df.where(
+                (F.col("doc_id") == F.lit(doc_id)) & F.col("id").isNotNull()
+            )
+            .select("id")
+            .distinct()
+        )
+        vecs = vecs.join(members, "id", "left_semi")
+    return vecs
+
+
+def _refine(
+    cands: DataFrame, vecs: DataFrame, qdf: DataFrame, domain: float, metric: str
+) -> DataFrame:
+    """Exact refinement of candidate ``(qid, id)`` pairs against the
+    ``(id, _vec)`` table: ``(qid, id, dist)`` with ``dist <= domain``."""
+    return (
+        cands.select("qid", "id")
+        .join(vecs, "id")
+        .join(F.broadcast(qdf), "qid")
+        .withColumn("dist", _distance(metric, ("euclidean", "chebyshev")))
+        .where(F.col("dist") <= F.lit(float(domain)))
+        .select("qid", "id", "dist")
+    )
 
 
 def search(
@@ -761,7 +795,7 @@ def search(
     metric: str = "euclidean",
     strategy: str = "auto",
     where=None,
-    **kwargs,
+    broadcast_index: bool | None = None,
 ) -> DataFrame:
     """Exact vicinity search: tree candidates + exact distance filter.
 
@@ -772,7 +806,8 @@ def search(
     can't amortize the tree's fixed cost or the domain doesn't prune
     (identical refined output either way); otherwise the cogroup
     walker for small indexes, the iterative frontier join beyond.
-    Explicit 'brute' | 'broadcast' | 'iterative' override the model.
+    Explicit 'brute' | 'broadcast' | 'iterative' override the model;
+    `broadcast_index` is the router's (`search_candidates_auto`).
 
     ``where`` (optional Column or SQL string over `vectors_df`'s
     columns) makes this FILTERED vicinity search — the reference's
@@ -787,74 +822,40 @@ def search(
     directly on the table scan, where Catalyst pushes it into the
     parquet reader."""
     if where is not None:
-        pred = F.expr(where) if isinstance(where, str) else where
-        vectors_df = vectors_df.where(pred)
+        vectors_df = vectors_df.where(as_predicate(where))
     if strategy == "auto":
-        est = estimate_candidate_frac(index_df, queries, domain, doc_id=doc_id)
+        n = _index_size(index_df, doc_id)
         n_q = queries.count() if isinstance(queries, DataFrame) else len(queries)
-        strategy = _auto_strategy(_index_size(index_df, doc_id), n_q, est)
+        # the tree's margin only shrinks as the estimate grows: when
+        # even a perfectly pruning walk loses, skip the pilot estimate
+        strategy = _auto_strategy(n, n_q, 0.0)
+        if strategy != "brute":
+            est = estimate_candidate_frac(index_df, queries, domain, doc_id=doc_id)
+            strategy = _auto_strategy(n, n_q, est)
     if strategy == "brute":
-        scan_df = vectors_df
-        if doc_id is not None:
-            if "doc_id" in vectors_df.columns:
-                scan_df = vectors_df.where(F.col("doc_id") == F.lit(doc_id))
-            else:
-                # scope via the doc's leaf ids (the tree IS the doc
-                # membership when the vector table carries no doc col)
-                members = (
-                    index_df.where(
-                        (F.col("doc_id") == F.lit(doc_id))
-                        & F.col("id").isNotNull()
-                    )
-                    .select(F.col("id").alias(id_col))
-                    .distinct()
-                )
-                scan_df = vectors_df.join(members, id_col, "left_semi")
         return brute_force_search(
-            scan_df,
+            _scoped_vectors(vectors_df, index_df, doc_id, id_col, vector_col),
             queries,
             domain,
-            id_col=id_col,
-            vector_col=vector_col,
+            id_col="id",
+            vector_col="_vec",
             metric=metric,
         )
-    if strategy == "broadcast":
-        cands = search_candidates_broadcast(
-            index_df,
-            queries,
-            domain,
-            doc_id=doc_id,
-            # Euclidean refinement admits the tighter squared-budget
-            # pruning (O24); Chebyshev needs the full box.
-            pruning="ball" if metric == "euclidean" else "box",
-        )
-    else:
-        kwargs.setdefault(
-            "broadcast_index",
-            _index_size(index_df, doc_id) <= BROADCAST_JOIN_INDEX_MAX_ROWS,
-        )
-        cands = search_candidates(index_df, queries, domain, doc_id=doc_id, **kwargs)
-    qdf = _as_queries_df(index_df, queries)
-    vecs = vectors_df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
+    cands = search_candidates_auto(
+        index_df,
+        queries,
+        domain,
+        doc_id=doc_id,
+        pruning=_pruning(metric),
+        strategy=strategy,
+        broadcast_index=broadcast_index,
     )
-    joined = (
-        cands.select("qid", "id")
-        .join(vecs, "id")
-        .join(F.broadcast(qdf), "qid")
-    )
-    if metric == "euclidean":
-        dist = euclidean(F.col("_vec"), F.col("qvec"))
-    elif metric == "chebyshev":
-        from vector_database_spark.functions.vector import linf_distance
-
-        dist = linf_distance(F.col("_vec"), F.col("qvec"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-    return (
-        joined.withColumn("dist", dist)
-        .where(F.col("dist") <= F.lit(float(domain)))
-        .select("qid", "id", "dist")
+    return _refine(
+        cands,
+        _scoped_vectors(vectors_df, None, None, id_col, vector_col),
+        _as_queries_df(index_df, queries),
+        domain,
+        metric,
     )
 
 
@@ -869,7 +870,7 @@ def search_stats(
     doc_id: int | None = None,
     metric: str = "euclidean",
     strategy: str = "auto",
-    **kwargs,
+    broadcast_index: bool | None = None,
 ) -> DataFrame:
     """Per-query pruning-efficiency telemetry:
     ``(qid, n_candidates, n_matches, selectivity, n_total,
@@ -882,69 +883,30 @@ def search_stats(
     wants. ``selectivity`` = matches/candidates (1.0 = the tree did
     all the work, the refinement rejected nothing), ``candidate_frac``
     = candidates/total (how much of the corpus the walk touched; 1.0
-    = no pruning — brute force in disguise).
+    = no pruning — brute force in disguise). `strategy` and
+    `broadcast_index` go to the router (`search_candidates_auto`);
+    ``n_total`` counts the scoped document when `doc_id` is given.
     """
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if _index_size(index_df, doc_id) <= BROADCAST_INDEX_MAX_ROWS
-            else "iterative"
-        )
-    if strategy == "broadcast":
-        cands = search_candidates_broadcast(
-            index_df, queries, domain, doc_id=doc_id,
-            pruning="ball" if metric == "euclidean" else "box",
-        )
-    else:
-        kwargs.setdefault(
-            "broadcast_index",
-            _index_size(index_df, doc_id) <= BROADCAST_JOIN_INDEX_MAX_ROWS,
-        )
-        cands = search_candidates(index_df, queries, domain, doc_id=doc_id, **kwargs)
+    cands = search_candidates_auto(
+        index_df,
+        queries,
+        domain,
+        doc_id=doc_id,
+        pruning=_pruning(metric),
+        strategy=strategy,
+        broadcast_index=broadcast_index,
+    )
     # one pass for the candidate walk, reused by both counters
     cands = cands.localCheckpoint(eager=False)
     qdf = _as_queries_df(index_df, queries)
-    vecs = vectors_df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
-    )
-    if doc_id is not None:
-        if "doc_id" in vectors_df.columns:
-            vecs = vectors_df.where(F.col("doc_id") == doc_id).select(
-                F.col(id_col).cast("long").alias("id"),
-                F.col(vector_col).alias("_vec"),
-            )
-        else:
-            # doc-less vector table: scope n_total via the doc's leaf
-            # ids (same fallback as search()'s brute path) — otherwise
-            # candidate_frac divides by the WHOLE multi-doc corpus and
-            # under-reports the walk by the number of documents
-            members = (
-                index_df.where(
-                    (F.col("doc_id") == F.lit(doc_id))
-                    & F.col("id").isNotNull()
-                )
-                .select("id")
-                .distinct()
-            )
-            vecs = vecs.join(members, "id", "left_semi")
-    if metric == "euclidean":
-        dist = euclidean(F.col("_vec"), F.col("qvec"))
-    elif metric == "chebyshev":
-        from vector_database_spark.functions.vector import linf_distance
-
-        dist = linf_distance(F.col("_vec"), F.col("qvec"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-    n_total = vecs.count()
+    vecs = _scoped_vectors(vectors_df, index_df, doc_id, id_col, vector_col)
     per_c = cands.groupBy("qid").agg(F.count(F.lit(1)).alias("n_candidates"))
     per_m = (
-        cands.select("qid", "id")
-        .join(vecs, "id")
-        .join(F.broadcast(qdf), "qid")
-        .where(dist <= F.lit(float(domain)))
+        _refine(cands, vecs, qdf, domain, metric)
         .groupBy("qid")
         .agg(F.count(F.lit(1)).alias("n_matches"))
     )
+    n_total = vecs.count()
     return (
         qdf.select("qid")
         .join(per_c, "qid", "left")
@@ -980,20 +942,11 @@ def brute_force_search(
     `metric` ('euclidean' | 'chebyshev'). Also the unselective-domain
     fast path `search(strategy='auto')` routes to — one codegen scan,
     no candidate join."""
+    dist = _distance(metric, ("euclidean", "chebyshev"))
     qdf = _as_queries_df(vectors_df, queries)
-    vecs = vectors_df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
-    )
-    if metric == "euclidean":
-        dist = euclidean(F.col("_vec"), F.col("qvec"))
-    elif metric == "chebyshev":
-        from vector_database_spark.functions.vector import linf_distance
-
-        dist = linf_distance(F.col("_vec"), F.col("qvec"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
     return (
-        vecs.crossJoin(F.broadcast(qdf))
+        _scoped_vectors(vectors_df, None, None, id_col, vector_col)
+        .crossJoin(F.broadcast(qdf))
         .withColumn("dist", dist)
         .where(F.col("dist") <= F.lit(float(domain)))
         .select("qid", "id", "dist")
@@ -1072,26 +1025,14 @@ def knn(
     shuffles at all and the only exchange carries the survivors. For
     the billion-row path use `ann.ivf_knn` / LSH instead.
     """
+    dist = _distance(metric, ("euclidean", "cosine", "dot"))
     if where is not None:
-        pred = F.expr(where) if isinstance(where, str) else where
-        vectors_df = vectors_df.where(pred)
+        vectors_df = vectors_df.where(as_predicate(where))
     qdf = _as_queries_df(vectors_df, queries)
-    vecs = vectors_df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
+    vecs = _scoped_vectors(vectors_df, None, None, id_col, vector_col)
+    narrow = vecs.crossJoin(F.broadcast(qdf)).select(
+        "qid", "id", dist.alias("dist")
     )
-    crossed = vecs.crossJoin(F.broadcast(qdf))
-    if metric == "euclidean":
-        dist = euclidean(F.col("_vec"), F.col("qvec"))
-    elif metric == "cosine":
-        dist = F.lit(1.0) - cosine_similarity(F.col("_vec"), F.col("qvec"))
-    elif metric == "dot":
-        # maximum inner product (MIPS) — the retrieval metric for
-        # unnormalized embeddings; negation turns argmax into the
-        # shared ascending-(dist, id) top-k machinery unchanged
-        dist = -dot(F.col("_vec"), F.col("qvec"))
-    else:
-        raise ValueError(f"unknown metric {metric!r}")
-    narrow = crossed.select("qid", "id", dist.alias("dist"))
     local = _grouped_topk(narrow, k, "qid", "id")
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
     return (
@@ -1137,20 +1078,13 @@ def cosine_search(
     function's ``build`` contract) to reuse an index across calls;
     otherwise one is built ad hoc.
     """
-    from vector_database_spark.functions.vector import (
-        cosine_similarity,
-        l2_norm,
-    )
     from vector_database_spark.operators.index_build import build_index
 
     t = float(min_cos)
     if not -1.0 <= t <= 1.0:
         raise ValueError("min_cos must be in [-1, 1]")
-    from vector_database_spark.functions.vector import normalize
-
     if where is not None:
-        pred = F.expr(where) if isinstance(where, str) else where
-        vecs = vecs.where(pred)
+        vecs = vecs.where(as_predicate(where))
     src = vecs.select(F.col(id_col).alias("id"), F.col(vector_col).alias("vector"))
     norm = l2_norm(F.col("vector"))
     normed = src.where(norm > 0).select(
@@ -1214,13 +1148,10 @@ def maxsim_topk(
     query token via `ann.ivf_knn`, union the hit docs, refine here),
     which is how late-interaction engines scale past brute force.
     """
-    from vector_database_spark.functions.vector import dot
-
     if metric not in ("dot", "cosine"):
         raise ValueError(f"unknown metric {metric!r}")
     if where is not None:
-        pred = F.expr(where) if isinstance(where, str) else where
-        vectors_df = vectors_df.where(pred)
+        vectors_df = vectors_df.where(as_predicate(where))
     vecs = vectors_df.select(
         F.col(doc_col).cast("long").alias("doc"),
         F.col(id_col).cast("long").alias("id"),

@@ -11,7 +11,7 @@ table partitioned by ``doc_id``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,6 +87,12 @@ def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
     return spark.createDataFrame(table, struct)
+
+
+def as_predicate(where) -> Column:
+    """A row filter given as a SQL string or a Column, as a Column: the
+    one door every ``where=`` argument of the engine goes through."""
+    return F.expr(where) if isinstance(where, str) else where
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -33,6 +33,11 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "vector-database-spark",
     master: str | None = None,
@@ -41,15 +46,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    `master` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    `master` defaults to ``local[default_cpus()]``.
     `shuffle_partitions` defaults to the core count — at cluster scale
     you'd size this to ~2-3x total cores or rely on AQE coalescing.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus)
+        shuffle_partitions = cpus
 
     # Make this package importable by executor-side Python workers even
     # when the driver script runs from another directory (local mode
