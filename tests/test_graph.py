@@ -146,23 +146,6 @@ def test_graph_beam_search_monotone_and_deterministic(spark, embeddings):
     }
 
 
-def test_knn_graph_dgemm_matches_expr(spark, embeddings):
-    """The dgemm scale path must agree with the expression (oracle)
-    path edge-for-edge — numpy's pairwise sums differ from the
-    sequential folds only in the last ulp, which can reorder an edge
-    only at an exact distance tie (none in this corpus)."""
-    from pyspark.sql import functions as F
-
-    from vector_database_spark.operators.graph import knn_graph
-
-    vecs = embeddings.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vector")
-    ).where(F.col("id") < 300)
-    a = {(r.src, r.dst, r.rank) for r in knn_graph(vecs, 4, method="expr").collect()}
-    b = {(r.src, r.dst, r.rank) for r in knn_graph(vecs, 4, method="dgemm").collect()}
-    assert a == b and len(a) == 300 * 4
-
-
 def _vecs(embeddings):
     from pyspark.sql import functions as F
 
@@ -222,14 +205,15 @@ def test_knn_graph_blocked_recall_and_full_probe_exact(spark, embeddings):
     )
 
     vecs = _vecs(embeddings)
-    exact = {(r.src, r.dst) for r in knn_graph(vecs, 5).collect()}
+    exact = {(r.src, r.dst, r.rank) for r in knn_graph(vecs, 5).collect()}
     approx = {
-        (r.src, r.dst)
+        (r.src, r.dst, r.rank)
         for r in knn_graph_blocked(
             vecs, 5, n_cells=8, nprobe=4, method="dgemm"
         ).collect()
     }
-    recall = len(exact & approx) / len(exact)
+    pairs = {(s, d) for s, d, _r in exact}
+    recall = len(pairs & {(s, d) for s, d, _r in approx}) / len(pairs)
     assert recall >= 0.7, recall
     full = {
         (r.src, r.dst, r.rank)
@@ -237,10 +221,7 @@ def test_knn_graph_blocked_recall_and_full_probe_exact(spark, embeddings):
             vecs, 5, n_cells=8, nprobe=8, method="dgemm"
         ).collect()
     }
-    want = {
-        (r.src, r.dst, r.rank) for r in knn_graph(vecs, 5, method="dgemm").collect()
-    }
-    assert full == want
+    assert full == exact
 
 
 def test_knn_graph_append_equals_rebuild(spark, embeddings, tmp_path):
@@ -285,6 +266,50 @@ def test_knn_graph_append_equals_rebuild(spark, embeddings, tmp_path):
     empty = batch.where(F.col("id") < 0)
     info2 = knn_graph_append(spark, root, empty, retrain="never")
     assert info2["appended"] == 0 and not info2["retrained"]
+
+
+def test_knn_graph_cell_counts_track_stored_vectors(spark, embeddings, tmp_path):
+    """``{path}/cell_counts`` feeds the hot-cell cap on append, so it
+    must equal the true per-cell row counts of ``{path}/vectors``
+    after a write and after an append, and a redelivered (already
+    stored) batch must leave it untouched."""
+    from pyspark.sql import functions as F
+
+    from vector_database_spark.operators.graph import (
+        knn_graph_append,
+        knn_graph_write,
+    )
+
+    vecs = _vecs(embeddings).where(F.col("id") < 300)
+    base = vecs.where(F.col("id") < 240)
+    batch = vecs.where(F.col("id") >= 240)
+    root = str(tmp_path / "kgn")
+
+    def stored():
+        return {
+            (r.cell, r.n)
+            for r in spark.read.parquet(f"{root}/cell_counts").collect()
+        }
+
+    def true_counts():
+        return {
+            (r.cell, r["count"])
+            for r in spark.read.parquet(f"{root}/vectors")
+            .groupBy("cell")
+            .count()
+            .collect()
+        }
+
+    knn_graph_write(base, 4, root, n_cells=6, nprobe=2)
+    first = stored()
+    assert first == true_counts() and sum(n for _c, n in first) == 240
+    info = knn_graph_append(spark, root, batch, retrain="never")
+    assert info["appended"] == 60
+    after = stored()
+    assert after == true_counts() and sum(n for _c, n in after) == 300
+    again = knn_graph_append(spark, root, batch, retrain="never")
+    assert again["appended"] == 0
+    assert stored() == after == true_counts()
 
 
 def test_knn_graph_append_clone_pile_equals_rebuild(

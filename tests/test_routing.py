@@ -116,3 +116,23 @@ def test_auto_skips_pilot_when_brute_is_certain(spark, monkeypatch):
         assert got == want and got
     idx.unpersist()
     vecs.unpersist()
+
+
+def test_unknown_strategy_is_rejected(spark):
+    """An unrecognised `strategy` raises instead of silently running
+    the iterative frontier join: the router takes auto|broadcast|
+    iterative, `search` adds brute (its scan route)."""
+    import pytest
+
+    from vector_database_spark.operators.search import search_candidates_auto
+
+    vecs = clusters(spark, 500, 8, n_clusters=4, seed=11).select("id", "vector")
+    idx = build_index(vecs, local_threshold=128)
+    panel = [(0, [0.0] * 8)]
+    with pytest.raises(ValueError, match="bogus"):
+        search(idx, vecs, panel, 0.9, strategy="bogus")
+    for strategy in ("bogus", "brute"):
+        with pytest.raises(ValueError, match=strategy):
+            search_stats(idx, vecs, panel, 0.9, strategy=strategy)
+        with pytest.raises(ValueError, match=strategy):
+            search_candidates_auto(idx, panel, 0.9, strategy=strategy)

@@ -77,17 +77,19 @@ def main() -> int:
         print(f"  build {n_uni}+{n_pile} rows: {time.time()-t0:.1f}s")
 
     results = {}
-    orig = G._sample_has_dup_vectors
+    # the append's fix-up asks the shared collapse decision; "plain"
+    # forces it off
+    orig = G._resolve_collapse
     for mode in ("collapse", "plain", "collapse", "plain"):
         root = os.path.join(tempfile.mkdtemp(prefix="gap_"), "kg")
         build(root)
-        G._sample_has_dup_vectors = (
+        G._resolve_collapse = (
             orig if mode == "collapse" else (lambda *a, **k: False)
         )
         t0 = time.time()
         info = G.knn_graph_append(spark, root, batch, retrain="never")
         dt = time.time() - t0
-        G._sample_has_dup_vectors = orig
+        G._resolve_collapse = orig
         edges = {
             (r.src, r.dst, r.rank)
             for r in spark.read.parquet(f"{root}/edges")

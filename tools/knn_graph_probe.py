@@ -5,8 +5,7 @@ size:
    must complete without the driver (or any single task) holding the
    corpus matrix — candidates come from the per-cell equi-join, so
    peak kernel memory is ~ the largest cell, not n. Prints wall time
-   and edges/sec; the old `knn_graph(method='dgemm')` collected all
-   n rows to the driver and closed the full matrix over every task.
+   and edges/sec.
 
 2. APPEND == REBUILD at 128k (the ivf_ingest_probe pattern):
    `knn_graph_append` under stored centroids must leave the layout

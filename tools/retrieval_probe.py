@@ -1,6 +1,8 @@
 """Scale probe for the round-6 retrieval surface at sf0.1 (240k
 embeddings x 64, 5k documents): BM25, MaxSim (brute + candidate-
-refined), RRF fusion, MMR rerank, kNN-graph build (dgemm) + beam search over the full embedding corpus.
+refined), RRF fusion, MMR rerank, exact kNN-graph build
+(`knn_graph_blocked` probing every cell) + beam search over the full
+embedding corpus.
 Best-of-2 within one session (the repo's throttle rule). Prints one
 JSON line for SCALE.md.
 
@@ -43,7 +45,7 @@ def main() -> int:
 
     from vector_database_spark.operators.graph import (
         graph_beam_search,
-        knn_graph,
+        knn_graph_blocked,
     )
     from vector_database_spark.operators.search import (
         maxsim_topk,
@@ -111,8 +113,13 @@ def main() -> int:
 
     sub = vecs.where(F.col("id") < 20_000).localCheckpoint()
     t0 = time.time()
-    edges = knn_graph(sub, 4, method="dgemm").select("src", "dst").localCheckpoint()
-    timings["knn_graph_dgemm_build"] = round(time.time() - t0, 3)
+    # nprobe == n_cells: every cell probed, so the graph is exact
+    edges = (
+        knn_graph_blocked(sub, 4, n_cells=16, nprobe=16)
+        .select("src", "dst")
+        .localCheckpoint()
+    )
+    timings["knn_graph_blocked_exact_build"] = round(time.time() - t0, 3)
     timings["beam_search_full_corpus"] = best2(
         lambda: _force(graph_beam_search(edges, sub, qdf, ef=8, hops=6))
     )

@@ -2925,9 +2925,11 @@ def knn_join(
     threshold, as for small query tables — a broadcast of those
     probes, never of the corpus), the per-(query, cell)
     top-k is cut inside the dgemm kernel, and the global merge is the
-    shared Arrow pre-reduction + one slim window. This is exactly
-    `graph.knn_graph_blocked`'s machinery pointed across two tables
-    (``exclude_self=False`` — query and corpus id spaces are
+    shared Arrow pre-reduction + one slim window. This is the one
+    blocked-kNN core that builds `graph.knn_graph_blocked`
+    (`graph._blocked_knn`: one members pin with observed per-cell
+    counts, one collapsed build, one rank tail) pointed across two
+    tables (``self_graph=False`` — query and corpus id spaces are
     unrelated, so equal ids must NOT be dropped), and inherits its
     hot-cell sub-bucket cap, so a dup-heavy corpus cannot OOM a task.
 
@@ -2941,19 +2943,19 @@ def knn_join(
     bit-exact oracle path (gate on expr, scale on dgemm — the
     g04/g07 rule).
 
-    ``collapse_dups`` (dgemm only — round-8 verdict item 1):
-    bit-identical vectors on BOTH sides collapse to one
-    representative before the pair stage (clone corpora are exactly
-    what a dedup pipeline feeds this join) and results fan back out,
-    output-identical to the uncollapsed join (pytest-pinned). The
+    ``collapse_dups`` (dgemm only): bit-identical vectors on BOTH
+    sides collapse to one representative before the pair stage
+    (clone corpora are exactly what a dedup pipeline feeds this join)
+    and results fan back out, output-identical to the uncollapsed
+    join (pytest-pinned; `graph._collapsed_edges`). The
     default ``'auto'`` runs the bounded-sample duplicate check on
     the corpus side (`graph._sample_has_dup_vectors`) and collapses
     only when clones are present — either plan is output-identical,
     so the cheap detector only ever picks the faster one.
 
-    ``layout_path`` (round-8 verdict item 4): serve the join off a
-    stored `ivf_write` layout — assignments AND centroids come from
-    disk (``corpus_df``/``centroids`` must then be None), so repeated
+    ``layout_path``: serve the join off a stored `ivf_write` layout
+    — assignments AND centroids come from disk
+    (``corpus_df``/``centroids`` must then be None), so repeated
     joins against the same corpus skip the per-call assignment pass
     entirely (the `bq_knn(codes=)` / graph-layout store-once
     pattern); only the query side is probed per call, and the
@@ -2975,13 +2977,14 @@ def knn_join(
     against the FIXED stored assignment — the inline build would
     re-assign the corpus per round; raise nprobe there instead."""
     from vector_database_spark.operators.graph import (
+        _blocked_knn,
         _blocked_narrow,
         _blocked_probes,
         _CELL_CAP,
+        _cell_counts,
         _collapse_dup_vectors,
-        _expand_collapsed_edges,
-        _probe_cells_kernel,
         _rank_topk_edges,
+        _resolve_collapse,
     )
 
     def _hits(edges: DataFrame) -> DataFrame:
@@ -2993,118 +2996,71 @@ def knn_join(
             F.col("rank").cast("long").alias("rank"),
         )
 
-    if method not in ("expr", "dgemm"):
-        raise ValueError(f"method must be expr|dgemm, got {method!r}")
     qq = queries_df.select(
         F.col(query_id_col).cast("long").alias("id"),
         F.col(query_vector_col).cast("array<double>").alias("vector"),
     )
-    cap = _CELL_CAP if cell_cap is None else int(cell_cap)
     if ensure_k and layout_path is None:
         raise ValueError(
             "knn_join: ensure_k needs layout_path (escalation re-probes "
             "the FIXED stored assignment; an inline build would re-assign "
             "the corpus per round — raise nprobe instead)"
         )
-    if layout_path is not None:
-        if corpus_df is not None or centroids is not None:
-            raise ValueError(
-                "knn_join: layout_path replaces corpus_df/centroids — "
-                "pass queries_df, k, and layout_path only"
-            )
-        stored, centroids = ivf_read(queries_df.sparkSession, layout_path)
-        members = stored.select(
+    if layout_path is None:
+        cc = corpus_df.select(
             F.col(id_col).cast("long").alias("id"),
             F.col(vector_col).cast("array<double>").alias("vector"),
-            F.col("cell").cast("int").alias("cell"),
         )
-        # query-side collapse (round-9 ADVICE): the corpus is served
-        # as stored, but clone-heavy QUERY tables probe once per
-        # distinct vector — rep results fan back out after (ensure_k
-        # escalation included: members share their rep's row count)
-        if method == "dgemm" and collapse_dups == "auto":
-            from vector_database_spark.operators.graph import (
-                _sample_has_dup_vectors,
-            )
-
-            collapse_dups = _sample_has_dup_vectors(qq, seed=seed)
-        q_ann = None
-        if method == "dgemm" and collapse_dups:
-            q_ann, q_reps, _q_near = _collapse_dup_vectors(qq, k)
-            qq = q_reps
-
-        def _fan_out(res: DataFrame) -> DataFrame:
-            if q_ann is None:
-                return res
-            return res.join(
-                q_ann.select(
-                    F.col("rep").alias("qid"), F.col("id").alias("_m")
-                ),
-                "qid",
-            ).select(F.col("_m").alias("qid"), "id", "dist", "rank")
-
-        def _ranked(qsub: DataFrame, np_: int) -> DataFrame:
-            probes = _blocked_probes(qsub, centroids, np_, method)
-            return _hits(_rank_topk_edges(
-                _blocked_narrow(
-                    members, probes, k, method, cell_cap=cap,
-                    exclude_self=False,
-                ),
-                k,
-            ))
-
-        out = _ranked(qq, int(nprobe))
-        if not ensure_k:
-            return _fan_out(out)
-        return _fan_out(_escalate(
-            out, qq, _ranked, k, nprobe, len(centroids), qid="id"
+        return _hits(_blocked_knn(
+            qq, cc, k, self_graph=False, centroids=centroids, nprobe=nprobe,
+            method=method, cell_cap=cell_cap, collapse_dups=collapse_dups,
+            n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows,
         ))
-    cc = corpus_df.select(
+    if corpus_df is not None or centroids is not None:
+        raise ValueError(
+            "knn_join: layout_path replaces corpus_df/centroids — "
+            "pass queries_df, k, and layout_path only"
+        )
+    # query-side collapse: the corpus is served as stored, but
+    # clone-heavy QUERY tables probe once per distinct vector — rep
+    # results fan back out after (ensure_k escalation included:
+    # members share their rep's row count)
+    collapse = _resolve_collapse(qq, method, collapse_dups, seed=seed)
+    stored, centroids = ivf_read(queries_df.sparkSession, layout_path)
+    members = stored.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vector_col).cast("array<double>").alias("vector"),
+        F.col("cell").cast("int").alias("cell"),
     )
-    if method == "dgemm" and collapse_dups == "auto":
-        from vector_database_spark.operators.graph import (
-            _sample_has_dup_vectors,
-        )
+    # an ivf_write layout stores no per-cell counts: count once, for
+    # every escalation round (only the dgemm kernel's cap reads them)
+    cnts = _cell_counts(members) if method == "dgemm" else {}
+    cap = _CELL_CAP if cell_cap is None else int(cell_cap)
+    q_ann = None
+    if collapse:
+        q_ann, qq, _q_near = _collapse_dup_vectors(qq, k)
 
-        collapse_dups = _sample_has_dup_vectors(cc, seed=seed)
-    if method == "dgemm" and collapse_dups:
-        if centroids is None:
-            centroids = _train_centroids(
-                cc, n_cells=n_cells, iters=iters, seed=seed,
-                train_rows=train_rows, what="knn_join",
-            )
-        else:
-            centroids = [[float(x) for x in c] for c in centroids]
-        c_ann, c_reps, c_near = _collapse_dup_vectors(cc, k)
-        q_ann, q_reps, _q_near = _collapse_dup_vectors(qq, k)
-        members = _assign_cells(c_reps, centroids).localCheckpoint(
-            eager=False
-        )
-        probes = _probe_cells_kernel(q_reps, centroids, nprobe)
-        rep_edges = _rank_topk_edges(
+    def _fan_out(res: DataFrame) -> DataFrame:
+        if q_ann is None:
+            return res
+        return res.join(
+            q_ann.select(F.col("rep").alias("qid"), F.col("id").alias("_m")),
+            "qid",
+        ).select(F.col("_m").alias("qid"), "id", "dist", "rank")
+
+    def _ranked(qsub: DataFrame, np_: int) -> DataFrame:
+        probes = _blocked_probes(qsub, centroids, np_, method)
+        return _hits(_rank_topk_edges(
             _blocked_narrow(
-                members, probes, k, "dgemm", cell_cap=cap,
+                members, probes, k, method, cnts, cell_cap=cap,
                 exclude_self=False,
             ),
             k,
-        )
-        expanded = _expand_collapsed_edges(
-            rep_edges, q_ann, c_near, k, own_group=False
-        )
-        # expansion is bounded per src (cum cut) — plain window, no
-        # Arrow pre-reduction stage needed
-        return _hits(
-            _topk(expanded, k, "dist", group="src", item="dst")
-        )
-    members, centroids = _cell_members(
-        cc, centroids, method, n_cells=n_cells, iters=iters, seed=seed,
-        train_rows=train_rows,
-    )
-    members = members.localCheckpoint(eager=False)
-    probes = _blocked_probes(qq, centroids, nprobe, method)
-    narrow = _blocked_narrow(
-        members, probes, k, method, cell_cap=cap, exclude_self=False
-    )
-    return _hits(_rank_topk_edges(narrow, k))
+        ))
+
+    out = _ranked(qq, int(nprobe))
+    if not ensure_k:
+        return _fan_out(out)
+    return _fan_out(_escalate(
+        out, qq, _ranked, k, nprobe, len(centroids), qid="id"
+    ))

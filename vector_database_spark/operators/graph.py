@@ -244,114 +244,38 @@ def knn_graph(
     id_col: str = "id",
     vector_col: str = "vector",
     metric: str = "euclidean",
-    method: str = "expr",
 ) -> DataFrame:
     """k-nearest-neighbor GRAPH construction — the foundation every
     graph-based ANN index (HNSW/NSG/DiskANN families) builds on: for
     each vector, its k nearest OTHER vectors as directed edges
     ``(src, dst, dist, rank)``. Same two-phase top-k shape as
     `search.knn` (distances map-side inside the scan stage, Arrow
-    per-batch pre-reduction, one slim survivor window) with the self
-    edge excluded BEFORE ranking, so ranks are 1..k over true
-    neighbors.
+    per-batch pre-reduction, one slim survivor window — the blocked
+    builders' `_rank_topk_edges` tail) with the self edge excluded
+    BEFORE ranking, so ranks are 1..k over true neighbors.
 
-    ``method='expr'`` (default) computes distances as the bit-exact
-    Catalyst folds — the g04 oracle path; cost is n² interpreted
-    folds (the measured 8×-slow HOF regime — fine for gate-scale and
-    for per-block refinement, wrong for bulk builds).
-    ``method='dgemm'`` is the exact BULK path for driver-sized
-    corpora: one Arrow-batched BLAS pass per partition against the
-    corpus matrix closed over as plain lists (the `_assign_cells`
-    shape) — distances agree with the folds to an ulp (numpy sums
-    are pairwise), so edge SETS can differ only at exact distance
-    ties; a pytest pins dgemm == expr on the fixture (the a01
-    kernel/expr-twin rule). PAST driver memory, use
-    `knn_graph_blocked` — the IVF-bucketed builder whose candidates
-    come from a per-cell equi-join (no corpus collect, no n²; g07's
-    gate) at the price of blocked-recall; this exact builder remains
-    the oracle/refinement primitive."""
-    if method not in ("expr", "dgemm"):
-        raise ValueError(f"method must be expr|dgemm, got {method!r}")
+    Distances are the bit-exact Catalyst folds — the g04 oracle path
+    and the exact reference the blocked builders are tested against;
+    cost is n² interpreted folds (the measured 8×-slow HOF regime —
+    fine for gate-scale and for per-block refinement, wrong for bulk
+    builds). Bulk builds use `knn_graph_blocked`: IVF-bucketed
+    candidates from a per-cell equi-join, one BLAS pass per cell, no
+    corpus collect; ``nprobe = n_cells`` makes it exact."""
+    from vector_database_spark.operators.search import _distance
+
     src = vecs.select(
         F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
     )
-    if method == "dgemm":
-        if metric != "euclidean":
-            raise ValueError("knn_graph dgemm path supports euclidean only")
-        rows = vecs.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vector_col).cast("array<double>").alias("v"),
-        ).collect()
-        ids = [int(r["id"]) for r in rows]
-        mat = [list(r["v"]) for r in rows]
-        kk = int(k)
-
-        def kern(batches):
-            import numpy as np
-            import pandas as pd
-
-            Q = np.asarray(mat, dtype=np.float64)
-            qid = np.asarray(ids, dtype=np.int64)
-            q2 = (Q * Q).sum(axis=1)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = np.asarray(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["v"]]
-                )
-                sid = pdf["id"].to_numpy(np.int64)
-                d2 = (
-                    (X * X).sum(axis=1)[:, None]
-                    - 2.0 * (X @ Q.T)
-                    + q2[None, :]
-                )
-                np.maximum(d2, 0.0, out=d2)
-                self_mask = sid[:, None] == qid[None, :]
-                d2[self_mask] = np.inf
-                out_src, out_dst, out_d, out_r = [], [], [], []
-                for r in range(len(sid)):
-                    order = np.lexsort((qid, d2[r]))
-                    # the inf-masked self pair must never survive the
-                    # cut: when k >= corpus size it would otherwise
-                    # emit a spurious (src, src, inf) edge the expr
-                    # path (which filters id != qid) never produces
-                    order = order[np.isfinite(d2[r][order])][:kk]
-                    out_src.extend([sid[r]] * len(order))
-                    out_dst.extend(qid[order])
-                    out_d.extend(np.sqrt(d2[r][order]))
-                    out_r.extend(range(1, len(order) + 1))
-                yield pd.DataFrame(
-                    {
-                        "src": pd.array(out_src, dtype="int64"),
-                        "dst": pd.array(out_dst, dtype="int64"),
-                        "dist": pd.array(out_d, dtype="float64"),
-                        "rank": pd.array(out_r, dtype="int64"),
-                    }
-                )
-
-        return vecs.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(vector_col).cast("array<double>").alias("v"),
-        ).mapInPandas(kern, "src long, dst long, dist double, rank long")
     qdf = vecs.select(
         F.col(id_col).cast("long").alias("qid"),
         F.col(vector_col).cast("array<double>").alias("qvec"),
     )
-    from vector_database_spark.operators.search import _distance, _grouped_topk
-
     dist = _distance(metric, ("euclidean", "cosine"))
     crossed = src.crossJoin(F.broadcast(qdf)).where(F.col("id") != F.col("qid"))
     narrow = crossed.select(
         F.col("qid").alias("src"), F.col("id").alias("dst"), dist.alias("dist")
     )
-
-    local = _grouped_topk(narrow, k, "src", "dst")
-    w = Window.partitionBy("src").orderBy(F.col("dist").asc(), F.col("dst").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
-        .select("src", "dst", "dist", "rank")
-    )
+    return _rank_topk_edges(narrow, k)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -470,16 +394,6 @@ def graph_beam_search(
     )
     beam = qdf.select("qid").crossJoin(entry_vec)
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
-
-    def rank_beam(cand: DataFrame) -> DataFrame:
-        # cand carries (qid, id, _vec) — no vector lookup needed
-        return (
-            cand.join(qb, "qid")
-            .withColumn("dist", euclidean(F.col("_vec"), F.col("qvec")))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(ef))
-        )
-
     for _ in range(int(hops)):
         # hop expansion as a BROADCAST of the beam keys (<= ef x
         # |queries| rows — the same smallness assumption qb already
@@ -514,7 +428,23 @@ def graph_beam_search(
         # bounded chain (hops is small and fixed), but cut lineage so
         # the final action doesn't re-execute every hop's join twice
         beam = beam.localCheckpoint(eager=False)
-    return rank_beam(beam).select("qid", "id", "dist", "rank")
+    return _rank_beam(beam, qb, ef).select("qid", "id", "dist", "rank")
+
+
+def _rank_beam(cand: DataFrame, qb: DataFrame, ef: int) -> DataFrame:
+    """One beam cut, shared by both beam searches: ``cand`` (qid, id,
+    _vec) carries its vectors, so no lookup — the bit-exact L2 fold
+    against the broadcast queries ``qb``, then the top ``ef`` per qid
+    by (dist, id)."""
+    from vector_database_spark.functions.vector import euclidean
+
+    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("id").asc())
+    return (
+        cand.join(qb, "qid")
+        .withColumn("dist", euclidean(F.col("_vec"), F.col("qvec")))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= int(ef))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -637,15 +567,17 @@ def knn_graph_blocked(
     cell_cap: int = None,
     collapse_dups: bool | str = "auto",
 ) -> DataFrame:
-    """Scale-safe kNN-graph construction (round-6 verdict item 1 —
-    replaces `knn_graph(method='dgemm')`'s driver-collected corpus
-    matrix): IVF-bucket the corpus (bounded-sample Lloyd +
-    one assignment pass, `ann.ivf_build`), replicate each point into
-    its ``nprobe`` nearest cells, and rank candidates WITHIN each
-    cell only — candidate generation is an equi-join on `cell`
-    (never a cartesian), pair work is Σ|cell|·|probes(cell)| instead
-    of n², and nothing is ever collected to the driver. Returns
-    ``(src, dst, dist, rank)`` like `knn_graph`.
+    """Scale-safe kNN-graph construction: IVF-bucket the corpus
+    (bounded-sample Lloyd + one assignment pass, `ann.ivf_build`),
+    replicate each point into its ``nprobe`` nearest cells, and rank
+    candidates WITHIN each cell only — candidate generation is an
+    equi-join on `cell` (never a cartesian), pair work is
+    Σ|cell|·|probes(cell)| instead of n², and nothing is ever
+    collected to the driver. Returns ``(src, dst, dist, rank)`` like
+    `knn_graph`. Built by the one blocked-kNN core (`_blocked_knn`,
+    ``self_graph=True``) that `knn_graph_write`, `knn_graph_append`
+    and `ann.knn_join` share: one members pin with observed per-cell
+    counts, one collapsed build, one rank tail.
 
     APPROXIMATE by design: a true neighbor whose primary cell is not
     among the source's nprobe probed cells is missed (the SemDeDup
@@ -667,80 +599,128 @@ def knn_graph_blocked(
     rule). ``centroids`` (e.g. seeded rows) skips Lloyd for
     deterministic replay.
 
-    ``collapse_dups`` (dgemm only — round-8 verdict item 1):
-    bit-identical vectors collapse to one representative before pair
-    generation and edges fan back out afterwards
-    (`_collapse_dup_vectors` / `_expand_collapsed_edges`), turning a
-    clone pile's quadratic pair work linear while staying
-    edge-for-edge identical to the uncollapsed build (pytest-pinned;
-    the hot-cell cap still bounds kernel memory for many-DISTINCT hot
-    cells). The collapse costs one corpus-wide exchange on the vector
-    key plus the fan-out joins — the right trade on clone-heavy data,
-    dead weight on all-distinct data — so the default ``'auto'``
-    decides with a bounded-sample duplicate check
-    (`_sample_has_dup_vectors`: one ≤16k-row job at any corpus size;
-    sound because either plan is output-identical). True forces it,
-    False disables it."""
-    from vector_database_spark.operators.ann import (
-        _cell_members,
-        _train_centroids,
-    )
-
-    if method not in ("expr", "dgemm"):
-        raise ValueError(f"method must be expr|dgemm, got {method!r}")
+    ``collapse_dups`` (dgemm only): bit-identical vectors collapse to
+    one representative before pair generation and edges fan back out
+    afterwards (`_collapsed_edges`), turning a clone pile's quadratic
+    pair work linear while staying edge-for-edge identical to the
+    uncollapsed build (pytest-pinned; the hot-cell cap still bounds
+    kernel memory for many-DISTINCT hot cells). The collapse costs
+    one corpus-wide exchange on the vector key plus the fan-out
+    joins — the right trade on clone-heavy data, dead weight on
+    all-distinct data — so the default ``'auto'`` decides with a
+    bounded-sample duplicate check (`_sample_has_dup_vectors`: one
+    ≤16k-row job at any corpus size; sound because either plan is
+    output-identical). True forces it, False disables it."""
     vv = vecs.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vector_col).cast("array<double>").alias("vector"),
     )
-    cap = _CELL_CAP if cell_cap is None else int(cell_cap)
-    if method == "dgemm" and collapse_dups == "auto":
-        collapse_dups = _sample_has_dup_vectors(vv, seed=seed)
-    if method == "dgemm" and collapse_dups:
-        if centroids is None:
-            # train exactly as ivf_build does (bounded sample of the
-            # FULL table — same centroids as the uncollapsed/expr
-            # paths, so the dgemm==expr parity pytest pins this path)
-            centroids = _train_centroids(
-                vv, n_cells=n_cells, iters=iters, seed=seed,
-                train_rows=train_rows, what="knn_graph_blocked",
-            )
-        else:
-            centroids = [[float(x) for x in c] for c in centroids]
-        return _collapsed_graph_edges(vv, centroids, k, nprobe, cap)
-    members, centroids = _cell_members(
-        vv, centroids, method, n_cells=n_cells, iters=iters, seed=seed,
-        train_rows=train_rows,
+    return _blocked_knn(
+        vv, vv, k, self_graph=True, centroids=centroids, nprobe=nprobe,
+        method=method, cell_cap=cell_cap, collapse_dups=collapse_dups,
+        n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows,
     )
-    # dgemm narrow consumes members twice (hot-cell bucket counts +
-    # the candidate join) — pin so the assignment kernel runs once
-    if method == "dgemm":
-        # round-10 verdict item 6: fold the fresh-build per-cell
-        # counts into the checkpoint-materializing job via observed
-        # metrics — the counts arrive as a side effect of the ONE
-        # pass that runs the assignment kernel and writes the
-        # checkpoint blocks, instead of a separate groupBy+collect
-        # job over the same data (the A/B-attributed residual vs the
-        # r7 plan). count_if per cell is bounded by n_cells; one SQL
-        # array expression, not one Column per cell (~4 py4j calls each).
-        from pyspark.sql import Observation
 
-        obs = Observation()
-        per_cell = ", ".join(
-            f"count_if(cell = {c})" for c in range(len(centroids))
+
+# ---------------------------------------------------------------------------
+# The one blocked-kNN core: `knn_graph_blocked`, `knn_graph_write`,
+# `knn_graph_append` and `ann.knn_join` build every edge set from these
+# pieces — the collapse decision (`_resolve_collapse`), the members pin
+# with observed per-cell counts (`_pin_members`), probe replication
+# (`_blocked_probes`), the within-cell kernel (`_blocked_narrow`), the
+# rank tail (`_rank_topk_edges`) and the collapsed build
+# (`_collapsed_edges`).
+# ---------------------------------------------------------------------------
+
+
+def _blocked_knn(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    *,
+    self_graph: bool,
+    centroids,
+    nprobe: int,
+    method: str,
+    cell_cap: int | None,
+    collapse_dups: bool | str,
+    n_cells: int,
+    iters: int,
+    seed: int,
+    train_rows: int,
+) -> DataFrame:
+    """Edges ``(src, dst, dist, rank)`` from every ``queries`` row
+    (id, vector) to its k nearest ``corpus`` rows within the probed
+    cells. ``self_graph`` (queries is corpus) drops self pairs and
+    counts own-group clones as neighbours; otherwise the id spaces are
+    unrelated and equal ids are kept (`ann.knn_join`). Clone-heavy
+    input takes the collapsed build; everything else assigns and pins
+    the corpus once, probes the queries and ranks through the shared
+    tail."""
+    from vector_database_spark.operators.ann import _cell_members
+
+    cap = _CELL_CAP if cell_cap is None else int(cell_cap)
+    train = dict(n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows)
+    if _resolve_collapse(corpus, method, collapse_dups, seed=seed):
+        return _collapsed_edges(
+            queries, corpus, k, centroids, nprobe, cap,
+            self_graph=self_graph, **train,
         )
-        members = members.observe(
-            obs, F.expr(f"array({per_cell})").alias("cnt")
-        ).localCheckpoint(eager=True)
-        cnts = {c: int(n) for c, n in enumerate(obs.get["cnt"]) if n}
-        probes = _blocked_probes(vv, centroids, nprobe, method)
-        narrow = _blocked_narrow(
-            members, probes, k, method, cell_cap=cap, cell_counts=cnts
-        )
-    else:
-        members = members.localCheckpoint(eager=False)
-        probes = _blocked_probes(vv, centroids, nprobe, method)
-        narrow = _blocked_narrow(members, probes, k, method, cell_cap=cap)
-    return _rank_topk_edges(narrow, k)
+    members, centroids = _cell_members(corpus, centroids, method, **train)
+    members, cnts = _pin_members(members, len(centroids))
+    probes = _blocked_probes(queries, centroids, nprobe, method)
+    return _rank_topk_edges(
+        _blocked_narrow(
+            members, probes, k, method, cnts, cell_cap=cap,
+            exclude_self=self_graph,
+        ),
+        k,
+    )
+
+
+def _resolve_collapse(
+    vv: DataFrame, method: str, collapse_dups: bool | str = "auto",
+    *, seed: int = 9,
+) -> bool:
+    """The one collapse decision (and the one ``method`` check) of the
+    blocked builds: only the dgemm path collapses; ``'auto'`` asks the
+    bounded-sample duplicate detector over ``vv``."""
+    if method not in ("expr", "dgemm"):
+        raise ValueError(f"method must be expr|dgemm, got {method!r}")
+    if method != "dgemm":
+        return False
+    if collapse_dups == "auto":
+        return _sample_has_dup_vectors(vv, seed=seed)
+    return bool(collapse_dups)
+
+
+def _pin_members(members: DataFrame, n_cells: int) -> tuple[DataFrame, dict]:
+    """The one members pin: ``members`` (id, vector, cell) is
+    checkpointed eagerly — the assignment kernel runs once however
+    often the build reads it — and its per-cell counts (≤ n_cells
+    longs, the hot-cell cap's input) arrive as an Observation on that
+    same job instead of a separate groupBy + collect job. count_if
+    per cell is one SQL array expression, not one Column per cell."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    per_cell = ", ".join(f"count_if(cell = {c})" for c in range(n_cells))
+    members = members.observe(
+        obs, F.expr(f"array({per_cell})").alias("cnt")
+    ).localCheckpoint(eager=True)
+    return members, {c: int(n) for c, n in enumerate(obs.get["cnt"]) if n}
+
+
+def _cell_counts(members: DataFrame) -> dict:
+    """Per-cell member counts of a STORED layout that carries no
+    ``cell_counts`` table (an `ann.ivf_write` layout served by
+    `ann.knn_join(layout_path=)`): one aggregate, collected."""
+    return {
+        int(r["cell"]): int(r["n"])
+        for r in members.groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
 
 
 def _blocked_probes(vv, centroids, nprobe, method):
@@ -756,9 +736,10 @@ _CELL_CAP = 32_768  # max member rows per dgemm kernel group
 
 def _blocked_narrow(
     members: DataFrame, probes: DataFrame, k: int, method: str,
+    cell_counts: dict,
+    *,
     cell_cap: int = _CELL_CAP,
     exclude_self: bool = True,
-    cell_counts: dict | None = None,
 ) -> DataFrame:
     """Within-cell candidate distances ``(src, dst, dist)`` for the
     blocked kNN-graph: probes equi-join members on `cell` (never a
@@ -783,20 +764,24 @@ def _blocked_narrow(
     the shape-independent per-pair reduction: the same pair yields
     the same bits in any bucket composition, so a capped build ==
     an uncapped build edge-for-edge (pytest-pinned). Kernel memory
-    is now ∝ cell_cap, never the largest cell. NOTE: the dgemm path
-    consumes `members` twice (bucket counts + the join) — callers
-    pin it (localCheckpoint) so assignment kernels never run twice.
+    is now ∝ cell_cap, never the largest cell.
 
-    FAST PATH (round-8 verdict item 2, A/B-attributed): per-cell
-    counts are collected DRIVER-SIDE (≤ n_cells longs — the same
-    aggregate the in-plan machinery paid, materialized once); when
-    no cell exceeds ``cell_cap`` the bucket machinery (two broadcast
-    joins, probe replication, the two-key groupBy) is skipped and
-    the kernel groups on `cell` alone — the r7 plan shape the
-    interleaved A/B showed the machinery taxing ~0.3 s per build at
-    panel scale (data/probes/knn_graph_ab_r9.json). When buckets ARE
-    needed, the bucket counts join as a literal broadcast frame
-    instead of a second in-plan aggregate."""
+    FAST PATH (A/B-attributed, data/probes/knn_graph_ab_r9.json):
+    ``cell_counts`` — the members' per-cell counts, driver-side
+    (≤ n_cells longs) — decides the cap: when no cell exceeds
+    ``cell_cap`` the bucket machinery (two broadcast joins, probe
+    replication, the two-key groupBy) is skipped and the kernel
+    groups on `cell` alone, the plan shape the interleaved A/B showed
+    the machinery taxing ~0.3 s per build at panel scale. When
+    buckets ARE needed, the bucket counts join as a literal broadcast
+    frame instead of an in-plan aggregate. The counts come from the
+    members pin's observation (`_pin_members`), the persisted
+    ``{path}/cell_counts`` table (`knn_graph_write`, maintained by
+    `knn_graph_append`), or one count over a stored `ivf_write`
+    layout (`_cell_counts`). They may only OVER-estimate safely
+    (deletes shrink cells): an over-estimate just buckets earlier;
+    an under-estimate would breach the cap, so maintainers add batch
+    counts on every append. The expr path ignores them."""
     kk = int(k)
     if method == "expr":
         from vector_database_spark.functions.vector import euclidean
@@ -833,28 +818,10 @@ def _blocked_narrow(
         F.col("vector").cast("array<double>").alias("vector"),
         F.lit(0).alias("is_member"),
     )
-    # per-cell member counts, driver-side (≤ n_cells longs): decides
-    # the fast path and sizes the sub-buckets without a second
-    # in-plan aggregate. ``cell_counts`` (round-9 verdict item 6)
-    # lets layout-backed callers pass counts persisted at write time
-    # (`knn_graph_write` {path}/cell_counts, maintained on append) so
-    # serving/append skip this corpus-sized aggregate entirely — the
-    # A/B-attributed residual vs the r7 plan. Counts may only
-    # OVER-estimate safely (deletes shrink cells): an over-estimate
-    # just buckets earlier; an under-estimate would breach the cap,
-    # so maintainers must add batch counts on every append.
     import math as _math
 
     cap = int(cell_cap)
-    if cell_counts is not None:
-        cnts = {int(c): int(n) for c, n in cell_counts.items()}
-    else:
-        cnts = {
-            int(r["cell"]): int(r["n"])
-            for r in mem.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+    cnts = {int(c): int(n) for c, n in cell_counts.items()}
     bucketed = bool(cnts) and max(cnts.values()) > cap
 
     if bucketed:
@@ -1063,37 +1030,66 @@ def _collapse_dup_vectors(vv: DataFrame, k: int):
     return ann, reps, near
 
 
-def _collapsed_graph_edges(
-    vv: DataFrame,
-    centroids: list[list[float]],
+def _collapsed_edges(
+    queries: DataFrame,
+    corpus: DataFrame,
     k: int,
+    centroids,
     nprobe: int,
     cap: int,
+    *,
+    self_graph: bool,
+    n_cells: int,
+    iters: int,
+    seed: int,
+    train_rows: int,
 ) -> DataFrame:
-    """The collapsed self-graph build: collapse → rep-level blocked
-    build (cap-bounded) → fan-out → one plain window (the expansion
-    is bounded ≤ ~3k rows/src by the cum cut, so the Arrow
-    pre-reduction in `_rank_topk_edges` would be a wasted stage).
-    Shared by `knn_graph_blocked` and `knn_graph_write`'s bulk edge
-    build so their clone-pile behavior can never drift."""
-    from vector_database_spark.operators.ann import _assign_cells
+    """The one collapsed build (`knn_graph_blocked`,
+    `knn_graph_write` and `ann.knn_join` on clone-heavy input):
+    collapse → rep-level blocked build (cap-bounded) → fan-out → one
+    plain window (the expansion is bounded ≤ ~3k rows/src by the cum
+    cut, so the Arrow pre-reduction in `_rank_topk_edges` would be a
+    wasted stage). ``self_graph`` (queries is corpus: one collapse
+    serves both sides) drops self pairs and adds the own-group
+    clones; otherwise both sides collapse and equal ids are kept.
+    Centroids are trained exactly as `ann.ivf_build` trains them
+    (bounded sample of the FULL corpus) when none are given, so the
+    collapsed, plain and expr builds share one codebook."""
+    from vector_database_spark.operators.ann import (
+        _assign_cells,
+        _topk,
+        _train_centroids,
+    )
 
-    ann_c, reps, near = _collapse_dup_vectors(vv, k)
-    members = _assign_cells(reps, centroids).localCheckpoint(eager=False)
-    probes = _probe_cells_kernel(reps, centroids, nprobe)
+    if centroids is None:
+        centroids = _train_centroids(
+            corpus, n_cells=n_cells, iters=iters, seed=seed,
+            train_rows=train_rows,
+            what="knn_graph_blocked" if self_graph else "knn_join",
+        )
+    else:
+        centroids = [[float(x) for x in c] for c in centroids]
+    c_ann, c_reps, c_near = _collapse_dup_vectors(corpus, k)
+    if self_graph:
+        q_ann, q_reps = c_ann, c_reps
+    else:
+        q_ann, q_reps, _q_near = _collapse_dup_vectors(queries, k)
+    members, cnts = _pin_members(
+        _assign_cells(c_reps, centroids), len(centroids)
+    )
+    probes = _probe_cells_kernel(q_reps, centroids, nprobe)
     rep_edges = _rank_topk_edges(
-        _blocked_narrow(members, probes, k, "dgemm", cell_cap=cap), k
+        _blocked_narrow(
+            members, probes, k, "dgemm", cnts, cell_cap=cap,
+            exclude_self=self_graph,
+        ),
+        k,
     )
     expanded = _expand_collapsed_edges(
-        rep_edges, ann_c, near, k, own_group=True
+        rep_edges, q_ann, c_near, k, own_group=self_graph
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("dist").asc(), F.col("dst").asc()
-    )
-    return (
-        expanded.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
-        .select("src", "dst", "dist", "rank")
+    return _topk(expanded, k, "dist", group="src", item="dst").select(
+        "src", "dst", "dist", "rank"
     )
 
 
@@ -1134,9 +1130,10 @@ def _expand_collapsed_edges(
       is the rep pair's shape-independent per-pair recompute (clone
       bits == rep bits), own-group dist is exactly 0.0 (sqrt(0)).
 
-    ``own_group=True`` is the self-graph case (`knn_graph_blocked`);
-    ``knn_join`` passes False — query/corpus id spaces are unrelated
-    and the rep build ran with ``exclude_self=False``."""
+    ``own_group=True`` is the self-graph case; the cross-table build
+    (`ann.knn_join`) passes False — query/corpus id spaces are
+    unrelated and the rep build ran with ``exclude_self=False``. Both
+    come from `_collapsed_edges`' ``self_graph``."""
     kk = int(k)
     e = rep_edges.join(
         near.select(
@@ -1233,11 +1230,15 @@ def knn_graph_write(
       serving never scans the corpus to find it,
     - ``{path}/stats``    running quantization-error sums (the
       `ivf_append` drift base),
-    - ``{path}/cell_counts`` (cell, n) — per-cell member counts
-      (round-9 verdict item 6): the hot-cell cap decision reads this
-      tiny table on append/serving instead of re-aggregating the
-      corpus; maintained by `knn_graph_append` (adds batch counts)
-      and rewritten on retrain.
+    - ``{path}/cell_counts`` (cell, n) — per-cell member counts: the
+      hot-cell cap decision reads this tiny table on append instead
+      of re-aggregating the corpus; maintained by `knn_graph_append`
+      (adds batch counts) and rewritten on retrain.
+
+    The edges come from the blocked-kNN core shared with
+    `knn_graph_blocked` (same members pin, collapsed build and rank
+    tail, so a layout's edges equal the in-memory build's); the
+    collapse decision is always ``'auto'``.
 
     Returns the edges DataFrame (read back from disk — lineage-free).
     """
@@ -1249,49 +1250,31 @@ def knn_graph_write(
         ivf_write,
     )
 
-    if method not in ("expr", "dgemm"):
-        raise ValueError(f"method must be expr|dgemm, got {method!r}")
     spark = vecs.sparkSession
     vv = vecs.select(
         F.col(id_col).cast("long").alias("id"),
         F.col(vector_col).cast("array<double>").alias("vector"),
     )
-    members, centroids = _cell_members(
-        vv, centroids, method, n_cells=n_cells, iters=iters, seed=seed,
-        train_rows=train_rows,
-    )
+    train = dict(n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows)
+    collapse = _resolve_collapse(vv, method, seed=seed)
+    members, centroids = _cell_members(vv, centroids, method, **train)
     # one assignment, consumed by the vector write, the edge build,
-    # and the stats pass — pin it
-    members = members.localCheckpoint()
+    # and the stats pass; its observed counts are persisted
+    members, cnts = _pin_members(members, len(centroids))
     probes = _blocked_probes(vv, centroids, nprobe, method).localCheckpoint()
-    # per-cell counts, computed ONCE and persisted with the layout
-    # (round-9 verdict item 6): the build consumes them in place of
-    # `_blocked_narrow`'s own aggregate, and append/serving read the
-    # tiny table instead of re-aggregating the corpus
-    cnts = {
-        int(r["cell"]): int(r["n"])
-        for r in members.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
     # the PERSISTED members/probes stay per-member (the append
-    # contract reads them); the edge BUILD takes the collapsed path
-    # on clone-heavy input (round-8 verdict item 1 — output-identical,
-    # linear instead of quadratic in a clone pile)
-    if method == "dgemm" and _sample_has_dup_vectors(vv, seed=seed):
-        edges = _collapsed_graph_edges(
-            vv, centroids, k, nprobe, _CELL_CAP
+    # contract reads them); only the edge BUILD collapses clones
+    if collapse:
+        edges = _collapsed_edges(
+            vv, vv, k, centroids, nprobe, _CELL_CAP, self_graph=True,
+            **train,
         )
     else:
         edges = _rank_topk_edges(
-            _blocked_narrow(members, probes, k, method, cell_counts=cnts),
-            k,
+            _blocked_narrow(members, probes, k, method, cnts), k
         )
     ivf_write(members, centroids, path)
-    spark.createDataFrame(
-        sorted((int(c), int(n)) for c, n in cnts.items()),
-        "cell int, n long",
-    ).write.mode("overwrite").parquet(f"{path}/cell_counts")
+    _write_cell_counts(spark, path, cnts)
     _write_cells(
         probes.select("id", "pr", "cell"), f"{path}/probes", "overwrite"
     )
@@ -1309,19 +1292,33 @@ def knn_graph_write(
         "src_cell"
     ).parquet(f"{path}/edges")
     ent = members.agg(F.min(F.struct("id", "cell")).alias("e")).first()["e"]
-    spark.createDataFrame(
-        [(int(k), int(nprobe), method, int(ent["id"]), int(ent["cell"]))],
-        "k int, nprobe int, method string, entry_id long, entry_cell int",
-    ).write.mode("overwrite").parquet(f"{path}/graph_meta")
+    _write_graph_meta(spark, path, k, nprobe, method, ent["id"], ent["cell"])
     _ivf_stats_write(spark, path, *_ivf_err_stats(members, centroids))
     return spark.read.parquet(f"{path}/edges").select(
         "src", "dst", "dist", "rank"
     )
 
 
+def _write_cell_counts(spark, path: str, cnts: dict) -> None:
+    spark.createDataFrame(
+        sorted((int(c), int(n)) for c, n in cnts.items()),
+        "cell int, n long",
+    ).write.mode("overwrite").parquet(f"{path}/cell_counts")
+
+
+def _write_graph_meta(
+    spark, path: str, k: int, nprobe: int, method: str,
+    entry_id: int, entry_cell: int,
+) -> None:
+    spark.createDataFrame(
+        [(int(k), int(nprobe), method, int(entry_id), int(entry_cell))],
+        "k int, nprobe int, method string, entry_id long, entry_cell int",
+    ).write.mode("overwrite").parquet(f"{path}/graph_meta")
+
+
 def knn_graph_read(spark, path: str) -> tuple[DataFrame, dict]:
     """(edges, meta) — edges as ``(src, dst, dist, rank)``, meta =
-    {'k', 'nprobe', 'method', 'centroids'}. Vectors are at
+    {'k', 'nprobe', 'method', 'centroids', 'entry_id', 'entry_cell'}. Vectors are at
     ``{path}/vectors`` (ann.ivf_read reads them with the codebook)."""
     from vector_database_spark.operators.ann import ivf_read
 
@@ -1332,12 +1329,8 @@ def knn_graph_read(spark, path: str) -> tuple[DataFrame, dict]:
         "nprobe": int(m["nprobe"]),
         "method": str(m["method"]),
         "centroids": cents,
-        "entry_id": (
-            int(m["entry_id"]) if m.get("entry_id") is not None else None
-        ),
-        "entry_cell": (
-            int(m["entry_cell"]) if m.get("entry_cell") is not None else None
-        ),
+        "entry_id": int(m["entry_id"]),
+        "entry_cell": int(m["entry_cell"]),
     }
     edges = spark.read.parquet(f"{path}/edges").select(
         "src", "dst", "dist", "rank"
@@ -1367,9 +1360,13 @@ def knn_graph_append(
     landed in its probed cells — no stored candidate outside its old
     top-k can enter the new top-k.
 
-    Set-based fix-up, nothing collected:
+    Set-based fix-up, nothing collected, built from the blocked-kNN
+    core `knn_graph_blocked` uses:
     1. assign + probe the batch under stored centroids (same kernel
-       as the build — distances bit-identical to a rebuild's);
+       as the build — distances bit-identical to a rebuild's); the
+       batch goes through the core's members pin, whose observed
+       per-cell counts give the batch size and are added to the
+       stored ``cell_counts``;
     2. NEW-node edges: batch probes × members of the probed cells
        (stored members partition-pruned to those cells, plus the
        batch itself);
@@ -1417,36 +1414,23 @@ def knn_graph_append(
     # silently breaking the append==rebuild guarantee.
     vv = vv.join(stored.select("id"), "id", "left_anti")
     assign = _assign_cells if method == "dgemm" else ivf_assign_expr
-    batch_members = assign(vv, centroids).localCheckpoint()
-    batch_probes = _blocked_probes(vv, centroids, nprobe, method).localCheckpoint()
-    batch_n = batch_members.count()
+    batch_members, batch_cnts = _pin_members(
+        assign(vv, centroids), len(centroids)
+    )
+    batch_n = sum(batch_cnts.values())
     if batch_n == 0:
         return {"appended": 0, "affected": 0, "drift": 0.0, "retrained": False}
-    batch_cnts = {
-        int(r["cell"]): int(r["n"])
-        for r in batch_members.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    batch_probes = _blocked_probes(vv, centroids, nprobe, method).localCheckpoint()
     batch_cells = sorted(batch_cnts)
     probe_cells = sorted(
         int(r["cell"]) for r in batch_probes.select("cell").distinct().collect()
     )
-    # stored per-cell counts: the persisted tiny table (round-9
-    # verdict item 6); legacy layouts (pre cell_counts) aggregate the
-    # stored members once, after which the append persists them
-    try:
-        stored_cnts = {
-            int(r["cell"]): int(r["n"])
-            for r in spark.read.parquet(f"{path}/cell_counts").collect()
-        }
-    except Exception:
-        stored_cnts = {
-            int(r["cell"]): int(r["n"])
-            for r in stored.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
+    # stored per-cell counts: the persisted tiny table, never a
+    # re-aggregation of the corpus
+    stored_cnts = {
+        int(r["cell"]): int(r["n"])
+        for r in spark.read.parquet(f"{path}/cell_counts").collect()
+    }
 
     # --- candidate generation (all reads pinned BEFORE any write) ---
     stored_m = stored.select("id", "vector", "cell")
@@ -1467,10 +1451,7 @@ def knn_graph_append(
         for c in _pc | set(batch_cells)
     }
     new_edges = _rank_topk_edges(
-        _blocked_narrow(
-            probed_members, batch_probes, k, method,
-            cell_counts=probed_cnts,
-        ),
+        _blocked_narrow(probed_members, batch_probes, k, method, probed_cnts),
         k,
     )
     # stored nodes whose probe set intersects the batch's cells —
@@ -1495,20 +1476,16 @@ def knn_graph_append(
     # edges stay per-member (clones' neighbor lists differ in ids);
     # the final per-src window re-ranks as before — output identical
     # to the uncollapsed fix-up (pytest-pinned). Gated by the same
-    # bounded-sample dup detector as the build paths.
-    if method == "dgemm" and _sample_has_dup_vectors(
-        aff_with_vec.select("id", "vector").dropDuplicates(["id"])
-    ):
-        aff_nodes = aff_with_vec.select("id", "vector").dropDuplicates(
-            ["id"]
-        )
+    # collapse decision as the build paths.
+    aff_nodes = aff_with_vec.select("id", "vector").dropDuplicates(["id"])
+    if _resolve_collapse(aff_nodes, method):
         aff_ann, aff_reps, _near = _collapse_dup_vectors(aff_nodes, k)
         rep_probe = aff_with_vec.join(
             aff_reps.select("id"), "id", "left_semi"
         )
         rep_narrow = _blocked_narrow(
             batch_members.select("id", "vector", "cell"), rep_probe, k,
-            method, cell_counts=batch_cnts,
+            method, batch_cnts,
         )
         fix_narrow = rep_narrow.join(
             aff_ann.select(
@@ -1519,7 +1496,7 @@ def knn_graph_append(
     else:
         fix_narrow = _blocked_narrow(
             batch_members.select("id", "vector", "cell"), aff_with_vec, k,
-            method, cell_counts=batch_cnts,
+            method, batch_cnts,
         )
     aff_ids = aff_with_vec.select(F.col("id").alias("src")).distinct()
     # raw edge read keeps dst_cell (persisted by knn_graph_write) so
@@ -1576,10 +1553,7 @@ def knn_graph_append(
     merged_cnts = dict(stored_cnts)
     for c, n in batch_cnts.items():
         merged_cnts[c] = merged_cnts.get(c, 0) + n
-    spark.createDataFrame(
-        sorted((int(c), int(n)) for c, n in merged_cnts.items()),
-        "cell int, n long",
-    ).write.mode("overwrite").parquet(f"{path}/cell_counts")
+    _write_cell_counts(spark, path, merged_cnts)
     _write_cells(batch_members, f"{path}/vectors", "append")
     _write_cells(
         batch_probes.select("id", "pr", "cell"), f"{path}/probes", "append"
@@ -1594,18 +1568,10 @@ def knn_graph_append(
     bent = batch_members.agg(F.min(F.struct("id", "cell")).alias("e")).first()[
         "e"
     ]
-    ent_id, ent_cell = meta.get("entry_id"), meta.get("entry_cell")
-    if ent_id is None:  # legacy layout without entry metadata
-        sent = stored_m.agg(F.min(F.struct("id", "cell")).alias("e")).first()[
-            "e"
-        ]
-        ent_id, ent_cell = int(sent["id"]), int(sent["cell"])
+    ent_id, ent_cell = meta["entry_id"], meta["entry_cell"]
     if int(bent["id"]) < ent_id:
         ent_id, ent_cell = int(bent["id"]), int(bent["cell"])
-    spark.createDataFrame(
-        [(int(k), int(nprobe), method, int(ent_id), int(ent_cell))],
-        "k int, nprobe int, method string, entry_id long, entry_cell int",
-    ).write.mode("overwrite").parquet(f"{path}/graph_meta")
+    _write_graph_meta(spark, path, k, nprobe, method, ent_id, ent_cell)
     # --- drift stats (the ivf_append contract) ---
     batch_sum, _bn = _ivf_err_stats(batch_members, centroids)
     batch_err, base_err, drift = _drift_update(
@@ -1661,14 +1627,8 @@ def graph_beam_search_layout(
     rescanning the corpus per query (README.md:26-35,
     DDL.sql:234-295) — here the graph + cell layout plays that role
     for the serving path."""
-    from vector_database_spark.functions.vector import euclidean
-
     _edges, meta = knn_graph_read(spark, path)
-    entry_id, entry_cell = meta.get("entry_id"), meta.get("entry_cell")
-    if entry_id is None:  # legacy layout: one column-pruned id scan
-        vv = spark.read.parquet(f"{path}/vectors")
-        r = vv.agg(F.min(F.struct("id", "cell")).alias("e")).first()["e"]
-        entry_id, entry_cell = int(r["id"]), int(r["cell"])
+    entry_id, entry_cell = meta["entry_id"], meta["entry_cell"]
     entry_vec = F.broadcast(
         spark.read.parquet(f"{path}/vectors")
         .where((F.col("cell") == int(entry_cell)) & (F.col("id") == int(entry_id)))
@@ -1678,18 +1638,6 @@ def graph_beam_search_layout(
         F.col("qid").cast("long").alias("qid"), F.col("qvec")
     )
     qb = F.broadcast(qdf.localCheckpoint(eager=False))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("dist").asc(), F.col("id").asc()
-    )
-
-    def rank_beam(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(qb, "qid")
-            .withColumn("dist", euclidean(F.col("_vec"), F.col("qvec")))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(ef))
-        )
-
     beam = (
         qdf.select("qid")
         .crossJoin(entry_vec)
@@ -1726,9 +1674,9 @@ def graph_beam_search_layout(
                 .select("qid", "id", "_vec", "cell")
             )
             cand = cand.unionByName(nbv)
-        beam = rank_beam(cand).select("qid", "id", "_vec", "cell")
+        beam = _rank_beam(cand, qb, ef).select("qid", "id", "_vec", "cell")
         beam = beam.localCheckpoint(eager=False)
-    return rank_beam(beam).select("qid", "id", "dist", "rank")
+    return _rank_beam(beam, qb, ef).select("qid", "id", "dist", "rank")
 
 
 def _pruned_edges(spark, path: str, cells: list[int]) -> DataFrame:

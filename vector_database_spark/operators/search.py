@@ -723,6 +723,10 @@ def search_candidates_auto(
     leaves whose cell intersects the box — that a scan can't
     reproduce; `search`, whose refined result is scan-equivalent,
     adds the brute route.)"""
+    if strategy not in ("auto", "broadcast", "iterative"):
+        raise ValueError(
+            f"strategy must be auto|broadcast|iterative, got {strategy!r}"
+        )
     if strategy == "auto":
         fits = _index_size(index_df, doc_id) <= BROADCAST_INDEX_MAX_ROWS
         strategy = "broadcast" if fits else "iterative"
@@ -821,6 +825,10 @@ def search(
     rows, so no qualifying match can be lost. The filter sits
     directly on the table scan, where Catalyst pushes it into the
     parquet reader."""
+    if strategy not in ("auto", "brute", "broadcast", "iterative"):
+        raise ValueError(
+            f"strategy must be auto|brute|broadcast|iterative, got {strategy!r}"
+        )
     if where is not None:
         vectors_df = vectors_df.where(as_predicate(where))
     if strategy == "auto":
