@@ -174,11 +174,30 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     assert all(a == 0 and b == 1 for (a, b) in got)
 
 
+def _simhash_pairs_allpairs(signatures, *, max_hamming):
+    """Quadratic all-pairs form of `simhash_pairs`: a crossJoin, the
+    independent oracle for the banded equi-join."""
+    a = signatures.select(
+        F.col("id").alias("a_id"), F.col("simhash").alias("ha")
+    )
+    b = signatures.select(
+        F.col("id").alias("b_id"), F.col("simhash").alias("hb")
+    )
+    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    return (
+        a.crossJoin(b)
+        .where(F.col("a_id") < F.col("b_id"))
+        .withColumn("hamming", ham)
+        .where(F.col("hamming") <= max_hamming)
+        .select("a_id", "b_id", "hamming")
+    )
+
+
 def test_simhash_near_dups(spark):
     sig = dd.simhash_signatures(_docs(spark))
     rows = {r.id: r.simhash for r in sig.collect()}
     assert rows[0] == rows[2]  # identical normalized text -> same hash
-    pairs = dd.simhash_pairs_allpairs(sig, max_hamming=10)
+    pairs = _simhash_pairs_allpairs(sig, max_hamming=10)
     got = {(r.a_id, r.b_id): r.hamming for r in pairs.collect()}
     assert got[(0, 2)] == 0
     assert (3, 4) in got and got[(3, 4)] == 0
@@ -197,6 +216,98 @@ def test_embedding_neardup(spark):
     pairs = dd.embedding_neardup_pairs(df, threshold=0.95)
     got = {(r.a_id, r.b_id) for r in pairs.collect()}
     assert got == {(0, 1)}
+
+
+def _neardup_vectors(spark, n):
+    """``n`` random 8-d rows plus a perturbed copy of every 5th one
+    (id + 1000): planted pairs above 0.95 cosine."""
+    rnd = random.Random(11)
+    rows = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(n)]
+    rows += [
+        (i + 1000, [x + rnd.uniform(-0.01, 0.01) for x in v])
+        for i, v in rows
+        if i % 5 == 0
+    ]
+    return local_frame(spark, rows, "vec_id long, embedding array<double>")
+
+
+def test_cosine_kernel_bit_identical_across_groupings(spark):
+    """Every grouping of the shared exact cosine kernel reports the
+    same pairs with bit-identical cos_sim: one self block, three
+    blocks (cross block pairs) and one SemDeDup cell."""
+    df = _neardup_vectors(spark, 120)
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    one = rows(dd.embedding_neardup_pairs(df, threshold=0.95, n_blocks=1))
+    three = rows(dd.embedding_neardup_pairs(df, threshold=0.95, n_blocks=3))
+    cell = rows(
+        dd.neardup_within_cells(
+            df.select(
+                F.col("vec_id").alias("id"),
+                F.col("embedding").alias("vector"),
+                F.lit(0).alias("cell"),
+            ),
+            threshold=0.95,
+        )
+    )
+    assert one == three == cell
+    assert {(i, i + 1000) for i in range(0, 120, 5)} <= {r[:2] for r in one}
+
+
+def test_embedding_neardup_empty_block_emits_each_pair_once(spark):
+    """With more blocks than rows some blocks are empty; a block pair
+    whose other block is empty must not re-emit its own block's pairs
+    (that is the self block pair's job)."""
+    df = local_frame(
+        spark,
+        [(i, [1.0, 0.001 * i, 0.0]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+
+    def rows(n_blocks):
+        out = dd.embedding_neardup_pairs(df, threshold=0.95, n_blocks=n_blocks)
+        return sorted(tuple(r) for r in out.collect())
+
+    one = rows(1)
+    assert len(one) == 30 * 29 // 2
+    assert rows(40) == one  # 30 rows in 40 blocks: some blocks empty
+
+
+def test_embedding_neardup_sizes_blocks_in_one_job(spark, monkeypatch, tmp_path):
+    """``n_blocks=None`` takes the row count and the width in ONE
+    aggregate at construction, fewer Spark jobs over a parquet table
+    than the two-action form (first() + count()), and the output
+    equals the explicit block count that form picks."""
+    monkeypatch.setattr(dd, "_NEARDUP_BLOCK_CELLS", 8 * 1024)
+    _neardup_vectors(spark, 2500).write.parquet(str(tmp_path / "vecs"))
+    df = spark.read.parquet(str(tmp_path / "vecs"))
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group, False)
+        try:
+            out = fn()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def two_action_blocks():
+        side = df.select(F.size("embedding").alias("d"))
+        block_rows = max(1024, dd._NEARDUP_BLOCK_CELLS // side.first()["d"])
+        return max(1, -(-side.count() // block_rows))
+
+    blocks, two_action_jobs = jobs_of("neardup_sizing_2", two_action_blocks)
+    assert blocks == 3
+    auto, auto_jobs = jobs_of(
+        "neardup_sizing_1",
+        lambda: dd.embedding_neardup_pairs(df, threshold=0.95),
+    )
+    assert auto_jobs < two_action_jobs, (auto_jobs, two_action_jobs)
+    explicit = dd.embedding_neardup_pairs(df, threshold=0.95, n_blocks=blocks)
+    got = sorted(tuple(r) for r in auto.collect())
+    assert got == sorted(tuple(r) for r in explicit.collect()) and got
 
 
 def test_token_stats_and_quality(spark):
@@ -484,13 +595,26 @@ def test_minhash_fused_signatures_bit_identical(spark, documents):
     b = {r.id: list(r.minhash)
          for r in dd.minhash_signatures_fused(documents).collect()}
     assert a == b and a
-    # the full pipeline agrees pair-for-pair under either path
+    # the full pipeline agrees pair-for-pair with the fused-signature
+    # ingest path over an empty corpus
     pa = {(r.a_id, r.b_id, r.jaccard)
           for r in dd.minhash_dedup_pairs(documents, threshold=0.5).collect()}
     pb = {(r.a_id, r.b_id, r.jaccard)
-          for r in dd.minhash_dedup_pairs(
-              documents, threshold=0.5, fused_signatures=True).collect()}
-    assert pa == pb
+          for r in _ingest_into_empty_corpus(documents).collect()}
+    assert pa == pb and pa
+
+
+def _ingest_into_empty_corpus(docs):
+    """`incremental_neardup`'s pairs for ``docs`` against no corpus:
+    the batch's own near-dups, through the fused signature kernel."""
+    spark = docs.sparkSession
+    pairs, _sigs, _sh = dd.incremental_neardup(
+        docs,
+        local_frame(spark, [], "id long, minhash array<long>"),
+        local_frame(spark, [], "id long, shingle string"),
+        threshold=0.5,
+    )
+    return pairs
 
 
 def _kernel_nodes(df) -> int:
@@ -518,9 +642,11 @@ def _kernel_nodes(df) -> int:
 
 _RUNS_ONCE_OPS = {
     "minhash_dedup_pairs": lambda d: dd.minhash_dedup_pairs(d),
-    "minhash_dedup_pairs_fused": lambda d: dd.minhash_dedup_pairs(
-        d, fused_signatures=True
-    ),
+    "incremental_neardup": lambda d: dd.incremental_neardup(
+        d.where("doc_id % 2 = 1"),
+        dd.minhash_signatures_fused(d.where("doc_id % 2 = 0")).localCheckpoint(),
+        dd.shingle_rows(d.where("doc_id % 2 = 0")).localCheckpoint(),
+    )[0],
     "jaccard_pairs": lambda d: dd.jaccard_pairs(
         d,
         local_frame(

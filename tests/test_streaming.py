@@ -437,6 +437,41 @@ def test_streaming_neardup_ingest_accumulates_state(spark):
     assert spark.read.parquet(f"{state}/signatures").count() == 4
 
 
+def test_streaming_neardup_ingest_redelivered_batch_keeps_state(spark):
+    """A redelivered micro-batch (same rows, same batch id, fresh
+    checkpoint) reads the state without its own earlier partition: it
+    re-flags the same pairs and rewrites the same state rows instead
+    of dropping its docs as already ingested."""
+    import tempfile as _tf
+
+    from vector_database_spark.streaming.dedup import streaming_neardup_ingest
+
+    tmp = _tf.mkdtemp()
+    src, state, sink = f"{tmp}/src", f"{tmp}/state", f"{tmp}/flagged"
+    spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog today"),
+         (1, "a tall ship sails on the open sea tonight with the wind"),
+         (2, "the quick brown fox jumps over the lazy cat today")],
+        "doc_id long, text string",
+    ).write.parquet(src)
+
+    def run(ckpt):
+        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+        streaming_neardup_ingest(
+            stream, state, threshold=0.5, checkpoint=f"{tmp}/{ckpt}",
+            flagged_sink=sink,
+        ).awaitTermination(180)
+        return (
+            spark.read.parquet(f"{state}/signatures").count(),
+            spark.read.parquet(f"{state}/shingles").count(),
+            sorted((r.a_id, r.b_id) for r in spark.read.parquet(sink).collect()),
+        )
+
+    first = run("ckpt1")
+    assert first[0] == 3 and first[1] > 0 and first[2] == [(0, 2)]
+    assert run("ckpt2") == first  # batch 0 again
+
+
 def test_foreach_batch_ivf_ingest_matches_batch_appends(spark):
     """Streaming IVF ingest == the batch ivf_append chain: after two
     micro-batches the layout equals one-shot assignment of all rows

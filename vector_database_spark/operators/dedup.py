@@ -1,30 +1,32 @@
 """Deduplication operator family for training-data pipelines.
 
-Five strategies, each designed scale-first:
+``exact_dedup`` groups exactly-equal normalized texts (one hash
+aggregate). Every near-dup operator answers the same way the index
+does: probe candidates, then refine them exactly. Each pair operator
+builds its output from three private pieces:
 
-* ``exact_dedup`` — hash-groupBy on a normalized key. One shuffle,
-  map-side partial aggregation; the canonical 100 TB dedup.
-* ``minhash_signatures`` + ``lsh_candidate_pairs`` + ``jaccard_pairs``
-  — MinHash/LSH: shingle → k independent min-hashes → band buckets →
-  bucket join. The candidate join is an equi-join on (band, key), so
-  Spark shuffles only signature rows (#docs × #bands), never the
-  cross product. All hashes are md5-derived (`functions.hashing`) so
-  an external SQL oracle reproduces them bit-for-bit.
-* ``simhash_signatures`` + ``simhash_pairs`` (banded equi-join by
-  default; ``simhash_pairs_allpairs`` is the quadratic test oracle)
-  — 60-bit SimHash over
-  word shingles; near-dup = small Hamming distance.
-* ``ngram_jaccard_pairs`` — exact Jaccard via an inverted-index
-  self-join (pairs sharing ≥1 shingle), correct for any threshold
-  t > 0 and never materializes the doc×doc cross product.
-* ``embedding_neardup_pairs`` — cosine-similarity near-dups over an
-  embedding column (brute pair join locally; the ANN module provides
-  the bucketed scale path).
+* ``_bucket_pairs`` — the one bucket join: an equi-join on a bucket
+  key (LSH band, inverted-index shingle or term, simhash chunk),
+  self (``a_id < b_id``) or cross, then ``distinct``. Spark shuffles
+  bucket rows (#docs × #buckets per doc), never the doc×doc product.
+  Candidates for `lsh_candidate_pairs`, `minhash_join`,
+  `incremental_neardup`, `ngram_jaccard_pairs`, `containment_pairs`,
+  `simhash_pairs` and `tfidf_cosine_pairs` come from it.
+* ``_overlap_counts`` — the one exact set-overlap count over
+  ``(id, shingle)`` rows: ``(a_id, b_id, inter, sa, sb)`` per
+  candidate, as an equi-join + count (never an ``array_intersect``).
+  `jaccard_pairs` (hence `minhash_dedup_pairs`, `ngram_jaccard_pairs`,
+  `incremental_neardup`), `minhash_join` and `containment_pairs`
+  derive their scores from it.
+* ``_cosine_pairs`` — the one exact cosine kernel: chunked BLAS
+  prefilter, then a sequential exact fold for the survivors, over a
+  self group or a two-sided group. `embedding_neardup_pairs` (exact
+  block pairs) and `neardup_within_cells` (SemDeDup cells) run it.
 
-At 100 TB the shape that matters: every strategy is
-shingle/signature-parallel (explode → equi-join → aggregate), no
-driver-side state, no cross joins except where a threshold provably
-bounds candidates.
+MinHash and SimHash hashes are md5-derived (`functions.hashing`), so
+an external SQL oracle reproduces signatures, candidates and scores
+bit for bit. No operator keeps driver-side state or cross-joins the
+corpus.
 """
 
 from __future__ import annotations
@@ -51,80 +53,47 @@ def shingle_rows(
     text_col: str = "text",
     shingle_n: int = 3,
     distinct: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
-    """(id, shingle) rows: word n-grams.
+    """(id, shingle) rows: word n-grams of the lowercased,
+    whitespace-split text, deduplicated per doc when ``distinct``.
 
-    Two implementations with IDENTICAL output (exceptAll = 0 both
-    ways at sf0.1; the whole shingle gate family hash-matches on
-    either):
-
-    * ``impl='arrow'`` (default): one `mapInPandas` pass — tokenize,
-      shingle, and per-doc dedup inside the kernel. ZERO shuffles
-      (the window form shuffles every token twice: the explode
-      repartition-by-id sort, then the distinct). At 100 TB the
-      no-shuffle property dominates; measured not-slower locally
-      (0.39 s vs 0.45 s best-of-3 interleaved at sf0.1).
-    * ``impl='window'``: posexplode + lead windows, all-JVM — no
-      Python workers in the path, and the form whose expressions
-      mirror the SQL oracle construction. Kept for JVM-only
-      deployments and as the cross-engine reference.
-
-    Both deliberately avoid array higher-order functions (transform/
-    element_at lambdas), which Spark evaluates interpreted outside
-    whole-stage codegen — measured ~8x slower on 5k docs.
+    One `mapInPandas` pass tokenizes, shingles and dedups inside the
+    kernel: ZERO shuffles (a posexplode + lead-window form shuffles
+    every token twice, for the repartition-by-id sort and the
+    distinct). It also avoids array higher-order functions
+    (transform/element_at lambdas), which Spark evaluates interpreted
+    outside whole-stage codegen (measured ~8x slower on 5k docs).
     """
-    if impl == "arrow":
-        nsh = int(shingle_n)
-        dedup_in_kernel = bool(distinct)
+    nsh = int(shingle_n)
+    dedup_in_kernel = bool(distinct)
 
-        def kern(batches):
-            import pandas as pd
+    def kern(batches):
+        import pandas as pd
 
-            for pdf in batches:
-                ids: list = []
-                outs: list = []
-                for i, t in zip(pdf[id_col], pdf[text_col]):
-                    if t is None:  # expression path: split(NULL) -> no rows
-                        continue
-                    toks = t.lower().split()
-                    grams = (
-                        " ".join(toks[j : j + nsh])
-                        for j in range(len(toks) - nsh + 1)
-                    )
-                    ss = set(grams) if dedup_in_kernel else list(grams)
-                    ids.extend([i] * len(ss))
-                    outs.extend(ss)
-                yield pd.DataFrame(
-                    {
-                        "id": pd.array(ids, dtype="int64"),
-                        "shingle": pd.Series(outs, dtype="object"),
-                    }
+        for pdf in batches:
+            ids: list = []
+            outs: list = []
+            for i, t in zip(pdf[id_col], pdf[text_col]):
+                if t is None:  # expression path: split(NULL) -> no rows
+                    continue
+                toks = t.lower().split()
+                grams = (
+                    " ".join(toks[j : j + nsh])
+                    for j in range(len(toks) - nsh + 1)
                 )
+                ss = set(grams) if dedup_in_kernel else list(grams)
+                ids.extend([i] * len(ss))
+                outs.extend(ss)
+            yield pd.DataFrame(
+                {
+                    "id": pd.array(ids, dtype="int64"),
+                    "shingle": pd.Series(outs, dtype="object"),
+                }
+            )
 
-        return df.select(id_col, text_col).mapInPandas(
-            kern, "id long, shingle string"
-        )
-
-    from pyspark.sql.window import Window
-
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    ex = df.select(
-        F.col(id_col).alias("id"), F.posexplode(toks).alias("pos", "tok")
+    return df.select(id_col, text_col).mapInPandas(
+        kern, "id long, shingle string"
     )
-    w = Window.partitionBy("id").orderBy("pos")
-    parts = [F.col("tok")] + [
-        F.lead("tok", j).over(w) for j in range(1, shingle_n)
-    ]
-    last = F.lead("tok", shingle_n - 1).over(w)
-    sh = (
-        ex.select(
-            "id", F.concat_ws(" ", *parts).alias("shingle"), last.alias("_last")
-        )
-        .where(F.col("_last").isNotNull())
-        .drop("_last")
-    )
-    return sh.distinct() if distinct else sh
 
 
 def exact_dedup(
@@ -183,6 +152,76 @@ def minhash_signatures(
     )
 
 
+def _bucket_pairs(
+    a: DataFrame, on, b: DataFrame | None = None, *, ordered: bool = False,
+    cols=(),
+) -> DataFrame:
+    """The one bucket join: distinct ``(a_id, b_id, *cols)`` over rows
+    of ``a`` and ``b`` (each carrying ``id`` and the bucket key
+    ``on``) that share a bucket. Self form (``b`` None): each
+    unordered pair once, ``a_id < b_id``. Cross form: every (``a``
+    id, ``b`` id) pair, or with ``ordered`` every pair of two distinct
+    ids as (smaller, larger). ``cols`` are extra Columns over the
+    joined ``a.``/``b.`` rows, carried into the distinct."""
+    j = a.alias("a").join((a if b is None else b).alias("b"), on)
+    ids = [F.col("a.id"), F.col("b.id")]
+    if b is None:
+        j = j.where(ids[0] < ids[1])
+    elif ordered:
+        j = j.where(ids[0] != ids[1])
+        ids = [F.least(*ids), F.greatest(*ids)]
+    return j.select(
+        ids[0].alias("a_id"), ids[1].alias("b_id"), *cols
+    ).distinct()
+
+
+def _overlap_counts(
+    cand: DataFrame, a_sh: DataFrame, b_sh: DataFrame | None = None
+) -> DataFrame:
+    """The one exact overlap count: ``(a_id, b_id, inter, sa, sb)`` per
+    candidate ``(a_id, b_id)``, where ``inter`` = |S_a ∩ S_b| and
+    ``sa``/``sb`` the set sizes, over DISTINCT ``(id, shingle)`` rows
+    (``a_sh`` for a ids, ``b_sh`` for b ids; one frame when None).
+    Set algebra as an equi-join + count over exploded rows, never an
+    array_intersect over materialized arrays (interpreted, O(|a|·|b|)
+    per pair)."""
+    b_sh = a_sh if b_sh is None else b_sh
+
+    def sizes(sh, id_name, sz_name):
+        return sh.groupBy("id").agg(F.count(F.lit(1)).alias(sz_name)).select(
+            F.col("id").alias(id_name), sz_name
+        )
+
+    inter = (
+        cand.join(a_sh.select(F.col("id").alias("a_id"), "shingle"), "a_id")
+        .join(
+            b_sh.select(F.col("id").alias("b_id"), "shingle"),
+            ["b_id", "shingle"],
+        )
+        .groupBy("a_id", "b_id")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    return inter.join(sizes(a_sh, "a_id", "sa"), "a_id").join(
+        sizes(b_sh, "b_id", "sb"), "b_id"
+    )
+
+
+def _jaccard_above(
+    cand: DataFrame, a_sh: DataFrame, b_sh: DataFrame | None = None, *,
+    threshold: float,
+) -> DataFrame:
+    """``(a_id, b_id, jaccard)`` with jaccard >= threshold, from the
+    overlap count: inter / (sa + sb - inter)."""
+    j = _overlap_counts(cand, a_sh, b_sh).withColumn(
+        "jaccard",
+        F.col("inter").cast("double")
+        / (F.col("sa") + F.col("sb") - F.col("inter")).cast("double"),
+    )
+    return j.where(F.col("jaccard") >= F.lit(float(threshold))).select(
+        "a_id", "b_id", "jaccard"
+    )
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, *, bands: int = 8, rows_per_band: int = 2
 ) -> DataFrame:
@@ -201,16 +240,9 @@ def lsh_candidate_pairs(
     first — ``minhash_signatures(df).localCheckpoint(eager=False)`` —
     as `minhash_dedup_pairs` does.
     """
-    banded = _band_signatures(
-        signatures, bands=bands, rows_per_band=rows_per_band
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, ["band", "key"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
+    return _bucket_pairs(
+        _band_signatures(signatures, bands=bands, rows_per_band=rows_per_band),
+        ["band", "key"],
     )
 
 
@@ -225,12 +257,8 @@ def jaccard_pairs(
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Refine candidate pairs with exact Jaccard over shingle sets:
-    ``(a_id, b_id, jaccard)`` with jaccard >= threshold.
-
-    Set algebra as joins over exploded (id, shingle) rows — the
-    intersection count is an equi-join + count, never an
-    array_intersect over materialized arrays (interpreted, O(|a|·|b|)
-    per pair).
+    ``(a_id, b_id, jaccard)`` with jaccard >= threshold, from the
+    shared overlap count (`_overlap_counts`).
 
     ``shingles``: optionally a precomputed DISTINCT ``(id, shingle)``
     DataFrame (must be deduplicated — sizes and intersections count
@@ -244,27 +272,7 @@ def jaccard_pairs(
             df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
         ).localCheckpoint(eager=False)
     )
-    sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = ex.select(F.col("id").alias("a_id"), "shingle")
-    b = ex.select(F.col("id").alias("b_id"), "shingle")
-    inter = (
-        pairs.join(a, "a_id")
-        .join(b, ["b_id", "shingle"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    j = (
-        inter.join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("sz", "sa"), "a_id")
-        .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("sz", "sb"), "b_id")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sa") + F.col("sb") - F.col("inter")).cast("double"),
-        )
-    )
-    return j.where(F.col("jaccard") >= F.lit(threshold)).select(
-        "a_id", "b_id", "jaccard"
-    )
+    return _jaccard_above(pairs, ex, threshold=threshold)
 
 
 def minhash_dedup_pairs(
@@ -278,7 +286,6 @@ def minhash_dedup_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     shingles: DataFrame | None = None,
-    fused_signatures: bool = False,
 ) -> DataFrame:
     """The full MinHash-LSH dedup pipeline: signatures → band join →
     exact-Jaccard refinement. With J >= 0.5 pairs and 8×2 banding the
@@ -294,31 +301,18 @@ def minhash_dedup_pairs(
     (``localCheckpoint`` output, foreachBatch frames), so each of the
     six consumers would miss the cache and re-run the kernel. Pass
     ``shingles`` (distinct, pinned the same way) to share that pass
-    across operators too. ``fused_signatures=True`` computes the
-    signatures in the zero-shuffle Arrow kernel instead (bit-identical;
-    see `minhash_signatures_fused`), pinned the same way — the right call
-    when no other operator shares the shingle pass, since the
-    refinement then only shingles what the corpus-wide signature
-    shuffle would otherwise have paid for. Measured at sf0.1
-    (interleaved best-of-3, full pipeline): expr 0.93 s vs fused
-    1.37 s — the shared pinned shingle pass makes the expression
-    aggregate marginal at this size, so expr stays the default; the
-    crossover is where the (id, hash) shuffle dwarfs a second
-    tokenize pass (corpus >> memory)."""
+    across operators too. The zero-shuffle signature kernel
+    (`minhash_signatures_fused`, bit-identical) is the ingest path's
+    (`incremental_neardup`); here the shared pinned shingle pass makes
+    the expression aggregate the cheaper one (sf0.1, interleaved
+    best-of-3, full pipeline: 0.93 s vs 1.37 s)."""
     sh = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n, distinct=True
     ).localCheckpoint(eager=False)
-    if fused_signatures:
-        # the band self-join consumes the kernel output twice
-        sig = minhash_signatures_fused(
-            df, id_col=id_col, text_col=text_col, num_perm=num_perm,
-            shingle_n=shingle_n,
-        ).localCheckpoint(eager=False)
-    else:
-        sig = minhash_signatures(
-            df, id_col=id_col, text_col=text_col, num_perm=num_perm,
-            shingle_n=shingle_n, shingles=sh,
-        )
+    sig = minhash_signatures(
+        df, id_col=id_col, text_col=text_col, num_perm=num_perm,
+        shingle_n=shingle_n, shingles=sh,
+    )
     cand = lsh_candidate_pairs(sig, bands=bands, rows_per_band=rows_per_band)
     return jaccard_pairs(
         df,
@@ -348,14 +342,14 @@ def minhash_join(
     whose shingle Jaccard >= ``threshold`` — ``(l_id, r_id,
     jaccard)``. The contamination-audit primitive at corpus scale:
     `minhash_dedup_pairs` is the SELF-join form; here the id spaces
-    are unrelated so candidates come from an equi-join of the two
-    banded signature tables on (band, key) — shuffle volume is
-    (|L| + |R|) × bands rows, never |L| × |R| — and the exact-Jaccard
-    refinement runs the same set-algebra joins across the two shingle
-    passes. Signatures on both sides use the same salted affine
-    permutations, so banding agrees by construction. Candidate recall
-    follows the standard (1 − J^r)^b band bound; the refinement is
-    exact on candidates, so output pairs are exact-above-threshold
+    are unrelated so candidates come from the cross form of the
+    bucket join of the two banded signature tables on (band, key) —
+    shuffle volume is (|L| + |R|) × bands rows, never |L| × |R| — and
+    the exact-Jaccard refinement is the same overlap count across the
+    two shingle passes. Signatures on both sides use the same salted
+    affine permutations, so banding agrees by construction. Candidate
+    recall follows the standard (1 − J^r)^b band bound; the refinement
+    is exact on candidates, so output pairs are exact-above-threshold
     (the same contract as the self-join form, pytest-pinned equal to
     a brute cross-Jaccard on a small rig)."""
     lsh = shingle_rows(
@@ -374,39 +368,13 @@ def minhash_join(
         right_df, id_col=id_col, text_col=text_col, num_perm=num_perm,
         shingle_n=shingle_n, shingles=rsh,
     )
-    lb = _band_signatures(lsig, bands=bands, rows_per_band=rows_per_band)
-    rb = _band_signatures(rsig, bands=bands, rows_per_band=rows_per_band)
-    cand = (
-        lb.select(F.col("id").alias("l_id"), "band", "key")
-        .join(rb.select(F.col("id").alias("r_id"), "band", "key"),
-              ["band", "key"])
-        .select("l_id", "r_id")
-        .distinct()
+    cand = _bucket_pairs(
+        _band_signatures(lsig, bands=bands, rows_per_band=rows_per_band),
+        ["band", "key"],
+        _band_signatures(rsig, bands=bands, rows_per_band=rows_per_band),
     )
-    lsz = lsh.groupBy("id").agg(F.count(F.lit(1)).alias("sl"))
-    rsz = rsh.groupBy("id").agg(F.count(F.lit(1)).alias("sr"))
-    inter = (
-        cand.join(lsh.select(F.col("id").alias("l_id"), "shingle"), "l_id")
-        .join(
-            rsh.select(F.col("id").alias("r_id"), "shingle"),
-            ["r_id", "shingle"],
-        )
-        .groupBy("l_id", "r_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    j = (
-        inter.join(
-            lsz.select(F.col("id").alias("l_id"), "sl"), "l_id"
-        )
-        .join(rsz.select(F.col("id").alias("r_id"), "sr"), "r_id")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sl") + F.col("sr") - F.col("inter")).cast("double"),
-        )
-    )
-    return j.where(F.col("jaccard") >= F.lit(float(threshold))).select(
-        "l_id", "r_id", "jaccard"
+    return _jaccard_above(cand, lsh, rsh, threshold=threshold).select(
+        F.col("a_id").alias("l_id"), F.col("b_id").alias("r_id"), "jaccard"
     )
 
 
@@ -444,15 +412,8 @@ def ngram_jaccard_pairs(
     inv = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     ).localCheckpoint(eager=False)
-    cand = _inverted_candidates(inv, max_shingle_df)
-    return jaccard_pairs(
-        df,
-        cand,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        threshold=threshold,
-        shingles=inv,
+    return _jaccard_above(
+        _inverted_candidates(inv, max_shingle_df), inv, threshold=threshold
     )
 
 
@@ -470,13 +431,7 @@ def _inverted_candidates(inv: DataFrame, max_shingle_df: int | None) -> DataFram
             .select("shingle")
         )
         join_inv = inv.join(hot, "shingle", "left_anti")
-    return (
-        join_inv.alias("a")
-        .join(join_inv.alias("b"), "shingle")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a_id"), F.col("b.id").alias("b_id"))
-        .distinct()
-    )
+    return _bucket_pairs(join_inv, "shingle")
 
 
 def containment_pairs(
@@ -515,44 +470,21 @@ def containment_pairs(
     inv = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     ).localCheckpoint(eager=False)
-    cand = _inverted_candidates(inv, max_shingle_df)
-    sizes = inv.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    a = inv.select(F.col("id").alias("a_id"), "shingle")
-    b = inv.select(F.col("id").alias("b_id"), "shingle")
-    inter = (
-        cand.join(a, "a_id")
-        .join(b, ["b_id", "shingle"])
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    j = (
-        inter.join(
-            sizes.withColumnRenamed("id", "a_id").withColumnRenamed("sz", "sa"),
-            "a_id",
-        )
-        .join(
-            sizes.withColumnRenamed("id", "b_id").withColumnRenamed("sz", "sb"),
-            "b_id",
-        )
-    )
-    both = j.select(
-        F.col("a_id").alias("src_id"),
-        F.col("b_id").alias("dst_id"),
-        F.col("inter").cast("long").alias("inter"),
-        F.col("sa").cast("long").alias("src_sz"),
-        (F.col("inter").cast("double") / F.col("sa").cast("double")).alias(
-            "containment"
-        ),
-    ).unionByName(
-        j.select(
-            F.col("b_id").alias("src_id"),
-            F.col("a_id").alias("dst_id"),
+    j = _overlap_counts(_inverted_candidates(inv, max_shingle_df), inv)
+
+    def directed(src, dst, sz):
+        return j.select(
+            F.col(src).alias("src_id"),
+            F.col(dst).alias("dst_id"),
             F.col("inter").cast("long").alias("inter"),
-            F.col("sb").cast("long").alias("src_sz"),
-            (F.col("inter").cast("double") / F.col("sb").cast("double")).alias(
+            F.col(sz).cast("long").alias("src_sz"),
+            (F.col("inter").cast("double") / F.col(sz).cast("double")).alias(
                 "containment"
             ),
         )
+
+    both = directed("a_id", "b_id", "sa").unionByName(
+        directed("b_id", "a_id", "sb")
     )
     return both.where(F.col("containment") >= F.lit(float(threshold)))
 
@@ -585,7 +517,7 @@ def simhash_signatures(
     bit-identical; a single shuffle regardless of bit width.
 
     ``shingles``: optionally a precomputed DISTINCT ``(id, shingle)``
-    DataFrame to share one tokenize+window pass across operators.
+    DataFrame to share one shingle pass across operators.
     """
     sh = shingles if shingles is not None else shingle_rows(
         df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
@@ -628,40 +560,17 @@ def simhash_signatures(
     return sums.select("id", sim.alias("simhash"))
 
 
-def simhash_pairs_allpairs(
-    signatures: DataFrame, *, max_hamming: int = 6
-) -> DataFrame:
-    """Quadratic all-pairs form of `simhash_pairs` — a crossJoin kept
-    ONLY as the independent oracle for tests and tiny corpora. The
-    undecorated `simhash_pairs` name is the banded equi-join (the
-    plan that survives 100 TB); reach for this one deliberately."""
-    a = signatures.select(
-        F.col("id").alias("a_id"), F.col("simhash").alias("ha")
-    )
-    b = signatures.select(
-        F.col("id").alias("b_id"), F.col("simhash").alias("hb")
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        a.crossJoin(b)
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
-    )
-
-
 def simhash_pairs(
     signatures: DataFrame, *, max_hamming: int = 6
 ) -> DataFrame:
-    """Near-dup pairs by Hamming distance between simhashes — the
-    DEFAULT is the scale-safe equi-join: block on bit-bands of the
-    simhash (split the 60 bits into max_hamming+1 chunks — any pair
-    within the Hamming budget agrees exactly on ≥1 chunk, pigeonhole),
-    join on (chunk, key), then filter on exact Hamming distance.
-    Identical results to the all-pairs form
-    (`simhash_pairs_allpairs`, the quadratic test oracle), but the
-    join never materializes the n² candidate space."""
+    """Near-dup pairs ``(a_id, b_id, hamming)`` by Hamming distance
+    between simhashes, as a scale-safe bucket join: block on bit-bands
+    of the simhash (split the 60 bits into max_hamming+1 chunks — any
+    pair within the Hamming budget agrees exactly on ≥1 chunk,
+    pigeonhole), join on (chunk, key), then filter on exact Hamming
+    distance. Identical results to the quadratic all-pairs crossJoin
+    (the test oracle), but the join never materializes the n²
+    candidate space."""
     chunks = max_hamming + 1
     width = SIMHASH_BITS // chunks + (1 if SIMHASH_BITS % chunks else 0)
     keys = F.array(
@@ -677,25 +586,14 @@ def simhash_pairs(
     )
     blocked = signatures.select(
         "id", "simhash", F.explode(keys).alias("ck")
-    ).select("id", "simhash", F.col("ck.chunk").alias("chunk"), F.col("ck.key").alias("key"))
-    a = blocked.alias("a")
-    b = blocked.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    return (
-        a.join(b, ["chunk", "key"])
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("b.id").alias("b_id"),
-            ham.alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    ).select(
+        "id", "simhash", F.col("ck.chunk").alias("chunk"),
+        F.col("ck.key").alias("key"),
     )
-
-
-# Backwards-compatible name: the banded equi-join IS the default now.
-simhash_pairs_banded = simhash_pairs
+    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    return _bucket_pairs(
+        blocked, ["chunk", "key"], cols=[ham.alias("hamming")]
+    ).where(F.col("hamming") <= max_hamming)
 
 
 def _cc_star(sym: DataFrame, max_iter: int) -> DataFrame:
@@ -942,6 +840,88 @@ def dedup_groups(
 _NEARDUP_BLOCK_CELLS = 2_000_000
 
 
+def _cosine_pairs(
+    rows: DataFrame, by: str, threshold: float, *, sided: bool = False
+) -> DataFrame:
+    """The one exact cosine kernel: ``(a_id, b_id, cos_sim)`` with
+    cos_sim >= threshold and a_id < b_id, per ``by`` group of ``rows``
+    ``(id, vector[, side])``. A self group compares its rows with each
+    other. With ``sided``, a group whose rows carry ``side`` 0 and 1
+    compares the side-0 rows with the side-1 rows, and side -1 marks
+    a self group.
+
+    Chunked ``A @ B.T`` with BLAS; survivors of an epsilon-guarded
+    prefilter are recomputed with an exact sequential fold, so
+    reported similarities and the threshold decision are bit-identical
+    to the ANSI-SQL oracle formula (BLAS reorders summation) whatever
+    group a pair meets in."""
+    thr = float(threshold)
+
+    def kernel(pdf):
+        import math
+
+        import numpy as np
+        import pandas as pd
+
+        def ids_and_matrix(part):
+            return part["id"].to_numpy(dtype=np.int64), np.asarray(
+                [np.asarray(x, dtype=np.float64) for x in part["vector"]],
+                dtype=np.float64,
+            )
+
+        self_pair = not sided or bool((pdf["side"] < 0).any())
+        if self_pair:
+            a_ids, a_mat = ids_and_matrix(pdf)
+            b_ids, b_mat = a_ids, a_mat
+        else:
+            a_ids, a_mat = ids_and_matrix(pdf[pdf["side"] == 0])
+            b_ids, b_mat = ids_and_matrix(pdf[pdf["side"] == 1])
+        out_a: list = []
+        out_b: list = []
+        out_s: list = []
+        if len(a_ids) and len(b_ids):
+            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
+            b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
+            chunk = 1024
+            for c0 in range(0, len(a_ids), chunk):
+                c1 = min(c0 + chunk, len(a_ids))
+                sims = (a_mat[c0:c1] @ b_mat.T) / np.outer(
+                    a_norms[c0:c1], b_norms
+                )
+                ai, bi = np.nonzero(sims >= thr - 1e-9)
+                for i, j in zip(ai, bi):
+                    ia, ib = int(a_ids[c0 + i]), int(b_ids[j])
+                    if self_pair:
+                        # self matrix covers both orders: keep one
+                        if ia >= ib:
+                            continue
+                    elif ia > ib:
+                        # cross pair appears once; canonicalize
+                        ia, ib = ib, ia
+                    va, vb = a_mat[c0 + i], b_mat[j]
+                    d = na = nb = 0.0
+                    for x, y in zip(va, vb):
+                        d += x * y
+                        na += x * x
+                        nb += y * y
+                    s = d / (math.sqrt(na) * math.sqrt(nb))
+                    if s >= thr:
+                        out_a.append(ia)
+                        out_b.append(ib)
+                        out_s.append(s)
+        return pd.DataFrame(
+            {
+                "a_id": pd.array(out_a, dtype="int64"),
+                "b_id": pd.array(out_b, dtype="int64"),
+                "cos_sim": pd.array(out_s, dtype="float64"),
+            }
+        )
+
+    return rows.groupBy(by).applyInPandas(
+        kernel, "a_id long, b_id long, cos_sim double"
+    )
+
+
 def embedding_neardup_pairs(
     df: DataFrame,
     *,
@@ -954,30 +934,33 @@ def embedding_neardup_pairs(
     EXACT all-pairs, fully distributed (no driver materialization).
 
     Block-pair decomposition: each row lands in one of B blocks by id
-    hash; a codegen'd literal array + ``posexplode`` replicates every
-    row to the B block-pairs it participates in (pair (i, j), i <= j,
-    holds block i rows as side 0 and block j rows as side 1), so each
-    unordered row pair meets in EXACTLY one ``applyInPandas`` group.
-    The kernel computes chunked ``A @ B.T`` with BLAS; survivors of an
-    epsilon-guarded prefilter are recomputed with an exact sequential
-    fold so reported similarities are bit-identical to the ANSI-SQL
-    oracle formula (BLAS reorders summation).
+    hash; a codegen'd literal array + ``explode`` replicates every
+    row to the B block-pairs it participates in (pair (i, j), i < j,
+    holds block i rows as side 0 and block j rows as side 1; pair
+    (i, i) holds block i as a self group, side -1), so each unordered
+    row pair meets in EXACTLY one group of the shared exact cosine
+    kernel (`_cosine_pairs`).
 
     Shuffle volume is rows x B — quadratic work (inherent to exact
     all-pairs) but never quadratic shuffle, and driver traffic is zero
-    (the round-1 version ``collect()``-ed the whole table). For
-    approximate near-dup at extreme scale use `ann.rp_lsh_codes` /
-    IVF-cell blocking in front of the same kernel (a02's path).
+    (the round-1 version ``collect()``-ed the whole table). With
+    ``n_blocks=None`` B is sized from the row count and width, taken
+    in one aggregate job; B changes only the blocking, never the
+    output. For approximate near-dup at extreme scale use
+    `ann.rp_lsh_codes` / IVF-cell blocking in front of the same kernel
+    (a02's path, `neardup_within_cells`).
     """
-    side = df.select(F.col(id_col).alias("id"), F.col(vector_col).alias("v"))
+    side = df.select(
+        F.col(id_col).alias("id"), F.col(vector_col).alias("vector")
+    )
     if n_blocks is None:
-        first = side.select(F.size("v").alias("d")).first()
-        dims = int(first["d"]) if first and first["d"] is not None else 1
-        n_rows = side.count()
+        st = side.agg(
+            F.count(F.lit(1)).alias("n"), F.max(F.size("vector")).alias("d")
+        ).first()
+        dims = int(st["d"]) if st["d"] is not None else 1
         block_rows = max(1024, _NEARDUP_BLOCK_CELLS // max(1, dims))
-        n_blocks = max(1, -(-n_rows // block_rows))
+        n_blocks = max(1, -(-int(st["n"]) // block_rows))
     B = int(n_blocks)
-    thr = float(threshold)
 
     blk = F.pmod(F.xxhash64(F.col("id")), F.lit(B)).cast("int")
     # literal pair list per block value: codegen'd array, no HOF lambda
@@ -987,84 +970,19 @@ def embedding_neardup_pairs(
                 (F.least(blk, F.lit(q)) * B + F.greatest(blk, F.lit(q))).alias(
                     "pk"
                 ),
-                F.when(blk <= F.lit(q), F.lit(0)).otherwise(F.lit(1)).alias("side"),
+                F.when(blk == F.lit(q), F.lit(-1))
+                .when(blk < F.lit(q), F.lit(0))
+                .otherwise(F.lit(1))
+                .alias("side"),
             )
             for q in range(B)
         ]
     )
     # every row appears exactly B times, once per distinct block pair
-    tagged = side.select("id", "v", F.explode(pairs).alias("p")).select(
-        "id", "v", F.col("p.pk").alias("pk"), F.col("p.side").alias("side")
+    tagged = side.select("id", "vector", F.explode(pairs).alias("p")).select(
+        "id", "vector", F.col("p.pk").alias("pk"), F.col("p.side").alias("side")
     )
-
-    def make_kernel(threshold_val: float):
-        def kernel(pdf):
-            import math
-
-            import numpy as np
-            import pandas as pd
-
-            a_pdf = pdf[pdf["side"] == 0]
-            b_pdf = pdf[pdf["side"] == 1]
-            self_pair = len(b_pdf) == 0
-            a_ids = a_pdf["id"].to_numpy(dtype=np.int64)
-            a_mat = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in a_pdf["v"]], dtype=np.float64
-            )
-            if len(b_pdf):
-                b_ids = b_pdf["id"].to_numpy(dtype=np.int64)
-                b_mat = np.asarray(
-                    [np.asarray(x, dtype=np.float64) for x in b_pdf["v"]],
-                    dtype=np.float64,
-                )
-            else:  # self block-pair (i == i): compare A against itself
-                b_ids, b_mat = a_ids, a_mat
-            out_a: list = []
-            out_b: list = []
-            out_s: list = []
-            if len(a_ids) and len(b_ids):
-                a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-                b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-                chunk = 1024
-                for c0 in range(0, len(a_ids), chunk):
-                    c1 = min(c0 + chunk, len(a_ids))
-                    sims = (a_mat[c0:c1] @ b_mat.T) / np.outer(
-                        a_norms[c0:c1], b_norms
-                    )
-                    ai, bi = np.nonzero(sims >= threshold_val - 1e-9)
-                    for i, j in zip(ai, bi):
-                        ia, ib = int(a_ids[c0 + i]), int(b_ids[j])
-                        if self_pair:
-                            # self matrix covers both orders: keep one
-                            if ia >= ib:
-                                continue
-                        elif ia > ib:
-                            # cross pair appears once; canonicalize
-                            ia, ib = ib, ia
-                        va, vb = a_mat[c0 + i], b_mat[j]
-                        d = na = nb = 0.0
-                        for x, y in zip(va, vb):
-                            d += x * y
-                            na += x * x
-                            nb += y * y
-                        s = d / (math.sqrt(na) * math.sqrt(nb))
-                        if s >= threshold_val:
-                            out_a.append(ia)
-                            out_b.append(ib)
-                            out_s.append(s)
-            return pd.DataFrame(
-                {
-                    "a_id": pd.array(out_a, dtype="int64"),
-                    "b_id": pd.array(out_b, dtype="int64"),
-                    "cos_sim": pd.array(out_s, dtype="float64"),
-                }
-            )
-
-        return kernel
-
-    return tagged.groupBy("pk").applyInPandas(
-        make_kernel(thr), "a_id long, b_id long, cos_sim double"
-    )
+    return _cosine_pairs(tagged, "pk", threshold, sided=True)
 
 
 def contamination_overlap(
@@ -1188,61 +1106,10 @@ def neardup_within_cells(
     to the exact operator and SQL-replayable). Use with
     `ann.ivf_assign_expr` over deterministic centroids for a fully
     oracle-checkable blocked near-dup (d08), or let
-    `embedding_neardup_blocked` train cells for the scale path."""
-    thr = float(threshold)
-
-    def make_cell_kernel(threshold_val: float):
-        def kernel(pdf):
-            import math
-
-            import numpy as np
-            import pandas as pd
-
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            out_a: list = []
-            out_b: list = []
-            out_s: list = []
-            if len(ids) > 1:
-                mat = np.asarray(
-                    [np.asarray(x, dtype=np.float64) for x in pdf["vector"]],
-                    dtype=np.float64,
-                )
-                norms = np.sqrt((mat * mat).sum(axis=1))
-                chunk = 1024
-                for c0 in range(0, len(ids), chunk):
-                    c1 = min(c0 + chunk, len(ids))
-                    sims = (mat[c0:c1] @ mat.T) / np.outer(
-                        norms[c0:c1], norms
-                    )
-                    ai, bi = np.nonzero(sims >= threshold_val - 1e-9)
-                    for i, j in zip(ai, bi):
-                        ia, ib = int(ids[c0 + i]), int(ids[j])
-                        if ia >= ib:  # self matrix covers both orders
-                            continue
-                        va, vb = mat[c0 + i], mat[j]
-                        d = na = nb = 0.0
-                        for x, y in zip(va, vb):
-                            d += x * y
-                            na += x * x
-                            nb += y * y
-                        s = d / (math.sqrt(na) * math.sqrt(nb))
-                        if s >= threshold_val:
-                            out_a.append(ia)
-                            out_b.append(ib)
-                            out_s.append(s)
-            return pd.DataFrame(
-                {
-                    "a_id": pd.array(out_a, dtype="int64"),
-                    "b_id": pd.array(out_b, dtype="int64"),
-                    "cos_sim": pd.array(out_s, dtype="float64"),
-                }
-            )
-
-        return kernel
-
-    return assigned.groupBy("cell").applyInPandas(
-        make_cell_kernel(thr), "a_id long, b_id long, cos_sim double"
-    )
+    `embedding_neardup_blocked` train cells for the scale path. Each
+    cell is a self group of the shared exact cosine kernel
+    (`_cosine_pairs`)."""
+    return _cosine_pairs(assigned, "cell", threshold)
 
 
 def minhash_signatures_fused(
@@ -1402,26 +1269,19 @@ def incremental_neardup(
         new_docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n,
         distinct=True,
     ).localCheckpoint(eager=False)
-    bn = _band_signatures(new_sigs, bands=bands, rows_per_band=rows_per_band)
-    bc = _band_signatures(
-        corpus_signatures, bands=bands, rows_per_band=rows_per_band
+    cand = _bucket_pairs(
+        _band_signatures(
+            corpus_signatures, bands=bands, rows_per_band=rows_per_band
+        ),
+        ["band", "key"],
+        _band_signatures(new_sigs, bands=bands, rows_per_band=rows_per_band),
+        ordered=True,
     )
-    cross = (
-        bc.alias("a")
-        .join(bn.alias("b"), ["band", "key"])
-        .where(F.col("a.id") != F.col("b.id"))
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("a_id"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("b_id"),
-        )
-        .distinct()
-    )
-    cand = cross
     if include_new_pairs:
         within = lsh_candidate_pairs(
             new_sigs, bands=bands, rows_per_band=rows_per_band
         )
-        cand = cross.unionByName(within).distinct()
+        cand = cand.unionByName(within).distinct()
     # refinement reads only the CANDIDATES' shingles: semi-join the
     # (growing) corpus shingle table down to candidate ids before the
     # size/intersection aggregates — per-batch cost stays proportional
@@ -1508,8 +1368,6 @@ def tfidf_cosine_pairs(
     still compute the FULL dot for every generated pair, so reported
     similarities never change, only which pairs get scored (the
     documented candidate contract, same as `containment_pairs`)."""
-    from pyspark.sql.window import Window  # noqa: F401  (parity w/ siblings)
-
     # Explicit whitespace class: Java \s, RE2 \s and python \s disagree
     # on \x0B / \x1c-\x1f, so the oracle replay must tokenize with the
     # same common subset (the t14/t15/p08 hardening rule).
@@ -1552,16 +1410,7 @@ def tfidf_cosine_pairs(
     cand_w = w if max_term_df is None else w.where(
         F.col("df") <= int(max_term_df)
     )
-    a = cand_w.select(
-        F.col("id").alias("a_id"), "term"
-    )
-    b = cand_w.select(F.col("id").alias("b_id"), "term")
-    cand = (
-        a.join(b, "term")
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cand = _bucket_pairs(cand_w.select("id", "term"), "term")
     wa = w.select(F.col("id").alias("a_id"), "term", F.col("w").alias("wa"))
     wb = w.select(F.col("id").alias("b_id"), "term", F.col("w").alias("wb"))
     shared = cand.join(wa, "a_id").join(wb, ["b_id", "term"])

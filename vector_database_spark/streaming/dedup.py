@@ -58,89 +58,71 @@ def streaming_neardup_ingest(
     against the accumulated corpus (signatures + shingles persisted
     under ``state_path``) via `operators.dedup.incremental_neardup`,
     then appended to that state. Near-dup pairs go to
-    ``flagged_sink`` (parquet) when given.
+    ``flagged_sink`` (parquet) when given. The first batch takes the
+    same path over an empty corpus, so its within-batch pairs are
+    flagged too.
 
     State is two parquet tables — signatures (one row per doc) and
     distinct shingle rows — NOT Spark state-store state, so it
     survives restarts, is queryable, and a batch backfill can seed it
     with `minhash_signatures_fused` + `shingle_rows` outputs written
     under a ``batch=<n>`` subdirectory. Writes are RETRY-IDEMPOTENT:
-    each micro-batch overwrites its own ``batch=<id>`` partition
-    directory, so foreachBatch's at-least-once redelivery replaces
-    the same rows instead of appending duplicates (duplicate shingle
-    rows would silently corrupt every future Jaccard involving those
-    docs). Per batch the corpus is never rescanned: the banded join
-    touches batch×bands signature rows plus the candidates' shingles.
+    each micro-batch reads the state WITHOUT its own ``batch=<id>``
+    partition and then overwrites that partition (and its flagged
+    partition), so foreachBatch's at-least-once redelivery of a batch
+    sees the state its first attempt saw and replaces the same rows,
+    instead of appending duplicates (duplicate shingle rows would
+    silently corrupt every future Jaccard involving those docs) or
+    dropping the batch's docs as already ingested. Per batch the
+    corpus is never rescanned: the banded join touches batch×bands
+    signature rows plus the candidates' shingles.
 
     Returns the started StreamingQuery.
     """
-    from vector_database_spark.operators.dedup import (
-        incremental_neardup,
-        minhash_signatures_fused,
-        shingle_rows,
-    )
+    from vector_database_spark.operators.dedup import incremental_neardup
+    from vector_database_spark.schemas import local_frame
 
     sig_path = f"{state_path}/signatures"
     sh_path = f"{state_path}/shingles"
 
-    def _read_state(spark, path: str) -> DataFrame | None:
-        """Read accumulated state; None ONLY when the path does not
-        exist yet. Any other failure (corrupt footer, permissions,
-        transient FS error) re-raises — silently treating it as
-        'no state' would skip the corpus check for the batch and
-        then append it as clean, losing duplicates forever."""
+    def _read_state(spark, path: str, ddl: str, batch_id: int) -> DataFrame:
+        """Accumulated state of every batch but ``batch_id`` (an
+        earlier attempt of this batch may have written its own
+        partition); empty ONLY when the path does not exist yet. Any
+        other failure (corrupt footer, permissions, transient FS
+        error) re-raises — silently treating it as 'no state' would
+        skip the corpus check for the batch and then append it as
+        clean, losing duplicates forever."""
         from pyspark.errors import AnalysisException
 
         try:
-            return spark.read.parquet(path).drop("batch")
+            state = spark.read.parquet(path)
         except AnalysisException as e:
             if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-                return None
+                return local_frame(spark, [], ddl)
             raise
+        return state.where(
+            F.col("batch").cast("string") != F.lit(str(batch_id))
+        ).drop("batch")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
-        corpus_sigs = _read_state(spark, sig_path)
-        have_state = corpus_sigs is not None
-        if have_state:
-            corpus_sh = _read_state(spark, sh_path)
-            pairs, new_sigs, new_sh = incremental_neardup(
-                batch_df, corpus_sigs, corpus_sh,
-                id_col=id_col, text_col=text_col, threshold=threshold,
-            )
-            if flagged_sink is not None:
-                # idempotent under redelivery: the batch replaces its
-                # own partition, never appends beside a prior attempt
-                pairs.write.mode("overwrite").parquet(
-                    f"{flagged_sink}/batch={batch_id}"
-                )
-            else:
-                pairs.count()  # force detection even without a sink
-        else:
-            new_sigs = minhash_signatures_fused(
-                batch_df, id_col=id_col, text_col=text_col
-            )
-            new_sh = shingle_rows(
-                batch_df, id_col=id_col, text_col=text_col
-            ).localCheckpoint(eager=False)
-            # batch-internal pairs of the very first batch
-            if flagged_sink is not None:
-                from vector_database_spark.operators.dedup import (
-                    minhash_dedup_pairs,
-                )
-
-                minhash_dedup_pairs(
-                    batch_df, id_col=id_col, text_col=text_col,
-                    threshold=threshold, shingles=new_sh,
-                ).write.mode("overwrite").parquet(
-                    f"{flagged_sink}/batch={batch_id}"
-                )
+        pairs, new_sigs, new_sh = incremental_neardup(
+            batch_df,
+            _read_state(spark, sig_path, "id long, minhash array<long>", batch_id),
+            _read_state(spark, sh_path, "id long, shingle string", batch_id),
+            id_col=id_col, text_col=text_col, threshold=threshold,
+        )
         # per-batch partition overwrite: a redelivered batch REPLACES
         # its own rows, so a crash anywhere in _process cannot leave
         # duplicated state behind
+        if flagged_sink is not None:
+            pairs.write.mode("overwrite").parquet(
+                f"{flagged_sink}/batch={batch_id}"
+            )
         new_sigs.write.mode("overwrite").parquet(f"{sig_path}/batch={batch_id}")
         new_sh.write.mode("overwrite").parquet(f"{sh_path}/batch={batch_id}")
 
