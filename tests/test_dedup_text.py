@@ -310,6 +310,81 @@ def test_embedding_neardup_sizes_blocks_in_one_job(spark, monkeypatch, tmp_path)
     assert got == sorted(tuple(r) for r in explicit.collect()) and got
 
 
+def test_tfidf_cosine_pairs_runs_no_action_of_its_own(
+    spark, tmp_path, monkeypatch
+):
+    """Building the tf-idf pair plan runs no Spark action of its own:
+    the corpus size in the idf is a scalar subquery, not an eager
+    count. The lazy `localCheckpoint` pin of the weight table still
+    runs its input's shuffle stages when it is built (AQE plans them
+    to make the pin's RDD), so the job count is taken with the pin
+    stubbed out. Pairs and scores equal a term-sorted Python replay of
+    the same rational tf-idf bit for bit (a null-text document counts
+    toward N)."""
+    import math
+
+    texts = [
+        "the cat sat on the mat",
+        "the cat sat on a mat",
+        "a dog ran in the park",
+        "the dog ran in a park today",
+        "quantum fields and strings",
+        None,
+    ]
+    local_frame(
+        spark, list(enumerate(texts)), "doc_id long, text string"
+    ).write.parquet(str(tmp_path / "docs"))
+    df = spark.read.parquet(str(tmp_path / "docs"))
+    sc = spark.sparkContext
+    monkeypatch.setattr(type(df), "localCheckpoint", lambda self, eager=True: self)
+    sc.setJobGroup("tfidf_build", "tfidf_build", False)
+    try:
+        dd.tfidf_cosine_pairs(df, threshold=0.2)
+        build_jobs = len(sc.statusTracker().getJobIdsForGroup("tfidf_build"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.undo()
+    assert build_jobs == 0
+    pairs = dd.tfidf_cosine_pairs(df, threshold=0.2)
+
+    n = len(texts)
+    tf = {}
+    for i, t in enumerate(texts):
+        if t is not None:
+            tf[i] = {}
+            for term in t.split(" "):
+                tf[i][term] = tf[i].get(term, 0) + 1
+    dfreq = {}
+    for terms in tf.values():
+        for term in terms:
+            dfreq[term] = dfreq.get(term, 0) + 1
+    w = {
+        i: {
+            term: (c / sum(terms.values())) * (float(n + 1) / (dfreq[term] + 1))
+            for term, c in terms.items()
+        }
+        for i, terms in tf.items()
+    }
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc += x
+        return acc
+
+    norm = {i: math.sqrt(fold(v * v for _, v in sorted(ws.items()))) for i, ws in w.items()}
+    want = []
+    for a in sorted(w):
+        for b in sorted(w):
+            shared = sorted(set(w[a]) & set(w[b]))
+            if a < b and shared:
+                cos = fold(w[a][t] * w[b][t] for t in shared) / (norm[a] * norm[b])
+                if cos >= 0.2:
+                    want.append((a, b, len(shared), cos))
+    got = sorted(tuple(r) for r in pairs.collect())
+    assert got == want and len(got) >= 2
+
+
 def test_token_stats_and_quality(spark):
     docs = _docs(spark)
     st = {r.id: r for r in tx.token_stats(docs).collect()}

@@ -467,8 +467,8 @@ def _facade_bq_serving_hd_df(spark, sf_dir):
 
 def _facade_bsp_search_df(spark, sf_dir):
     """One `search` call's full plan over a tiny all-compacted 'bsp'
-    store: the one-row query panel is a driver-side local table, never
-    a Python-parallelized RDD."""
+    store: the query vector is an inlined literal, so the plan is the
+    text scan and the exact distance filter alone."""
     return _tiny_store(spark, "bsp").search([0.1] * 8, 0.6)
 
 
@@ -501,12 +501,15 @@ def _facade_mips_knn_dot_df(spark, sf_dir):
 FACADE_CHECKS = {
     "facade_bsp_search_serving": (
         _facade_bsp_search_df,
-        ["LocalTableScan"],
-        ["Scan ExistingRDD", "BatchEvalPython", "ArrowEvalPython"],
-        "facade 'bsp' search: the query panel is a LocalTableScan, "
-        "never a `Scan ExistingRDD` over a Python-parallelized list "
-        "(that scan costs a Python-worker task per default-parallelism "
-        "slice on every call)",
+        ["/s/text]"],
+        ["Scan ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
+         "BroadcastNestedLoopJoin", "IdentityBroadcastMode", "Exchange",
+         "LocalTableScan"],
+        "facade 'bsp' search: one query is an inlined literal, so the "
+        "plan is the text scan alone — no query table (neither a "
+        "`Scan ExistingRDD` over a Python-parallelized list nor a "
+        "broadcast LocalTableScan, which under AQE is a Spark job of "
+        "its own) and no exchange: one job per call",
     ),
     "facade_ivf_search_serving": (
         _facade_ivf_search_df,
@@ -531,15 +534,18 @@ FACADE_CHECKS = {
     ),
     "facade_mips_knn_dot_serving": (
         _facade_mips_knn_dot_df,
-        ["mips_index/vectors"],
+        ["mips_index/vectors", "PartitionFilters: [cell#",
+         "TakeOrderedAndProject"],
         ["mips_index/centroids", "mips_index/radius",
          "mips_index/mips_meta", "BatchEvalPython", "ArrowEvalPython",
-         "Scan ExistingRDD"],
-        "facade 'mips' knn_dot: the serving plan scans the stored "
-        "layout only — centroids/radius/m2 are cached driver values "
-        "(the round-12 no-per-call-metadata-read rule, pinned in CI); "
-        "query and centroid frames are local tables, not "
-        "Python-parallelized RDDs",
+         "Scan ExistingRDD", "BroadcastNestedLoopJoin",
+         "IdentityBroadcastMode", "Exchange", "LocalTableScan"],
+        "facade 'mips' knn_dot: the probe cells are picked on the "
+        "driver from the cached centroids, so the plan scans the stored "
+        "layout alone under a static `cell IN (...)` partition filter, "
+        "the query is an inlined literal, and the global top-k is a "
+        "TakeOrderedAndProject — no metadata parquet, no query or "
+        "centroid table, no exchange: one job per call",
     ),
     "facade_bq_serving_hd": (
         _facade_bq_serving_hd_df,

@@ -202,6 +202,7 @@ class VectorDatabase:
         self._memo: dict = {}
         self._cache_epoch: tuple | None = None
         self._fresh_depth = 0
+        self._epoch_handle = None
 
     def _invalidate_local(self) -> None:
         self._memo = {}
@@ -226,10 +227,17 @@ class VectorDatabase:
         self._invalidate_local()
         self._bump_epoch()
 
-    @property
-    def _epoch_path(self):
-        jvm = self.spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(f"{self.root}/_vds_epoch")
+    def _epoch_fs(self):
+        """The epoch marker's Hadoop ``(Path, FileSystem)``, resolved
+        once per instance: every JVM class lookup is a py4j round trip,
+        and the marker is stat'ed on every serving call."""
+        if self._epoch_handle is None:
+            jp = self.spark._jvm.org.apache.hadoop.fs.Path(
+                f"{self.root}/_vds_epoch"
+            )
+            fs = jp.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            self._epoch_handle = (jp, fs)
+        return self._epoch_handle
 
     def _bump_epoch(self) -> None:
         """Rewrite ``{root}/_vds_epoch`` — one tiny FS write per
@@ -254,8 +262,7 @@ class VectorDatabase:
         import warnings
 
         try:
-            jp = self._epoch_path
-            fs = jp.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            jp, fs = self._epoch_fs()
             try:
                 old_len = int(fs.getFileStatus(jp).getLen())
             except Exception:
@@ -282,8 +289,7 @@ class VectorDatabase:
 
     def _epoch_token(self) -> tuple | None:
         try:
-            jp = self._epoch_path
-            fs = jp.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            jp, fs = self._epoch_fs()
             st = fs.getFileStatus(jp)
             return (st.getModificationTime(), st.getLen())
         except Exception:
@@ -588,13 +594,7 @@ class VectorDatabase:
             for i, d in enumerate(_centroid_dists(q, cents))
             if d <= bound + rad.get(i, 0.0) + 1e-9
         ]
-        if not cells:
-            return local_frame(self.spark, [], "text_id long")
-        return (
-            self._ann_vectors()
-            .where(F.col("cell").isin(cells))
-            .select(F.col("id").alias("text_id"))
-        )
+        return _in_cells(self._ann_vectors(), cells).selectExpr("id AS text_id")
 
     # -- 'bq' (round-8 verdict item 5; cells round-9 item 1) ---------------
     def _bq_meta(self) -> dict:
@@ -749,11 +749,9 @@ class VectorDatabase:
         elif use_cells and self.bq_route == "auto":
             use_cells = self._codes_dir_bytes() >= BQ_CELL_ROUTE_MIN_BYTES
         if use_cells:
-            ranked = sorted(
-                (d, i) for i, d in enumerate(_centroid_dists(q, cents))
+            codes = _in_cells(
+                codes, _probe_cells(q, cents, max(1, int(self.bq_nprobe)))
             )
-            probe = [i for _d, i in ranked[: max(1, int(self.bq_nprobe))]]
-            codes = codes.where(F.col("cell").isin(probe))
         if self.bq_scoring == "asym":
             # asymmetric candidate ranking (round-10 verdict item 4,
             # the facade spelling): score = sum_i qw_i*(2*bit_i - 1)
@@ -1138,9 +1136,9 @@ class VectorDatabase:
         if t is not None:
             from vector_database_spark.functions.vector import linf_distance
 
-            q = F.lit([float(x) for x in vector]).cast("array<double>")
+            q = [float(x) for x in vector]
             out = out.unionByName(
-                t.where(linf_distance(F.col("vector"), q) <= F.lit(float(domain)))
+                t.where(linf_distance("vector", q) <= F.lit(float(domain)))
                 .select("doc_id", "text_id")
             )
         return out
@@ -1173,7 +1171,7 @@ class VectorDatabase:
             # doc_id, vector, metadata...) before any rename, so one
             # predicate spells the same on the indexed and tail sides
             txt = txt.where(pred)
-        vecs = txt.select("doc_id", F.col("text_id").alias("id"), "vector")
+        vecs = txt.selectExpr("doc_id", "text_id AS id", "vector")
         if doc_id is not None:
             vecs = vecs.where(F.col("doc_id") == doc_id)
         if self._ann is not None:
@@ -1184,23 +1182,19 @@ class VectorDatabase:
                 "text_id", "id"
             )
             res = brute_force_search(
-                vecs.join(cand, "id", "left_semi").select("id", "vector"),
-                [(0, vector)],
-                domain,
-            ).select(F.col("id").alias("text_id"), "dist")
+                vecs.join(cand, "id", "left_semi"), [(0, vector)], domain
+            ).selectExpr("id AS text_id", "dist")
         else:
             res = _search(
                 self._index_named(), vecs, [(0, vector)], domain, doc_id=doc_id
-            ).select(F.col("id").alias("text_id"), "dist")
+            ).selectExpr("id AS text_id", "dist")
         t = self._tail_scoped(doc_id)
         if t is not None:
             if pred is not None:
                 t = t.where(pred)
             tail_hits = brute_force_search(
-                t.select(F.col("text_id").alias("id"), "vector"),
-                [(0, vector)],
-                domain,
-            ).select(F.col("id").alias("text_id"), "dist")
+                t, [(0, vector)], domain, id_col="text_id"
+            ).selectExpr("id AS text_id", "dist")
             res = res.unionByName(tail_hits)
         return res
 
@@ -1264,10 +1258,9 @@ class VectorDatabase:
 
     @_served
     def brute_force(self, vector: list[float], domain: float) -> DataFrame:
-        vecs = self.text().select(F.col("text_id").alias("id"), "vector")
-        return brute_force_search(vecs, [(0, vector)], domain).select(
-            F.col("id").alias("text_id"), "dist"
-        )
+        return brute_force_search(
+            self.text(), [(0, vector)], domain, id_col="text_id"
+        ).selectExpr("id AS text_id", "dist")
 
     @_served
     def knn_dot(
@@ -1280,17 +1273,27 @@ class VectorDatabase:
         where=None,
     ) -> DataFrame:
         """Top-``k`` by INNER PRODUCT — the 'mips' backend's native
-        serving surface (round-9 verdict item 5): ``(text_id, ip,
-        rank)``, ip the exact dot product. Indexed rows are served
-        off the stored MIPS layout (`ann.mips_knn(assigned=)` — probe
-        ``nprobe`` augmented-nearest cells, exact-dot rerank); tail
-        rows not yet in the layout are scored exactly and merged, so
-        the result set covers the whole store at every point of the
-        ingest lifecycle. The usual MIPS probe contract: a true
+        serving surface: ``(text_id, ip, rank)``, ip the exact dot
+        product, rank by ``(ip desc, text_id asc)``. Indexed rows are
+        served off the stored MIPS layout: the query picks its
+        ``nprobe`` augmented-nearest cells on the driver from the
+        cached centroids (`_probe_cells`, `ann._nearest_cells`' order)
+        and the layout is read ``cell IN (...)`` partition-pruned.
+        Tail rows not yet in the layout are scored exactly and merged,
+        so the result set covers the whole store at every point of
+        the ingest lifecycle. The query vector is an inlined literal
+        and the cut is one global window, which Spark plans as a
+        ``TakeOrderedAndProject``: a warm call over an all-compacted
+        store is one Spark job. The usual MIPS probe contract: a true
         top-k row outside the probed cells is missed (``nprobe >=
-        n_cells`` is exact over indexed rows; ``ensure_k``/``where``
-        as in `ann.mips_knn`). Other backends raise — use `search`
-        for distance semantics."""
+        n_cells`` is exact over indexed rows). ``ensure_k`` doubles
+        nprobe on the driver until the probed cells hold ``k`` rows or
+        every cell is probed (one count job per round); ``where`` (a
+        Column or SQL string over the text table's columns) filters
+        the layout by a semi-join of the qualifying text ids, and the
+        tail directly. Rows equal `ann.mips_knn(assigned=)`'s, which
+        stays the path for multi-query panels. Other backends raise —
+        use `search` for distance semantics."""
         if self.index_type != "mips":
             raise ValueError(
                 "knn_dot serves the 'mips' backend only; this store is "
@@ -1298,16 +1301,10 @@ class VectorDatabase:
                 "distance semantics"
             )
         from vector_database_spark.functions.vector import dot as _dot
-        from pyspark.sql.window import Window as _W
 
-        np_ = int(nprobe) if nprobe is not None else min(4, self.n_cells)
-        qdf = local_frame(
-            self.spark,
-            [(0, [float(x) for x in vector])],
-            "qid long, qvec array<double>",
-        )
+        q = [float(x) for x in vector]
         pred = None if where is None else as_predicate(where)
-        out = None
+        parts = []
         if self._ann_exists():
             stored = self._ann_vectors()
             if pred is not None:
@@ -1317,34 +1314,43 @@ class VectorDatabase:
                     F.col("text_id").alias("id")
                 )
                 stored = stored.join(ok, "id", "left_semi")
-            m2 = self._mips_m2()
-            out = ann.mips_knn(
-                None, qdf, int(k),
-                assigned=stored, centroids=self._ann_centroids(), m2=m2,
-                nprobe=np_, ensure_k=ensure_k,
-            ).select(F.col("id").alias("text_id"), "ip", "rank")
+            # centroids live in the norm-augmented space, where the
+            # query's extra coordinate is 0
+            cents = self._ann_centroids()
+            np_ = int(nprobe) if nprobe is not None else min(4, self.n_cells)
+
+            def probed(n):
+                return _in_cells(stored, _probe_cells(q + [0.0], cents, n))
+
+            while (
+                ensure_k
+                and np_ < len(cents)
+                and probed(np_).limit(int(k)).count() < int(k)
+            ):
+                np_ = min(max(2 * np_, 1), len(cents))
+            parts.append(
+                probed(np_).select(
+                    F.col("id").alias("text_id"), _dot("vector", q).alias("ip")
+                )
+            )
         # the all-compacted common case skips the per-call tail
         # anti-join entirely (the `_tail_scoped` caching rule)
         t = self._tail_scoped(None) if self._ann_exists() else self.text()
-        if t is None:
-            # mips_knn already ranks the one query by (ip desc, id asc)
-            # with at most k rows: its rank is final, no second window
-            return out.select(
-                "text_id", "ip", F.col("rank").cast("long").alias("rank")
-            )
-        if pred is not None:
-            t = t.where(pred)
-        qlit = F.lit([float(x) for x in vector]).cast("array<double>")
-        hits = t.select("text_id", _dot(F.col("vector"), qlit).alias("ip"))
-        if out is not None:
-            hits = out.drop("rank").unionByName(hits)
-        w = _W.partitionBy(F.lit(1)).orderBy(
-            F.col("ip").desc(), F.col("text_id").asc()
-        )
+        if t is not None:
+            if pred is not None:
+                t = t.where(pred)
+            parts.append(t.select("text_id", _dot("vector", q).alias("ip")))
+        hits = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        # one global window over the (ip desc, text_id) order: planned
+        # as TakeOrderedAndProject, no exchange
         return (
-            hits.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(k))
-            .select("text_id", "ip", F.col("rank").cast("long").alias("rank"))
+            hits.selectExpr(
+                "text_id",
+                "ip",
+                "row_number() OVER (ORDER BY ip DESC, text_id ASC) AS rank",
+            )
+            .where(f"rank <= {int(k)}")
+            .selectExpr("text_id", "ip", "CAST(rank AS BIGINT) AS rank")
         )
 
     @_served
@@ -1417,11 +1423,36 @@ class VectorDatabase:
 
 
 def _centroid_dists(q: list, cents: list) -> list[float]:
-    """Driver-side L2 distance from one query to each centroid."""
-    return [
-        math.sqrt(sum((a - b) * (a - b) for a, b in zip(q, c)))
-        for c in cents
-    ]
+    """Driver-side L2 distance from one query to each centroid, summed
+    left to right from 0.0 like `functions.vector.euclidean`'s fold,
+    so each distance has the bits Spark computes."""
+    out = []
+    for c in cents:
+        acc = 0.0
+        for a, b in zip(q, c):
+            acc += (a - b) * (a - b)
+        out.append(math.sqrt(acc))
+    return out
+
+
+def _in_cells(df: DataFrame, cells: list[int]) -> DataFrame:
+    """``df`` cut to the listed cells by one SQL ``IN`` filter, which
+    the cell-partitioned layout reads as a partition filter."""
+    if not cells:
+        return df.where("false")
+    return df.where(f"cell IN ({', '.join(str(int(c)) for c in cells)})")
+
+
+def _probe_cells(q: list, cents: list, nprobe: int) -> list[int]:
+    """The ``nprobe`` cells nearest to one query, in `ann._nearest_cells`'
+    ``(cdist, cell)`` order (NaN distances last, as Spark sorts them),
+    chosen on the driver from the cached centroids."""
+    d = _centroid_dists(q, cents)
+    order = sorted(
+        range(len(d)),
+        key=lambda i: (math.isnan(d[i]), 0.0 if math.isnan(d[i]) else d[i], i),
+    )
+    return order[: max(0, int(nprobe))]
 
 
 def _id_vectors(df: DataFrame) -> DataFrame:

@@ -372,7 +372,9 @@ def _nearest_cells(
 ) -> DataFrame:
     """``(*keep, cell)`` for each query's ``nprobe`` nearest cells:
     queries x the broadcast centroid frame, euclidean from ``qvec``,
-    ranked per qid by ``(cdist, cell)`` — the lowest cell wins ties."""
+    ranked per qid by ``(cdist, cell)`` — the lowest cell wins ties.
+    The facade's one-query twin is `api._probe_cells`, which picks the
+    same cells on the driver."""
     w = Window.partitionBy("qid").orderBy(
         F.col("cdist").asc(), F.col("cell").asc()
     )

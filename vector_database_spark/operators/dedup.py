@@ -1376,7 +1376,10 @@ def tfidf_cosine_pairs(
     tf = ex.groupBy("id", "term").agg(F.count(F.lit(1)).alias("c"))
     doc_len = tf.groupBy("id").agg(F.sum("c").alias("n_toks"))
     doc_freq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.select(id_col).distinct().count()
+    # the corpus size enters the idf as a scalar subquery, not an eager
+    # count: the operator runs no action of its own (the lazy pin below
+    # still runs w's shuffle stages when it is built, as AQE does)
+    n_docs = df.select(id_col).distinct().agg(F.count(F.lit(1))).scalar()
     w = (
         tf.join(doc_len, "id")
         .join(doc_freq, "term")
@@ -1386,7 +1389,7 @@ def tfidf_cosine_pairs(
             "df",
             (
                 (F.col("c") / F.col("n_toks"))
-                * (F.lit(float(n_docs + 1)) / (F.col("df") + F.lit(1)))
+                * ((n_docs + F.lit(1)).cast("double") / (F.col("df") + F.lit(1)))
             ).alias("w"),
         )
         .localCheckpoint(eager=False)

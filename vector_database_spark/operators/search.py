@@ -59,7 +59,7 @@ from vector_database_spark.functions.vector import (
     linf_distance,
     normalize,
 )
-from vector_database_spark.schemas import as_predicate, local_frame
+from vector_database_spark.schemas import as_predicate, local_frame, sql_ident
 
 # Metric -> distance over the vector (`_vec`) and query (`qvec`)
 # columns, smaller is nearer: cosine as 1 - cos, and dot (maximum
@@ -73,12 +73,17 @@ _DISTANCES = {
 }
 
 
-def _distance(metric: str, allowed: tuple[str, ...]) -> Column:
+def _distance(
+    metric: str, allowed: tuple[str, ...], q: list | None = None
+) -> Column:
     """`metric`'s distance column; `allowed` names the metrics the
-    calling operator's contract accepts."""
+    calling operator's contract accepts. ``q``, one listed query
+    vector, is inlined as a literal in place of the ``qvec`` column."""
     if metric not in allowed:
         raise ValueError(f"unknown metric {metric!r}")
-    return _DISTANCES[metric](F.col("_vec"), F.col("qvec"))
+    if q is None:
+        return _DISTANCES[metric](F.col("_vec"), F.col("qvec"))
+    return _DISTANCES[metric]("_vec", [float(x) for x in q])
 
 
 def _pruning(metric: str) -> str:
@@ -757,8 +762,10 @@ def _scoped_vectors(
     doc_col = doc_id is not None and "doc_id" in vectors_df.columns
     if doc_col:
         vectors_df = vectors_df.where(F.col("doc_id") == F.lit(doc_id))
-    vecs = vectors_df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vector_col).alias("_vec")
+    # SQL text: this projection is on every facade search's path
+    vecs = vectors_df.selectExpr(
+        f"CAST({sql_ident(id_col)} AS BIGINT) AS id",
+        f"{sql_ident(vector_col)} AS _vec",
     )
     if doc_id is not None and not doc_col:
         members = (
@@ -949,16 +956,27 @@ def brute_force_search(
     ``(qid, id, dist)`` for every vector with distance <= domain under
     `metric` ('euclidean' | 'chebyshev'). Also the unselective-domain
     fast path `search(strategy='auto')` routes to — one codegen scan,
-    no candidate join."""
-    dist = _distance(metric, ("euclidean", "chebyshev"))
-    qdf = _as_queries_df(vectors_df, queries)
-    return (
-        _scoped_vectors(vectors_df, None, None, id_col, vector_col)
-        .crossJoin(F.broadcast(qdf))
-        .withColumn("dist", dist)
-        .where(F.col("dist") <= F.lit(float(domain)))
-        .select("qid", "id", "dist")
-    )
+    no candidate join.
+
+    A panel of ONE listed query — every facade `search` — inlines the
+    query vector and its qid as literals (`functions.vector`'s list
+    operand): the plan is the vector scan alone, one Spark job. Larger
+    panels cross-join the broadcast query table; under AQE that
+    broadcast is a job of its own, even over a one-row local table."""
+    allowed = ("euclidean", "chebyshev")
+    vecs = _scoped_vectors(vectors_df, None, None, id_col, vector_col)
+    if isinstance(queries, list) and len(queries) == 1:
+        ((qid, q),) = queries
+        out = vecs.select(
+            F.expr(f"CAST({int(qid)} AS BIGINT) AS qid"),
+            "id",
+            _distance(metric, allowed, q).alias("dist"),
+        )
+    else:
+        out = vecs.crossJoin(
+            F.broadcast(_as_queries_df(vectors_df, queries))
+        ).select("qid", "id", _distance(metric, allowed).alias("dist"))
+    return out.where(F.col("dist") <= F.lit(float(domain)))
 
 
 def _grouped_topk(

@@ -95,6 +95,14 @@ def as_predicate(where) -> Column:
     return F.expr(where) if isinstance(where, str) else where
 
 
+def sql_ident(name: str) -> str:
+    """A column name as SQL text that resolves as ``F.col(name)`` does:
+    each dotted part backtick-quoted. Serving paths spell projections
+    and filters as SQL strings (``selectExpr``, ``where(str)``): one
+    py4j round trip per call instead of one per Column node."""
+    return ".".join(f"`{p.replace('`', '``')}`" for p in name.split("."))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from a scale-factor directory."""
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
