@@ -356,6 +356,80 @@ def test_ivf_assign_expr_matches_blas_kernel(spark, embeddings):
     assert len(expr_cells) == vecs.count()
 
 
+def test_nearest_centroid_twins_agree_on_exact_ties(spark):
+    """The four nearest-centroid choosers pick the same cells in the
+    same order for every nprobe: the BLAS kernel (`_assign_cells`),
+    the row expression (`ivf_assign_expr`), the query-panel crossJoin
+    (`_nearest_cells`) and the driver fold (`_probe_cells`). Integer
+    grid vectors and centroids make BLAS d2 and the left-to-right fold
+    both exact, so exact distance ties occur (a duplicated centroid
+    ties on every row); the lowest cell must win each."""
+    import random
+    from functools import reduce
+
+    from vector_database_spark.operators.ann import (
+        _assign_cells,
+        _centroid_frame,
+        _nearest_cells,
+        _probe_cells,
+        ivf_assign_expr,
+    )
+
+    rng = random.Random(5)
+    cents = [[float(rng.randint(-2, 2)) for _ in range(3)] for _ in range(5)]
+    cents.append(list(cents[1]))
+    n_cells = len(cents)
+    rows = [(i, [float(rng.randint(-3, 3)) for _ in range(3)]) for i in range(80)]
+    vecs = spark.createDataFrame(rows, "id long, vector array<double>")
+    qdf = spark.createDataFrame(rows, "qid long, qvec array<double>")
+    sweep = range(1, n_cells + 1)
+
+    # the driver fold is the reference order; check its tie rule first
+    want = {}
+    n_ties = 0
+    for i, v in rows:
+        ranked = _probe_cells(v, cents)
+        for (d0, c0), (d1, c1) in zip(ranked, ranked[1:]):
+            assert d0 < d1 or (d0 == d1 and c0 < c1), (i, ranked)
+            n_ties += d0 == d1
+        want[i] = [c for _, c in ranked]
+        assert [c for _, c in _probe_cells(v, cents, 2)] == want[i][:2]
+    assert n_ties >= len(rows)
+
+    def swept(build):
+        return reduce(
+            lambda a, b: a.unionByName(b),
+            [build(p).withColumn("np", F.lit(p)) for p in sweep],
+        )
+
+    for name, build in (
+        ("kernel", lambda p: _assign_cells(vecs, cents, p)),
+        ("expr", lambda p: ivf_assign_expr(vecs, cents, nprobe=p)),
+    ):
+        all_p = swept(build).collect()
+        for p in sweep:
+            got = {}
+            for r in sorted(
+                (r for r in all_p if r["np"] == p), key=lambda r: r["pr"]
+            ):
+                got.setdefault(r["id"], []).append(r["cell"])
+            assert got == {i: w[:p] for i, w in want.items()}, (name, p)
+    near = swept(
+        lambda p: _nearest_cells(qdf, _centroid_frame(spark, cents), p)
+    ).collect()
+    for p in sweep:
+        got = {}
+        for r in near:
+            if r["np"] == p:
+                got.setdefault(r["qid"], set()).add(r["cell"])
+        assert got == {i: set(w[:p]) for i, w in want.items()}, ("crossJoin", p)
+    # nprobe=None attaches the member cell: the nprobe=1 choice
+    for df in (_assign_cells(vecs, cents), ivf_assign_expr(vecs, cents)):
+        assert {r["id"]: r["cell"] for r in df.collect()} == {
+            i: w[0] for i, w in want.items()
+        }
+
+
 def test_pq_encode_expr_matches_kernel(spark, embeddings):
     """a03's oracle-gated expression encoder must agree with the
     dgemm kernel (`pq_encode`) on the same codebooks. The two compute

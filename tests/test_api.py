@@ -1215,6 +1215,72 @@ def test_facade_freshness_contract(spark, monkeypatch):
     assert mips.text() is not mips.text()
 
 
+def test_epoch_marker_rewrite_failure_warns(spark):
+    """Failure injection into the epoch-marker protocol
+    (`_bump_epoch`) through a fake Hadoop ``(Path, FileSystem)``: a
+    rewrite that fails after a mutation deletes the marker, so a peer
+    reads no token and never serves a cache, and warns once; when the
+    delete fails too (raising, or returning false with the marker
+    still there), or the filesystem cannot even be resolved, the old
+    marker may survive and it still warns once."""
+    import warnings
+
+    class _Status:
+        def getLen(self):
+            return 40
+
+        def getModificationTime(self):
+            return 1
+
+    class _FakeFS:
+        def __init__(self, delete_fails):
+            self.marker, self.delete_fails = True, delete_fails
+
+        def exists(self, path):
+            return self.marker
+
+        def getFileStatus(self, path):
+            if not self.marker:
+                raise OSError("no such file")
+            return _Status()
+
+        def create(self, path, overwrite):
+            raise OSError("write refused")
+
+        def delete(self, path, recursive):
+            if self.delete_fails == "raise":
+                raise OSError("delete refused")
+            if self.delete_fails == "false":
+                return False
+            self.marker = False
+            return True
+
+    def unresolvable():
+        raise OSError("no filesystem")
+
+    root = tempfile.mkdtemp() + "/vdb"
+    for case in ("delete_ok", "raise", "false", "no_fs"):
+        fs = _FakeFS(delete_fails=case)
+        writer, peer = VectorDatabase(spark, root), VectorDatabase(spark, root)
+        writer._epoch_handle = peer._epoch_handle = ("_vds_epoch", fs)
+        if case == "no_fs":
+            writer._epoch_fs = unresolvable
+        assert peer._epoch_token() == (1, 40)
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            writer._bump_epoch()
+        msgs = [
+            str(w.message) for w in caught if w.category is RuntimeWarning
+        ]
+        assert len(msgs) == 1, (case, msgs)
+        if case == "delete_ok":
+            assert "marker deleted" in msgs[0]
+            assert peer._epoch_token() is None
+        else:
+            assert "refresh()" in msgs[0], msgs
+            assert peer._epoch_token() == (1, 40)
+
+
 def test_facade_ann_delete_documents_syncs_layout(spark):
     """Cascade delete on the ANN backends: the text rows of the
     deleted documents leave the store and the layout follows (the

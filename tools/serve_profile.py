@@ -78,14 +78,6 @@ def main() -> int:
         app_name="serve-profile", extra_conf={"spark.ui.enabled": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # PySpark captures the call site of each DataFrame-API call (extra
-    # JVM round trips per call) when its debugging flag is on. The flag
-    # is cached at the first API call of the process and reads False
-    # when that call finds no active session, which races the engine's
-    # warm-up thread; re-read it here, so every run counts the same calls
-    from pyspark.errors import utils as _errors_utils
-
-    _errors_utils._enable_debugging_cache = None
     data = (
         clusters(spark, n=a.n, dims=a.dims, n_clusters=24, seed=3)
         .select(

@@ -61,13 +61,3 @@ def word_shingles(text_col: Column | str, n: int = 3) -> Column:
         " ", *[F.element_at(toks, i + j) for j in range(n)]
     )
     return F.array_distinct(F.transform(idxs, gram))
-
-
-def shingles_sql(text_expr: str, n: int = 3) -> str:
-    """DuckDB rendering of `word_shingles` (n fixed at call time)."""
-    toks = f"regexp_split_to_array(lower(trim({text_expr})), '\\s+')"
-    parts = " || ' ' || ".join(f"toks[i+{j}]" if j else "toks[i]" for j in range(n))
-    return (
-        f"(SELECT list_distinct(list_transform(range(1, greatest(len(toks)-{n - 1},0)+1), "
-        f"i -> {parts})) FROM (SELECT {toks} AS toks))"
-    )

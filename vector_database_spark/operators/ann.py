@@ -260,8 +260,7 @@ def _cell_members(
 ) -> tuple[DataFrame, list[list[float]]]:
     """``(members, centroids)``: ``vv``'s (id, vector) rows with their
     ``cell`` — trained here when ``centroids`` is None (`ivf_build`),
-    assigned by the BLAS kernel (``method='dgemm'``) or the bit-exact
-    expression argmin (``'expr'``, the oracle path)."""
+    assigned by `_assign` otherwise."""
     if centroids is None:
         assigned, centroids = ivf_build(
             vv, n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows
@@ -270,41 +269,73 @@ def _cell_members(
             return assigned, centroids
     else:
         centroids = [[float(x) for x in c] for c in centroids]
-        if method == "dgemm":
-            return _assign_cells(vv, centroids), centroids
-    return ivf_assign_expr(vv, centroids), centroids
+    return _assign(vv, centroids, method), centroids
 
 
-def _assign_cells(vecs: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """Attach the nearest-centroid `cell` column.
+# --------------------------------------------------------------------------
+# Nearest-centroid selection: every IVF cell, probe set and PQ code is
+# picked here — by the numpy kernel (`_nearest_rows`, batched by
+# `_assign_cells`), the Catalyst row expression (`ivf_assign_expr`)
+# and, for query panels, the Spark crossJoin (`_nearest_cells`) or the
+# driver fold (`_probe_cells`). All four rank a row's centroids by
+# (distance, cell): the lowest cell wins ties.
+# --------------------------------------------------------------------------
 
-    Arrow-batched BLAS kernel: each batch computes the full
-    batch×cells squared-distance matrix as ‖x‖² − 2 X·Cᵀ + ‖c‖² and
-    takes the row argmin (first minimum — the same lowest-cell
-    tie-break as SQL ``array_position(array_min(...))``). The round-2
-    version evaluated an interpreted array-HOF distance per (row,
-    centroid) — the repo's own measured-8×-slow pattern — and fell
-    over at thousands of cells; one dgemm per batch doesn't.
-    """
+
+def _nearest_rows(X, C, nprobe: int = 1):
+    """Each row of ``X``'s ``nprobe`` nearest rows of ``C`` in
+    ascending ``(d2, index)`` order, an ``(len(X), nprobe)`` int
+    array. ``d2`` is the BLAS ‖x‖² − 2 X·Cᵀ + ‖c‖² (one dgemm); the
+    order is the first-minimum ``argmin`` at ``nprobe=1`` and a stable
+    argsort above, so the lowest index wins every tie."""
+    import numpy as np
+
+    d2 = (
+        (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T)
+        + (C * C).sum(axis=1)[None, :]
+    )
+    if nprobe == 1:
+        return d2.argmin(axis=1)[:, None]
+    return np.argsort(d2, axis=1, kind="stable")[:, :nprobe]
+
+
+def _assign_cells(
+    vecs: DataFrame, centroids: list[list[float]], nprobe: int | None = None
+) -> DataFrame:
+    """Nearest-centroid cells of ``vecs``' ``vector`` rows, one dgemm
+    per Arrow batch (`_nearest_rows`). ``nprobe=None`` attaches the
+    member ``cell`` to the input columns; an ``nprobe`` replicates
+    every row into its nprobe nearest cells with their rank ``pr``
+    (1 = nearest). The expression twin is `ivf_assign_expr`: BLAS d2
+    and its folds agree to an ulp, so the two can differ only at
+    exact centroid-distance ties (pytest-pinned on the gate fixtures
+    and on an exact integer grid)."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     cents = [[float(x) for x in c] for c in centroids]
-    out_schema = StructType(list(vecs.schema.fields) + [StructField("cell", IntegerType())])
+    take = 1 if nprobe is None else min(int(nprobe), len(cents))
+    extra = ["cell"] if nprobe is None else ["cell", "pr"]
+    out_schema = StructType(
+        list(vecs.schema.fields) + [StructField(c, IntegerType()) for c in extra]
+    )
+    nearest = _nearest_rows  # resolved on executors by package import
 
     def assign(batches):
         import numpy as np
 
         C = np.asarray(cents, dtype=np.float64)
-        c2 = (C * C).sum(axis=1)
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.asarray(
                 [np.asarray(v, dtype=np.float64) for v in pdf["vector"]]
             )
-            d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c2[None, :]
-            out = pdf.copy()
-            out["cell"] = d2.argmin(axis=1).astype("int32")
+            cells = nearest(X, C, take)
+            out = pdf.iloc[np.repeat(np.arange(len(pdf)), take)]
+            out = out.reset_index(drop=True)
+            out["cell"] = cells.ravel().astype("int32")
+            if nprobe is not None:
+                out["pr"] = np.tile(np.arange(1, take + 1, dtype="int32"), len(pdf))
             yield out
 
     return vecs.mapInPandas(assign, out_schema)
@@ -314,38 +345,58 @@ def ivf_assign_expr(
     vecs: DataFrame,
     centroids: list[list[float]],
     *,
+    nprobe: int | None = None,
     id_col: str = "id",
     vector_col: str = "vector",
 ) -> DataFrame:
-    """Expression-path twin of `_assign_cells`: nearest-centroid cell
-    as ONE Catalyst projection — an array of per-centroid euclidean
-    fold expressions plus ``array_position(array_min)`` argmin
-    (first-min = lowest-cell tie-break, the kernel's rule). Every
-    float op is the left-to-right zip_with/aggregate fold, so a DuckDB
-    ``list_transform``/``list_sum`` replay matches BIT-FOR-BIT — this
-    is a01's oracle-gated path. Use `_assign_cells` (one dgemm per
-    Arrow batch) when cells x dims is large: the interpreted-HOF cost
-    here is cells x dims folds per row."""
-    dists = F.array(
-        *[
-            euclidean(
-                F.col("vector"),
-                F.array(*[F.lit(float(x)) for x in c]),
-            )
-            for c in centroids
-        ]
-    )
-    return (
-        vecs.select(
-            F.col(id_col).alias("id"), F.col(vector_col).alias("vector")
+    """Expression twin of `_assign_cells` (same ``nprobe`` contract,
+    ``id_col``/``vector_col`` renamed to id/vector): ONE Catalyst
+    projection sorts the per-centroid ``(euclidean, cell)`` structs of
+    one distance array, so the lowest cell wins ties. Every float op is
+    the left-to-right zip_with/aggregate fold, so a DuckDB
+    ``list_transform``/``list_sum`` replay selects the same cells
+    BIT-FOR-BIT — a01's and g07's oracle-gated path. Use the kernel
+    when cells x dims is large: the interpreted-HOF cost here is
+    cells x dims folds per row."""
+    ranked = F.array_sort(
+        F.transform(
+            F.array(
+                *[
+                    euclidean(
+                        F.col("vector"),
+                        F.array(*[F.lit(float(x)) for x in c]),
+                    )
+                    for c in centroids
+                ]
+            ),
+            lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
         )
-        .withColumn("_ds", dists)
-        .withColumn(
-            "cell",
-            (F.expr("array_position(_ds, array_min(_ds))") - 1).cast("int"),
-        )
-        .drop("_ds")
     )
+    base = vecs.select(
+        F.col(id_col).alias("id"),
+        F.col(vector_col).alias("vector"),
+        *[c for c in vecs.columns if c not in (id_col, vector_col)],
+    )
+    if nprobe is None:
+        return base.withColumn("cell", ranked[0]["cell"])
+    return base.select(
+        "*", F.posexplode(F.slice(ranked, 1, int(nprobe))).alias("_p", "_c")
+    ).select(
+        *base.columns,
+        F.col("_c.cell").alias("cell"),
+        (F.col("_p") + 1).alias("pr"),
+    )
+
+
+def _assign(
+    vv: DataFrame, centroids, method: str, nprobe: int | None = None
+) -> DataFrame:
+    """The ``method`` choice of every IVF-family build: the bit-exact
+    expression (``'expr'``, the oracle path) or the BLAS kernel
+    (``'dgemm'``, the bulk path); ``nprobe`` as in `_assign_cells`."""
+    if method == "expr":
+        return ivf_assign_expr(vv, centroids, nprobe=nprobe)
+    return _assign_cells(vv, centroids, nprobe)
 
 
 # --------------------------------------------------------------------------
@@ -373,8 +424,8 @@ def _nearest_cells(
     """``(*keep, cell)`` for each query's ``nprobe`` nearest cells:
     queries x the broadcast centroid frame, euclidean from ``qvec``,
     ranked per qid by ``(cdist, cell)`` — the lowest cell wins ties.
-    The facade's one-query twin is `api._probe_cells`, which picks the
-    same cells on the driver."""
+    Its one-query twin is `_probe_cells`, which picks the same cells
+    on the driver."""
     w = Window.partitionBy("qid").orderBy(
         F.col("cdist").asc(), F.col("cell").asc()
     )
@@ -385,6 +436,29 @@ def _nearest_cells(
         .where(F.col("_r") <= int(nprobe))
         .select(*keep, "cell")
     )
+
+
+def _probe_cells(
+    q: list, cents: list, nprobe: int | None = None
+) -> list[tuple[float, int]]:
+    """``(dist, cell)`` of one query's ``nprobe`` nearest cells (all
+    when None) in `_nearest_cells`' ``(cdist, cell)`` order, NaN
+    distances last as Spark sorts them — chosen on the driver. Each
+    distance is summed left to right from 0.0 like
+    `functions.vector.euclidean`'s fold, so it has the bits Spark
+    computes."""
+    dists = []
+    for c in cents:
+        acc = 0.0
+        for a, b in zip(q, c):
+            acc += (a - b) * (a - b)
+        dists.append(math.sqrt(acc))
+    nan = [math.isnan(d) for d in dists]
+    order = sorted(
+        range(len(dists)), key=lambda i: (nan[i], 0.0 if nan[i] else dists[i], i)
+    )
+    cut = len(order) if nprobe is None else max(0, int(nprobe))
+    return [(dists[i], i) for i in order[:cut]]
 
 
 def _topk(
@@ -859,6 +933,7 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
     vcol = vector_col
     dims_total = sum(len(book[0]) for book in books)
     bounds = _subspace_bounds(dims_total, len(books))
+    nearest = _nearest_rows  # resolved on executors by package import
 
     def encode(batches):
         import numpy as np
@@ -870,9 +945,7 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
             X = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vcol]])
             codes = np.empty((len(X), len(Cs)), dtype=np.uint8)
             for j, ((lo, hi), C) in enumerate(zip(bounds, Cs)):
-                S = X[:, lo:hi]
-                d2 = (S * S).sum(axis=1)[:, None] - 2.0 * (S @ C.T) + (C * C).sum(axis=1)[None, :]
-                codes[:, j] = d2.argmin(axis=1).astype(np.uint8)
+                codes[:, j] = nearest(X[:, lo:hi], C)[:, 0].astype(np.uint8)
             out = pdf.copy()
             out["code"] = [c.tobytes() for c in codes]
             yield out
@@ -1091,8 +1164,7 @@ def ivfadc_build(
     )
     C = _lloyd(X, n_cells, iters)
     # assign the (local) sample and train residual codebooks locally
-    d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
-    R = X - C[d2.argmin(axis=1)]
+    R = X - C[_nearest_rows(X, C)[:, 0]]
     bounds = _subspace_bounds(dims, m)
     books = [
         [[float(v) for v in c] for c in _lloyd(R[:, lo:hi].copy(), n_centroids, iters)]
@@ -1124,24 +1196,22 @@ def ivfadc_encode(
         + [StructField("cell", IntegerType()), StructField("code", BinaryType())]
     )
 
+    nearest = _nearest_rows  # resolved on executors by package import
+
     def fused(batches):
         import numpy as np
 
         CM = np.asarray(cents, dtype=np.float64)
-        c2 = (CM * CM).sum(axis=1)
         Cs = [np.asarray(b, dtype=np.float64) for b in books]
         for pdf in batches:
             if not len(pdf):
                 continue
             Xb = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vector"]])
-            db = (Xb * Xb).sum(axis=1)[:, None] - 2.0 * (Xb @ CM.T) + c2[None, :]
-            cell = db.argmin(axis=1)
+            cell = nearest(Xb, CM)[:, 0]
             Rb = Xb - CM[cell]
             codes = np.empty((len(Xb), len(Cs)), dtype=np.uint8)
             for j, ((lo, hi), Cj) in enumerate(zip(bounds, Cs)):
-                S = Rb[:, lo:hi]
-                dj = (S * S).sum(axis=1)[:, None] - 2.0 * (S @ Cj.T) + (Cj * Cj).sum(axis=1)[None, :]
-                codes[:, j] = dj.argmin(axis=1).astype(np.uint8)
+                codes[:, j] = nearest(Rb[:, lo:hi], Cj)[:, 0].astype(np.uint8)
             out = pdf.copy()
             out["cell"] = cell.astype("int32")
             out["code"] = [c.tobytes() for c in codes]
@@ -1247,13 +1317,9 @@ def ivfadc_knn(
     import numpy as np
 
     CM = np.asarray(centroids, dtype=np.float64)
-    qd2 = {
-        qid: ((CM - np.asarray(qv, dtype=np.float64)[None, :]) ** 2).sum(axis=1)
-        for qid, qv in panel
-    }
     probes = {
-        qid: [int(c) for c in np.lexsort((np.arange(len(d2)), d2))[:nprobe]]
-        for qid, d2 in qd2.items()
+        qid: [c for _, c in _probe_cells(qv, centroids, nprobe)]
+        for qid, qv in panel
     }
     cells = sorted({c for ps in probes.values() for c in ps})
     books = [[list(map(float, c)) for c in book] for book in codebooks]
@@ -2014,14 +2080,10 @@ def bq_build(
         )
     else:
         centroids = [[float(x) for x in c] for c in centroids]
-    if assign_method == "expr":
-        asg = ivf_assign_expr(vecs, centroids)
-    else:
-        asg = _assign_cells(vecs, centroids)
     codes = bq_encode(
-        asg, dim=dim, hd_blocks=hd_blocks, hd_seed=hd_seed,
-        hd_scale=hd_scale, encode_method=encode_method,
-        extra_cols=["cell"],
+        _assign(vecs, centroids, assign_method), dim=dim,
+        hd_blocks=hd_blocks, hd_seed=hd_seed, hd_scale=hd_scale,
+        encode_method=encode_method, extra_cols=["cell"],
     )
     return codes, centroids
 
@@ -2618,8 +2680,6 @@ def mips_knn(
     knn_join(layout_path=) store-once rule; per-call rebuild was
     measured SLOWER than the exact scan at 1M×64 —
     tools/mips_probe.py)."""
-    from vector_database_spark.functions.vector import euclidean
-
     if method not in ("expr", "dgemm"):
         raise ValueError(f"method must be expr|dgemm, got {method!r}")
     if assigned is not None:
@@ -2648,38 +2708,17 @@ def mips_knn(
     )
     if m2 is None:
         m2 = mips_max_norm2(vv)
-    av = vv.withColumn("avec", mips_augment("vector", m2))
     if centroids is None:
         centroids = _train_centroids(
-            av.select("id", F.col("avec").alias("vector")), n_cells=n_cells,
-            iters=iters, seed=seed, train_rows=train_rows, what="mips_knn",
+            vv.select("id", mips_augment("vector", m2).alias("vector")),
+            n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows,
+            what="mips_knn",
         )
     else:
         centroids = [[float(x) for x in c] for c in centroids]
-    if method == "dgemm":
-        assigned = _mips_assign(vv, m2, centroids)
-    else:
-        dists = F.array(
-            *[
-                euclidean(
-                    F.col("avec"), F.array(*[F.lit(float(x)) for x in c])
-                )
-                for c in centroids
-            ]
-        )
-        assigned = (
-            av.withColumn("_ds", dists)
-            .withColumn(
-                "cell",
-                (F.expr("array_position(_ds, array_min(_ds))") - 1).cast(
-                    "int"
-                ),
-            )
-            .select("id", "vector", "cell")
-        )
     return _mips_serve(
-        assigned, centroids, queries_df, k, nprobe, where=where,
-        ensure_k=ensure_k,
+        _mips_assign(vv, m2, centroids, method), centroids, queries_df, k,
+        nprobe, where=where, ensure_k=ensure_k,
     )
 
 
@@ -2763,15 +2802,17 @@ def mips_build(
     return _mips_assign(vv, m2, centroids), centroids, m2
 
 
-def _mips_assign(vv: DataFrame, m2: float, centroids) -> DataFrame:
-    """``(id, vector, cell)``: cells from the BLAS kernel in the
+def _mips_assign(
+    vv: DataFrame, m2: float, centroids, method: str = "dgemm"
+) -> DataFrame:
+    """``(id, vector, cell)``: cells assigned (`_assign`) in the
     norm-augmented space, the ORIGINAL vectors kept."""
     av = vv.select(
         "id",
         mips_augment("vector", m2).alias("vector"),
         F.col("vector").alias("ovec"),
     )
-    return _assign_cells(av, centroids).select(
+    return _assign(av, centroids, method).select(
         "id", F.col("ovec").alias("vector"), "cell"
     )
 
@@ -2981,7 +3022,6 @@ def knn_join(
     from vector_database_spark.operators.graph import (
         _blocked_knn,
         _blocked_narrow,
-        _blocked_probes,
         _CELL_CAP,
         _cell_counts,
         _collapse_dup_vectors,
@@ -3051,7 +3091,7 @@ def knn_join(
         ).select(F.col("_m").alias("qid"), "id", "dist", "rank")
 
     def _ranked(qsub: DataFrame, np_: int) -> DataFrame:
-        probes = _blocked_probes(qsub, centroids, np_, method)
+        probes = _assign(qsub, centroids, method, np_)
         return _hits(_rank_topk_edges(
             _blocked_narrow(
                 members, probes, k, method, cnts, cell_cap=cap,

@@ -452,105 +452,6 @@ def _rank_beam(cand: DataFrame, qb: DataFrame, ef: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def probe_cells_expr(
-    vecs: DataFrame,
-    centroids: list[list[float]],
-    nprobe: int,
-    *,
-    id_col: str = "id",
-    vector_col: str = "vector",
-) -> DataFrame:
-    """Replicate every row into its ``nprobe`` nearest cells —
-    expression path: per-centroid distances are the bit-exact
-    left-to-right L2 folds (`functions.vector.euclidean` over literal
-    centroid arrays, the `ann.ivf_assign_expr` shape), ranked
-    ``row_number() OVER (PARTITION BY id ORDER BY dist, cell)`` — so
-    a SQL replay selects the IDENTICAL probe set (this is g07's
-    oracle-gated twin of `_probe_cells_kernel`). Returns
-    ``(id, vector, cell, pr)`` with pr in 1..nprobe; pr=1 is the
-    primary (member) cell. Cost is cells x dims interpreted folds per
-    row — the kernel path is the bulk-build operating point."""
-    from vector_database_spark.functions.vector import euclidean
-
-    dists = F.array(
-        *[
-            euclidean(
-                F.col("vector"), F.array(*[F.lit(float(x)) for x in c])
-            )
-            for c in centroids
-        ]
-    )
-    base = vecs.select(
-        F.col(id_col).cast("long").alias("id"),
-        F.col(vector_col).cast("array<double>").alias("vector"),
-    ).withColumn("_ds", dists)
-    ex = base.select(
-        "id", "vector", F.posexplode("_ds").alias("cell", "_d")
-    )
-    w = Window.partitionBy("id").orderBy(
-        F.col("_d").asc(), F.col("cell").asc()
-    )
-    return (
-        ex.withColumn("pr", F.row_number().over(w))
-        .where(F.col("pr") <= int(nprobe))
-        .select("id", "vector", F.col("cell").cast("int").alias("cell"), "pr")
-    )
-
-
-def _probe_cells_kernel(
-    vecs: DataFrame, centroids: list[list[float]], nprobe: int
-) -> DataFrame:
-    """Kernel twin of `probe_cells_expr`: ONE dgemm per Arrow batch
-    against the centroid matrix (the `ann._assign_cells` shape), rows
-    replicated into their nprobe nearest cells by (d2, cell) order.
-    BLAS d2 and the expression folds agree to an ulp — probe sets can
-    differ only at exact centroid-distance ties (a pytest pins
-    kernel == expr on the gate fixture, the a01 rule)."""
-    cents = [[float(x) for x in c] for c in centroids]
-    np_ = int(nprobe)
-
-    def kern(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.asarray(cents, dtype=np.float64)
-        c2 = (C * C).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vector"]]
-            )
-            d2 = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c2[None, :]
-            ncell = d2.shape[1]
-            take = min(np_, ncell)
-            cell_ids = np.arange(ncell)
-            out_id, out_vec, out_cell, out_pr = [], [], [], []
-            ids = pdf["id"].to_numpy(np.int64)
-            for r in range(len(ids)):
-                order = np.lexsort((cell_ids, d2[r]))[:take]
-                out_id.extend([ids[r]] * take)
-                out_vec.extend([pdf["vector"].iloc[r]] * take)
-                out_cell.extend(int(c) for c in order)
-                out_pr.extend(range(1, take + 1))
-            vec_col = pd.Series(out_vec, dtype="object")
-            yield pd.DataFrame(
-                {
-                    "id": pd.array(out_id, dtype="int64"),
-                    "vector": vec_col,
-                    "cell": pd.array(out_cell, dtype="int32"),
-                    "pr": pd.array(out_pr, dtype="int32"),
-                }
-            )
-
-    return vecs.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("vector").cast("array<double>").alias("vector"),
-    ).mapInPandas(
-        kern, "id long, vector array<double>, cell int, pr int"
-    )
-
-
 def knn_graph_blocked(
     vecs: DataFrame,
     k: int,
@@ -627,9 +528,9 @@ def knn_graph_blocked(
 # `knn_graph_append` and `ann.knn_join` build every edge set from these
 # pieces — the collapse decision (`_resolve_collapse`), the members pin
 # with observed per-cell counts (`_pin_members`), probe replication
-# (`_blocked_probes`), the within-cell kernel (`_blocked_narrow`), the
-# rank tail (`_rank_topk_edges`) and the collapsed build
-# (`_collapsed_edges`).
+# (`ann._assign` with an nprobe), the within-cell kernel
+# (`_blocked_narrow`), the rank tail (`_rank_topk_edges`) and the
+# collapsed build (`_collapsed_edges`).
 # ---------------------------------------------------------------------------
 
 
@@ -657,7 +558,7 @@ def _blocked_knn(
     input takes the collapsed build; everything else assigns and pins
     the corpus once, probes the queries and ranks through the shared
     tail."""
-    from vector_database_spark.operators.ann import _cell_members
+    from vector_database_spark.operators.ann import _assign, _cell_members
 
     cap = _CELL_CAP if cell_cap is None else int(cell_cap)
     train = dict(n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows)
@@ -668,7 +569,7 @@ def _blocked_knn(
         )
     members, centroids = _cell_members(corpus, centroids, method, **train)
     members, cnts = _pin_members(members, len(centroids))
-    probes = _blocked_probes(queries, centroids, nprobe, method)
+    probes = _assign(queries, centroids, method, nprobe)
     return _rank_topk_edges(
         _blocked_narrow(
             members, probes, k, method, cnts, cell_cap=cap,
@@ -721,14 +622,6 @@ def _cell_counts(members: DataFrame) -> dict:
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-
-
-def _blocked_probes(vv, centroids, nprobe, method):
-    """Probe replication dispatch: expression folds for the oracle
-    path, one dgemm per Arrow batch for the bulk path."""
-    if method == "expr":
-        return probe_cells_expr(vv, centroids, nprobe)
-    return _probe_cells_kernel(vv, centroids, nprobe)
 
 
 _CELL_CAP = 32_768  # max member rows per dgemm kernel group
@@ -1077,7 +970,7 @@ def _collapsed_edges(
     members, cnts = _pin_members(
         _assign_cells(c_reps, centroids), len(centroids)
     )
-    probes = _probe_cells_kernel(q_reps, centroids, nprobe)
+    probes = _assign_cells(q_reps, centroids, nprobe)
     rep_edges = _rank_topk_edges(
         _blocked_narrow(
             members, probes, k, "dgemm", cnts, cell_cap=cap,
@@ -1243,6 +1136,7 @@ def knn_graph_write(
     Returns the edges DataFrame (read back from disk — lineage-free).
     """
     from vector_database_spark.operators.ann import (
+        _assign,
         _cell_members,
         _ivf_err_stats,
         _ivf_stats_write,
@@ -1261,7 +1155,7 @@ def knn_graph_write(
     # one assignment, consumed by the vector write, the edge build,
     # and the stats pass; its observed counts are persisted
     members, cnts = _pin_members(members, len(centroids))
-    probes = _blocked_probes(vv, centroids, nprobe, method).localCheckpoint()
+    probes = _assign(vv, centroids, method, nprobe).localCheckpoint()
     # the PERSISTED members/probes stay per-member (the append
     # contract reads them); only the edge BUILD collapses clones
     if collapse:
@@ -1387,11 +1281,10 @@ def knn_graph_append(
 
     Returns {'appended', 'affected', 'drift', 'retrained', ...}."""
     from vector_database_spark.operators.ann import (
-        _assign_cells,
+        _assign,
         _drift_update,
         _ivf_err_stats,
         _write_cells,
-        ivf_assign_expr,
         ivf_read,
     )
 
@@ -1413,14 +1306,13 @@ def knn_graph_append(
     # is a no-op instead of duplicating vectors/probes/edges and
     # silently breaking the append==rebuild guarantee.
     vv = vv.join(stored.select("id"), "id", "left_anti")
-    assign = _assign_cells if method == "dgemm" else ivf_assign_expr
     batch_members, batch_cnts = _pin_members(
-        assign(vv, centroids), len(centroids)
+        _assign(vv, centroids, method), len(centroids)
     )
     batch_n = sum(batch_cnts.values())
     if batch_n == 0:
         return {"appended": 0, "affected": 0, "drift": 0.0, "retrained": False}
-    batch_probes = _blocked_probes(vv, centroids, nprobe, method).localCheckpoint()
+    batch_probes = _assign(vv, centroids, method, nprobe).localCheckpoint()
     batch_cells = sorted(batch_cnts)
     probe_cells = sorted(
         int(r["cell"]) for r in batch_probes.select("cell").distinct().collect()

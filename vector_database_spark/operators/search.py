@@ -901,6 +901,13 @@ def search_stats(
     = no pruning — brute force in disguise). `strategy` and
     `broadcast_index` go to the router (`search_candidates_auto`);
     ``n_total`` counts the scoped document when `doc_id` is given.
+
+    The candidate counts depend on the route for Euclidean queries:
+    the broadcast walker counts ball-pruned candidates, the iterative
+    route box-pruned ones, so ``n_candidates`` and ``candidate_frac``
+    jump when an index crosses ``BROADCAST_INDEX_MAX_ROWS``;
+    ``n_matches`` does not. Compare them only between runs on the same
+    route.
     """
     cands = search_candidates_auto(
         index_df,

@@ -112,12 +112,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def ingest_json_vectors(
     df: DataFrame, json_col: str = "vector_json", out_col: str = "vector"
 ) -> DataFrame:

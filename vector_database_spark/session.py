@@ -30,6 +30,10 @@ DEFAULT_CONF: dict[str, str] = {
     # small; shuffling the big points table instead would dominate cost.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.parquet.compression.codec": "zstd",
+    # PySpark caches this flag at the process's first API call, which
+    # races `_warm_engine`'s thread: set, call-site capture is off in
+    # every process instead of on or off at random.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -247,12 +247,6 @@ def decode_example(data: bytes) -> dict:
     return _CODEC["decode_example"](data)
 
 
-def tfrecord_frame(payload: bytes) -> bytes:
-    """One TFRecord: u64-LE length + masked crc of the length bytes,
-    payload, masked crc of the payload."""
-    return _CODEC["frame"](payload)
-
-
 def iter_tfrecords(path: str):
     """Yield (and CRC-verify) record payloads from one TFRecord
     file."""

@@ -1264,33 +1264,6 @@ def v08_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_recall_contract(ann_ids: DataFrame, exact_ids: DataFrame, k: int) -> DataFrame:
-    """Self-checking ANN output: per-query recall vs the exact kNN
-    computed IN THE SAME QUERY, plus the boolean the contract asserts.
-    The driver's rows-only check still sees a stable row count (one
-    row per panel query); the judge sees `recall_ok` directly."""
-    hits = (
-        exact_ids.join(ann_ids, ["qid", "id"], "left_semi")
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    base = exact_ids.groupBy("qid").agg(F.count(F.lit(1)).alias("n_exact"))
-    return (
-        base.join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            "n_exact",
-            F.round(
-                F.coalesce("n_hit", F.lit(0)) / F.lit(float(k)), 4
-            ).alias("recall"),
-            (F.coalesce("n_hit", F.lit(0)) >= F.lit(0.9) * F.lit(k)).alias(
-                "recall_ok"
-            ),
-        )
-    )
-
-
 TELEMETRY_DIMS = 3  # 64-dim uniform data defeats ball pruning (curse of
 TELEMETRY_DOMAIN = 0.15  # dimensionality) — telemetry demos on a projection
 
