@@ -1793,3 +1793,129 @@ def test_ensure_k_equals_plain_answer_at_first_sufficient_nprobe(
         assert got.get(q) == plain[first[q]].get(q), (q, first[q])
     assert set(got) == set(_EK_QUERIES)
     assert first[0] == 1 and first[1] == 2 and first[2] == 4
+
+
+def test_cell_table_matches_stored_rows_on_every_layout(spark, embeddings, tmp_path):
+    """The per-cell table ``{path}/cells`` of every cell layout (ivf,
+    ivfadc, mips in its augmented space, the kNN graph) describes its
+    stored rows after a build and after each of two appends: ``n`` is
+    the row count per cell, ``radius`` the max distance to the own
+    centroid bit for bit (recomputed here by the same left-to-right
+    fold in Python), and Σerr_sum/Σn the mean distance within 1e-12
+    relative. The ivf layout starts without its table (a layout
+    written before the table existed): the first append derives it
+    from the stored rows."""
+    import math
+    import shutil
+
+    from vector_database_spark.functions.vector import dot
+    from vector_database_spark.operators import ann
+    from vector_database_spark.operators.graph import (
+        knn_graph_append,
+        knn_graph_write,
+    )
+
+    vecs = _emb_vecs(embeddings)
+    base = vecs.where(F.col("id") < 300)
+    batches = [
+        vecs.where((F.col("id") >= lo) & (F.col("id") < lo + 100))
+        for lo in (300, 400)
+    ]
+
+    def dist(v, c):
+        acc = 0.0
+        for a, b in zip(v, c):
+            acc += (a - b) * (a - b)
+        return math.sqrt(acc)
+
+    def augment(v, m2):
+        acc = 0.0
+        for a in v:
+            acc += a * a
+        return v + [math.sqrt(max(0.0, m2 - acc))]
+
+    def check(path, layout, m2=None):
+        cents = ann._read_centroids(spark, path)
+        want: dict = {}
+        for r in spark.read.parquet(f"{path}/{layout}").select("cell", "vector").collect():
+            v = [float(x) for x in r.vector]
+            d = dist(v if m2 is None else augment(v, m2), cents[r.cell])
+            n, s, rad = want.get(r.cell, (0, 0.0, 0.0))
+            want[r.cell] = (n + 1, s + d, max(rad, d))
+        got = {r.cell: r for r in spark.read.parquet(f"{path}/cells").collect()}
+        assert sorted(got) == sorted(want), path
+        for c, (n, _s, rad) in want.items():
+            assert (got[c].n, got[c].radius) == (n, rad), (path, c)
+        mean = sum(r.err_sum for r in got.values()) / sum(r.n for r in got.values())
+        exact = sum(s for _n, s, _r in want.values()) / sum(
+            n for n, _s, _r in want.values()
+        )
+        assert abs(mean - exact) <= 1e-12 * exact, (path, mean, exact)
+
+    p = str(tmp_path / "ivf")
+    ann.ivf_write(*ann.ivf_build(base, n_cells=6, iters=2), p)
+    check(p, "vectors")
+    shutil.rmtree(f"{p}/cells")
+    for b in batches:
+        ann.ivf_append(spark, p, b, retrain="never")
+        check(p, "vectors")
+
+    p = str(tmp_path / "ivfadc")
+    codes, cents, books = ann.ivfadc_build(
+        base, n_cells=6, m=4, n_centroids=16, iters=2
+    )
+    ann.ivfadc_write(codes, cents, books, p)
+    check(p, "codes")
+    for b in batches:
+        ann.ivfadc_append(spark, p, b, retrain="never")
+        check(p, "codes")
+
+    p = str(tmp_path / "mips")
+    assigned, cents, m2 = ann.mips_build(base, n_cells=6, seed=13)
+    ann.mips_write(assigned, cents, m2, p)
+    check(p, "vectors", m2)
+    for b in batches:
+        ok = b.where(dot("vector", "vector") <= F.lit(m2))
+        assert ann.mips_append(spark, p, ok)["appended"] == ok.count()
+        check(p, "vectors", m2)
+
+    p = str(tmp_path / "graph")
+    knn_graph_write(base, 4, p, n_cells=6, nprobe=2)
+    check(p, "vectors")
+    for b in batches:
+        knn_graph_append(spark, p, b, retrain="never")
+        check(p, "vectors")
+
+
+def test_knn_join_layout_reads_stored_cell_counts(spark, embeddings, tmp_path):
+    """`knn_join(layout_path=, method='dgemm')` takes the hot-cell
+    cap's per-cell counts off the layout's ``cells`` table (read with
+    its schema given) instead of a ``groupBy("cell")`` count of the
+    stored vectors on every call: 50 queries over a 500-row
+    `ivf_write` layout ran 10 jobs per warm call with the per-call
+    count and run 9 now. Counted under a job group (host-immune)."""
+    import uuid
+
+    from vector_database_spark.operators.ann import knn_join, ivf_write
+
+    vecs = _emb_vecs(embeddings)
+    path = str(tmp_path / "ivf")
+    ivf_write(*ivf_build(vecs, n_cells=8, iters=2), path)
+    sc = spark.sparkContext
+
+    def call():
+        return knn_join(
+            vecs.where(F.col("id") < 50), None, 5, layout_path=path, nprobe=2,
+            method="dgemm", collapse_dups=False,
+        ).collect()
+
+    want = sorted(call())
+    group = f"kj_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    try:
+        got = sorted(call())
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want and len(got) == 250
+    assert jobs <= 9, jobs

@@ -1296,3 +1296,90 @@ def test_facade_ann_delete_documents_syncs_layout(spark):
         coded = {int(r.id) for r in fresh._ann_vectors().collect()}
         assert coded == left, t
         assert fresh.tail().count() == 0, t
+
+
+def _typed_batch(spark, n, seed, first_id):
+    """``n`` fresh (doc_id, text_id, vector) rows for a `_mk_typed`
+    store, halved so they sit inside a mips store's norm bound."""
+    return random_uniform(spark, n, 4, seed=seed).select(
+        (F.col("id") % 3).alias("doc_id"),
+        (F.col("id") + first_id).alias("text_id"),
+        F.transform("vector", lambda x: x * 0.5).cast("array<float>").alias("vector"),
+    )
+
+
+def test_failed_layout_write_still_bumps_epoch(spark, monkeypatch):
+    """A mutation whose layout write raises still moves the epoch
+    marker. The append merges its per-cell table, then its row write
+    fails; a peer facade that re-cached its readers inside that
+    window must see the marker move once the error propagates, and
+    its `search` then equals its `brute_force` (the unwritten rows
+    serve from the exact tail)."""
+    import pytest
+
+    from vector_database_spark.operators import ann
+
+    vdb = _mk_typed(spark, "ivf")
+    peer = VectorDatabase(spark, vdb.root, index_type="ivf", n_cells=4)
+    q = [0.1, -0.2, 0.3, 0.0]
+    real = ann._write_cells
+    window = {}
+
+    def failing(df, path, mode):
+        if mode != "append":
+            return real(df, path, mode)
+        window["cells_n"] = (
+            spark.read.parquet(f"{vdb.ann_path}/cells").agg(F.sum("n")).first()[0]
+        )
+        peer.search(q, 0.6).collect()  # the peer warms inside the window
+        window["token"] = vdb._epoch_token()
+        raise OSError("injected row-write failure")
+
+    monkeypatch.setattr(ann, "_write_cells", failing)
+    with pytest.raises(OSError, match="injected row-write failure"):
+        vdb.add_documents(_typed_batch(spark, 30, 5, 1000))
+    monkeypatch.undo()
+    assert window["cells_n"] == 120  # the table landed before the rows
+    assert vdb._epoch_token() != window["token"]
+    got = {(r.text_id, r.dist) for r in peer.search(q, 0.6).collect()}
+    want = {(r.text_id, r.dist) for r in peer.brute_force(q, 0.6).collect()}
+    assert got == want and any(t >= 1000 for t, _d in want)
+
+
+def test_facade_append_assigns_batch_once(spark, monkeypatch):
+    """`add_documents(reindex=True)` onto a built ivf or mips store
+    plans the batch's assignment kernel once: the per-cell table (the
+    pruning radii) comes off the append's pinned batch, not a second
+    `_assign_cells` pass. Jobs per append, counted under a job group
+    (host-immune), are pinned as upper bounds: 29 (ivf) and 36 (mips)
+    with the second pass, at most 18 and 26 now. Search stays equal
+    to brute force."""
+    import uuid
+
+    from vector_database_spark.operators import ann
+
+    real = ann._assign_cells
+    calls = []
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(ann, "_assign_cells", counting)
+    sc = spark.sparkContext
+    q = [0.1, -0.2, 0.3, 0.0]
+    for t, most in (("ivf", 18), ("mips", 26)):
+        vdb = _mk_typed(spark, t)
+        del calls[:]
+        group = f"append_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group, False)
+        try:
+            vdb.add_documents(_typed_batch(spark, 20, 9, 500))
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(calls) == 1, (t, len(calls))
+        assert jobs <= most, (t, jobs)
+        got = {(r.text_id, r.dist) for r in vdb.search(q, 0.6).collect()}
+        want = {(r.text_id, r.dist) for r in vdb.brute_force(q, 0.6).collect()}
+        assert got == want and got, t

@@ -269,8 +269,8 @@ def test_knn_graph_append_equals_rebuild(spark, embeddings, tmp_path):
 
 
 def test_knn_graph_cell_counts_track_stored_vectors(spark, embeddings, tmp_path):
-    """``{path}/cell_counts`` feeds the hot-cell cap on append, so it
-    must equal the true per-cell row counts of ``{path}/vectors``
+    """The ``n`` of ``{path}/cells`` feeds the hot-cell cap on append, so
+    it must equal the true per-cell row counts of ``{path}/vectors``
     after a write and after an append, and a redelivered (already
     stored) batch must leave it untouched."""
     from pyspark.sql import functions as F
@@ -288,7 +288,7 @@ def test_knn_graph_cell_counts_track_stored_vectors(spark, embeddings, tmp_path)
     def stored():
         return {
             (r.cell, r.n)
-            for r in spark.read.parquet(f"{root}/cell_counts").collect()
+            for r in spark.read.parquet(f"{root}/cells").collect()
         }
 
     def true_counts():

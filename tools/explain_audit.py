@@ -477,7 +477,7 @@ def _facade_ivf_search_df(spark, sf_dir):
     store (round-14 verdict item 3: pin the cached-reader serving
     shape in CI). Centroids and radii are invalidation-cycle-cached
     driver literals — the plan may scan the cell-pruned vectors
-    layout and the text table, never the centroid/radius parquets."""
+    layout and the text table, never the centroid/cells parquets."""
     return _tiny_store(spark, "ivf", n_cells=4).search([0.1] * 8, 0.6)
 
 
@@ -514,21 +514,21 @@ FACADE_CHECKS = {
     "facade_ivf_search_serving": (
         _facade_ivf_search_df,
         ["ivf_index/vectors"],
-        ["ivf_index/centroids", "ivf_index/radius", "BatchEvalPython",
+        ["ivf_index/centroids", "ivf_index/cells", "BatchEvalPython",
          "ArrowEvalPython", "CartesianProduct", "Scan ExistingRDD"],
         "facade 'ivf' search: the serving plan scans the cell-pruned "
-        "vectors layout + text only — centroid/radius parquets are "
+        "vectors layout + text only — centroid/cells parquets are "
         "cached driver literals, never per-call scans; no "
         "Python-parallelized query panel",
     ),
     "facade_ivfadc_search_serving": (
         _facade_ivfadc_search_df,
         ["ivfadc_index/codes"],
-        ["ivfadc_index/centroids", "ivfadc_index/radius",
+        ["ivfadc_index/centroids", "ivfadc_index/cells",
          "BatchEvalPython", "ArrowEvalPython", "CartesianProduct",
          "Scan ExistingRDD"],
         "facade 'ivfadc' search: the serving plan scans the cell-pruned "
-        "codes layout + text only — centroid/radius parquets are cached "
+        "codes layout + text only — centroid/cells parquets are cached "
         "driver literals, never per-call scans; no Python-parallelized "
         "query panel",
     ),
@@ -536,7 +536,7 @@ FACADE_CHECKS = {
         _facade_mips_knn_dot_df,
         ["mips_index/vectors", "PartitionFilters: [cell#",
          "TakeOrderedAndProject"],
-        ["mips_index/centroids", "mips_index/radius",
+        ["mips_index/centroids", "mips_index/cells",
          "mips_index/mips_meta", "BatchEvalPython", "ArrowEvalPython",
          "Scan ExistingRDD", "BroadcastNestedLoopJoin",
          "IdentityBroadcastMode", "Exchange", "LocalTableScan"],

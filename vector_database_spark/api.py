@@ -18,13 +18,16 @@ Storage layout under `root_path`:
                 facades compare its (mtime, length) to drop caches
   {type}_index/ — the ANN layout of the other backends (`_ANN`):
     ivf:    vectors/ (id, vector, cell; partitioned by cell),
-            centroids/, radius/, stats/
+            centroids/, cells/
     ivfadc: codes/ (id, vector, code, cell; partitioned by cell),
-            centroids/, codebooks/, radius/, stats/
+            centroids/, codebooks/, cells/
     bq:     codes/ (id, code, cell; partitioned by cell), centroids/,
             meta/
     mips:   vectors/ (partitioned by cell), centroids/ (norm-augmented),
-            mips_meta/, radius/
+            mips_meta/, cells/ (in the augmented space)
+    cells/ is the per-cell table (cell, n, err_sum, radius): rows per
+    cell and the sum and max of their distance to the centroid — the
+    append's drift and the ball search's pruning radii.
 """
 
 from __future__ import annotations
@@ -79,6 +82,26 @@ def _served(fn):
     return wrap
 
 
+def _mutator(fn):
+    """Mark a public mutator: when the outermost one returns OR raises,
+    `_invalidate_index` bumps the epoch marker — a failed layout write
+    can still leave the store changed (text rows, the per-cell table),
+    and a peer that re-cached its readers meanwhile must drop them."""
+    import functools
+
+    @functools.wraps(fn)
+    def wrap(self, *a, **k):
+        self._mutating += 1
+        try:
+            return fn(self, *a, **k)
+        finally:
+            self._mutating -= 1
+            if self._mutating == 0:
+                self._invalidate_index()
+
+    return wrap
+
+
 class VectorDatabase:
     """``index_type`` selects the physical index behind the SAME
     add/search/delete contract (round-6 verdict item 4):
@@ -87,8 +110,8 @@ class VectorDatabase:
       (exact box/ball pruning, LSM tail, compaction).
     * ``'ivf'`` — corpus-level inverted file (`ann.ivf_*`): coarse
       centroids + per-cell layout; ball search prunes cells by the
-      triangle inequality (d(q, centroid) ≤ domain + cell radius — a
-      per-cell max-radius table is maintained on build/append), then
+      triangle inequality (d(q, centroid) ≤ domain + cell radius — the
+      per-cell table's max radius, maintained on build/append), then
       refines EXACTLY against the text table, so `search()` results
       are identical to bsp/brute force at any domain.
     * ``'ivfadc'`` — the compressed layout (`ann.ivfadc_*`): same
@@ -202,6 +225,7 @@ class VectorDatabase:
         self._memo: dict = {}
         self._cache_epoch: tuple | None = None
         self._fresh_depth = 0
+        self._mutating = 0
         self._epoch_handle = None
 
     def _invalidate_local(self) -> None:
@@ -220,10 +244,11 @@ class VectorDatabase:
         self._invalidate_local()
 
     def _invalidate_index(self) -> None:
-        """Called at the end of every mutator: drop this instance's
-        derived caches AND bump the store's epoch marker so OTHER
-        facade instances over the same root drop theirs (the r13
-        `_fresh` protocol)."""
+        """Drop this instance's derived caches AND bump the store's
+        epoch marker so OTHER facade instances over the same root drop
+        theirs (the r13 `_fresh` protocol). `_mutator` calls it when a
+        mutation ends; mutators also call it mid-flow after a text
+        write their next step reads."""
         self._invalidate_local()
         self._bump_epoch()
 
@@ -453,16 +478,18 @@ class VectorDatabase:
         )
 
     def _ann_radius_map(self) -> dict:
-        """Per-cell pruning radii, cached per invalidation cycle —
-        `_cells_append` rewrites the radius table and every write path
-        invalidates."""
+        """Per-cell pruning radii off the layout's per-cell table
+        (`ann._stored_cells`), cached per invalidation cycle — every
+        write path merges or rewrites the table and invalidates."""
         return self._cached(
             "radius",
             lambda: {
-                int(r.cell): float(r.radius)
-                for r in self.spark.read.parquet(
-                    f"{self.ann_path}/radius"
-                ).collect()
+                c: r
+                for c, (_n, _s, r) in ann._stored_cells(
+                    self.spark, self.ann_path, self._ann_vectors(),
+                    self._ann_centroids(),
+                    self._mips_m2() if self._ann.norm_bound else None,
+                ).items()
             },
         )
 
@@ -494,9 +521,9 @@ class VectorDatabase:
     def _ann_sync_deletes(self) -> None:
         """Re-align the layout with the text table after deletes:
         semi-join survivors, static overwrite (partitions can shrink
-        or DROP). Radii are kept — a max over a superset stays a
-        valid upper bound, so pruning remains exact (merely looser
-        until the next rebuild); so are the MIPS m2 and BQ meta."""
+        or DROP), then the per-cell table of a cell layout is rebuilt
+        from the survivors (`ann._cell_table`). The MIPS m2 and the BQ
+        meta are kept."""
         if not self._ann_exists():
             return
         ids = self.text().select(F.col("text_id").alias("id"))
@@ -506,13 +533,11 @@ class VectorDatabase:
             .localCheckpoint(eager=True)
         )
         self._layout_write(keep, "overwrite")
-        if self._ann.drift_stats:
-            ann._ivf_stats_write(
-                self.spark, self.ann_path,
-                *ann._ivf_err_stats(
-                    keep.select("cell", "vector"), self._ann_centroids()
-                ),
-            )
+        if self.index_type != "bq":  # bq stores codes, no per-cell table
+            m2 = self._mips_m2() if self._ann.norm_bound else None
+            ann._cell_table(keep, self._ann_centroids(), m2).write.mode(
+                "overwrite"
+            ).parquet(f"{self.ann_path}/cells")
 
     def _ann_candidate_ids(self, vector: list, domain: float) -> DataFrame:
         """The backend's candidate ``text_id`` set for a ball query,
@@ -520,61 +545,6 @@ class VectorDatabase:
         return self._ann.candidates(self, vector, domain)
 
     # -- cell layouts: 'ivf', 'ivfadc', 'mips' ------------------------------
-    def _write_radius(
-        self, assigned: DataFrame, cents: list, *, m2: float | None = None
-    ) -> None:
-        """Per-cell max distance-to-centroid (the ball-pruning bound).
-        Same fold distance the refinement uses; tiny table. For the
-        'mips' layout (``m2`` given) the distance is measured in the
-        AUGMENTED space the cells were trained in — the pruning bound
-        `_cells_candidates` uses lives there."""
-        if m2 is not None:
-            assigned = assigned.select(
-                "cell", ann.mips_augment("vector", m2).alias("vector")
-            )
-        ann._cell_radius(assigned, cents).write.mode("overwrite").parquet(
-            f"{self.ann_path}/radius"
-        )
-
-    def _cells_build(self, vecs: DataFrame, *, train, write) -> None:
-        """Train the coarse model, write the cell layout with it, then
-        the drift stats (ivf, ivfadc) and the pruning radii. ``train``
-        returns ``(assigned, centroids, *model)``; ``write`` persists
-        them (`ann.ivf_write`, `ivfadc_write`, `mips_write`)."""
-        if vecs.isEmpty():
-            return
-        assigned, cents, *model = train(self, vecs)
-        assigned = assigned.localCheckpoint()
-        write(assigned, cents, *model, self.ann_path)
-        if self._ann.drift_stats:
-            ann._ivf_stats_write(
-                self.spark, self.ann_path, *ann._ivf_err_stats(assigned, cents)
-            )
-        # the mips model is its norm bound m2: radii live in that space
-        self._write_radius(
-            assigned, cents, m2=model[0] if self._ann.norm_bound else None
-        )
-
-    def _cells_append(self, batch: DataFrame, *, extend) -> dict:
-        """Assign-on-append (``extend``: `ann.ivf_append`,
-        `ivfadc_append`, `mips_append`) + radius maintenance."""
-        info = extend(self.spark, self.ann_path, batch)
-        if self._ann.norm_bound:
-            batch = batch.select(
-                "id", ann.mips_augment("vector", self._mips_m2()).alias("vector")
-            )
-        cents = self._ann_centroids()
-        assigned = ann._assign_cells(batch, cents)
-        old = self.spark.read.parquet(f"{self.ann_path}/radius")
-        merged = (
-            old.unionByName(ann._cell_radius(assigned, cents))
-            .groupBy("cell")
-            .agg(F.max("radius").alias("radius"))
-            .localCheckpoint(eager=True)  # pin before overwriting source
-        )
-        merged.write.mode("overwrite").parquet(f"{self.ann_path}/radius")
-        return info
-
     def _cells_candidates(self, vector: list, domain: float) -> DataFrame:
         """Cell-pruned candidate superset for a ball query — EXACT by
         the triangle inequality: a match within `domain` of q sits in
@@ -799,6 +769,7 @@ class VectorDatabase:
         )
 
     # -- ingest + index lifecycle (dbo.IndexDocument) --------------------
+    @_mutator
     def add_documents(self, df: DataFrame, *, reindex: bool | str = True) -> None:
         """Append (doc_id, text_id, text?, vector) rows.
 
@@ -856,9 +827,6 @@ class VectorDatabase:
                     self._ann_build_all()
             elif reindex == "auto":
                 self.compact()
-            # layout writes happened after the text-write invalidate:
-            # drop any reader cached mid-flow (_read_cached rule)
-            self._invalidate_index()
             return
         if reindex is True:
             touched = [r[0] for r in batch.select("doc_id").distinct().collect()]
@@ -917,7 +885,7 @@ class VectorDatabase:
                 "Searches stay exact, but consider normalizing "
                 "(functions.vector / operators.ann.standardize) for "
                 "comparable distances and tighter pruning.",
-                stacklevel=3,
+                stacklevel=4,  # the caller of the wrapped add_documents
             )
 
     def foreach_batch(
@@ -933,13 +901,12 @@ class VectorDatabase:
         `add_documents` already does for batch — each micro-batch
         goes through `add_documents(reindex=)`, so the text store,
         the per-type physical index (BSP partition rebuild / IVF
-        assign-on-append / IVFADC encode-on-append), the cell-radius
-        table, and the LSM-tail semantics are all maintained by the
-        same code path the batch user exercises. Dispatching to the
-        raw sinks (`streaming.ingest.foreach_batch_reindex` /
+        assign-on-append / IVFADC encode-on-append, each merging its
+        per-cell table), and the LSM-tail semantics are all maintained
+        by the same code path the batch user exercises. Dispatching to
+        the raw sinks (`streaming.ingest.foreach_batch_reindex` /
         `foreach_batch_ivf_ingest`) would skip the facade's text
-        table and radius maintenance — those stay the right tool for
-        layout-only pipelines.
+        table — those stay the right tool for layout-only pipelines.
 
         Idempotent under foreachBatch's at-least-once redelivery:
         rows whose (doc_id, text_id) already landed are anti-joined
@@ -1006,6 +973,7 @@ class VectorDatabase:
             return self.text().join(ids, "text_id", "left_anti")
         return catalog.tail_rows(self.text(), self._index_or_empty())
 
+    @_mutator
     def compact(
         self, doc_ids: list[int] | None = None, *, threshold: float | None = None
     ) -> list[int]:
@@ -1020,7 +988,6 @@ class VectorDatabase:
             # compaction is one assign-on-append of the tail
             if not self._ann_exists():
                 self._ann_build_all()
-                self._invalidate_index()
                 return [
                     int(r.doc_id)
                     for r in self.text().select("doc_id").distinct().collect()
@@ -1030,7 +997,6 @@ class VectorDatabase:
             if n_tail == 0 or n_tail <= thr * self.text().count():
                 return []
             self._ann_append(t)
-            self._invalidate_index()
             return [
                 int(r.doc_id) for r in t.select("doc_id").distinct().collect()
             ]
@@ -1057,12 +1023,12 @@ class VectorDatabase:
     def index_document(self, doc_id: int) -> None:
         self.index_documents([doc_id])
 
+    @_mutator
     def index_documents(self, doc_ids: list[int] | None = None) -> None:
         if self._ann is not None:
             # an ANN backend's coarse model is corpus-global: any
             # reindex request retrains centroids over the full store
             self._ann_build_all()
-            self._invalidate_index()
             return
         catalog.index_documents(
             self.text(),
@@ -1070,8 +1036,8 @@ class VectorDatabase:
             doc_ids=doc_ids,
             local_threshold=self.local_threshold,
         )
-        self._invalidate_index()
 
+    @_mutator
     def delete_documents(self, doc_ids: list[int]) -> None:
         """Cascade delete: text rows + index partitions / layout."""
         self._invalidate_index()
@@ -1094,7 +1060,6 @@ class VectorDatabase:
         self._invalidate_local()
         if self._ann is not None:
             self._ann_sync_deletes()
-        self._invalidate_index()
 
     # -- queries (dbo.Search / Find) -------------------------------------
     def _index_named(self) -> DataFrame:
@@ -1204,6 +1169,7 @@ class VectorDatabase:
             res = res.unionByName(tail_hits)
         return res
 
+    @_mutator
     def delete_vectors(
         self,
         vector: list[float],
@@ -1259,7 +1225,6 @@ class VectorDatabase:
             # dynamic overwrite cannot DROP a partition — route fully
             # emptied documents through the cascade delete
             self.delete_documents(emptied)
-        self._invalidate_index()
         return int(n_removed)
 
     @_served
@@ -1453,20 +1418,25 @@ class _Ann(NamedTuple):
     layout: str  # sub-directory of the (id, ..., cell) rows
     marker: str  # sub-directory whose commit marks a built layout
     view_cols: tuple[str, ...]  # `sql_index_document`'s index_view
-    drift_stats: bool  # keeps drift stats; cells_view carries radii
     norm_bound: bool  # cells in the norm-augmented space, frozen m2
     build: Callable[..., None]  # (vdb, vecs)
     append: Callable[..., dict]  # (vdb, batch)
     candidates: Callable[..., DataFrame]  # (vdb, vector, domain)
 
 
-def _cells(layout, train, write, extend, *, drift_stats, norm_bound=False):
+def _cells(layout, train, write, extend, *, norm_bound=False):
     """A cell-layout entry: the trained centroids mark a built layout
-    and the SQL index view is the (id, cell) assignment."""
+    and the SQL index view is the (id, cell) assignment. ``write``
+    persists ``train``'s ``(assigned, centroids, *model)`` with the
+    per-cell table; ``extend`` appends under the stored model."""
+
+    def build(db, vecs):
+        if not vecs.isEmpty():
+            write(*train(db, vecs), db.ann_path)
+
     return _Ann(
-        layout, "centroids", ("id", "cell"), drift_stats, norm_bound,
-        build=partial(VectorDatabase._cells_build, train=train, write=write),
-        append=partial(VectorDatabase._cells_append, extend=extend),
+        layout, "centroids", ("id", "cell"), norm_bound, build=build,
+        append=lambda db, batch: extend(db.spark, db.ann_path, batch),
         candidates=VectorDatabase._cells_candidates,
     )
 
@@ -1478,18 +1448,15 @@ _ANN: dict[str, _Ann] = {
         lambda db, v: ann.ivf_build(v, n_cells=db.n_cells),
         ann.ivf_write,
         partial(ann.ivf_append, retrain="never"),
-        drift_stats=True,
     ),
     "ivfadc": _cells(
         "codes",
         lambda db, v: ann.ivfadc_build(v, n_cells=db.n_cells, m=db.pq_m),
         ann.ivfadc_write,
         partial(ann.ivfadc_append, retrain="never"),
-        drift_stats=True,
     ),
     "bq": _Ann(
-        "codes", "codes", ("id", "code", "cell"),
-        drift_stats=False, norm_bound=False,
+        "codes", "codes", ("id", "code", "cell"), norm_bound=False,
         build=VectorDatabase._bq_build,
         append=VectorDatabase._bq_append,
         candidates=lambda db, vector, domain: db._bq_candidate_ids(vector),
@@ -1501,7 +1468,6 @@ _ANN: dict[str, _Ann] = {
         # the norm bound is validated at the add_documents door;
         # on_overflow='error' stays the backstop invariant
         partial(ann.mips_append, on_overflow="error"),
-        drift_stats=False,
         norm_bound=True,
     ),
 }

@@ -546,16 +546,137 @@ def _write_cells(df: DataFrame, path: str, mode: str) -> None:
     w.partitionBy("cell").parquet(path)
 
 
-def _cell_radius(assigned: DataFrame, centroids) -> DataFrame:
-    """``(cell, radius)``: each cell's max euclidean distance from a
-    row's ``vector`` to its own centroid — the ball-pruning bound of
-    the facade's cell layouts."""
-    cmap = _centroid_frame(assigned.sparkSession, centroids)
+# --------------------------------------------------------------------------
+# The per-cell table ``{path}/cells`` (cell, n, err_sum, radius) of every
+# cell layout (ivf, ivfadc, mips, the kNN graph): the drift statistic,
+# the facade's pruning radii and the hot-cell cap's counts. Builds write
+# it (`_write_layout`), appends merge it (`_append_cells`).
+# --------------------------------------------------------------------------
+
+_CELLS_DDL = "cell int, n long, err_sum double, radius double"
+
+
+def _cell_table(rows: DataFrame, centroids, m2: float | None = None) -> DataFrame:
+    """``(cell, n, err_sum, radius)`` of a layout's (cell, vector) rows:
+    each cell's row count and the sum and max of the euclidean distance
+    from its rows to its own centroid — one broadcast join to the
+    centroid frame, one ``groupBy("cell")``. ``m2`` (a MIPS layout)
+    measures in the augmented space the centroids live in. Callers pass
+    pinned rows or rows read back from disk: the table describes
+    exactly the rows written."""
+    v = F.col("vector") if m2 is None else mips_augment("vector", m2)
+    d = euclidean(F.col("_v"), F.col("cvec"))
     return (
-        assigned.join(F.broadcast(cmap), "cell")
+        rows.select("cell", v.alias("_v"))
+        .join(F.broadcast(_centroid_frame(rows.sparkSession, centroids)), "cell")
         .groupBy("cell")
-        .agg(F.max(euclidean(F.col("vector"), F.col("cvec"))).alias("radius"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(d).alias("err_sum"),
+            F.max(d).alias("radius"),
+        )
     )
+
+
+def _cells_dict(table: DataFrame) -> dict:
+    """A per-cell table collected as ``{cell: (n, err_sum, radius)}``."""
+    return {
+        int(r.cell): (int(r.n), float(r.err_sum), float(r.radius))
+        for r in table.collect()
+    }
+
+
+def _stored_cells(
+    spark, path: str, stored: DataFrame, centroids, m2: float | None = None
+) -> dict:
+    """The layout's per-cell table (`_cells_dict`), read with its schema
+    given (no inference job). A layout written before the table existed
+    derives it from its ``stored`` rows — or starts empty when they
+    carry no vectors (an IVFADC ``keep_vectors=False`` layout)."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        table = spark.read.schema(_CELLS_DDL).parquet(f"{path}/cells")
+    except AnalysisException:
+        if "vector" not in stored.columns:
+            return {}
+        table = _cell_table(stored, centroids, m2)
+    return _cells_dict(table)
+
+
+def _write_layout(
+    rows: DataFrame, centroids, path: str, layout: str = "vectors", *,
+    m2: float | None = None, keep_vectors: bool = True,
+) -> None:
+    """Overwrite a cell layout from PINNED ``rows``: the per-cell table,
+    the cell-partitioned rows (``keep_vectors=False`` drops their
+    vectors), then the centroids, whose commit marks the layout built."""
+    _cell_table(rows, centroids, m2).write.mode("overwrite").parquet(
+        f"{path}/cells"
+    )
+    _write_cells(
+        rows if keep_vectors else rows.drop("vector"), f"{path}/{layout}",
+        "overwrite",
+    )
+    _centroid_frame(rows.sparkSession, centroids).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids")
+
+
+def _conform_batch(
+    new_df: DataFrame, stored: DataFrame, id_col: str, vector_col: str
+) -> DataFrame:
+    """The batch's (id, vector) cast to the STORED layout's types: a
+    double batch appended into a float layout leaves mixed parquet
+    files the reader refuses (PARQUET_COLUMN_DATA_TYPE_MISMATCH)."""
+    vec = F.col(vector_col)
+    if "vector" in stored.columns:
+        vec = vec.cast(stored.schema["vector"].dataType)
+    return new_df.select(
+        F.col(id_col).cast(stored.schema["id"].dataType).alias("id"),
+        vec.alias("vector"),
+    )
+
+
+def _append_cells(
+    spark, path: str, layout: str, stored: DataFrame, centroids,
+    new_df: DataFrame, encode, *, id_col: str = "id",
+    vector_col: str = "vector", m2: float | None = None,
+):
+    """The one assign-on-append core of `ivf_append`, `ivfadc_append`,
+    `mips_append` and `graph.knn_graph_append`: the conformed batch is
+    encoded (``encode`` adds its cell, and code) and pinned once, its
+    `_cell_table` merges into ``{path}/cells`` (n and err_sum add,
+    radius takes the max), then its rows append to ``{path}/{layout}``
+    in the stored columns. The table lands first, so a crash between
+    the writes can only over-estimate counts, radii and drift. An empty
+    batch writes nothing.
+
+    Returns ``(batch, cells, merged, stats)``: the pinned batch, its own
+    and the merged ``{cell: (n, err_sum, radius)}``, and ``(n,
+    batch_err, base_err, drift)`` — the mean distance to the own
+    centroid of the batch and of the stored rows, and their ratio − 1
+    (0.0 on an empty base)."""
+    batch = encode(_conform_batch(new_df, stored, id_col, vector_col))
+    batch = batch.localCheckpoint()
+    cells = _cells_dict(_cell_table(batch, centroids, m2))
+    if not cells:
+        return batch, cells, {}, (0, 0.0, 0.0, 0.0)
+    base = _stored_cells(spark, path, stored, centroids, m2)
+    merged = dict(base)
+    for c, (n, s, r) in cells.items():
+        n0, s0, r0 = merged.get(c, (0, 0.0, r))
+        merged[c] = (n0 + n, s0 + s, max(r0, r))
+    local_frame(
+        spark, [(c, *merged[c]) for c in sorted(merged)], _CELLS_DDL
+    ).write.mode("overwrite").parquet(f"{path}/cells")
+    _write_cells(batch.select(*stored.columns), f"{path}/{layout}", "append")
+    (n, err), (base_n, base_err) = (
+        [sum(d[c][i] for c in sorted(d)) for i in (0, 1)] for d in (cells, base)
+    )
+    base_err = base_err / base_n if base_n else 0.0
+    drift = err / n / base_err - 1.0 if base_err > 0 else 0.0
+    return batch, cells, merged, (n, err / n, base_err, drift)
 
 
 def ivf_knn(
@@ -624,11 +745,10 @@ def ivf_write(
 ) -> None:
     """Persist the inverted file: vectors partitioned by cell (the
     physical layout that makes nprobe search touch nprobe partitions),
-    plus the centroid table alongside."""
-    _write_cells(assigned_df, f"{path}/vectors", "overwrite")
-    _centroid_frame(assigned_df.sparkSession, centroids).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
+    plus the centroid table and the per-cell table (`_write_layout`)
+    alongside. The rows are pinned first, so the per-cell table
+    describes the rows written."""
+    _write_layout(assigned_df.localCheckpoint(), centroids, path)
 
 
 def ivf_read(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
@@ -641,66 +761,6 @@ def _read_centroids(spark, path: str) -> list[list[float]]:
         list(r.cvec)
         for r in spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
     ]
-
-
-def _ivf_err_stats(assigned: DataFrame, centroids: list[list[float]]):
-    """(sum of distance-to-own-centroid, row count) — the running
-    quantization-error sufficient statistics behind drift detection.
-    One broadcast join + one aggregate; the per-row distance is the
-    interpreted HOF fold (fine for per-row vector math — the measured
-    rule)."""
-    cmap = _centroid_frame(assigned.sparkSession, centroids)
-    row = (
-        assigned.join(F.broadcast(cmap), "cell")
-        .agg(
-            F.sum(euclidean(F.col("vector"), F.col("cvec"))).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .first()
-    )
-    return (float(row["s"] or 0.0), int(row["n"]))
-
-
-def _ivf_stats_write(spark, path: str, err_sum: float, n: int) -> None:
-    local_frame(
-        spark,
-        [(float(err_sum), int(n))], "err_sum double, n long"
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def _ivf_stats_read(spark, path: str):
-    try:
-        r = spark.read.parquet(f"{path}/stats").first()
-        return (float(r["err_sum"]), int(r["n"]))
-    except Exception:
-        return None
-
-
-def _drift_update(
-    spark, path: str, layout: str, centroids, batch_sum: float,
-    batch_n: int, *, catch_up: bool = True,
-) -> tuple[float, float, float]:
-    """Fold an appended batch's quantization-error sums into the
-    running ``{path}/stats``; returns ``(batch_err, base_err, drift)``
-    with drift = batch_mean/base_mean − 1 (0.0 on an empty base). A
-    layout written before stats existed derives its base once from
-    everything in ``{path}/{layout}`` EXCEPT this batch (``catch_up``:
-    the layout keeps its vectors), then running sums take over."""
-    base = _ivf_stats_read(spark, path)
-    if base is None:
-        base = (0.0, 0)
-        if catch_up:
-            all_sum, all_n = _ivf_err_stats(
-                spark.read.parquet(f"{path}/{layout}").select("cell", "vector"),
-                centroids,
-            )
-            base = (all_sum - batch_sum, all_n - batch_n)
-    base_sum, base_n = base
-    batch_err = batch_sum / batch_n
-    base_err = (base_sum / base_n) if base_n > 0 else 0.0
-    drift = (batch_err / base_err - 1.0) if base_err > 0 else 0.0
-    _ivf_stats_write(spark, path, base_sum + batch_sum, base_n + batch_n)
-    return batch_err, base_err, drift
 
 
 def _append_report(
@@ -738,59 +798,39 @@ def ivf_append(
     stays the layout.
 
     Drift contract: the batch's mean quantization error is compared
-    to the running mean recorded in `{path}/stats` (updated as
-    running sums — never a full-table repass per append). When the
-    batch mean exceeds ``(1 + drift_threshold) ×`` the base mean, the
-    distribution has moved away from the trained centroids and
-    ``retrain='auto'`` rebuilds centroids over the FULL stored corpus
-    (`ivf_build`) and rewrites the layout; ``'never'`` only reports
-    the drift flag (recall of future appends degrades gracefully —
-    cells just get wider); ``'always'`` rebuilds unconditionally.
+    to the stored rows' mean, read off the per-cell table
+    ``{path}/cells`` (Σerr_sum/Σn, merged per append — never a
+    full-table repass). When the batch mean exceeds ``(1 +
+    drift_threshold) ×`` the base mean, the distribution has moved
+    away from the trained centroids and ``retrain='auto'`` rebuilds
+    centroids over the FULL stored corpus (`ivf_build`) and rewrites
+    the layout; ``'never'`` only reports the drift flag (recall of
+    future appends degrades gracefully — cells just get wider);
+    ``'always'`` rebuilds unconditionally.
 
     Returns {'appended', 'batch_err', 'base_err', 'drift',
     'retrained'} — `drift` is batch_mean/base_mean − 1 (0.0 when the
-    base is empty or stats are missing).
+    base is empty).
 
-    Atomicity note: the batch parquet append and the `{path}/stats`
-    running-sum rewrite are two separate writes. A crash between them
-    leaves rows on disk whose error never entered the stats base (and
-    the streaming twin's anti-join then drops the redelivered rows,
-    so the sums never catch up) — the DRIFT STATISTIC can therefore
-    under-count after a crash; the DATA layout itself is never
-    corrupted. Acceptable for a monitoring signal; when stats row
-    counts matter (post-crash audit), delete `{path}/stats` and the
-    next append recomputes the base from the full layout via the
-    legacy catch-up path below.
+    Atomicity note: the per-cell table is rewritten BEFORE the batch
+    rows append (`_append_cells`). A crash between the two writes
+    leaves a table that counts rows not on disk: counts, radii and
+    the drift base can only over-estimate (a pruning radius stays an
+    upper bound, the hot-cell cap buckets early). The DATA layout
+    itself is never corrupted. When exact counts matter (post-crash
+    audit), delete ``{path}/cells``: the next append derives it again
+    from the stored rows.
     """
     if retrain not in ("auto", "never", "always"):
         raise ValueError(f"retrain must be auto|never|always, got {retrain!r}")
     stored, centroids = ivf_read(spark, path)
-    # conform the batch to the STORED layout's physical types — a
-    # double-typed batch appended into a float layout leaves mixed
-    # parquet files the reader refuses (PARQUET_COLUMN_DATA_TYPE_
-    # MISMATCH); the storage precision is the layout's contract
-    vecs = new_df.select(
-        F.col(id_col)
-        .cast(stored.schema["id"].dataType)
-        .alias("id"),
-        F.col(vector_col)
-        .cast(stored.schema["vector"].dataType)
-        .alias("vector"),
+    *_, stats = _append_cells(
+        spark, path, "vectors", stored, centroids, new_df,
+        lambda v: _assign_cells(v, centroids),
+        id_col=id_col, vector_col=vector_col,
     )
-    assigned = _assign_cells(vecs, centroids)
-    # stabilize the kernel output: written rows and the stats pass
-    # must see the SAME assignment (lineage would otherwise recompute)
-    assigned = assigned.localCheckpoint()
-    batch_sum, batch_n = _ivf_err_stats(assigned, centroids)
-    if batch_n == 0:
-        return _append_report(0)
-    _write_cells(assigned, f"{path}/vectors", "append")
-    batch_err, base_err, drift = _drift_update(
-        spark, path, "vectors", centroids, batch_sum, batch_n
-    )
-
-    do_retrain = retrain == "always" or (
-        retrain == "auto" and drift > drift_threshold
+    do_retrain = stats[0] > 0 and (
+        retrain == "always" or (retrain == "auto" and stats[3] > drift_threshold)
     )
     if do_retrain:
         full = spark.read.parquet(f"{path}/vectors").select("id", "vector")
@@ -799,10 +839,7 @@ def ivf_append(
         k = n_cells if n_cells is not None else len(centroids)
         re_assigned, re_cents = ivf_build(full, n_cells=k, iters=iters)
         ivf_write(re_assigned, re_cents, path)
-        _ivf_stats_write(spark, path, *_ivf_err_stats(
-            spark.read.parquet(f"{path}/vectors"), re_cents
-        ))
-    return _append_report(batch_n, batch_err, base_err, drift, do_retrain)
+    return _append_report(*stats, do_retrain)
 
 
 def ivfadc_write(
@@ -817,12 +854,13 @@ def ivfadc_write(
     reads nprobe partitions), centroid table, and the per-subspace
     codebooks flattened to rows. ``keep_vectors=False`` drops the raw
     vector column — the pure compressed layout (8 bytes/vector + ids);
-    exact re-ranking then needs the original table joined back."""
+    exact re-ranking then needs the original table joined back. The
+    per-cell table (`_write_layout`) is taken from the pinned codes
+    before their vectors are dropped."""
     spark = codes_df.sparkSession
-    out = codes_df if keep_vectors else codes_df.drop("vector")
-    _write_cells(out, f"{path}/codes", "overwrite")
-    _centroid_frame(spark, centroids).write.mode("overwrite").parquet(
-        f"{path}/centroids"
+    _write_layout(
+        codes_df.localCheckpoint(), centroids, path, "codes",
+        keep_vectors=keep_vectors,
     )
     local_frame(
         spark,
@@ -1238,45 +1276,25 @@ def ivfadc_append(
     assign+residual+encode pass under the STORED centroids/codebooks
     and append into the per-cell codes layout, so append-then-search
     is identical to one-shot encoding the whole corpus under that
-    model. Drift uses the same running coarse-quantization-error
-    stats as `ivf_append` ({path}/stats, running sums — O(batch) per
-    append); past the threshold with ``retrain='auto'`` the full
-    corpus re-trains via `ivfadc_build` — which requires the layout
-    to have kept the raw vectors (``keep_vectors=True``; a
-    codes-only layout raises, because the vectors needed to retrain
-    don't exist there)."""
+    model. Drift reads the same per-cell table as `ivf_append`
+    (``{path}/cells``, taken before the vectors are dropped); past
+    the threshold with ``retrain='auto'`` the full corpus re-trains
+    via `ivfadc_build` — which requires the layout to have kept the
+    raw vectors (``keep_vectors=True``; a codes-only layout raises,
+    because the vectors needed to retrain don't exist there)."""
     if retrain not in ("auto", "never", "always"):
         raise ValueError(f"retrain must be auto|never|always, got {retrain!r}")
     stored, cents, books = ivfadc_read(spark, path)
-    keep_vec = "vector" in stored.columns
-    vcast = (
-        F.col(vector_col).cast(stored.schema["vector"].dataType)
-        if keep_vec
-        else F.col(vector_col)
+    *_, stats = _append_cells(
+        spark, path, "codes", stored, cents, new_df,
+        lambda v: ivfadc_encode(v, cents, books),
+        id_col=id_col, vector_col=vector_col,
     )
-    vecs = new_df.select(
-        F.col(id_col).cast(stored.schema["id"].dataType).alias("id"),
-        vcast.alias("vector"),
-    )
-    # stats need the vectors, so checkpoint BEFORE any drop — written
-    # rows, the stats pass and the error join all see one assignment
-    coded_full = ivfadc_encode(vecs, cents, books).localCheckpoint()
-    batch_sum, batch_n = _ivf_err_stats(
-        coded_full.select("cell", "vector"), cents
-    )
-    coded = coded_full if keep_vec else coded_full.drop("vector")
-    if batch_n == 0:
-        return _append_report(0)
-    _write_cells(coded, f"{path}/codes", "append")
-    batch_err, base_err, drift = _drift_update(
-        spark, path, "codes", cents, batch_sum, batch_n, catch_up=keep_vec
-    )
-
-    do_retrain = retrain == "always" or (
-        retrain == "auto" and drift > drift_threshold
+    do_retrain = stats[0] > 0 and (
+        retrain == "always" or (retrain == "auto" and stats[3] > drift_threshold)
     )
     if do_retrain:
-        if not keep_vec:
+        if "vector" not in stored.columns:
             raise ValueError(
                 "ivfadc_append: retrain requested but the layout was "
                 "written with keep_vectors=False — the raw vectors "
@@ -1293,10 +1311,7 @@ def ivfadc_append(
             iters=iters,
         )
         ivfadc_write(codes2, c2_, b2, path)
-        _ivf_stats_write(spark, path, *_ivf_err_stats(
-            spark.read.parquet(f"{path}/codes").select("cell", "vector"), c2_
-        ))
-    return _append_report(batch_n, batch_err, base_err, drift, do_retrain)
+    return _append_report(*stats, do_retrain)
 
 
 def ivfadc_knn(
@@ -2826,10 +2841,11 @@ def mips_write(
     """Persist the MIPS layout: the (id, vector, cell) assignment
     partitioned by cell (`ivf_write`'s layout — probe reads prune
     partitions), the augmented-space centroids, and the norm bound
-    m2 (``{path}/mips_meta``). `mips_read` + `mips_knn(assigned=)`
-    is the durable serving loop."""
+    m2 (``{path}/mips_meta``). The per-cell table measures in the
+    augmented space the centroids live in. `mips_read` +
+    `mips_knn(assigned=)` is the durable serving loop."""
     spark = assigned.sparkSession
-    ivf_write(assigned, centroids, path)
+    _write_layout(assigned.localCheckpoint(), centroids, path, m2=m2)
     local_frame(spark, [(float(m2),)], "m2 double").write.mode(
         "overwrite"
     ).parquet(f"{path}/mips_meta")
@@ -2882,18 +2898,11 @@ def mips_append(
             f"on_overflow must be error|retrain, got {on_overflow!r}"
         )
     stored, centroids, m2 = mips_read(spark, path)
-    vecs = new_df.select(
-        F.col(id_col).cast(stored.schema["id"].dataType).alias("id"),
-        F.col(vector_col)
-        .cast(stored.schema["vector"].dataType)
-        .alias("vector"),
-    )
-    first = vecs.select(F.size("vector").alias("d")).first()
-    if first is None or first["d"] is None:
-        return {
-            "appended": 0, "retrained": False, "batch_m2": 0.0, "m2": m2,
-        }
-    batch_m2 = mips_max_norm2(vecs)
+    vecs = _conform_batch(new_df, stored, id_col, vector_col)
+    try:
+        batch_m2 = mips_max_norm2(vecs)
+    except ValueError:  # an empty batch
+        return {"appended": 0, "retrained": False, "batch_m2": 0.0, "m2": m2}
     if batch_m2 > m2:
         if on_overflow == "error":
             raise ValueError(
@@ -2914,18 +2923,19 @@ def mips_append(
         assigned, cents, new_m2 = mips_build(
             full, n_cells=k, iters=iters, seed=seed, train_rows=train_rows
         )
-        mips_write(assigned.localCheckpoint(), cents, new_m2, path)
+        mips_write(assigned, cents, new_m2, path)
         return {
             "appended": int(vecs.count()),
             "retrained": True,
             "batch_m2": batch_m2,
             "m2": new_m2,
         }
-    assigned = _mips_assign(vecs, m2, centroids).localCheckpoint()
-    n = assigned.count()
-    _write_cells(assigned, f"{path}/vectors", "append")
+    *_, stats = _append_cells(
+        spark, path, "vectors", stored, centroids, vecs,
+        lambda v: _mips_assign(v, m2, centroids), m2=m2,
+    )
     return {
-        "appended": int(n),
+        "appended": int(stats[0]),
         "retrained": False,
         "batch_m2": batch_m2,
         "m2": m2,
@@ -3023,7 +3033,6 @@ def knn_join(
         _blocked_knn,
         _blocked_narrow,
         _CELL_CAP,
-        _cell_counts,
         _collapse_dup_vectors,
         _rank_topk_edges,
         _resolve_collapse,
@@ -3074,9 +3083,12 @@ def knn_join(
         F.col(vector_col).cast("array<double>").alias("vector"),
         F.col("cell").cast("int").alias("cell"),
     )
-    # an ivf_write layout stores no per-cell counts: count once, for
-    # every escalation round (only the dgemm kernel's cap reads them)
-    cnts = _cell_counts(members) if method == "dgemm" else {}
+    # the layout's per-cell counts, read once for every escalation
+    # round (only the dgemm kernel's cap reads them)
+    cells = {} if method != "dgemm" else _stored_cells(
+        queries_df.sparkSession, layout_path, stored, centroids
+    )
+    cnts = {c: v[0] for c, v in cells.items()}
     cap = _CELL_CAP if cell_cap is None else int(cell_cap)
     q_ann = None
     if collapse:

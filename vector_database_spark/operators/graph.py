@@ -612,18 +612,6 @@ def _pin_members(members: DataFrame, n_cells: int) -> tuple[DataFrame, dict]:
     return members, {c: int(n) for c, n in enumerate(obs.get["cnt"]) if n}
 
 
-def _cell_counts(members: DataFrame) -> dict:
-    """Per-cell member counts of a STORED layout that carries no
-    ``cell_counts`` table (an `ann.ivf_write` layout served by
-    `ann.knn_join(layout_path=)`): one aggregate, collected."""
-    return {
-        int(r["cell"]): int(r["n"])
-        for r in members.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-
-
 _CELL_CAP = 32_768  # max member rows per dgemm kernel group
 
 
@@ -668,13 +656,12 @@ def _blocked_narrow(
     the machinery taxing ~0.3 s per build at panel scale. When
     buckets ARE needed, the bucket counts join as a literal broadcast
     frame instead of an in-plan aggregate. The counts come from the
-    members pin's observation (`_pin_members`), the persisted
-    ``{path}/cell_counts`` table (`knn_graph_write`, maintained by
-    `knn_graph_append`), or one count over a stored `ivf_write`
-    layout (`_cell_counts`). They may only OVER-estimate safely
-    (deletes shrink cells): an over-estimate just buckets earlier;
-    an under-estimate would breach the cap, so maintainers add batch
-    counts on every append. The expr path ignores them."""
+    members pin's observation (`_pin_members`) or a stored layout's
+    per-cell table ``{path}/cells`` (`ann._stored_cells`, merged by
+    every append). They may only OVER-estimate safely (deletes shrink
+    cells): an over-estimate just buckets earlier; an under-estimate
+    would breach the cap, so appends merge the table before writing
+    their rows. The expr path ignores them."""
     kk = int(k)
     if method == "expr":
         from vector_database_spark.functions.vector import euclidean
@@ -1121,12 +1108,11 @@ def knn_graph_write(
     - ``{path}/graph_meta`` (k, nprobe, method, entry_id,
       entry_cell) — the beam entry point (min id) and its cell, so
       serving never scans the corpus to find it,
-    - ``{path}/stats``    running quantization-error sums (the
-      `ivf_append` drift base),
-    - ``{path}/cell_counts`` (cell, n) — per-cell member counts: the
-      hot-cell cap decision reads this tiny table on append instead
-      of re-aggregating the corpus; maintained by `knn_graph_append`
-      (adds batch counts) and rewritten on retrain.
+    - ``{path}/cells``    (cell, n, err_sum, radius) — the per-cell
+      table of every cell layout (`ann._cell_table`): the append's
+      hot-cell cap reads its counts and its drift reads err_sum
+      instead of re-aggregating the corpus; merged by
+      `knn_graph_append` and rewritten on retrain.
 
     The edges come from the blocked-kNN core shared with
     `knn_graph_blocked` (same members pin, collapsed build and rank
@@ -1138,10 +1124,8 @@ def knn_graph_write(
     from vector_database_spark.operators.ann import (
         _assign,
         _cell_members,
-        _ivf_err_stats,
-        _ivf_stats_write,
         _write_cells,
-        ivf_write,
+        _write_layout,
     )
 
     spark = vecs.sparkSession
@@ -1152,8 +1136,8 @@ def knn_graph_write(
     train = dict(n_cells=n_cells, iters=iters, seed=seed, train_rows=train_rows)
     collapse = _resolve_collapse(vv, method, seed=seed)
     members, centroids = _cell_members(vv, centroids, method, **train)
-    # one assignment, consumed by the vector write, the edge build,
-    # and the stats pass; its observed counts are persisted
+    # one assignment, consumed by the vector write, the edge build
+    # and the per-cell table
     members, cnts = _pin_members(members, len(centroids))
     probes = _assign(vv, centroids, method, nprobe).localCheckpoint()
     # the PERSISTED members/probes stay per-member (the append
@@ -1167,8 +1151,7 @@ def knn_graph_write(
         edges = _rank_topk_edges(
             _blocked_narrow(members, probes, k, method, cnts), k
         )
-    ivf_write(members, centroids, path)
-    _write_cell_counts(spark, path, cnts)
+    _write_layout(members, centroids, path)
     _write_cells(
         probes.select("id", "pr", "cell"), f"{path}/probes", "overwrite"
     )
@@ -1187,17 +1170,9 @@ def knn_graph_write(
     ).parquet(f"{path}/edges")
     ent = members.agg(F.min(F.struct("id", "cell")).alias("e")).first()["e"]
     _write_graph_meta(spark, path, k, nprobe, method, ent["id"], ent["cell"])
-    _ivf_stats_write(spark, path, *_ivf_err_stats(members, centroids))
     return spark.read.parquet(f"{path}/edges").select(
         "src", "dst", "dist", "rank"
     )
-
-
-def _write_cell_counts(spark, path: str, cnts: dict) -> None:
-    spark.createDataFrame(
-        sorted((int(c), int(n)) for c, n in cnts.items()),
-        "cell int, n long",
-    ).write.mode("overwrite").parquet(f"{path}/cell_counts")
 
 
 def _write_graph_meta(
@@ -1214,9 +1189,9 @@ def knn_graph_read(spark, path: str) -> tuple[DataFrame, dict]:
     """(edges, meta) — edges as ``(src, dst, dist, rank)``, meta =
     {'k', 'nprobe', 'method', 'centroids', 'entry_id', 'entry_cell'}. Vectors are at
     ``{path}/vectors`` (ann.ivf_read reads them with the codebook)."""
-    from vector_database_spark.operators.ann import ivf_read
+    from vector_database_spark.operators.ann import _read_centroids
 
-    _vecs, cents = ivf_read(spark, path)
+    cents = _read_centroids(spark, path)
     m = spark.read.parquet(f"{path}/graph_meta").first().asDict()
     meta = {
         "k": int(m["k"]),
@@ -1256,14 +1231,17 @@ def knn_graph_append(
 
     Set-based fix-up, nothing collected, built from the blocked-kNN
     core `knn_graph_blocked` uses:
-    1. assign + probe the batch under stored centroids (same kernel
-       as the build — distances bit-identical to a rebuild's); the
-       batch goes through the core's members pin, whose observed
-       per-cell counts give the batch size and are added to the
-       stored ``cell_counts``;
+    1. the batch half is the assign-on-append core of every cell
+       layout (`ann._append_cells`): batch ids already stored are
+       dropped (the foreach_batch_ivf_ingest anti-join rule, so a
+       redelivered batch is a no-op), the rest is assigned under the
+       stored centroids (same kernel as the build — distances
+       bit-identical to a rebuild's) and pinned, its per-cell table
+       merges into ``{path}/cells`` and its rows append to
+       ``{path}/vectors``; the batch is then probed;
     2. NEW-node edges: batch probes × members of the probed cells
-       (stored members partition-pruned to those cells, plus the
-       batch itself);
+       (the vectors layout, now holding the batch, partition-pruned
+       to those cells: new nodes can be each other's neighbours);
     3. EXISTING-node fix-ups: stored probes partition-pruned to the
        batch's cells name exactly the affected srcs; their candidate
        edges against batch members union their stored edges, one
@@ -1279,73 +1257,57 @@ def knn_graph_append(
        response to distribution shift (new cells invalidate stored
        probe sets wholesale).
 
+    The batch's vectors land before its probes and edges: a crash in
+    between leaves stored nodes without edges, which a later append
+    of the same ids skips — rebuild with `knn_graph_write` (or append
+    with ``retrain='always'``) to repair.
+
     Returns {'appended', 'affected', 'drift', 'retrained', ...}."""
     from vector_database_spark.operators.ann import (
+        _append_cells,
         _assign,
-        _drift_update,
-        _ivf_err_stats,
         _write_cells,
-        ivf_read,
     )
 
     if retrain not in ("auto", "never", "always"):
         raise ValueError(f"retrain must be auto|never|always, got {retrain!r}")
-    stored, centroids = ivf_read(spark, path)
     _edges_all, meta = knn_graph_read(spark, path)
     k, nprobe, method = meta["k"], meta["nprobe"], meta["method"]
-    vv = new_df.select(
-        F.col(id_col)
-        .cast(stored.schema["id"].dataType)
-        .alias("id"),
-        F.col(vector_col)
-        .cast(stored.schema["vector"].dataType)
-        .alias("vector"),
+    centroids = meta["centroids"]
+    stored = spark.read.parquet(f"{path}/vectors")
+    batch_members, cells, merged, stats = _append_cells(
+        spark, path, "vectors", stored, centroids, new_df,
+        lambda v: _assign(
+            v.join(stored.select("id"), "id", "left_anti"), centroids, method
+        ),
+        id_col=id_col, vector_col=vector_col,
     )
-    # Idempotence: drop batch ids already stored (the
-    # foreach_batch_ivf_ingest anti-join rule) — a redelivered batch
-    # is a no-op instead of duplicating vectors/probes/edges and
-    # silently breaking the append==rebuild guarantee.
-    vv = vv.join(stored.select("id"), "id", "left_anti")
-    batch_members, batch_cnts = _pin_members(
-        _assign(vv, centroids, method), len(centroids)
-    )
-    batch_n = sum(batch_cnts.values())
+    batch_n, batch_err, base_err, drift = stats
     if batch_n == 0:
         return {"appended": 0, "affected": 0, "drift": 0.0, "retrained": False}
-    batch_probes = _assign(vv, centroids, method, nprobe).localCheckpoint()
-    batch_cells = sorted(batch_cnts)
+    batch_probes = _assign(
+        batch_members.select("id", "vector"), centroids, method, nprobe
+    ).localCheckpoint()
+    batch_cells = sorted(cells)
+    batch_cnts = {c: v[0] for c, v in cells.items()}
     probe_cells = sorted(
         int(r["cell"]) for r in batch_probes.select("cell").distinct().collect()
     )
-    # stored per-cell counts: the persisted tiny table, never a
-    # re-aggregation of the corpus
-    stored_cnts = {
-        int(r["cell"]): int(r["n"])
-        for r in spark.read.parquet(f"{path}/cell_counts").collect()
-    }
 
-    # --- candidate generation (all reads pinned BEFORE any write) ---
-    stored_m = stored.select("id", "vector", "cell")
-    # members of the cells the batch probes: stored (partition-pruned)
-    # plus the batch itself (new nodes can be each other's neighbors)
-    probed_members = (
-        stored_m.where(F.col("cell").isin(probe_cells))
-        .unionByName(batch_members.select("id", "vector", "cell"))
-        .localCheckpoint()
-    )
-    # probed_members = stored rows pruned to probe_cells + the WHOLE
-    # batch, so its per-cell counts are stored counts inside the
-    # probed cells plus batch counts everywhere the batch landed
-    _pc = set(probe_cells)
-    probed_cnts = {
-        c: (stored_cnts.get(c, 0) if c in _pc else 0)
-        + batch_cnts.get(c, 0)
-        for c in _pc | set(batch_cells)
-    }
+    # --- candidate generation (every read pinned before its overwrite) ---
+    # a fresh read of the vectors layout holds the batch; a batch row's
+    # own cell is among its probes, so the merged counts of the probed
+    # cells are exactly this frame's per-cell counts
+    stored_m = spark.read.parquet(f"{path}/vectors").select("id", "vector", "cell")
+    probed_members = stored_m.where(F.col("cell").isin(probe_cells)).localCheckpoint()
     new_edges = _rank_topk_edges(
-        _blocked_narrow(probed_members, batch_probes, k, method, probed_cnts),
+        _blocked_narrow(
+            probed_members, batch_probes, k, method,
+            {c: merged[c][0] for c in probe_cells if c in merged},
+        ),
         k,
     )
+
     # stored nodes whose probe set intersects the batch's cells —
     # the ONLY nodes whose candidate set changed; probes are stored
     # partitioned by cell, so this read prunes to |batch_cells| dirs
@@ -1413,13 +1375,8 @@ def knn_graph_append(
         .distinct()
     )
     # src_cell lookup for the rewrite (primary cell of each src)
-    src_cells = (
-        stored_m.select(F.col("id").alias("src"), F.col("cell").alias("src_cell"))
-        .unionByName(
-            batch_members.select(
-                F.col("id").alias("src"), F.col("cell").alias("src_cell")
-            )
-        )
+    src_cells = stored_m.select(
+        F.col("id").alias("src"), F.col("cell").alias("src_cell")
     )
     touched_out = (
         updated_aff.unionByName(new_edges)
@@ -1434,19 +1391,7 @@ def knn_graph_append(
         .localCheckpoint()
     )
 
-    # --- writes ---
-    # persisted per-cell counts FIRST (stored + batch): counts may
-    # only ever OVER-estimate (the cap contract). If the counts write
-    # lands and a later append write crashes, the next append trusts
-    # counts that are too high — safe. The old order (counts last)
-    # left an under-estimate window: appended vectors on disk with
-    # stale counts, and the next append's cap decision would breach
-    # the hot-cell cap it exists to enforce.
-    merged_cnts = dict(stored_cnts)
-    for c, n in batch_cnts.items():
-        merged_cnts[c] = merged_cnts.get(c, 0) + n
-    _write_cell_counts(spark, path, merged_cnts)
-    _write_cells(batch_members, f"{path}/vectors", "append")
+    # --- writes (the vectors and the per-cell table have landed) ---
     _write_cells(
         batch_probes.select("id", "pr", "cell"), f"{path}/probes", "append"
     )
@@ -1464,11 +1409,6 @@ def knn_graph_append(
     if int(bent["id"]) < ent_id:
         ent_id, ent_cell = int(bent["id"]), int(bent["cell"])
     _write_graph_meta(spark, path, k, nprobe, method, ent_id, ent_cell)
-    # --- drift stats (the ivf_append contract) ---
-    batch_sum, _bn = _ivf_err_stats(batch_members, centroids)
-    batch_err, base_err, drift = _drift_update(
-        spark, path, "vectors", centroids, batch_sum, batch_n, catch_up=False
-    )
     do_retrain = retrain == "always" or (
         retrain == "auto" and drift > drift_threshold
     )

@@ -387,8 +387,8 @@ def sql_index_document(
             index_view
         )
         cells = spark.read.parquet(f"{vdb.ann_path}/centroids")
-        if backend.drift_stats:
-            rad = spark.read.parquet(f"{vdb.ann_path}/radius")
+        if index_type in ("ivf", "ivfadc"):  # the L2 ball-search views
+            rad = spark.read.parquet(f"{vdb.ann_path}/cells")
             cells = cells.join(rad, "cell", "left").selectExpr(
                 "cell", "cvec", "coalesce(radius, 0.0) AS radius"
             )

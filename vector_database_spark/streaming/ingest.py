@@ -183,7 +183,7 @@ def foreach_batch_ivf_ingest(
 ):
     """foreachBatch sink for the IVF inverted file: each micro-batch
     runs `ann.ivf_append` (assign-on-append under the stored
-    centroids + running drift stats; see its contract for the retrain
+    centroids, drift off the per-cell table; see its contract for the retrain
     policy — streaming defaults to ``'never'`` so a poison batch
     can't trigger an unbounded rebuild inside the stream; run the
     retrain as an explicit maintenance job instead).
