@@ -1471,16 +1471,21 @@ def test_bq_asym_kernel_matches_expr_bit_for_bit(spark, embeddings):
 
 
 def test_bq_hd_transform_matches_numpy_replay(spark):
-    """`hd_transform_expr` pinned against an independent numpy
-    popcount replay: t[r*P+j] = sum_i (-1)^popcount(j&i) * D_r[i] *
-    floor(x_i * scale) — exact integers, including a non-power-of-two
-    dim (zero-padded to P)."""
+    """`hd_transform_expr` and the driver twin `hd_transform_py`
+    pinned against an independent Python-int popcount replay:
+    t[r*P+j] = sum_i (-1)^popcount(j&i) * D_r[i] * floor(x_i * scale)
+    — exact integers, including a non-power-of-two dim (zero-padded
+    to P). `hd_transform_py` is also pinned at scale 10**16, where
+    the partial sums pass 2^53 and a float64 butterfly would round."""
+    import math
+
     import numpy as np
 
     from vector_database_spark.operators.ann import (
         _hd_pad,
         hd_diag,
         hd_transform_expr,
+        hd_transform_py,
     )
 
     rng = np.random.default_rng(9)
@@ -1501,18 +1506,28 @@ def test_bq_hd_transform_matches_numpy_replay(spark):
             ).alias("t"),
         ).collect()
     }
-    for i in range(len(X)):
-        w = np.floor(X[i] * scale).astype(np.int64)
+
+    def replay(x, sc):
+        w = [int(math.floor(float(v) * float(sc))) for v in x]
         want = []
         for r in range(blocks):
-            wd = w * np.asarray(diag[r], dtype=np.int64)
             for j in range(P):
                 s = 0
                 for k in range(dim):
                     sgn = 1 if bin(j & k).count("1") % 2 == 0 else -1
-                    s += sgn * int(wd[k])
+                    s += sgn * diag[r][k] * w[k]
                 want.append(s)
-        assert out[i] == want, i
+        return want
+
+    big = 10**16
+    for i in range(len(X)):
+        assert out[i] == replay(X[i], scale), i
+        for sc in (scale, big):
+            assert hd_transform_py(
+                X[i], dim=dim, blocks=blocks, seed=seed, scale=sc
+            ) == replay(X[i], sc), (i, sc)
+    # the big scale really leaves float64's exact-integer range
+    assert max(abs(t) for t in replay(X[0], big)) > 2**53
 
 
 def test_bq_hd_encode_kernel_matches_expr(spark, embeddings):

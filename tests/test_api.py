@@ -1105,6 +1105,58 @@ def test_facade_bq_hd_append_and_serve_use_stored_params(spark):
     assert got == brute and got
 
 
+def test_facade_bq_candidates_equal_bq_knn(spark):
+    """The facade's one-query candidate stage and the `bq_knn` panel
+    operator encode and score through one BQ codec: over the same
+    stored codes and centroids, a cell-pruned facade's top-``bq_m``
+    candidate ids == the id set `bq_knn(k=m, m=m)` returns for the
+    same query — Hamming and asym, raw and HD-transformed codes."""
+    import tempfile
+
+    from vector_database_spark.operators import ann
+
+    m, queries = 8, [[0.2, -0.1, 0.05, 0.3, -0.4, 0.7, -0.6, 0.1],
+                     [-0.5, 0.4, -0.3, 0.2, 0.9, -0.8, 0.05, -0.15]]
+    rows = (
+        random_uniform(spark, 80, 8, seed=71)
+        .select(
+            (F.col("id") % 2).alias("doc_id"),
+            F.col("id").alias("text_id"),
+            "vector",
+        )
+        .localCheckpoint()
+    )
+    for hd_blocks in (0, 2):
+        path = f"{tempfile.mkdtemp()}/s"
+        kw = dict(
+            index_type="bq", n_cells=4, bq_route="cells", bq_nprobe=2,
+            bq_m=m, bq_hd_blocks=hd_blocks, bq_hd_seed=13,
+        )
+        VectorDatabase(spark, path, **kw).add_documents(rows)
+        for scoring in ("hamming", "asym"):
+            db = VectorDatabase(spark, path, bq_scoring=scoring, **kw)
+            codes = db._ann_vectors()
+            cents = db._bq_centroids_or_none()
+            vecs = db.text().select(
+                F.col("text_id").alias("id"),
+                F.col("vector").cast("array<double>").alias("vector"),
+            )
+            for q in queries:
+                got = {
+                    int(r.text_id)
+                    for r in db._bq_candidate_ids(q).collect()
+                }
+                want = {
+                    int(r.id)
+                    for r in ann.bq_knn(
+                        vecs, [(0, q)], k=m, m=m, dim=8, codes=codes,
+                        centroids=cents, nprobe=2, scoring=scoring,
+                        hd_blocks=hd_blocks, hd_seed=13,
+                    ).collect()
+                }
+                assert got == want and len(got) == m, (hd_blocks, scoring)
+
+
 def _near(spark, q, ids, doc_id=0):
     """Rows a few hundredths from ``q`` — inside any ball search the
     freshness tests run, so a stale cache shows as a missing hit."""

@@ -245,34 +245,6 @@ def test_streaming_ewma_matches_batch_fold(spark):
     assert got[3] == fold([9.5])
 
 
-def test_streaming_ewma_tws_gate(spark):
-    """The transformWithStateInPandas variant: runs when protobuf is
-    present (standard clusters); in this container it must raise the
-    documented gate error, never crash a query at runtime."""
-    from vector_database_spark.streaming.stateful import streaming_ewma_tws
-
-    try:
-        import google.protobuf  # noqa: F401
-        have_pb = True
-    except ImportError:
-        have_pb = False
-
-    stream = spark.readStream.format("rate").load().selectExpr(
-        "value as event_id",
-        "value % 3 as user_id",
-        "CAST(value AS DOUBLE) as value",
-        "CAST(timestamp AS TIMESTAMP_NTZ) as ts",
-    )
-    if not have_pb:
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            streaming_ewma_tws(stream)
-    else:
-        # plan construction succeeds; semantics are covered by the
-        # shared fold with streaming_ewma
-        df = streaming_ewma_tws(stream)
-        assert df.columns == ["user_id", "n_events", "ewma"]
-
-
 def test_metrics_rollup_is_pure_hash_aggregate(spark, events):
     """first_last=False keeps every aggregation buffer fixed-width:
     the whole cascade must plan as HashAggregate (no sort-based

@@ -10,6 +10,7 @@ Exit code 1 if any assertion fails.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 
@@ -455,12 +456,12 @@ def _tiny_store(spark, index_type, **kw):
     return db
 
 
-def _facade_bq_serving_hd_df(spark, sf_dir):
+def _facade_bq_serving_hd_df(spark, sf_dir, scoring="hamming"):
     """A tiny HD-coded 'bq' facade store; returns the candidate-stage
     DataFrame one `search` call plans."""
     db = _tiny_store(
         spark, "bq", n_cells=4, bq_nprobe=2, bq_route="cells",
-        bq_hd_blocks=1,
+        bq_hd_blocks=1, bq_scoring=scoring,
     )
     return db._bq_candidate_ids([0.1] * 8)
 
@@ -557,6 +558,20 @@ FACADE_CHECKS = {
         "HD meta are invalidation-cycle-cached driver literals, never "
         "a per-call metadata parquet scan (the round-12 serving rule) "
         "— and the transformed-query Hamming cut is JVM-only",
+    ),
+    "facade_bq_serving_asym": (
+        functools.partial(_facade_bq_serving_hd_df, scoring="asym"),
+        ["bq_index/codes", "PartitionFilters: [cell#",
+         "TakeOrderedAndProject"],
+        ["bq_index/centroids", "bq_index/meta", "MapInPandas",
+         "ArrowEvalPython", "BatchEvalPython", "Exchange",
+         "LocalTableScan"],
+        "facade 'bq' asym serving over an HD layout: the query's "
+        "transformed weights are inlined literals of the one asym "
+        "fold, so the plan scans the codes table alone under a static "
+        "`cell IN (...)` partition filter and cuts the top-m with a "
+        "TakeOrderedAndProject — no metadata parquet, no Python "
+        "kernel, no query table, no exchange",
     ),
 }
 

@@ -686,31 +686,20 @@ class VectorDatabase:
         q = [float(x) for x in vector]
         # stored HD params (round-12 verdict item 3): when the layout
         # was built with bq_hd_blocks > 0, the query's sign bits (and
-        # asym weights below) come from the SAME seeded transform the
-        # stored codes used — computed driver-side in exact Python
-        # ints (`ann.hd_transform_py`), one query vector per call. Meta is
-        # cached; pre-meta layouts (hand-built code dirs) serve raw.
+        # asym weights) come from the SAME seeded transform the stored
+        # codes used — `ann.bq_query` encodes the one query vector
+        # driver-side in exact Python ints. Meta is cached; pre-meta
+        # layouts (hand-built code dirs) serve raw.
         try:
             meta = self._bq_meta()
         except Exception:
             meta = {"dim": len(q), "hd_blocks": 0, "hd_seed": 7,
                     "hd_scale": 1_000_000}
-        if meta["hd_blocks"]:
-            tq = ann.hd_transform_py(
-                q, dim=meta["dim"], blocks=meta["hd_blocks"],
-                seed=meta["hd_seed"], scale=meta["hd_scale"],
-            )
-            sbits = [1 if x >= 0 else 0 for x in tq]
-        else:
-            sbits = [1 if x >= 0.0 else 0 for x in q]
-        qcode = []
-        for lo in range(0, len(sbits), ann.BQ_LANE_BITS):
-            lane = 0
-            for i in range(lo, min(lo + ann.BQ_LANE_BITS, len(sbits))):
-                if sbits[i]:
-                    lane += 1 << (i - lo)
-            qcode.append(lane)
-        qlit = F.array(*[F.lit(x).cast("long") for x in qcode])
+        lanes, qw = ann.bq_query(
+            q, dim=meta["dim"], hd_blocks=meta["hd_blocks"],
+            hd_seed=meta["hd_seed"], hd_scale=meta["hd_scale"],
+            qw_scale=1_000_000,
+        )
         codes = self._ann_vectors()
         cents = self._bq_centroids_or_none()
         # route (round-10 verdict item 3): below BQ_CELL_ROUTE_MIN_BYTES
@@ -731,35 +720,12 @@ class VectorDatabase:
         if self.bq_scoring == "asym":
             # asymmetric candidate ranking (round-10 verdict item 4,
             # the facade spelling): score = sum_i qw_i*(2*bit_i - 1)
-            # with qw the query's fixed-point magnitudes — since the
-            # query is one driver-side vector, the signed weights
-            # inline as a literal array and the fold is one integer
-            # expression over the stored lanes. Higher recall than
-            # Hamming at the same bq_m; same scan set.
-            if meta["hd_blocks"]:
-                # transformed fixed-point weights — the bq_knn asym-HD
-                # rule: the qw vector is the transform of the query at
-                # the qw scale, so the fold stays a pure integer sum
-                # in the SAME space as the stored sign bits
-                qw = ann.hd_transform_py(
-                    q, dim=meta["dim"], blocks=meta["hd_blocks"],
-                    seed=meta["hd_seed"], scale=1_000_000,
-                )
-            else:
-                qw = [int(math.floor(x * 1_000_000.0)) for x in q]
-            qw_lit = ", ".join(f"{w}L" for w in qw)
-            d = len(sbits)
-            score = F.expr(
-                f"aggregate(sequence(0, {d - 1}), 0L, (acc, i) -> acc + "
-                f"IF((shiftright(try_element_at(code, "
-                f"CAST(i div {ann.BQ_LANE_BITS} AS INT) + 1), "
-                f"CAST(i % {ann.BQ_LANE_BITS} AS INT)) & 1) = 1, "
-                f"try_element_at(array({qw_lit}), CAST(i AS INT) + 1), "
-                f"-try_element_at(array({qw_lit}), CAST(i AS INT) + 1)))"
-            )
-            rank_col = (-score).alias("_h")
+            # with qw the query's fixed-point magnitudes inlined as a
+            # literal array — one integer fold over the stored lanes.
+            # Higher recall than Hamming at the same bq_m; same scan set.
+            rank_col = (-ann.bq_asym_score("code", qw)).alias("_h")
         else:
-            rank_col = ann.bq_hamming(F.col("code"), qlit).alias("_h")
+            rank_col = ann.bq_hamming("code", lanes).alias("_h")
         return (
             codes
             .select("id", rank_col)

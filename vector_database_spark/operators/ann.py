@@ -1855,7 +1855,6 @@ def bq_encode(
     sc = float(int(hd_scale))
     dmat = [list(map(int, row)) for row in diag]
     keep_names = list(extra_cols or [])
-    lane_bits = BQ_LANE_BITS
     out_schema = "id long, code array<long>" + "".join(
         f", {c} int" if c == "cell" else f", {c} string" for c in keep_names
     )
@@ -1863,12 +1862,13 @@ def bq_encode(
     # schema contract tight
     if any(c != "cell" for c in keep_names):
         raise ValueError("bq_encode kernel path supports extra_cols=['cell'] only")
+    fwht, pack = _fwht, _pack_lanes  # resolved on executors by package import
 
     def kern(it):
         import numpy as np
         import pandas as pd
 
-        D = [np.asarray(row, dtype=np.float64) for row in dmat]
+        D = np.asarray(dmat, dtype=np.float64)
         for pdf in it:
             if not len(pdf):
                 continue
@@ -1895,27 +1895,12 @@ def bq_encode(
                     "exact integer fold does not; lower hd_scale or "
                     "use encode_method='expr'"
                 )
-            n = len(pdf)
-            codes = []
-            T_all = np.empty((n, blocks * P), dtype=np.float64)
+            T = np.zeros((len(pdf), blocks * P), dtype=np.float64)
             for r in range(blocks):
-                A = np.zeros((n, P), dtype=np.float64)
+                A = T[:, r * P : (r + 1) * P]  # a view: fwht fills T
                 A[:, :d] = W * D[r][None, :]
-                h = 1
-                while h < P:
-                    for st in range(0, P, h * 2):
-                        x = A[:, st : st + h].copy()
-                        y = A[:, st + h : st + 2 * h]
-                        A[:, st : st + h] = x + y
-                        A[:, st + h : st + 2 * h] = x - y
-                    h *= 2
-                T_all[:, r * P : (r + 1) * P] = A
-            B = T_all >= 0
-            n_lanes = (blocks * P + lane_bits - 1) // lane_bits
-            L = np.zeros((n, n_lanes), dtype=np.int64)
-            for j in range(blocks * P):
-                lane, bit = j // lane_bits, j % lane_bits
-                L[:, lane] += B[:, j].astype(np.int64) << bit
+                fwht(A)
+            L = pack(T >= 0)
             out = {
                 "id": pd.array(pdf["id"].to_numpy(np.int64), dtype="int64"),
                 "code": pd.Series(list(L), dtype="object"),
@@ -1934,12 +1919,88 @@ def bq_encode(
 
 def bq_hamming(a, b):
     """Hamming distance between two code arrays (array<long> lanes):
-    ``sum(bit_count(xor(lane_a, lane_b)))`` — exact integer, JVM-side."""
+    ``sum(bit_count(xor(lane_a, lane_b)))`` — exact integer, JVM-side.
+    ``b`` may also be one driver-side query's lanes as a Python list,
+    inlined as long literals."""
+    if isinstance(b, list):
+        b = F.array(*[F.lit(int(x)).cast("long") for x in b])
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseXOR(y))),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v.cast("long"),
     )
+
+
+def bq_asym_score(code: str, qw: str | list, bits: int | None = None):
+    """The asym candidate score ``sum_i qw_i * (2*bit_i - 1)`` over the
+    first ``bits`` sign bits of the ``code`` lanes, as one Catalyst
+    integer fold (bit-extract, signed add — exact longs, so a SQL
+    replay matches term for term: the v30/v32 oracle shape). ``qw`` is
+    a weight-array column name, or one driver-side query's weights as
+    a Python list inlined as ``array(..L)`` literals; ``bits``
+    defaults to ``len(qw)`` and must be given for a column name."""
+    if isinstance(qw, list):
+        w = f"array({', '.join(f'{int(x)}L' for x in qw)})"
+        bits = len(qw) if bits is None else bits
+    else:
+        w = qw
+    at = f"try_element_at({w}, CAST(i AS INT) + 1)"
+    return F.expr(
+        f"aggregate(sequence(0, {int(bits) - 1}), 0L, (acc, i) -> acc + "
+        f"IF((shiftright(try_element_at({code}, "
+        f"CAST(i div {BQ_LANE_BITS} AS INT) + 1), "
+        f"CAST(i % {BQ_LANE_BITS} AS INT)) & 1) = 1, {at}, -{at}))"
+    )
+
+
+def _pack_lanes(B):
+    """Sign bits -> code lanes, the numpy twin of `bq_lane_exprs`: bit
+    ``j`` of each row of the (n, bits) boolean ``B`` is bit ``j % 32``
+    of lane ``j // 32``. Returns an (n, ceil(bits/32)) int64 array,
+    accumulated one bit position at a time (no (n, bits) int64 copy)."""
+    import numpy as np
+
+    n, bits = B.shape
+    L = np.zeros((n, -(-bits // BQ_LANE_BITS)), dtype=np.int64)
+    for k in range(min(bits, BQ_LANE_BITS)):
+        col = B[:, k::BQ_LANE_BITS]
+        L[:, : col.shape[1]] += col.astype(np.int64) << k
+    return L
+
+
+def _asym_scores(L, QW, bits: int):
+    """`bq_asym_score` over the first ``bits`` bits of every code in
+    ``L`` (n, n_lanes) against every weight row of ``QW`` (n_q, bits
+    float64) as one GEMM, ``2·B@QWᵀ − Σqw`` with ``B`` the 0/1 bits
+    unpacked from the lanes (the inverse of `_pack_lanes`): an (n,
+    n_q) float64 array. Bit-identical to the integer fold while
+    max|qw| * bits < 2^53 (every partial sum is then an exact integer
+    in any association order)."""
+    import numpy as np
+
+    L = np.asarray(L, dtype=np.int64)
+    B = (L[:, :, None] >> np.arange(BQ_LANE_BITS, dtype=np.int64)) & 1
+    B = B.reshape(len(L), -1)[:, :bits].astype(np.float64)
+    return 2.0 * (B @ QW.T) - QW.sum(axis=1)[None, :]
+
+
+def _fwht(A):
+    """The Sylvester-Hadamard butterfly, IN PLACE over the last axis of
+    ``A`` (its width a power of two; ``A`` may be a view):
+    ``t[j] = sum_i (-1)^popcount(j & i) a[i]``. Returns ``A``.
+    Element-wise adds only, so it is exact on a float64 array of
+    integers while every partial sum stays below 2^53, and exact at
+    any magnitude on a ``dtype=object`` array of Python ints."""
+    P = A.shape[-1]
+    h = 1
+    while h < P:
+        for st in range(0, P, 2 * h):
+            x = A[..., st : st + h].copy()
+            y = A[..., st + h : st + 2 * h]
+            A[..., st : st + h] = x + y
+            A[..., st + h : st + 2 * h] = x - y
+        h *= 2
+    return A
 
 
 def _hd_pad(dim: int) -> int:
@@ -1975,7 +2036,7 @@ def hd_transform_expr(
     (the Sylvester-Hadamard entry — no matrix literals needed) and
     ``P`` = dim padded to a power of two. PURE INTEGER arithmetic:
     every partial sum is an exact long, so the fold, the FWHT kernel
-    (`_hd_kernel_transform`) and a DuckDB replay agree bit-for-bit in
+    (`_fwht`) and a DuckDB replay agree bit-for-bit in
     ANY association order — the v30 fixed-point trick applied to the
     encoding itself. The transform is the public FJLT/random-rotation
     preconditioner (Ailon–Chazelle; FAISS's random-rotation option):
@@ -2020,34 +2081,53 @@ def hd_transform_py(
     vec, *, dim: int, blocks: int, seed: int, scale: int
 ) -> list[int]:
     """Driver-side exact-integer twin of `hd_transform_expr` for ONE
-    vector (the facade's per-query encode — `api.VectorDatabase`
-    serves single driver-side queries, so the transform runs here and
-    the transformed lanes/weights inline as literals in the candidate
-    expression). Python ints never round, so this matches the
-    Catalyst fold / FWHT kernel bit-for-bit at any magnitude — the
+    vector (`bq_query`'s transform — the facade serves single
+    driver-side queries, so the transformed lanes/weights inline as
+    literals in the candidate expression). The shared `_fwht`
+    butterfly runs on a ``dtype=object`` array of Python ints, which
+    never round, so this matches the Catalyst fold / FWHT kernel
+    bit-for-bit at any magnitude — the
     double product ``vec[i] * scale`` and its floor are the same
     float64 operations the expr path performs before going integer."""
-    import math
+    import numpy as np
 
     d = int(dim)
-    P = _hd_pad(d)
-    diag = hd_diag(d, int(blocks), int(seed))
-    out: list[int] = []
-    for r in range(int(blocks)):
-        a = [
-            int(diag[r][i])
-            * int(math.floor(float(vec[i]) * float(int(scale))))
-            for i in range(d)
-        ] + [0] * (P - d)
-        h = 1
-        while h < P:
-            for st in range(0, P, 2 * h):
-                for j in range(st, st + h):
-                    x, y = a[j], a[j + h]
-                    a[j], a[j + h] = x + y, x - y
-            h *= 2
-        out.extend(a)
-    return out
+    w = [int(math.floor(float(vec[i]) * float(int(scale)))) for i in range(d)]
+    A = np.zeros((int(blocks), _hd_pad(d)), dtype=object)
+    for r, row in enumerate(hd_diag(d, int(blocks), int(seed))):
+        A[r, :d] = [s * x for s, x in zip(row, w)]
+    return [int(x) for x in _fwht(A).reshape(-1)]
+
+
+def bq_query(
+    q,
+    *,
+    dim: int,
+    hd_blocks: int = 0,
+    hd_seed: int = 7,
+    hd_scale: int = 1_000_000,
+    qw_scale: int = 1_000_000,
+) -> tuple[list[int], list[int]]:
+    """Driver-side encoder for ONE query vector: ``(lanes, qw)``, its
+    sign-bit code lanes (the `bq_hamming` operand) and its fixed-point
+    asym weights (the `bq_asym_score` operand), in the code space of a
+    layout built with the same ``(hd_blocks, hd_seed, hd_scale)`` —
+    what `bq_knn`'s Catalyst query encode computes per panel row, as
+    Python ints to inline as literals. ``dim`` is the layout's vector
+    width (the transform's input); without a transform every
+    coordinate of ``q`` is encoded."""
+    import numpy as np
+
+    q = [float(x) for x in q]
+    if int(hd_blocks):
+        hd = dict(dim=dim, blocks=hd_blocks, seed=hd_seed)
+        t = hd_transform_py(q, scale=hd_scale, **hd)
+        qw = hd_transform_py(q, scale=qw_scale, **hd)
+    else:
+        t = q
+        qw = [int(math.floor(x * float(int(qw_scale)))) for x in q]
+    lanes = _pack_lanes(np.asarray(t)[None, :] >= 0)[0]
+    return [int(x) for x in lanes], qw
 
 
 def bq_build(
@@ -2408,34 +2488,26 @@ def bq_knn(
                     )
                 score_method = "expr"  # 'auto': exact fold fallback
         if score_method == "expr":
-            _score_sql = (
-                f"aggregate(sequence(0, {d - 1}), 0L, (acc, i) -> acc + "
-                f"IF((shiftright(try_element_at(code, "
-                f"CAST(i div {BQ_LANE_BITS} AS INT) + 1), "
-                f"CAST(i % {BQ_LANE_BITS} AS INT)) & 1) = 1, "
-                f"try_element_at(qw, CAST(i AS INT) + 1), "
-                f"-try_element_at(qw, CAST(i AS INT) + 1)))"
-            )
 
             def _narrow_dist(joined: DataFrame) -> DataFrame:
+                score = -bq_asym_score("code", "qw", d)
                 return joined.select(
-                    "qid",
-                    "id",
-                    (-F.expr(_score_sql)).cast("double").alias("dist"),
+                    "qid", "id", score.cast("double").alias("dist")
                 )
 
         else:
             # kernel path ('auto'): the same integer fold, batch-
             # vectorized — lanes unpack once per Arrow batch, one
-            # row-wise dot per candidate (dim× less interpreter
+            # GEMM per query (`_asym_scores`; dim× less interpreter
             # work than the per-row Catalyst fold on the
             # corpus-sized scan). Bit-identical to the expr path:
             # integer adds are associative and every float64
-            # intermediate (|qw| ~ 1e7, ≤ dim terms) stays far
-            # below 2^53. Queries are a broadcastable panel by
-            # contract (the ivf_knn rule), so collecting (qid,
-            # qvec) driver-side for the closure is bounded.
+            # intermediate stays below 2^53 (the guard above).
+            # Queries are a broadcastable panel by contract (the
+            # ivf_knn rule), so collecting their weights driver-side
+            # for the closure is bounded.
             qw_rows = _qw_probe
+            score = _asym_scores  # resolved on executors by package import
 
             def _narrow_dist(joined: DataFrame) -> DataFrame:
                 dd, rows_ = d, qw_rows
@@ -2445,29 +2517,18 @@ def bq_knn(
                     import pandas as pd
 
                     QW = {
-                        q: np.asarray(v, dtype=np.float64)
+                        q: np.asarray([v], dtype=np.float64)
                         for q, v in rows_
                     }
-                    T = {q: w.sum() for q, w in QW.items()}
                     for pdf in it:
                         if not len(pdf):
                             continue
-                        L = np.asarray(
-                            [
-                                np.asarray(c, dtype=np.int64)
-                                for c in pdf["code"]
-                            ]
-                        )
-                        B = np.empty((len(pdf), dd), dtype=np.float64)
-                        for lo in range(0, dd, BQ_LANE_BITS):
-                            lane = L[:, lo // BQ_LANE_BITS]
-                            for j in range(min(BQ_LANE_BITS, dd - lo)):
-                                B[:, lo + j] = (lane >> j) & 1
+                        L = np.vstack(pdf["code"].to_numpy())
                         qidv = pdf["qid"].to_numpy(np.int64)
                         s = np.empty(len(pdf), dtype=np.float64)
                         for q in np.unique(qidv):
                             m_ = qidv == q
-                            s[m_] = 2.0 * (B[m_] @ QW[q]) - T[q]
+                            s[m_] = score(L[m_], QW[q], dd)[:, 0]
                         yield pd.DataFrame(
                             {
                                 "qid": pd.array(qidv, dtype="int64"),
@@ -2486,13 +2547,12 @@ def bq_knn(
             def _narrow_all(codes_df: DataFrame, mm_: int) -> DataFrame:
                 """Full-scan asym narrow WITHOUT the query crossJoin:
                 each code batch crosses Arrow once, one GEMM scores
-                every query at once (B @ QW.T), and the per-(query,
-                batch) top-mm cut happens in-kernel — the
-                `_grouped_topk` (dist, id) selection on integer
-                scores, so survivors are identical to the expr path
-                (the downstream global cut re-applies the same
-                order). Arrow volume drops from n_q x corpus to
-                corpus + batches x n_q x m."""
+                every query at once, and the per-(query, batch)
+                top-mm cut happens in-kernel — the `_grouped_topk`
+                (dist, id) selection on integer scores, so survivors
+                are identical to the expr path (the downstream global
+                cut re-applies the same order). Arrow volume drops
+                from n_q x corpus to corpus + batches x n_q x m."""
                 dd, rows_, cut = d, qw_rows, int(mm_)
 
                 def kern(it):
@@ -2500,26 +2560,12 @@ def bq_knn(
                     import pandas as pd
 
                     qids = np.asarray([q for q, _ in rows_], dtype=np.int64)
-                    QW = np.stack(
-                        [np.asarray(v, dtype=np.float64) for _, v in rows_]
-                    )
-                    T = QW.sum(axis=1)
+                    QW = np.asarray([v for _, v in rows_], dtype=np.float64)
                     for pdf in it:
                         if not len(pdf):
                             continue
-                        L = np.asarray(
-                            [
-                                np.asarray(c, dtype=np.int64)
-                                for c in pdf["code"]
-                            ]
-                        )
-                        B = np.empty((len(pdf), dd), dtype=np.float64)
-                        for lo in range(0, dd, BQ_LANE_BITS):
-                            lane = L[:, lo // BQ_LANE_BITS]
-                            for j in range(min(BQ_LANE_BITS, dd - lo)):
-                                B[:, lo + j] = (lane >> j) & 1
                         idv = pdf["id"].to_numpy(np.int64)
-                        S = 2.0 * (B @ QW.T) - T[None, :]  # n x n_q
+                        S = score(np.vstack(pdf["code"].to_numpy()), QW, dd)
                         out_q: list = []
                         out_i: list = []
                         out_d: list = []

@@ -340,8 +340,9 @@ def sql_index_document(
     them. The spelled SQL replay is UNCHANGED in shape, but its
     ``array(...query lanes...)`` literals must be the sign-bit lanes
     of the TRANSFORMED query (compute them driver-side with
-    `ann.hd_transform_py` at the stored params — the replay pytest
-    pins the transformed space); ``index_view``'s ``code`` column
+    ``ann.bq_query(q, dim=, hd_blocks=, hd_seed=, hd_scale=)[0]`` at
+    the stored params — the replay pytest pins the transformed
+    space); ``index_view``'s ``code`` column
     then carries ``bq_hd_blocks * pad(dim)`` bits per row.
 
     ``index_type='mips'`` (round-9 verdict item 5) registers

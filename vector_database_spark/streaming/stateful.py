@@ -68,31 +68,6 @@ def running_user_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def _make_ewma_fold():
-    """Returns the micro-batch fold shared by both stateful backends
-    (identical semantics to the batch e07 fold: (ts, event_id) order,
-    first value seeds). Built by a factory so the returned function is
-    NESTED — cloudpickle serializes it by value inside the state
-    kernels' closures; a module-level function would pickle by
-    reference and break on executors that cannot import this
-    package."""
-
-    def fold(ewma: float, n: int, batch, alpha: float):
-        ts_us = batch["ts"].to_numpy("datetime64[us]").astype("int64")
-        order = batch.assign(_us=ts_us).sort_values(
-            ["_us", "event_id"], kind="mergesort"
-        )
-        for x in order["value"].to_numpy("float64"):
-            if n == 0:
-                ewma = float(x)  # first value seeds the fold
-            else:
-                ewma = (1.0 - alpha) * ewma + alpha * float(x)
-            n += 1
-        return ewma, n
-
-    return fold
-
-
 def streaming_ewma(events: DataFrame, *, alpha: float = 0.25) -> DataFrame:
     """Per-user streaming EWMA — the incremental twin of the batch
     e07 gate: acc = (1-alpha)*acc + alpha*x folded in (ts, event_id)
@@ -104,7 +79,6 @@ def streaming_ewma(events: DataFrame, *, alpha: float = 0.25) -> DataFrame:
     within a micro-batch arrival order never matters (rows are sorted
     before folding)."""
     a = float(alpha)
-    fold = _make_ewma_fold()
 
     def update_ewma(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -114,8 +88,16 @@ def streaming_ewma(events: DataFrame, *, alpha: float = 0.25) -> DataFrame:
         (user_id,) = key
         ewma, n = state.get if state.exists else (0.0, 0)
         for pdf in pdfs:
-            if len(pdf):
-                ewma, n = fold(ewma, n, pdf, a)
+            ts_us = pdf["ts"].to_numpy("datetime64[us]").astype("int64")
+            order = pdf.assign(_us=ts_us).sort_values(
+                ["_us", "event_id"], kind="mergesort"
+            )
+            for x in order["value"].to_numpy("float64"):
+                if n == 0:
+                    ewma = float(x)  # first value seeds the fold
+                else:
+                    ewma = (1.0 - a) * ewma + a * float(x)
+                n += 1
         state.update((float(ewma), int(n)))
         yield pd.DataFrame(
             {
@@ -131,70 +113,6 @@ def streaming_ewma(events: DataFrame, *, alpha: float = 0.25) -> DataFrame:
         stateStructType="ewma double, n long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_ewma_tws(events: DataFrame, *, alpha: float = 0.25) -> DataFrame:
-    """`streaming_ewma` on Spark 4's transformWithStateInPandas
-    (StatefulProcessor + ValueState) — the engine-native evolvable-
-    state API (per-state schemas, timers, TTL) that replaces
-    applyInPandasWithState going forward.
-
-    IMPORT-GATED: the TWS python workers speak protobuf to the state
-    server and this container ships no `google.protobuf`, so here the
-    factory raises at call time with a clear message; on a standard
-    cluster (protobuf is a stock Spark dependency) it runs as-is.
-    Requires the RocksDB state store provider. Semantics are shared
-    with `streaming_ewma` — identical fold,
-    identical output schema (both close over `_make_ewma_fold()`'s
-    nested fold).
-
-    The processor class is defined INSIDE this factory so cloudpickle
-    serializes it by value (module-level classes pickle by reference
-    and break when executors cannot import this package)."""
-    try:
-        import google.protobuf  # noqa: F401  (TWS state-server wire format)
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the `protobuf` package for "
-            "its state-server protocol; it is absent from this "
-            "environment. Use streaming_ewma (applyInPandasWithState) "
-            "instead — identical semantics."
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    a = float(alpha)
-    fold = _make_ewma_fold()
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("ewma", "ewma double, n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (user_id,) = key
-            ewma, n = self._st.get() if self._st.exists() else (0.0, 0)
-            for pdf in rows:
-                if len(pdf):
-                    ewma, n = fold(ewma, n, pdf, a)
-            self._st.update((float(ewma), int(n)))
-            yield pd.DataFrame(
-                {
-                    "user_id": pd.array([user_id], dtype="int64"),
-                    "n_events": pd.array([n], dtype="int64"),
-                    "ewma": pd.array([ewma], dtype="float64"),
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _EwmaProcessor(),
-        outputStructType="user_id long, n_events long, ewma double",
-        outputMode="Update",
-        timeMode="None",
     )
 
 
